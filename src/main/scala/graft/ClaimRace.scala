@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * in-process threads, but its real adversary is a SECOND JVM — the
   * in-process mutation lock cannot serialize that, only the create-only
   * `m<seq>` claim can. This main is one such adversary: it boots its own
-  * SparkSession, opens the SHARED store root in manifest mode, and
+  * SparkSession, opens the SHARED store root, and
   * commits `nBatches` write batches (plus a compaction every third
   * batch, so full-manifest commits race the appends too), logging every
   * committed snapshot seq with this process's PID. The spec launches two
@@ -36,7 +36,7 @@ object ClaimRace {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
-    val g = new graft.tsdb.Graft(spark, root, manifest = true)
+    val g = new graft.tsdb.Graft(spark, root)
     // start barrier: session boot time varies by seconds — without this
     // one writer could finish before the other's first commit
     while (!java.nio.file.Files.exists(goFile)) Thread.sleep(20L)

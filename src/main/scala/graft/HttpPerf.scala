@@ -157,13 +157,13 @@ object HttpPerf {
     // /search perf (r15, VERDICT r14 #4): the direct path is a full
     // distinct-series scan per request; the index-served path probes the
     // CDC-maintained postings (cost tracks matching postings, not store
-    // size) — both measured over the same manifest-mode store so the
+    // size) — both measured over the same store so the
     // "probe cost tracks matching postings" claim is a number, not an
     // assertion. min-of-5 per path (the bench protocol's min rule).
     def searchPerf(): (Double, Double, Double, Double) = {
       val root = java.nio.file.Files.createTempDirectory(
         java.nio.file.Paths.get("target"), "graft-perf-search").toString
-      val g = new Graft(spark, root, manifest = true)
+      val g = new Graft(spark, root)
       import org.apache.spark.sql.functions._
       g.write(spark.range(NumPoints).select(
         (lit(BaseMs) + col("id")).as("time"),
@@ -306,8 +306,8 @@ object HttpPerf {
     // user's dashboard search during ingest is the INDEXED path — the
     // component that exists precisely to protect read latency from store
     // growth (the reference serves /search from an always-fresh ES index
-    // while writes land, orestes-query.js:250-271). Here the store runs
-    // manifest mode (snapshots -> CDC), the continuous-ingest writer
+    // while writes land, orestes-query.js:250-271). Here the store's
+    // snapshots feed CDC, the continuous-ingest writer
     // drives the full workload, a syncer thread runs the SAME maintenance
     // sweep the server daemon runs (ServerMain.searchIndexSweep: sync +
     // fold + vacuum/repair), and every measured search must be served by
@@ -321,7 +321,7 @@ object HttpPerf {
         : (Double, Double, Int, Double, Long, Int) = {
       val root = java.nio.file.Files.createTempDirectory(
         java.nio.file.Paths.get("target"), "graft-perf-suli").toString
-      val g = new Graft(spark, root, manifest = true)
+      val g = new Graft(spark, root)
       val idxBase = s"$root/.search-index"
       val idxDir = s"$idxBase/default"
       val srv = new GraftHttpServer(g, spark, continuousIngest = true,

@@ -83,14 +83,19 @@ object Memo {
     * grow. The count() runs once at artifact-build time (the untimed
     * pass-1 tier). Use for artifacts whose consumers' work is
     * per-row-bounded; fanout = the per-row probe/explode multiplier.
+    * The width is clamped in Long with a saturating multiply: a huge
+    * `rows × fanout` means "as wide as the executors", never a wrapped
+    * Int that collapses the artifact to 2 partitions.
     */
   def spreadAuto(df: DataFrame, fanout: Long = 1L,
                  cellsPerTask: Long = 65536L): DataFrame = {
     val rows = df.count()
-    val ideal = (rows.max(1L) * fanout.max(1L) / cellsPerTask.max(1L)).toInt
+    val cells =
+      try Math.multiplyExact(rows.max(1L), fanout.max(1L))
+      catch { case _: ArithmeticException => Long.MaxValue }
     df.repartition(
-      math.min(df.sparkSession.sparkContext.defaultParallelism,
-        math.max(2, ideal)))
+      math.min(df.sparkSession.sparkContext.defaultParallelism.toLong,
+        math.max(2L, cells / cellsPerTask.max(1L))).toInt)
   }
 
   /** Eager localCheckpoint that KEEPS the frame's output partitioning

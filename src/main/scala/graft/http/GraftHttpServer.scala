@@ -210,29 +210,24 @@ class GraftHttpServer(graft: Graft, spark: org.apache.spark.sql.SparkSession,
     * alongside its frame, run after the response is drained (ADVICE r16
     * low: /search's direct scan persists its series corpus for the
     * request — without a post-drain unpersist, per-request frames
-    * accrete in executor storage until driver GC). Every retry attempt's
-    * cleanup runs, not just the last one's — withReadRetry may call `f`
-    * more than once. */
+    * accrete in executor storage until driver GC). */
   private def handleStreamC(path: String)
       (f: (HttpExchange, JsonNode) => (DataFrame, () => Unit)): Unit =
     server.createContext(path, (ex: HttpExchange) => {
       var headersSent = false
-      val cleanups = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+      var cleanup: () => Unit = () => ()
       try inServePool {
         val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
         val node = if (body.trim.isEmpty) null else mapper.readTree(body)
-        // build + first-partition probe inside the re-plan retry window: a
-        // read whose listing raced a compaction swap re-plans against the
-        // post-swap store instead of failing (Graft.withReadRetry; only
-        // possible before the first chunked byte goes out — a mid-stream
-        // swap still aborts the chunked response, the documented trade)
-        val rows0 = graft.withReadRetry() {
-          val (df, cleanup) = f(ex, node)
-          cleanups += cleanup
-          val it = df.toJSON.toLocalIterator()
-          it.hasNext // forces the first partition's scan
-          it
-        }
+        // build + first-partition probe before the headers: a failure to
+        // plan or to scan the first partition is still a clean error
+        // status, not a mid-stream terminator. The read plans from a
+        // pinned snapshot, so a concurrent compaction cannot pull files
+        // from under it.
+        val (df, c) = f(ex, node)
+        cleanup = c
+        val rows0 = df.toJSON.toLocalIterator()
+        rows0.hasNext // forces the first partition's scan
         val rows = poisonStreamsFor match { // test hook: see field doc
           case Some((p, msg)) if p == path => new java.util.Iterator[String] {
             private var emitted = 0
@@ -282,7 +277,7 @@ class GraftHttpServer(graft: Graft, spark: org.apache.spark.sql.SparkSession,
             os.flush()
           } catch { case NonFatal(_) => () } // client already hung up
       } finally {
-        cleanups.foreach(c => try c() catch { case NonFatal(_) => () })
+        try cleanup() catch { case NonFatal(_) => () }
         ex.close()
       }
     })
@@ -422,11 +417,8 @@ class GraftHttpServer(graft: Graft, spark: org.apache.spark.sql.SparkSession,
       }
       // bare array response, like the reference's JSON.stringify(result)
       // (orestes.js:203-206)
-      // re-plan on a compaction-swap race (build + collect inside the retry)
-      graft.withReadRetry() {
-        rowsJson(graft.selectDistinct(keys, filterOf(node),
-          spaceOf(ex, "/select_distinct", node)))
-      }
+      rowsJson(graft.selectDistinct(keys, filterOf(node),
+        spaceOf(ex, "/select_distinct", node)))
     }
     // ranked series retrieval (r14): BM25 over the tag bag — the scoring
     // context the reference's ES backend supplies for series metadata.
@@ -488,7 +480,11 @@ class GraftHttpServer(graft: Graft, spark: org.apache.spark.sql.SparkSession,
               } :+ col("score"): _*)
             ex.getResponseHeaders.set("X-Graft-Search-Source", "index")
             (out, () => ())
-          } catch { case NonFatal(_) =>
+          } catch { case NonFatal(e) =>
+            // the fallback is silent to the client by contract, so the
+            // cause goes to the server log — one line per request
+            System.err.println(
+              s"[graft] /search $space: index probe failed, serving the scan: $e")
             ex.getResponseHeaders.set("X-Graft-Search-Source", "scan")
             direct()
           }
@@ -507,9 +503,9 @@ class GraftHttpServer(graft: Graft, spark: org.apache.spark.sql.SparkSession,
     // history surface reachable without a JVM — graft extensions (the
     // reference has no storage-level history; Cassandra compaction is
     // invisible to its API). /changes answers 400 with the store's own
-    // loud message on a plain store, an unknown snapshot, or a reversed
-    // range; /snapshots is a LISTING (an empty array on a plain or
-    // never-written store, like snapshots() itself). It flushes the
+    // loud message on an unknown snapshot or a reversed range;
+    // /snapshots is a LISTING (an empty array on a never-written store,
+    // like snapshots() itself). It flushes the
     // write queue first — the advertised write -> /snapshots -> /changes
     // workflow must see the caller's own acked points (read-your-writes,
     // the rule every read route follows).
@@ -518,10 +514,10 @@ class GraftHttpServer(graft: Graft, spark: org.apache.spark.sql.SparkSession,
       graft.flushQueued(space)
       graft.snapshots(space).mkString("""{"snapshots":[""", ",", "]}")
     }
-    // explicit physical reclaim (manifest mode): what the maintenance
-    // daemon runs on its cadence, triggerable by an operator — keep the
-    // newest N snapshots, sweep the rest (expired files immediately,
-    // true orphans past the grace). 400 on a plain store, like /changes.
+    // explicit physical reclaim: what the maintenance daemon runs on its
+    // cadence, triggerable by an operator — keep the newest N snapshots,
+    // sweep the rest (expired files immediately, true orphans past the
+    // grace).
     handle("/vacuum") { (ex, node) =>
       val space = spaceOf(ex, "/vacuum", node)
       // an omitted keep_snapshots defers to the ENGINE's default — one

@@ -20,24 +20,23 @@ import graft.tsdb.Graft
   * (orestes-remover.js:16-39) runs here on a timer, hourly, so configured
   * retention is a standing policy rather than a client obligation.
   *
-  * Since r14 two more operational defaults ride the boot:
-  *  - the store boots in MANIFEST mode unless the config says
-  *    `"manifest_snapshots": false` (bootstrapManifest adopts an existing
-  *    plain store on first touch, so the flip is migration-free; plain
-  *    mode remains the documented fallback — see README);
-  *  - a standing COMPACTION daemon sweeps every `compaction_sweep_minutes`
-  *    (default 60; <= 0 disables): any space whose fragmentation report
-  *    shows a bucket past `compaction_max_files` (default 8) or still
-  *    carrying write-sequence stamps is compacted — the maintenance the
-  *    reference delegates to Cassandra's SSTable compaction, as a policy
-  *    instead of an operator chore. Each sweep then vacuums every space
-  *    down to `vacuum_keep_snapshots` (default 48 —
-  *    [[graft.tsdb.Graft.DefaultVacuumKeep]], deep enough that an external
-  *    daily CDC poller keeps its diff base, ADVICE r14; <= 0 disables the
-  *    vacuum half): manifest-mode compaction/retention are metadata-only,
-  *    so the daemon owns physical reclaim too — bounded disk is a boot
-  *    default, not an operator chore; the orphan grace window keeps the
-  *    sweep safe against other processes' in-flight commits.
+  * The store is a manifest/snapshot store — the only storage layout
+  * (bootstrapManifest adopts bucket directories an older release left on
+  * disk on first touch, so booting over an old root is migration-free).
+  * Since r14 a standing COMPACTION daemon also rides the boot: it sweeps
+  * every `compaction_sweep_minutes` (default 60; <= 0 disables), and any
+  * space whose fragmentation report shows a bucket past
+  * `compaction_max_files` (default 8) or still carrying write-sequence
+  * stamps is compacted — the maintenance the reference delegates to
+  * Cassandra's SSTable compaction, as a policy instead of an operator
+  * chore. Each sweep then vacuums every space down to
+  * `vacuum_keep_snapshots` (default 48 —
+  * [[graft.tsdb.Graft.DefaultVacuumKeep]], deep enough that an external
+  * daily CDC poller keeps its diff base, ADVICE r14; <= 0 disables the
+  * vacuum half): compaction and retention are metadata-only commits, so
+  * the daemon owns physical reclaim too — bounded disk is a boot default,
+  * not an operator chore; the orphan grace window keeps the sweep safe
+  * against other processes' in-flight commits.
   */
 object ServerMain {
   /** Wire config -> store -> server (the testable core of the boot).
@@ -57,16 +56,13 @@ object ServerMain {
         _root_.graft.tsdb.Tsdb.GranularityDays),
       spaceGranularity = cfg.spaceGranularity,
       spaceKeepDays = cfg.spaceKeepDays,
-      manifest = cfg.manifestSnapshots,
       commitPrimitive = cfg.commitPrimitive)
-    // `search_index` (manifest mode only): /search serves from the
-    // CDC-maintained series index under the store root, synced by the
-    // maintenance sweep — the reference's ES architecture (search hits an
-    // index, not the store), traded opt-in for /search freshness
+    // `search_index`: /search serves from the CDC-maintained series index
+    // under the store root, synced by the maintenance sweep — the
+    // reference's ES architecture (search hits an index, not the store),
+    // traded opt-in for /search freshness
     val idxBase =
-      if (cfg.searchIndex && cfg.manifestSnapshots)
-        Some(s"$root/.search-index")
-      else None
+      if (cfg.searchIndex) Some(s"$root/.search-index") else None
     (store, new GraftHttpServer(store, spark, port = cfg.port,
       continuousIngest = cfg.continuousIngest, searchIndexDir = idxBase), cfg)
   }
@@ -144,8 +140,7 @@ object ServerMain {
             val dropped = g.retentionSweep()
             dropped.filter(_._2.nonEmpty).foreach { case (sp, days) =>
               println(s"[graft] retention dropped buckets $days from $sp") }
-          } catch { case e: Throwable =>
-            System.err.println(s"[graft] retention sweep failed: ${e.getMessage}") },
+          } catch { case e: Throwable => logSweepFailure("retention", e) },
           1, 60, java.util.concurrent.TimeUnit.MINUTES)
         Some(ex)
       } else None
@@ -159,9 +154,8 @@ object ServerMain {
     // snapshots, index sync diffs up to the newest one, vacuum runs LAST
     // so the sync's diff-base snapshot still exists when sync needs it.
     val wantCompact = cfgForDaemons.compactionSweepMinutes > 0
-    val wantIndex = cfgForDaemons.searchIndex && cfgForDaemons.manifestSnapshots
-    val wantVacuum = cfgForDaemons.manifestSnapshots &&
-      cfgForDaemons.vacuumKeepSnapshots > 0
+    val wantIndex = cfgForDaemons.searchIndex
+    val wantVacuum = cfgForDaemons.vacuumKeepSnapshots > 0
     val compactor =
       if (wantCompact || wantIndex || wantVacuum) {
         val mins = if (wantCompact) cfgForDaemons.compactionSweepMinutes.toLong
@@ -170,8 +164,7 @@ object ServerMain {
           r => { val t = new Thread(r, "graft-maintenance"); t.setDaemon(true); t })
         def half(what: String)(body: => Unit): Unit =
           try body
-          catch { case e: Throwable =>
-            System.err.println(s"[graft] $what sweep failed: ${e.getMessage}") }
+          catch { case e: Throwable => logSweepFailure(what, e) }
         ex.scheduleAtFixedRate(() => {
           if (wantCompact) half("compaction") {
             val done = g.compactionSweep(cfgForDaemons.compactionMaxFiles,
@@ -182,8 +175,7 @@ object ServerMain {
           }
           if (wantIndex) searchIndexSweep(g, s"$root/.search-index",
             cfgForDaemons.indexFoldBatches,
-            (sp, e) => System.err.println(
-              s"[graft] search-index $sp sweep failed: ${e.getMessage}"))
+            (sp, e) => logSweepFailure(s"search-index $sp", e))
           if (wantVacuum) g.spaces().foreach { sp =>
             half(s"vacuum $sp") {
               val freed = g.vacuum(sp, cfgForDaemons.vacuumKeepSnapshots)
@@ -205,4 +197,12 @@ object ServerMain {
   }
 
   private def gKeepDays(g: Graft): Map[String, Int] = g.configuredKeepDays
+
+  /** A failed sweep half is logged with its exception class and stack
+    * trace — a bare message (often null for NPEs and wrapped Spark errors)
+    * cannot tell an operator what broke. */
+  private def logSweepFailure(what: String, e: Throwable): Unit = {
+    System.err.println(s"[graft] $what sweep failed: $e")
+    e.printStackTrace()
+  }
 }

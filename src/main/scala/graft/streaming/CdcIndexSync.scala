@@ -383,8 +383,7 @@ object CdcIndexSync {
     val snaps = g.snapshots(space)
     if (snaps.isEmpty) throw new IllegalStateException(
       s"no committed snapshots in space '$space' — the index needs a " +
-        "manifest-mode store with at least one write (plain-mode stores " +
-        "have no snapshots to sync against)")
+        "store with at least one write")
     val snap = snaps.max
     val pts = g.readAt(snap, MatchAll, space)
     val s = pts.sparkSession

@@ -140,13 +140,26 @@ object CdcStream {
     * a replayed batch rewrites its own partition bit-identically instead
     * of appending a duplicate. Read the consumer state back with
     * [[readState]] (or any `ingest_batch`-agnostic aggregate).
+    *
+    * Landings into one dir are serialized in-process: two concurrent
+    * dynamic overwrites of the SAME partition can both delete it and then
+    * both rename their staging copy in, and the second rename nests
+    * `ingest_batch=n/ingest_batch=n` — a layout every later read rejects.
     */
-  def land(df: DataFrame, dir: String, snap: Long): Unit =
-    df.withColumn("ingest_batch", lit(snap))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_batch")
-      .parquet(dir)
+  def land(df: DataFrame, dir: String, snap: Long): Unit = {
+    val (fs, p) = fsOf(df.sparkSession, dir)
+    landLocks.computeIfAbsent(fs.makeQualified(p).toString, _ => new Object)
+      .synchronized {
+        df.withColumn("ingest_batch", lit(snap))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("ingest_batch")
+          .parquet(dir)
+      }
+  }
+
+  private val landLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** Read a [[land]]-maintained state dir as one frame (empty, with the
     * given schema, when nothing has landed yet — a zero-row consumer
@@ -180,7 +193,7 @@ object CdcStream {
     val snaps = g.snapshots(space)
     if (snaps.isEmpty) throw new IllegalStateException(
       s"no committed snapshots in space '$space' — CDC consumption needs " +
-        "a manifest-mode store with at least one write")
+        "a store with at least one write")
     val to = snaps.max
     // the marker only means something against the history it was taken
     // from: a wiped-and-recreated space (fresh storeIdentity) resets even

@@ -11,10 +11,15 @@ import graft.core.Det
   *
   * Layout: `<root>/<space>/bucket_day=<day>/…` — the Spark re-expression of
   * Orestes' one-Cassandra-table-plus-one-ES-index-per-(space, bucket)
-  * (lib/orestes-utils.js:63-79). Partition pruning replaces the valid-days
-  * index lookup; retention deletes whole bucket directories exactly like the
-  * reference drops whole tables (lib/orestes-remover.js:28-39); series
-  * search is predicate pushdown instead of an Elasticsearch query.
+  * (lib/orestes-utils.js:63-79). Which files in those directories are live
+  * is decided by a per-space manifest/snapshot commit log under
+  * `<root>/.manifest/<space>`, never by a directory listing (see the
+  * manifest/snapshot section below). Bucket pruning on the snapshot
+  * replaces the valid-days index lookup; retention drops whole buckets from
+  * the live set exactly like the reference drops whole tables
+  * (lib/orestes-remover.js:28-39), with physical deletion deferred to
+  * [[vacuum]]; series search is predicate pushdown instead of an
+  * Elasticsearch query.
   *
   * Points are rows with a `time` (string or numeric ms), a numeric `value`,
   * and at least one tag column; series identity = the tag columns.
@@ -25,7 +30,6 @@ class Graft(spark: SparkSession, root: String,
             spaceKeepDays: Map[String, Int] = Map.empty,
             maxQueuedPoints: Int = 1000000,
             spoolCleanup: Boolean = true,
-            manifest: Boolean = false,
             commitPrimitive: String = Graft.PrimAuto) {
   import Graft._
 
@@ -108,74 +112,58 @@ class Graft(spark: SparkSession, root: String,
     val sorted = good
       .sortWithinPartitions(col("bucket_day") +: tagCols.map(col) :+ col("time_ms"): _*)
     mutationLock(space).synchronized {
-      if (manifest) {
-        // r14: the append job lands in a PRIVATE `_`-prefixed tmp dir and
-        // its files move into the bucket dirs under unique names — the
-        // commit protocol receives the exact output list, so the append
-        // path never lists the store (the r13 before/after listing diff
-        // was O(live files) per append, the last O(store) cost on the
-        // write path). Crash states: an orphaned tmp dir, or moved files
-        // no snapshot references — both invisible to readers, both swept
-        // by vacuum. An all-rejected batch writes no files — no commit.
-        bootstrapManifest(space) // adopt a pre-manifest store
-        val (mfs, mdir) = fsOf(spacePath(space))
-        val tmpDir = new HPath(mdir, s"$AppendTmpPrefix${nonce()}")
-        sorted.write.mode(SaveMode.Overwrite)
-          .partitionBy("bucket_day").parquet(tmpDir.toString)
-        val moved = Seq.newBuilder[(String, Long)]
-        mfs.listStatus(tmpDir)
-          .filter(st => st.isDirectory &&
-            st.getPath.getName.startsWith("bucket_day="))
-          .foreach { bst =>
-            val dstDir = new HPath(mdir, bst.getPath.getName)
-            mfs.mkdirs(dstDir)
-            mfs.listStatus(bst.getPath)
-              .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-              .foreach { f =>
-                val dst = new HPath(dstDir, s"a${nonce()}-${f.getPath.getName}")
-                if (!mfs.rename(f.getPath, dst))
-                  throw new java.io.IOException(
-                    s"append: rename ${f.getPath} -> $dst failed")
-                moved += ((s"${bst.getPath.getName}/${dst.getName}", f.getLen))
-              }
-          }
-        mfs.delete(tmpDir, true)
-        val fresh = moved.result()
-        if (fresh.nonEmpty) {
-          // the job's data schema (everything but the partition column)
-          // merges into the manifest so reads never open a parquet footer
-          val jobSchema = org.apache.spark.sql.types.StructType(
-            good.schema.fields.filterNot(_.name == "bucket_day"))
-          val (freshStats, freshDicts) = fileStats(space, fresh.map(_._1))
-          // the delta path: commit cost tracks THIS JOB's buckets, not
-          // the store's live-file count (r14 — manifest-list indirection)
-          commitAppend(space, fresh, jobSchema, freshStats, freshDicts)
+      // r14: the append job lands in a PRIVATE `_`-prefixed tmp dir and
+      // its files move into the bucket dirs under unique names — the
+      // commit protocol receives the exact output list, so the append
+      // path never lists the store (the r13 before/after listing diff
+      // was O(live files) per append, the last O(store) cost on the
+      // write path). Crash states: an orphaned tmp dir, or moved files
+      // no snapshot references — both invisible to readers, both swept
+      // by vacuum. An all-rejected batch writes no files — no commit.
+      bootstrapManifest(space) // adopt a pre-manifest store
+      val (fs, dir) = fsOf(spacePath(space))
+      val tmpDir = new HPath(dir, s"$AppendTmpPrefix${nonce()}")
+      sorted.write.mode(SaveMode.Overwrite)
+        .partitionBy("bucket_day").parquet(tmpDir.toString)
+      val moved = Seq.newBuilder[(String, Long)]
+      fs.listStatus(tmpDir)
+        .filter(st => st.isDirectory &&
+          st.getPath.getName.startsWith("bucket_day="))
+        .foreach { bst =>
+          val dstDir = new HPath(dir, bst.getPath.getName)
+          fs.mkdirs(dstDir)
+          fs.listStatus(bst.getPath)
+            .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+            .foreach { f =>
+              val dst = new HPath(dstDir, s"a${nonce()}-${f.getPath.getName}")
+              if (!fs.rename(f.getPath, dst))
+                throw new java.io.IOException(
+                  s"append: rename ${f.getPath} -> $dst failed")
+              moved += ((s"${bst.getPath.getName}/${dst.getName}", f.getLen))
+            }
         }
-      } else {
-        val (pfs, pdir) = fsOf(spacePath(space))
-        val preList = listDataFiles(pfs, pdir)
-        sorted.write.mode(SaveMode.Append)
-          .partitionBy("bucket_day").parquet(spacePath(space))
-        // keep the read-path schema cache warm ACROSS writes (r17, perf):
-        // the written job schema merges into the cached store schema, so
-        // the next read plans with zero footer reads — the same
-        // schema-rides-with-the-mutation trade manifest mode makes, at
-        // the cost of two listings here (no inference job: the written
-        // schema is known)
-        primePlainSchema(space, org.apache.spark.sql.types.StructType(
-          good.schema.fields.filterNot(_.name == "bucket_day")), preList)
+      fs.delete(tmpDir, true)
+      val fresh = moved.result()
+      if (fresh.nonEmpty) {
+        // the job's data schema (everything but the partition column)
+        // merges into the manifest so reads never open a parquet footer
+        val jobSchema = org.apache.spark.sql.types.StructType(
+          good.schema.fields.filterNot(_.name == "bucket_day"))
+        val (freshStats, freshDicts) = fileStats(space, fresh.map(_._1))
+        // the delta path: commit cost tracks THIS JOB's buckets, not
+        // the store's live-file count (r14 — manifest-list indirection)
+        commitAppend(space, fresh, jobSchema, freshStats, freshDicts)
       }
     }
     validated.where(col("__error").isNotNull)
       .select(col("__error").as("error") +: points.columns.map(col): _*)
   }
 
-  // Physical mutations to one space (parquet appends, compaction swaps,
-  // retention deletes) are serialized per space: two concurrent append jobs
-  // to the same path share the committer's `_temporary/0` staging dir, and
-  // the first job's cleanup deletes the second's in-flight task files — the
-  // FileOutputCommitter concurrency hazard, caught live by Round12Spec's
-  // retention-race spec. Cross-space mutations stay fully parallel; reads
+  // Mutations to one space (appends, compaction swaps, retention commits,
+  // vacuum) are serialized per space: each one reads the current snapshot
+  // and commits the next, so two in-process mutators would otherwise
+  // re-apply against each other through the optimistic claim loop on
+  // every commit. Cross-space mutations stay fully parallel; reads
   // take no lock. (On a real cluster the analog is one writer per table
   // partition — a coordinator/queue, which the facade's queued path already
   // is; this lock covers embedded multi-threaded callers.)
@@ -184,21 +172,24 @@ class Graft(spark: SparkSession, root: String,
   private def mutationLock(space: String): Object =
     mutationLocks.computeIfAbsent(space, _ => new Object)
 
-  // ---- manifest/snapshot mode --------------------------------------------
+  // ---- manifest/snapshot storage -----------------------------------------
   //
-  // OPT-IN (`manifest = true`, config `"manifest_snapshots": true`): every
-  // mutation commits a SNAPSHOT — a small text file listing the space's live
-  // data files — and every read plans from the newest committed snapshot's
-  // file list instead of a live directory listing. This is the miniature of
-  // what a manifest table format (Iceberg/Delta) buys at 100 TB, closing the
-  // one trade the plain layout has ([[withReadRetry]]'s scaladoc): under a
-  // snapshot, compaction and retention REWIRE the manifest but delete
-  // nothing, so a reader planned before a rewrite streams its entire result
-  // from the files its snapshot pinned — no FAILED_READ_FILE, no retry, no
-  // lock. Physical deletion is deferred to an explicit [[vacuum]] with a
-  // keep-snapshots grace (Iceberg's expire-snapshots contract: a reader
-  // older than the grace is the operator's trade to make). Bonus surface:
-  // [[snapshots]]/[[readAt]] time travel, free once commits are files.
+  // The ONLY storage mode: every mutation commits a SNAPSHOT — a small
+  // text file listing the space's live data files — and every read plans
+  // from the newest committed snapshot's file list instead of a live
+  // directory listing. This is the miniature of what a manifest table
+  // format (Iceberg/Delta) buys at 100 TB, and the design Structured
+  // Streaming's file sink uses: a commit log, not the listing, decides
+  // which files are live. Compaction and retention REWIRE the manifest but
+  // delete nothing, so a reader planned before a rewrite streams its entire
+  // result from the files its snapshot pinned — no FAILED_READ_FILE, no
+  // retry, no lock. Physical deletion is deferred to an explicit [[vacuum]]
+  // with a keep-snapshots grace (Iceberg's expire-snapshots contract: a
+  // reader older than the grace is the operator's trade to make). Bonus
+  // surface: [[snapshots]]/[[readAt]] time travel, free once commits are
+  // files. Bucket directories already on disk without a snapshot (older
+  // stores, `IngestStream` sinks pointed at a store root) are adopted once
+  // by [[bootstrapManifest]].
   //
   // The analog in the reference stack is Cassandra itself: an SSTable
   // compaction swaps the live-sstable set while in-flight reads keep their
@@ -272,58 +263,6 @@ class Graft(spark: SparkSession, root: String,
         .where(col("__rn") === 1).drop("__rn", WseqCol)
     }
 
-  // ---- plain-mode read schema cache (r17, perf) ---------------------------
-  //
-  // A plain-mode read inferred its schema from parquet FOOTERS
-  // (mergeSchema) on EVERY request — a Spark job per read, ~0.4 s of the
-  // served /read latency at low series cardinality. The cache keys the
-  // merged data schema by the EXACT live file list (names + sizes): a read
-  // whose listing matches plans with `.schema(...)` over that same
-  // explicit list — zero footer reads, and the schema/file-list pair is
-  // one coherent snapshot of the store (a concurrent mutation simply
-  // misses this read, as it always could). Any mutation changes the
-  // listing and misses the cache; [[write]] re-primes from the job schema
-  // it already knows (no inference job), [[compact]] re-primes with one
-  // inference job (rare, off the serving path). Single-process coherence,
-  // like every plain-mode mutation (manifest mode carries its schema in
-  // committed metadata instead and never touches this).
-  private val plainSchemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[(String, Long)], org.apache.spark.sql.types.StructType)]()
-
-  /** Merge `written` (a data schema, no partition column) into the cached
-    * schema and advance the cached file list to the post-mutation listing.
-    * Primes only when the cache can account for EVERY live file: the
-    * cache was warm and covered the pre-write store, or the store was
-    * empty before this write (`preList` empty). A write that landed NO
-    * files (all points rejected) is a no-op here — merging a phantom
-    * batch's schema would expose all-null tag columns no live file
-    * carries, flapping between cached and inferred reads (r17 ADVICE).
-    * Otherwise the cache goes cold and the next read infers once and
-    * re-warms. */
-  private def primePlainSchema(space: String,
-      written: org.apache.spark.sql.types.StructType,
-      preList: Seq[(String, Long)]): Unit =
-    try {
-      val (fs, dir) = fsOf(spacePath(space))
-      val post = listDataFiles(fs, dir).sortBy(_._1)
-      if (post == preList.sortBy(_._1)) return // nothing landed
-      val prev = plainSchemaCache.get(space)
-      val preEmpty = preList.isEmpty
-      if (preEmpty || (prev != null && prev._1.toSet.subsetOf(post.toSet))) {
-        val baseData = Option(prev).filterNot(_ => preEmpty)
-          .map(p => org.apache.spark.sql.types.StructType(
-            p._2.fields.filterNot(_.name == "bucket_day")))
-        val mergedJson = mergeDataSchema(baseData.map(_.json), written)
-        val full = org.apache.spark.sql.types.DataType.fromJson(mergedJson)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-          .add("bucket_day", org.apache.spark.sql.types.IntegerType,
-            nullable = true)
-        plainSchemaCache.put(space, (post, full))
-      } else plainSchemaCache.remove(space)
-    } catch { // priming must never fail the mutation it rides
-      case scala.util.control.NonFatal(_) => plainSchemaCache.remove(space)
-    }
-
   /** The space's data files as (`bucket_day=<d>/<name>`, size) pairs. */
   private def listDataFiles(fs: FileSystem, dir: HPath): Seq[(String, Long)] =
     if (!isDir(fs, dir)) Nil
@@ -335,9 +274,9 @@ class Graft(spark: SparkSession, root: String,
           .map(st => (bst.getPath.getName + "/" + st.getPath.getName, st.getLen))
       }
 
-  /** Committed snapshot seqs, ascending — empty before the first commit,
-    * and always empty on a plain-mode store (a listing op, so no loud
-    * reject like [[vacuum]]/[[readAt]]: "no snapshots" is its answer).
+  /** Committed snapshot seqs, ascending — empty before the first commit
+    * (a listing op: it never adopts a pre-manifest store, so such a store
+    * answers "no snapshots" until its first read or mutation).
     */
   def snapshots(space: String = "default"): Seq[Long] = {
     val (fs, mdir) = fsOf(manifestPath(space))
@@ -358,8 +297,6 @@ class Graft(spark: SparkSession, root: String,
     * seqs alone can never carry this: they restart at 1 by design.
     */
   def storeIdentity(space: String = "default"): String = {
-    require(manifest,
-      "storeIdentity is a manifest-mode concept (manifest = true)")
     val (fs, mdir) = fsOf(manifestPath(space))
     val f = new HPath(mdir, "identity")
     def readIt(): String = {
@@ -384,16 +321,19 @@ class Graft(spark: SparkSession, root: String,
     }
   }
 
-  /** Adopt a pre-manifest store: flipping `manifest = true` on a root that
-    * already holds plain-mode data must SEE that data — and must never let
-    * [[vacuum]] treat it as orphaned (review r13: without adoption, the
-    * flag flip silently emptied every read, and one write + one vacuum
-    * physically deleted the store's entire prior history). On the first
-    * manifest touch of a space with data files but no snapshot, commit
-    * snapshot 1 = everything on disk, schema from one footer pass — the
-    * only time the manifest path ever infers. Caller holds the mutation
-    * lock; every mutation calls this, and reads take the lock for exactly
-    * this one-time adoption.
+  /** Adopt a pre-manifest store: a root whose bucket directories hold data
+    * files but no snapshot (written by an older release, or by an
+    * `IngestStream` sink pointed at the store root) must SEE that data —
+    * and must never let [[vacuum]] treat it as orphaned (review r13:
+    * without adoption, one write + one vacuum physically deleted the
+    * store's entire prior history). On the first touch of a space with
+    * data files but no snapshot, commit snapshot 1 = everything on disk,
+    * schema from one footer pass — the only time the store ever infers.
+    * The adoption is ONE-WAY and ONE-TIME: files that land in the bucket
+    * directories after snapshot 1 are not live until a commit names them
+    * (vacuum reclaims them as orphans). Caller holds the mutation lock;
+    * every mutation calls this, and reads take the lock for exactly this
+    * one-time adoption.
     */
   private def bootstrapManifest(space: String): Unit = {
     if (snapshots(space).nonEmpty) return
@@ -873,7 +813,7 @@ class Graft(spark: SparkSession, root: String,
   }
 
   /** Physically delete files no snapshot in the keep window references, and
-    * expire the manifests older than the window — manifest mode's deferred
+    * expire the manifests older than the window — the store's deferred
     * deletion (Iceberg's expire-snapshots). `keepSnapshots` is the reader
     * grace: a reader pinned to an expired snapshot is the operator's trade,
     * and its default is [[Graft.DefaultVacuumKeep]] — the ONE default the
@@ -885,7 +825,6 @@ class Graft(spark: SparkSession, root: String,
   def vacuum(space: String = "default",
              keepSnapshots: Int = Graft.DefaultVacuumKeep,
              orphanGraceMs: Long = Graft.DefaultOrphanGraceMs): Seq[String] = {
-    require(manifest, "vacuum is a manifest-mode operation (manifest = true)")
     flushQueued(space) // queued-but-unlanded points land (and commit) first
     mutationLock(space).synchronized {
       val (fs, dir) = fsOf(spacePath(space))
@@ -1123,130 +1062,76 @@ class Graft(spark: SparkSession, root: String,
     // those directories and silently hide the data
     def bucketOfMs(ms: Long) =
       Math.floorDiv(Math.floorDiv(ms, Det.MsInDay), g.toLong) * g
-    val raw =
-      if (manifest) {
-        // manifest mode: plan from the snapshot — never a directory
-        // listing, so rewrites can't race this read. Since r14 the
-        // snapshot is a manifest LIST: day pruning happens on the `#seg`
-        // references BEFORE anything else is fetched, so read planning
-        // costs the snapshot GET plus only the in-range buckets' segment
-        // GETs — at 100 TB a narrow-window read plans from a few KB of
-        // metadata however many million files the store holds. Sizes +
-        // the data schema ride in the metadata, so the scan relation is
-        // built with ZERO listing/stat/footer calls (ManifestRelation);
-        // a legacy v1 inline snapshot falls back to footer inference.
-        val (mfs, mdir) = fsOf(manifestPath(space))
-        def stateOf(at: Option[Long]): Option[SnapState] =
-          at.orElse(snapshots(space).lastOption)
-            .map(readSnapState(mfs, mdir, _))
-        val st0 = stateOf(pinned)
-        val st =
-          if (pinned.isDefined) st0
-          else st0 match {
-            case Some(s) if s.segs.nonEmpty || s.inline.nonEmpty => st0
-            case _ => ensureManifest(space); stateOf(None)
-          }
-        val total = st.map(s =>
-          s.segs.map(_.nFiles.toLong).sum + s.inline.size).getOrElse(0L)
-        if (total == 0) return None
-        val snap = st.get
-        val lo = bucketOfMs(startMs)
-        val hi = bucketOfMs(math.max(endMs - 1, startMs))
-        val inLines = snap.segs.filter(r => r.day >= lo && r.day <= hi)
-          .sortBy(_.day)
-          .flatMap(r => readSegmentLines(mfs, mdir, r.name)) ++
-          snap.inline.filter { l =>
-            val d = dayOfPath(parseEntry(l)._1._1); d >= lo && d <= hi }
-        val m = manifestOfLines(snap.schemaJson, inLines)
-        snap.schemaJson match {
-          case Some(sj) if m.files.forall(_._2 >= 0) =>
-            if (m.files.isEmpty) {
-              // no file can match: the schema rides in the manifest, so an
-              // empty frame costs O(1) — never a relation over the whole
-              // live list just to keep the schema (review r13)
-              import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
-              val full = DataType.fromJson(sj).asInstanceOf[StructType]
-                .add("bucket_day", IntegerType, nullable = false)
-              spark.createDataFrame(
-                java.util.Collections.emptyList[org.apache.spark.sql.Row](), full)
-            } else ManifestRelation.frame(spark, path, m.files, sj, m.stats,
-              m.dicts)
-          case _ =>
-            // v1 manifest (no schema): fall back to footer inference; an
-            // empty range plans the full list so the frame keeps a schema
-            val planFiles =
-              if (m.files.nonEmpty) m.files
-              else snapshotManifest(space, pinned).files
-            spark.read.option("basePath", path).option("mergeSchema", "true")
-              .parquet(planFiles.map(f => s"$path/${f._1}"): _*)
-        }
-      } else {
-        val (fs, p) = fsOf(path)
-        if (!fs.exists(p)) return None
-        // a root with no bucket directory yet reads as "no data" WITHOUT
-        // attempting the glob: the thrown-and-caught inference failure below
-        // is correct but Spark logs it with a full stack at WARN — per-request
-        // noise in a long-lived server (the catch stays as the race guard)
-        if (!fs.listStatus(p).exists(_.getPath.getName.startsWith("bucket_day=")))
-          return None
-        // Read via the bucket-partition glob with an explicit basePath: the
-        // bucket directories are the source of truth (as Orestes' per-bucket
-        // tables are). This deliberately bypasses any streaming-sink
-        // `_spark_metadata` log, which would otherwise keep referencing files
-        // that `remove()` retention has deleted. Only a missing/empty glob is
-        // "no buckets yet" — real read errors must surface.
-        // mergeSchema: tags are data-dependent (any write may add one), and a
-        // pre-stamp store appended to by a stamped writer holds files with and
-        // without __wseq — single-footer inference would pick one arbitrary
-        // schema, silently dropping tags or the stamp (and with it the
-        // last-write-wins merge below). Merged, legacy rows surface a null
-        // stamp and rank last, exactly as the merge intends.
-        // r17 (perf): when the live file list matches the schema cache
-        // (writes keep it primed), the read plans with `.schema(...)` over
-        // that SAME explicit list — zero footer reads, and the
-        // schema/file-list pair is one coherent listing snapshot. A miss
-        // infers once (mergeSchema) and re-warms the cache.
-        try {
-          val cFiles = listDataFiles(fs, p).sortBy(_._1)
-          if (cFiles.isEmpty) return None
-          val cached = plainSchemaCache.get(space)
-          if (cached != null && cached._1 == cFiles)
-            spark.read.schema(cached._2).option("basePath", path)
-              .parquet(cFiles.map(f => s"$path/${f._1}"): _*)
-          else {
-            val inferred = spark.read.option("basePath", path)
-              .option("mergeSchema", "true")
-              .parquet(cFiles.map(f => s"$path/${f._1}"): _*)
-            plainSchemaCache.put(space, (cFiles, inferred.schema))
-            inferred
-          }
-        } catch {
-          case e: org.apache.spark.sql.AnalysisException
-              if e.getMessage.contains("PATH_NOT_FOUND") ||
-                 e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") ||
-                 e.getMessage.toLowerCase.contains("path does not exist") =>
-            return None
-        }
+    // plan from the snapshot — never a directory listing, so rewrites
+    // can't race this read. Since r14 the snapshot is a manifest LIST:
+    // day pruning happens on the `#seg` references BEFORE anything else
+    // is fetched, so read planning costs the snapshot GET plus only the
+    // in-range buckets' segment GETs — at 100 TB a narrow-window read
+    // plans from a few KB of metadata however many million files the
+    // store holds. Sizes + the data schema ride in the metadata, so the
+    // scan relation is built with ZERO listing/stat/footer calls
+    // (ManifestRelation); a legacy v1 inline snapshot falls back to
+    // footer inference.
+    val (mfs, mdir) = fsOf(manifestPath(space))
+    def stateOf(at: Option[Long]): Option[SnapState] =
+      at.orElse(snapshots(space).lastOption)
+        .map(readSnapState(mfs, mdir, _))
+    val st0 = stateOf(pinned)
+    val st =
+      if (pinned.isDefined) st0
+      else st0 match {
+        case Some(s) if s.segs.nonEmpty || s.inline.nonEmpty => st0
+        case _ => ensureManifest(space); stateOf(None)
       }
-    {
-      // prune bucket directories by the query's time range — the reason the
-      // layout exists (Orestes' valid-days check, lib/orestes-query.js:30-40)
-      val pruned = raw.where(
-        col("bucket_day") >= bucketOfMs(startMs) &&
-        col("bucket_day") <= bucketOfMs(math.max(endMs - 1, startMs)))
-      // push the [start, end) bounds on the PHYSICAL time_ms column too:
-      // Tsdb.read re-applies them through the ts alias (unix_millis over
-      // timestamp_millis), which parquet can't push — this plain comparison
-      // reaches PushedFilters, so row groups prune by time WITHIN a bucket
-      val df = (if (startMs != Long.MinValue) pruned.where(col("time_ms") >= startMs)
-                else pruned) match {
-        case p if endMs != Long.MaxValue => p.where(col("time_ms") < endMs)
-        case p => p
-      }
-      val tags = df.columns.filterNot(c =>
-        c == "time_ms" || c == "value" || c == "bucket_day" || c == WseqCol).toSeq
-      Some((df, tags))
+    val total = st.map(s =>
+      s.segs.map(_.nFiles.toLong).sum + s.inline.size).getOrElse(0L)
+    if (total == 0) return None
+    val snap = st.get
+    val lo = bucketOfMs(startMs)
+    val hi = bucketOfMs(math.max(endMs - 1, startMs))
+    val inLines = snap.segs.filter(r => r.day >= lo && r.day <= hi)
+      .sortBy(_.day)
+      .flatMap(r => readSegmentLines(mfs, mdir, r.name)) ++
+      snap.inline.filter { l =>
+        val d = dayOfPath(parseEntry(l)._1._1); d >= lo && d <= hi }
+    val m = manifestOfLines(snap.schemaJson, inLines)
+    val raw = snap.schemaJson match {
+      case Some(sj) if m.files.forall(_._2 >= 0) =>
+        if (m.files.isEmpty) {
+          // no file can match: the schema rides in the manifest, so an
+          // empty frame costs O(1) — never a relation over the whole
+          // live list just to keep the schema (review r13)
+          import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
+          val full = DataType.fromJson(sj).asInstanceOf[StructType]
+            .add("bucket_day", IntegerType, nullable = false)
+          spark.createDataFrame(
+            java.util.Collections.emptyList[org.apache.spark.sql.Row](), full)
+        } else ManifestRelation.frame(spark, path, m.files, sj, m.stats,
+          m.dicts)
+      case _ =>
+        // v1 manifest (no schema): fall back to footer inference; an
+        // empty range plans the full list so the frame keeps a schema
+        val planFiles =
+          if (m.files.nonEmpty) m.files
+          else snapshotManifest(space, pinned).files
+        spark.read.option("basePath", path).option("mergeSchema", "true")
+          .parquet(planFiles.map(f => s"$path/${f._1}"): _*)
     }
+    // prune bucket directories by the query's time range — the reason the
+    // layout exists (Orestes' valid-days check, lib/orestes-query.js:30-40)
+    val pruned = raw.where(col("bucket_day") >= lo && col("bucket_day") <= hi)
+    // push the [start, end) bounds on the PHYSICAL time_ms column too:
+    // Tsdb.read re-applies them through the ts alias (unix_millis over
+    // timestamp_millis), which parquet can't push — this plain comparison
+    // reaches PushedFilters, so row groups prune by time WITHIN a bucket
+    val df = (if (startMs != Long.MinValue) pruned.where(col("time_ms") >= startMs)
+              else pruned) match {
+      case p if endMs != Long.MaxValue => p.where(col("time_ms") < endMs)
+      case p => p
+    }
+    val tags = df.columns.filterNot(c =>
+      c == "time_ms" || c == "value" || c == "bucket_day" || c == WseqCol).toSeq
+    Some((df, tags))
   }
 
   /** Compile an ES filter against the space's stored schema: tags are
@@ -1425,44 +1310,6 @@ class Graft(spark: SparkSession, root: String,
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
   }
 
-  /** Run a read ACTION with re-plan-on-retry semantics against concurrent
-    * compaction (r13, from the compact-vs-readers race spec): a reader
-    * whose file listing predates a compaction swap scans paths the swap
-    * deleted and fails with FAILED_READ_FILE — the inherent plain-parquet
-    * trade (lock-free readers + physical rewrites need a manifest table
-    * format for true snapshot isolation; at 100 TB that is Iceberg/Delta's
-    * job — and graft's manifest mode (`manifest = true`) supplies exactly
-    * that: under it rewrites delete nothing until [[vacuum]], reads plan
-    * from a pinned snapshot, and this retry never fires).
-    * `body` must BUILD the frame and run the action inside the
-    * closure — each retry then re-plans against a fresh, consistent
-    * post-swap listing, and compaction preserves logical content
-    * (last-write-wins applied physically), so a retried result is the same
-    * logical store. Writers never need this: every physical mutation path
-    * serializes on the per-space mutation lock.
-    */
-  def withReadRetry[T](attempts: Int = 5)(body: => T): T = {
-    def isSwapRace(e: Throwable): Boolean = {
-      var c: Throwable = e
-      while (c != null) {
-        val m = Option(c.getMessage).getOrElse("")
-        if (c.isInstanceOf[java.io.FileNotFoundException] ||
-            m.contains("FILE_NOT_EXIST") ||
-            m.contains("underlying files have been updated")) return true
-        c = if (c.getCause eq c) null else c.getCause
-      }
-      false
-    }
-    var last: Throwable = null
-    var i = 0
-    while (i < attempts) {
-      try return body
-      catch { case e: Throwable if isSwapRace(e) =>
-        last = e; i += 1; Thread.sleep(50L * i) }
-    }
-    throw last
-  }
-
   /** `/read`: points in [startMs, endMs) for series matching the ES filter. */
   def read(filter: String, space: String = "default",
            startMs: Long = Long.MinValue, endMs: Long = Long.MaxValue): DataFrame =
@@ -1471,7 +1318,7 @@ class Graft(spark: SparkSession, root: String,
       case None => empty("time_ms BIGINT, value DOUBLE")
     }
 
-  /** Time travel (manifest mode): [[read]] pinned to snapshot `snapshot`
+  /** Time travel: [[read]] pinned to snapshot `snapshot`
     * (a seq from [[snapshots]]) — the store exactly as that commit left it,
     * valid until [[vacuum]] expires the snapshot. The write queue is NOT
     * flushed first: a pinned read must not advance the store it is
@@ -1479,7 +1326,6 @@ class Graft(spark: SparkSession, root: String,
     */
   def readAt(snapshot: Long, filter: String, space: String = "default",
              startMs: Long = Long.MinValue, endMs: Long = Long.MaxValue): DataFrame = {
-    require(manifest, "readAt is a manifest-mode operation (manifest = true)")
     require(snapshots(space).contains(snapshot),
       s"snapshot $snapshot does not exist (have: ${snapshots(space).mkString(", ")})")
     tableAt(space, snapshot, startMs, endMs) match {
@@ -1492,7 +1338,7 @@ class Graft(spark: SparkSession, root: String,
                       endMs: Long): Option[PointsTable] =
     table(space, startMs, endMs, pinned = Some(snapshot))
 
-  /** Store-level CDC (r14, manifest mode): the logical row-level diff
+  /** Store-level CDC (r14): the logical row-level diff
     * between two committed snapshots — one row per (series, time) whose
     * merged value differs, with `change` ∈ added / removed / changed and
     * both values. This is the frame an incremental consumer (index
@@ -1510,7 +1356,6 @@ class Graft(spark: SparkSession, root: String,
     * shuffles only those buckets' rows.
     */
   def changes(fromSnap: Long, toSnap: Long, space: String = "default"): DataFrame = {
-    require(manifest, "changes is a manifest-mode operation (manifest = true)")
     val have = snapshots(space)
     Seq(fromSnap, toSnap).foreach(s => require(have.contains(s),
       s"snapshot $s does not exist (have: ${have.mkString(", ")})"))
@@ -1794,7 +1639,7 @@ class Graft(spark: SparkSession, root: String,
     */
   private val sqlViewsOwned = scala.collection.mutable.Set.empty[String]
 
-  /** Time-travel SQL (manifest mode): run ANSI SQL against ONE space pinned
+  /** Time-travel SQL: run ANSI SQL against ONE space pinned
     * to `snapshot`, registered as `graft_<space>_at_<snapshot>` — the SQL
     * face of [[readAt]] (an auditor's "what did the store say last Tuesday"
     * query). The pinned view is registered fresh per call and owned like
@@ -1827,136 +1672,54 @@ class Graft(spark: SparkSession, root: String,
     flushQueued(space)
     val (fs, dir) = fsOf(spacePath(space))
     if (!isDir(fs, dir)) return Nil
-    if (manifest) {
-      // the report covers the LIVE set: retired-but-unvacuumed files are
-      // storage overhead (vacuum's concern), not fragmentation. Byte totals
-      // ride in the manifest, and so does the stamp GATE: a fully-compacted
-      // store's manifest schema carries no __wseq (compactManifest
-      // recomputes it for exactly this purpose), so the standing daemon's
-      // idle sweep answers "any stamps?" from the one snapshot it already
-      // read — zero footer jobs on a converged store (code review r14).
-      // Only while the store-wide schema still has __wseq do per-bucket
-      // footer reads run, for the per-bucket accuracy the trigger needs.
-      ensureManifest(space) // adopt a pre-manifest store
-      val path = spacePath(space)
-      val m = snapshotManifest(space, None)
-      val anyStamps = m.schemaJson.forall(_.contains("\"" + WseqCol + "\""))
-      return m.files
-        .groupBy(_._1.takeWhile(_ != '/')).toSeq
-        .map { case (bname, bfiles) =>
-          val day = bname.stripPrefix("bucket_day=").toLong
-          val bytes = bfiles.map(_._2).sum
-          val stamped = anyStamps && spark.read.option("mergeSchema", "true")
-            .parquet(bfiles.map(f => s"$path/${f._1}"): _*)
-            .columns.contains(WseqCol)
-          (day, bfiles.length, bytes, stamped)
-        }.sortBy(_._1)
-    }
-    fs.listStatus(dir).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("bucket_day="))
-      .map { bst =>
-        val day = bst.getPath.getName.stripPrefix("bucket_day=").toLong
-        val parts = fs.listStatus(bst.getPath)
-          .filter(_.getPath.getName.endsWith(".parquet"))
-        // an empty bucket dir (interrupted write, manual cleanup) is a
-        // degraded state this report must SURFACE, not crash on —
-        // spark.read over zero files throws "unable to infer schema"
-        val stamped = parts.nonEmpty && spark.read.option("mergeSchema", "true")
-          .parquet(bst.getPath.toString).columns.contains(WseqCol)
-        (day, parts.length, parts.map(_.getLen).sum, stamped)
+    // the report covers the LIVE set: retired-but-unvacuumed files are
+    // storage overhead (vacuum's concern), not fragmentation. Byte totals
+    // ride in the manifest, and so does the stamp GATE: a fully-compacted
+    // store's manifest schema carries no __wseq ([[compact]]
+    // recomputes it for exactly this purpose), so the standing daemon's
+    // idle sweep answers "any stamps?" from the one snapshot it already
+    // read — zero footer jobs on a converged store (code review r14).
+    // Only while the store-wide schema still has __wseq do per-bucket
+    // footer reads run, for the per-bucket accuracy the trigger needs.
+    ensureManifest(space) // adopt a pre-manifest store
+    val path = spacePath(space)
+    val m = snapshotManifest(space, None)
+    val anyStamps = m.schemaJson.forall(_.contains("\"" + WseqCol + "\""))
+    m.files
+      .groupBy(_._1.takeWhile(_ != '/')).toSeq
+      .map { case (bname, bfiles) =>
+        val day = bname.stripPrefix("bucket_day=").toLong
+        val bytes = bfiles.map(_._2).sum
+        val stamped = anyStamps && spark.read.option("mergeSchema", "true")
+          .parquet(bfiles.map(f => s"$path/${f._1}"): _*)
+          .columns.contains(WseqCol)
+        (day, bfiles.length, bytes, stamped)
       }.sortBy(_._1)
   }
 
-  /** Compaction: rewrite fragmented bucket directories into
-    * ceil(bytes/targetBytes) files, restoring the (tags, time) clustering
-    * the writer establishes — the small-files maintenance job every
-    * append-heavy store needs (each streaming micro-batch / bulk write adds
-    * files; row-group stats degrade as files shrink). Range-repartition by
-    * the clustering key keeps files disjoint on series, so post-compaction
-    * reads prune row groups exactly as freshly-written data does. Buckets
-    * already at or below the target file count are left untouched (retention
-    * and compaction then never race on the same directory content).
+  /** Compaction: rewrite fragmented buckets into ceil(bytes/targetBytes)
+    * files, restoring the (tags, time) clustering the writer establishes —
+    * the small-files maintenance job every append-heavy store needs (each
+    * streaming micro-batch / bulk write adds files; row-group stats degrade
+    * as files shrink). Range-repartition by the clustering key keeps files
+    * disjoint on series, so post-compaction reads prune row groups exactly
+    * as freshly-written data does. A bucket is left untouched when its file
+    * count is at target AND it holds no write-sequence stamps.
+    *
+    * The swap is a manifest COMMIT: replaced files stay on disk (pinned
+    * readers stream from them; [[vacuum]] reclaims), and the crash story is
+    * one state (an orphaned tmp dir or moved-but-uncommitted output files,
+    * both invisible to every snapshot and swept by vacuum). No
+    * delete+rename dance, no recovery scan.
     * Returns (bucket_day, files_before, files_after) per compacted bucket.
     */
   def compact(space: String = "default",
               targetBytes: Long = 128L * 1024 * 1024): Seq[(Long, Int, Int)] = {
     flushQueued(space)
-    val (fs, dir) = fsOf(spacePath(space))
+    val path = spacePath(space)
+    val (fs, dir) = fsOf(path)
     if (!isDir(fs, dir)) return Nil
-    if (manifest) return compactManifest(space, targetBytes)
     mutationLock(space).synchronized {
-    // Recover/clean tmp dirs a crashed compaction left behind. The tmp name
-    // is "_"-prefixed so Spark's file listing ignores it even mid-swap (a
-    // visible sibling would be parsed as a bucket_day partition value and
-    // duplicate the bucket's rows on every read of the space).
-    fs.listStatus(dir).filter(_.getPath.getName.startsWith(TmpPrefix)).foreach { st =>
-      val day = st.getPath.getName.stripPrefix(TmpPrefix)
-      val bdir = new HPath(dir, s"bucket_day=$day")
-      if (!fs.exists(bdir)) {
-        // crashed between delete and rename: the tmp IS the bucket — finish
-        if (!fs.rename(st.getPath, bdir))
-          throw new java.io.IOException(s"compact recovery: rename ${st.getPath} -> $bdir failed")
-      } else fs.delete(st.getPath, true) // bucket intact: tmp is leftover garbage
-    }
-    val buckets = fs.listStatus(dir).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("bucket_day="))
-    buckets.flatMap { bst =>
-      val bdir = bst.getPath
-      val parts = fs.listStatus(bdir).filter(_.getPath.getName.endsWith(".parquet"))
-      val nOut = math.max(1,
-        math.ceil(parts.map(_.getLen).sum.toDouble / targetBytes).toInt)
-      // mergeSchema for the same mixed legacy/stamped reason as table()
-      val df = spark.read.option("mergeSchema", "true").parquet(bdir.toString)
-      // a bucket is done only when its file count is at target AND it holds
-      // no write-sequence stamps: one stamped file anywhere in the store
-      // keeps the merge window on every read (mergeSchema surfaces the
-      // column), so compaction must retire stamps even in buckets whose
-      // file count is already fine — that is what makes a fully compacted
-      // store's reads window-free
-      if (parts.length <= nOut && !df.columns.contains(WseqCol)) None
-      else {
-        val day = bdir.getName.stripPrefix("bucket_day=")
-        val tagCols = df.columns.filterNot(c =>
-          c == "time_ms" || c == "value" || c == WseqCol).toSeq
-        val key = tagCols.map(col) :+ col("time_ms")
-        // apply last-write-wins physically (lwwMerged — the same merge
-        // table() performs on read) and DROP the stamp: a compacted bucket
-        // holds one row per (series, time) by construction, so it needs no
-        // merge — a fully compacted store reads with no window at all (the
-        // WindowGroupLimit disappears from the plan), which is the point
-        // of compacting. Later writes still overwrite compacted points:
-        // their files re-introduce the stamp through the mergeSchema read,
-        // and the merge window's DESC NULLS LAST ordering ranks every
-        // stamped row above the stamp-less compacted one.
-        val merged = lwwMerged(df, key)
-        val tmp = new HPath(dir, s"$TmpPrefix$day")
-        merged.repartitionByRange(nOut, key: _*)
-          .sortWithinPartitions(key: _*)
-          .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-        // swap, checking every step: an unchecked false return would lose
-        // the bucket silently (ADVICE r2)
-        if (!fs.delete(bdir, true))
-          throw new java.io.IOException(s"compact: delete $bdir failed")
-        if (!fs.rename(tmp, bdir))
-          throw new java.io.IOException(s"compact: rename $tmp -> $bdir failed")
-        Some((day.toLong, parts.length, nOut))
-      }
-    }.sortBy(_._1)
-    }
-  }
-
-  /** Manifest-mode compaction: same merge/target-size semantics as the
-    * plain path, but the swap is a MANIFEST commit — replaced files stay on
-    * disk (pinned readers stream from them; [[vacuum]] reclaims), and the
-    * crash story collapses to one state (an orphaned tmp dir or moved-but-
-    * uncommitted output files, both invisible to every snapshot and swept
-    * by vacuum). No delete+rename dance, no recovery scan.
-    */
-  private def compactManifest(space: String,
-                              targetBytes: Long): Seq[(Long, Int, Int)] =
-    mutationLock(space).synchronized {
-      val path = spacePath(space)
-      val (fs, dir) = fsOf(path)
       // crashed-run staging dirs are NOT swept here (r17, VERDICT r16 #4
       // — found by the two-JVM race spec): a `_compact_tmp_*` or
       // `_append_tmp_*` dir in the space may be ANOTHER PROCESS'S LIVE
@@ -1975,7 +1738,6 @@ class Graft(spark: SparkSession, root: String,
           val bytes = bfiles.map(_._2).sum // sizes ride in the manifest
           val nOut = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
           // no basePath: the frame must not carry the partition column
-          // (plain-mode compact reads the bucket dir the same way)
           val df = spark.read.option("mergeSchema", "true")
             .parquet(bfiles.map(f => s"$path/${f._1}"): _*)
           if (bfiles.length <= nOut && !df.columns.contains(WseqCol)) {
@@ -2072,6 +1834,7 @@ class Graft(spark: SparkSession, root: String,
       }
       applied.sortBy(_._1)
     }
+  }
 
   /** `/delete`: drop whole buckets whose last day is older than
     * `today - keepDays` (reference semantics, lib/orestes-remover.js:16-39).
@@ -2084,62 +1847,47 @@ class Graft(spark: SparkSession, root: String,
     val doomed = todayDay - keepDays
     val (fs, dir) = fsOf(spacePath(space))
     if (!isDir(fs, dir)) return Nil
-    if (manifest) {
-      // retention is a manifest commit: the doomed buckets' files leave the
-      // live set (readers planned after this see them gone) but stay on
-      // disk for pinned snapshots until [[vacuum]] — the same deferred
-      // deletion every mutation gets in manifest mode
-      return mutationLock(space).synchronized {
-        bootstrapManifest(space) // adopt a pre-manifest store
-        val files = snapshotManifest(space, None).paths
-        val days = files.map(dayOfPath).distinct
-        val dropDays = days.filter(day =>
-          math.min(day + granularityOf(space) - 1, todayDay) <= doomed).sorted
-        if (dropDays.nonEmpty) {
-          val dd = dropDays.toSet
-          commitManifest(space) { cur =>
-            val keep = cur.files.filterNot(f => dd(dayOfPath(f._1)))
-            // the live schema is re-derived from the surviving files (one
-            // footer pass at mutation time, never at read time): a tag that
-            // only ever appeared in the dropped buckets leaves the schema,
-            // exactly as plain-mode mergeSchema inference would have it.
-            // Normalized through mergeDataSchema like every other commit —
-            // a verbatim footer schema would mark __wseq REQUIRED while
-            // compacted files lack the column, the nullability-vs-nulls
-            // wrong-results hazard (review r13)
-            val schema =
-              if (keep.isEmpty) None
-              else Some(mergeDataSchema(None,
-                footerDataSchema(space, keep.map(_._1))))
-            // surviving files keep their zone maps + dictionaries;
-            // commitManifest prunes dropped entries with their file lines
-            Manifest(keep, schema, cur.stats, cur.dicts)
-          }
-        }
-        dropDays
-      }
-    }
-    val buckets = fs.listStatus(dir).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("bucket_day="))
-      .map(st => (st.getPath, st.getPath.getName.stripPrefix("bucket_day=").toLong))
-    val dropped = buckets.filter { case (_, day) =>
-      math.min(day + granularityOf(space) - 1, todayDay) <= doomed
-    }
+    // retention is a manifest commit: the doomed buckets' files leave the
+    // live set (readers planned after this see them gone) but stay on
+    // disk for pinned snapshots until [[vacuum]] — the same deferred
+    // deletion every mutation gets
     mutationLock(space).synchronized {
-      dropped.foreach { case (p, _) =>
-        if (!fs.delete(p, true))
-          throw new java.io.IOException(s"remove: delete $p failed")
+      bootstrapManifest(space) // adopt a pre-manifest store
+      val files = snapshotManifest(space, None).paths
+      val days = files.map(dayOfPath).distinct
+      val dropDays = days.filter(day =>
+        math.min(day + granularityOf(space) - 1, todayDay) <= doomed).sorted
+      if (dropDays.nonEmpty) {
+        val dd = dropDays.toSet
+        commitManifest(space) { cur =>
+          val keep = cur.files.filterNot(f => dd(dayOfPath(f._1)))
+          // the live schema is re-derived from the surviving files (one
+          // footer pass at mutation time, never at read time): a tag that
+          // only ever appeared in the dropped buckets leaves the schema,
+          // exactly as mergeSchema inference over the survivors has it.
+          // Normalized through mergeDataSchema like every other commit —
+          // a verbatim footer schema would mark __wseq REQUIRED while
+          // compacted files lack the column, the nullability-vs-nulls
+          // wrong-results hazard (review r13)
+          val schema =
+            if (keep.isEmpty) None
+            else Some(mergeDataSchema(None,
+              footerDataSchema(space, keep.map(_._1))))
+          // surviving files keep their zone maps + dictionaries;
+          // commitManifest prunes dropped entries with their file lines
+          Manifest(keep, schema, cur.stats, cur.dicts)
+        }
       }
+      dropDays
     }
-    dropped.map(_._2).sorted
   }
 
   /** One pass of the compaction daemon (r14): for every space whose
     * [[fragmentation]] report shows a bucket past `maxFilesPerBucket` (or
     * still carrying write-sequence stamps — one stamped file anywhere
     * keeps the merge window on every read), run [[compact]]. Each space's
-    * rewrite serializes on its mutation lock like any mutation; in
-    * manifest mode the swap is a commit and readers never retry. Returns
+    * rewrite serializes on its mutation lock like any mutation; the swap
+    * is a commit and readers never retry. Returns
     * the per-space compaction reports (spaces left untouched are absent).
     */
   def compactionSweep(maxFilesPerBucket: Int = 8,
@@ -2316,7 +2064,6 @@ object Graft {
   case class Config(port: Int, spaceGranularity: Map[String, Int],
                     spaceKeepDays: Map[String, Int] = Map.empty,
                     continuousIngest: Boolean = false,
-                    manifestSnapshots: Boolean = true,
                     compactionSweepMinutes: Int = 60,
                     compactionMaxFiles: Int = 8,
                     compactionTargetMb: Int = 128,
@@ -2365,14 +2112,18 @@ object Graft {
     // streaming path (Graft.writeSpooled)
     val continuous = node.has("continuous_ingest") &&
       node.get("continuous_ingest").asBoolean(false)
-    // manifest/snapshot storage is the served DEFAULT since r14 (it
-    // removes the plain layout's reads-racing-compaction retry contract;
-    // bootstrapManifest adopts a pre-existing plain store on first
-    // touch). `"manifest_snapshots": false` keeps the plain layout — the
-    // documented fallback for operators who want bucket dirs to stay the
-    // whole story on disk.
-    val manifestSnapshots = !node.has("manifest_snapshots") ||
-      node.get("manifest_snapshots").asBoolean(true)
+    // manifest/snapshot storage is the ONLY layout: `"manifest_snapshots":
+    // true` (the served default since r14) is accepted and ignored, like
+    // the cassandra/elasticsearch blocks; `false` asked for the removed
+    // plain bucket-directory layout and must fail loudly — an operator who
+    // asks for one layout must not silently get another
+    if (node.has("manifest_snapshots") &&
+        !node.get("manifest_snapshots").asBoolean(true))
+      throw new IllegalArgumentException(
+        "config key \"manifest_snapshots\": false is no longer supported — " +
+          "the plain bucket-directory layout was removed and manifest/" +
+          "snapshot storage is the only layout (an existing plain store is " +
+          "adopted on first touch); drop the key or set it to true")
     // graft extension: the standing compaction sweep's cadence and
     // trigger (bucket file count); <= 0 disables the daemon
     val sweepMin = if (node.has("compaction_sweep_minutes"))
@@ -2385,8 +2136,8 @@ object Graft {
     // was hard-coded)
     val targetMb = if (node.has("compaction_target_mb"))
       node.get("compaction_target_mb").asInt(128) else 128
-    // graft extension: snapshots the standing vacuum retains (manifest
-    // mode's physical reclaim — without it a served store's compaction +
+    // graft extension: snapshots the standing vacuum retains (the store's
+    // physical reclaim — without it a served store's compaction +
     // retention are metadata-only and disk grows without bound); <= 0
     // disables the vacuum half of the maintenance sweep. The default is
     // DEEP (see DefaultVacuumKeep) so external /changes consumers keep
@@ -2414,7 +2165,7 @@ object Graft {
     val foldBatches = if (node.has("index_fold_batches"))
       node.get("index_fold_batches").asInt(16) else 16
     Config(port, perSpace("table_granularity_days"), perSpace("keep_days"),
-      continuous, manifestSnapshots, sweepMin, sweepMaxFiles, targetMb,
+      continuous, sweepMin, sweepMaxFiles, targetMb,
       vacKeep, searchIdx, commitPrim, foldBatches)
   }
 
@@ -2429,19 +2180,18 @@ object Graft {
       granularityDays = cfg.spaceGranularity.getOrElse("default", Tsdb.GranularityDays),
       spaceGranularity = cfg.spaceGranularity,
       spaceKeepDays = cfg.spaceKeepDays,
-      manifest = cfg.manifestSnapshots,
       commitPrimitive = cfg.commitPrimitive)
   }
 
   /** The reference's default facade port (conf/orestes-config.json). */
   val DefaultPort = 9668
 
-  /** Crashed-compaction tmp dirs: `_`-prefixed so Spark ignores them. */
+  /** Compaction staging dirs: `_`-prefixed so Spark ignores them; a crash
+    * leaves one behind, invisible to every reader, swept by vacuum. */
   private[tsdb] val TmpPrefix = "_compact_tmp_"
 
-  /** Manifest-mode append staging dirs (r14): `_`-prefixed like
-    * [[TmpPrefix]]; a crash leaves one behind, invisible to every reader,
-    * swept by vacuum/compaction cleanup. */
+  /** Append staging dirs (r14): `_`-prefixed like [[TmpPrefix]]; a crash
+    * leaves one behind, invisible to every reader, swept by vacuum. */
   private[tsdb] val AppendTmpPrefix = "_append_tmp_"
 
   // ---- driver-side point validation for the queued write path ------------

@@ -42,7 +42,7 @@ class CdcIndexSpec extends SparkTestBase {
   test("CDC consumer: sync keeps the series index rank-identical to the direct scan; a removal kills only emptied series; resurrection is a ledger flip, not a rewrite (r14)") {
     val root = freshDir("graft-cdcidx")
     val dir = s"$root/index"
-    val g = new Graft(spark, root + "/store", manifest = true)
+    val g = new Graft(spark, root + "/store")
     def w(rows: (String, Double, String, String, String)*) =
       g.write(rows.toSeq.toDF("time", "value", "name", "host", "role"))
 
@@ -109,7 +109,7 @@ class CdcIndexSpec extends SparkTestBase {
   test("CDC consumer: a pure compaction syncs as a data-free no-op; crash replay re-lands the batch bit-identically (r14)") {
     val root = freshDir("graft-cdcidx2")
     val dir = s"$root/index"
-    val g = new Graft(spark, root + "/store", manifest = true)
+    val g = new Graft(spark, root + "/store")
     def w(rows: (String, Double, String)*) =
       g.write(rows.toSeq.toDF("time", "value", "name"))
 
@@ -172,7 +172,7 @@ class CdcIndexSpec extends SparkTestBase {
   test("CDC consumer: a tag-schema evolution (new tag column) falls back to a full rebuild — doc identity shifted for every series (r14)") {
     val root = freshDir("graft-cdcidx3")
     val dir = s"$root/index"
-    val g = new Graft(spark, root + "/store", manifest = true)
+    val g = new Graft(spark, root + "/store")
     g.write(Seq(("2024-01-09T10:00:00Z", 1.0, "cpu"))
       .toDF("time", "value", "name"))
     CdcIndexSync.build(g, dir)

@@ -261,13 +261,19 @@ class GraftApiSpec extends SparkTestBase {
     }
     val before = g.read("""{"match_all":{}}""").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
-    val bdir = new java.io.File(s"$root/default/bucket_day=19726")
-    assert(bdir.listFiles().count(_.getName.endsWith(".parquet")) >= 5)
+    assert(g.fragmentation().map(b => (b._1, b._2 >= 5)) == Seq((19726L, true)))
 
     val report = g.compact()
     assert(report.map(t => (t._1, t._3)) == Seq((19726L, 1)))
     assert(report.head._2 >= 5)
-    assert(bdir.listFiles().count(_.getName.endsWith(".parquet")) == 1)
+    // the live set is one file; the retired ones stay on disk for pinned
+    // readers until a vacuum down to the newest snapshot reclaims them
+    assert(g.fragmentation().map(b => (b._1, b._2)) == Seq((19726L, 1)))
+    val bdir = new java.io.File(s"$root/default/bucket_day=19726")
+    def onDisk = bdir.listFiles().count(_.getName.endsWith(".parquet"))
+    assert(onDisk >= 6)
+    g.vacuum(keepSnapshots = 1)
+    assert(onDisk == 1)
 
     // identical content, still readable through every API path
     val after = g.read("""{"match_all":{}}""").collect()
@@ -320,6 +326,9 @@ class GraftApiSpec extends SparkTestBase {
     // bucket's parquet holds one stamp-less row per (series, time)
     val report = g.compact(targetBytes = 1L << 30)
     assert(report.map(_._3) == Seq(1), report.toString)
+    // vacuum to the newest snapshot: the bucket dir then holds only the
+    // compacted file, so the physical result is visible on disk
+    g.vacuum(keepSnapshots = 1)
     val bucket = java.nio.file.Paths.get(root, "default", "bucket_day=19726")
     val physical = spark.read.parquet(bucket.toString)
     assert(physical.count() == 1 && !physical.columns.contains("__wseq"))
@@ -373,37 +382,5 @@ class GraftApiSpec extends SparkTestBase {
     // the unranged read DOES scan those directories -> must fail on the
     // missing files (proving the ranged read's success was real pruning)
     intercept[Exception] { full.collect() }
-  }
-
-  test("compact recovers from a crash between bucket delete and tmp rename") {
-    val root = freshRoot()
-    val g = new Graft(spark, root)
-    import spark.implicits._
-    (1 to 5).foreach { i =>
-      g.write(Seq((s"2024-01-09T10:00:0$i" + "Z", i.toDouble, "s"))
-        .toDF("time", "value", "name"))
-    }
-    val before = g.read("""{"match_all":{}}""").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    // simulate the crash window: rename the bucket dir to the tmp name the
-    // compactor uses (bucket gone, tmp holds the data)
-    val space = java.nio.file.Paths.get(root, "default")
-    java.nio.file.Files.move(space.resolve("bucket_day=19726"),
-      space.resolve("_compact_tmp_19726"))
-    // mid-crash state: Spark ignores the _-prefixed dir -> reads see no data
-    // (never duplicated / partition-type-corrupted rows)
-    assert(g.read("""{"match_all":{}}""").count() == 0)
-    // next compact() entry finishes the swap, restoring the bucket
-    g.compact()
-    val after = g.read("""{"match_all":{}}""").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(after == before)
-    // garbage case: stale tmp NEXT TO an intact bucket is deleted, data kept
-    val fresh = space.resolve("_compact_tmp_19726")
-    java.nio.file.Files.createDirectory(fresh)
-    g.compact()
-    assert(!java.nio.file.Files.exists(fresh), "stale tmp cleaned up")
-    assert(g.read("""{"match_all":{}}""").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet == before)
   }
 }

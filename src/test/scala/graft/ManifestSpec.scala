@@ -4,11 +4,10 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import graft.tsdb.Graft
 
-/** Manifest/snapshot storage mode (r13): every mutation commits a snapshot
+/** Manifest/snapshot storage (r13): every mutation commits a snapshot
   * (a small file list), reads plan from the newest committed snapshot, and
   * rewrites delete NOTHING until vacuum — lock-free snapshot isolation under
-  * compaction/retention (the plain layout's one named trade, see
-  * Graft.withReadRetry), plus time travel for free. The reference gets this
+  * compaction/retention, plus time travel for free. The reference gets this
   * from Cassandra's live-SSTable set; parquet directories need the layer
   * supplied explicitly.
   */
@@ -18,7 +17,7 @@ class ManifestSpec extends SparkTestBase {
   private def freshRoot() =
     Files.createTempDirectory(Paths.get("target"), "graft-manifest").toString
 
-  private def store(root: String) = new Graft(spark, root, manifest = true)
+  private def store(root: String) = new Graft(spark, root)
 
   private def contentOf(g: Graft, space: String = "default"): Set[(Long, Double, String)] =
     g.read("""{"match_all":{}}""", space = space).collect()
@@ -64,9 +63,9 @@ class ManifestSpec extends SparkTestBase {
     assert(compacted.nonEmpty, "stamped buckets must compact")
     assert(g.snapshots().last > preSnap, "compaction commits a new snapshot")
 
-    // THE point of the mode: the pre-compaction plan's files still exist, so
-    // a full re-execution of the pinned frame succeeds bit-for-bit — the
-    // plain layout fails here with FAILED_READ_FILE (Round13Spec's race)
+    // THE point of snapshots: the pre-compaction plan's files still exist,
+    // so a full re-execution of the pinned frame succeeds bit-for-bit — a
+    // listing-planned read fails here with FAILED_READ_FILE
     assert(rows(pre.collect()) == expected)
 
     // post-compaction read: same logical content, stamp retired
@@ -299,14 +298,14 @@ class ManifestSpec extends SparkTestBase {
 
   test("flag flip adopts a pre-manifest store: reads see it, writes extend it, vacuum never orphans it") {
     val root = freshRoot()
-    val plain = new Graft(spark, root)
-    plain.write(Seq(("2024-01-09T10:00:00Z", 1.0, "s"), ("2024-01-19T10:00:00Z", 2.0, "s"))
-      .toDF("time", "value", "name"))
+    writeLegacyStore(root, Seq(("2024-01-09T10:00:00Z", 1.0, "s"),
+      ("2024-01-19T10:00:00Z", 2.0, "s")).toDF("time", "value", "name"))
 
-    // same root, manifest now on (the operator flipping the config flag):
-    // the first touch commits a bootstrap snapshot adopting what's on disk
+    // a store opened over the pre-manifest root: the first touch commits
+    // a bootstrap snapshot adopting what's on disk
     val g = store(root)
-    assert(contentOf(g).size == 2, "legacy plain-mode data must stay visible")
+    assert(g.snapshots().isEmpty, "listing snapshots adopts nothing")
+    assert(contentOf(g).size == 2, "legacy bucket-directory data must stay visible")
     assert(g.snapshots().size == 1, "one adoption snapshot")
     g.write(Seq(("2024-01-09T11:00:00Z", 3.0, "s")).toDF("time", "value", "name"))
     assert(contentOf(g).size == 3)
@@ -323,14 +322,23 @@ class ManifestSpec extends SparkTestBase {
     Files.write(cfg.toPath,
       """{"port": 9668, "manifest_snapshots": true,
          "spaces": {"default": {"table_granularity_days": 1}}}""".getBytes)
-    assert(Graft.loadConfig(spark, cfg.toString).manifestSnapshots)
+    // `true` is accepted and ignored: manifest storage is the only layout
+    Graft.loadConfig(spark, cfg.toString)
     val g = Graft.fromConfig(spark, cfg.toString, root + "/store")
     g.write(Seq(("2024-01-09T10:00:00Z", 1.0, "s")).toDF("time", "value", "name"))
     assert(g.snapshots().nonEmpty, "fromConfig store must commit snapshots")
-    g.vacuum() // manifest-mode-only op proves the flag reached the store
-    // a plain store rejects the manifest-only surface loudly
-    val plain = new Graft(spark, root + "/plain")
-    intercept[IllegalArgumentException] { plain.vacuum() }
+    g.vacuum()
+    // `false` asked for the removed plain layout: a loud, named rejection
+    // at config load, never a silently different layout
+    val cfgPlain = new java.io.File(root, "plain-config.json")
+    Files.write(cfgPlain.toPath, """{"manifest_snapshots": false}""".getBytes)
+    val ex = intercept[IllegalArgumentException] {
+      Graft.fromConfig(spark, cfgPlain.toString, root + "/plain")
+    }
+    assert(ex.getMessage.contains("manifest_snapshots") &&
+      ex.getMessage.contains("plain"), ex.getMessage)
+    assert(!new java.io.File(root, "plain").exists(),
+      "a rejected config must not touch the store root")
   }
 
   // ---- v3 zone maps: per-file [min,max] time_ms pruning ----

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 /** Plan-SHAPE guards: the executed-plan properties PLANS.md documents,
   * enforced — a regression that un-pushes a filter, drops a broadcast, or
@@ -8,7 +9,7 @@ import org.apache.spark.sql.DataFrame
   * notices the slowdown. Each assertion names the property a 100 TB run
   * depends on, not an incidental plan string.
   */
-class PlanGuardSpec extends SparkTestBase {
+class PlanGuardSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   private def planOf(df: DataFrame): String = {
     df.count() // let AQE finalize what it will
     df.queryExecution.executedPlan.toString
@@ -165,7 +166,8 @@ class PlanGuardSpec extends SparkTestBase {
   }
 
   test("bm25 top-k plans as TakeOrderedAndProject over one doc-keyed aggregate (r13)") {
-    val plan = planOf(graft.text.TextOps.bm25TopK(spark, Sf))
+    val df = graft.text.TextOps.bm25TopK(spark, Sf)
+    val plan = planOf(df)
     // global top-k without a global sort: the score is computed map-side
     // after the 1-row stats broadcast, so the only data-sized exchange is
     // the per-doc (dl, tf*) aggregate
@@ -183,5 +185,17 @@ class PlanGuardSpec extends SparkTestBase {
     assert(hashEx.forall(_.contains("doc_id")),
       s"scoring must not shuffle per term — doc-keyed exchanges only:\n" +
         hashEx.mkString("\n"))
+    // the forall above is vacuously true when nothing matches, so pin the
+    // positive layout property too: the checkpointed postings scan itself
+    // is hash-partitioned by doc_id (the r19 layout-keeping artifact)
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    val scanLayouts = collect(df.queryExecution.executedPlan) {
+      case s: org.apache.spark.sql.execution.RDDScanExec => s.outputPartitioning
+    }
+    assert(scanLayouts.exists {
+      case h: HashPartitioning =>
+        h.expressions.flatMap(_.references.map(_.name)) == Seq("doc_id")
+      case _ => false
+    }, s"the postings scan must carry hashpartitioning(doc_id): $scanLayouts")
   }
 }

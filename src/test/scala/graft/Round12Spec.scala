@@ -254,9 +254,8 @@ class Round12Spec extends SparkTestBase {
     // queued old points landed (via the sweep's own flush) and were dropped
     // with their bucket — they must NOT resurrect from the queue afterwards
     g.retentionSweep(today)
-    def bucketDirs() = new java.io.File(s"$root/default").listFiles()
-      .map(_.getName).filter(_.startsWith("bucket_day=")).toSet
-    assert(bucketDirs() == Set(s"bucket_day=$newDay"), bucketDirs().toString)
+    def liveDays() = g.fragmentation().map(_._1).toSet
+    assert(liveDays() == Set(newDay), liveDays().toString)
 
     // no loss: every acked live-bucket point present exactly once
     val rows = g.read("""{"match_all":{}}""").collect()
@@ -265,9 +264,15 @@ class Round12Spec extends SparkTestBase {
     assert(rows.sorted == expected.sorted,
       s"live writes must survive the sweep: got ${rows.sorted}")
     // ...and a later read (which flushes any queue remnant) resurrects nothing
-    assert(bucketDirs() == Set(s"bucket_day=$newDay"))
+    assert(liveDays() == Set(newDay))
 
+    // retention is a commit; vacuum down to the newest snapshot makes its
+    // physical half visible: only the live bucket directory remains, and
     // the fragmentation report agrees with the real directory state
+    g.vacuum(keepSnapshots = 1)
+    def bucketDirs() = new java.io.File(s"$root/default").listFiles()
+      .map(_.getName).filter(_.startsWith("bucket_day=")).toSet
+    assert(bucketDirs() == Set(s"bucket_day=$newDay"), bucketDirs().toString)
     val rep = g.fragmentation()
     assert(rep.map(_._1).toSet == Set(newDay), rep.toString)
     val diskFiles = new java.io.File(s"$root/default/bucket_day=$newDay")
@@ -417,14 +422,18 @@ class Round12Spec extends SparkTestBase {
       // per-space mutation lock serializes its landing jobs against them)
       g.awaitContinuous() // rethrows if the stream died
       g.retentionSweep(today)
-      def buckets() = new java.io.File(s"$root/default").listFiles()
-        .map(_.getName).filter(_.startsWith("bucket_day=")).toSet
-      assert(buckets() == Set(s"bucket_day=$newDay"), buckets().toString)
+      assert(g.fragmentation().map(_._1) == Seq(newDay))
       val rows = g.read("""{"match_all":{}}""").collect()
         .map(r => (r.getAs[Long]("time_ms"), r.getAs[Double]("value"))).toSeq
       val expected = (0 until n).map(i => (newDay * 86400000L + i, i.toDouble))
       assert(rows.sorted == expected.sorted,
         s"live spooled points must survive the sweep: ${rows.sorted}")
+      // vacuum down to the newest snapshot: the doomed bucket directories
+      // are physically gone, the live one stays
+      g.vacuum(keepSnapshots = 1)
+      def buckets() = new java.io.File(s"$root/default").listFiles()
+        .map(_.getName).filter(_.startsWith("bucket_day=")).toSet
+      assert(buckets() == Set(s"bucket_day=$newDay"), buckets().toString)
     } finally g.stopContinuous()
   }
 

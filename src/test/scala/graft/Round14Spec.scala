@@ -36,7 +36,7 @@ class Round14Spec extends SparkTestBase {
 
   test("manifest list: an append rewrites ONLY the touched bucket's segment; every other segment is reused by name (r14)") {
     val root = freshRoot()
-    val g = new Graft(spark, root, manifest = true)
+    val g = new Graft(spark, root)
     def pt(ts: String, v: Double) =
       g.write(Seq((ts, v, "s")).toDF("time", "value", "name").coalesce(1))
     pt("2024-01-09T10:00:00Z", 1.0) // bucket A
@@ -72,8 +72,8 @@ class Round14Spec extends SparkTestBase {
     val root = freshRoot()
     // two Graft instances = the two-process model: separate mutation
     // locks, same store root; only the snapshot-claim protocol serializes
-    val a = new Graft(spark, root, manifest = true)
-    val b = new Graft(spark, root, manifest = true)
+    val a = new Graft(spark, root)
+    val b = new Graft(spark, root)
     def df(ts: String, v: Double) =
       Seq((ts, v, "s")).toDF("time", "value", "name")
     a.write(df("2024-01-09T10:00:00Z", 1.0))
@@ -102,7 +102,7 @@ class Round14Spec extends SparkTestBase {
 
   test("vacuum sweeps expired snapshots' segments and lost-claim orphans, never a kept snapshot's (r14)") {
     val root = freshRoot()
-    val g = new Graft(spark, root, manifest = true)
+    val g = new Graft(spark, root)
     def pt(ts: String, v: Double) =
       g.write(Seq((ts, v, "s")).toDF("time", "value", "name").coalesce(1))
     pt("2024-01-09T10:00:00Z", 1.0)
@@ -136,7 +136,7 @@ class Round14Spec extends SparkTestBase {
 
   test("read planning fetches only in-range segments: a narrow read of a many-bucket store opens one bucket's metadata (r14)") {
     val root = freshRoot()
-    val g = new Graft(spark, root, manifest = true)
+    val g = new Graft(spark, root)
     // 6 buckets (default 7-day granularity, ~6 weeks)
     (0 until 6).foreach { w =>
       g.write(Seq((1704794400000L + w * 7L * 86400000L, (w + 1).toDouble, "s"))
@@ -154,7 +154,7 @@ class Round14Spec extends SparkTestBase {
 
   test("changes(from, to): added/removed/changed rows equal the full-outer diff of the two readAt frames; compaction yields zero changes (r14)") {
     val root = freshRoot()
-    val g = new Graft(spark, root, manifest = true)
+    val g = new Graft(spark, root)
     def w(rows: (String, Double, String)*) =
       g.write(rows.toSeq.toDF("time", "value", "name"))
     w(("2024-01-09T10:00:00Z", 1.0, "a"), ("2024-01-09T11:00:00Z", 2.0, "b"))
@@ -231,8 +231,7 @@ class Round14Spec extends SparkTestBase {
   test("compaction daemon: a fragmented store converges to the bucket file target while POSTs and reads run — zero loss, zero dup (r14)") {
     val dir = Files.createTempDirectory(Paths.get("target"), "graft-daemon")
     val cfgPath = dir.resolve("orestes-config.json")
-    // no manifest_snapshots key: the served default (r14) is manifest
-    // mode; compaction_max_files=2 is the daemon's sweep trigger
+    // compaction_max_files=2 is the daemon's sweep trigger
     Files.write(cfgPath,
       """{"port": 0, "compaction_max_files": 2,
           "spaces": {"default": {"table_granularity_days": 1}}}"""
@@ -240,7 +239,6 @@ class Round14Spec extends SparkTestBase {
     val (g, srv, _) = graft.http.ServerMain.boot(spark,
       cfgPath.toString, dir.resolve("store").toString)
     val cfg = Graft.loadConfig(spark, cfgPath.toString)
-    assert(cfg.manifestSnapshots, "manifest mode is the served default")
     val port = srv.start()
     try {
       // a writer thread sustains small POSTs (2 bucket days) while the
@@ -286,16 +284,14 @@ class Round14Spec extends SparkTestBase {
   test("served default is manifest mode: booting over an existing PLAIN store adopts it with read parity; explicit false keeps plain (r14)") {
     val dir = Files.createTempDirectory(Paths.get("target"), "graft-migrate")
     val root = dir.resolve("store").toString
-    // a pre-existing plain-mode store (the migration scenario)
-    val plain = new Graft(spark, root)
-    plain.write(Seq(("2024-01-09T10:00:00Z", 1.0, "s"),
+    // a pre-existing bucket-directory store (the migration scenario)
+    writeLegacyStore(root, Seq(("2024-01-09T10:00:00Z", 1.0, "s"),
       ("2024-01-19T10:00:00Z", 2.0, "s")).toDF("time", "value", "name"))
-    val before = plain.read("""{"match_all":{}}""").collect()
-      .map(r => (r.getAs[Long]("time_ms"), r.getAs[Double]("value"))).toSet
+    val before = Set((1704794400000L, 1.0), (1705658400000L, 2.0))
 
-    // default boot (no manifest_snapshots key) = manifest mode, and the
-    // first touch adopts the plain files as snapshot 1 — nothing is lost,
-    // nothing re-written
+    // default boot (no manifest_snapshots key) = manifest storage, and the
+    // first touch adopts the on-disk files as snapshot 1 — nothing is
+    // lost, nothing re-written
     val cfgPath = dir.resolve("orestes-config.json")
     Files.write(cfgPath, """{"port": 0}""".getBytes("UTF-8"))
     val (g, _, _) = graft.http.ServerMain.boot(spark, cfgPath.toString, root)
@@ -304,20 +300,23 @@ class Round14Spec extends SparkTestBase {
     assert(adopted == before, "migration must preserve every row")
     assert(g.snapshots().nonEmpty, "the boot adopts the store into snapshots")
 
-    // the documented fallback: explicit false boots plain mode
+    // explicit false asked for the removed plain layout: the boot fails
+    // loudly at config load, naming the key — never a different layout
     val cfgPlain = dir.resolve("plain-config.json")
     Files.write(cfgPlain,
       """{"port": 0, "manifest_snapshots": false}""".getBytes("UTF-8"))
     val root2 = dir.resolve("store2").toString
-    val (g2, _, _) = graft.http.ServerMain.boot(spark, cfgPlain.toString, root2)
-    g2.write(Seq(("2024-01-09T10:00:00Z", 3.0, "s")).toDF("time", "value", "name"))
-    assert(g2.snapshots().isEmpty, "plain fallback commits no snapshots")
-    assert(!new java.io.File(s"$root2/.manifest").exists())
+    val ex = intercept[IllegalArgumentException] {
+      graft.http.ServerMain.boot(spark, cfgPlain.toString, root2)
+    }
+    assert(ex.getMessage.contains("\"manifest_snapshots\": false"),
+      ex.getMessage)
+    assert(!new java.io.File(root2).exists(), "nothing may be written")
   }
 
   test("ranked retrieval through the front doors: /search and Graft.search score the tag bag with the shared BM25 rule (r14)") {
     val root = freshRoot()
-    val g = new Graft(spark, root, manifest = true)
+    val g = new Graft(spark, root)
     // four series with overlapping tag vocabularies — ranked retrieval
     // has to order them, not just filter
     g.write(Seq(
@@ -449,7 +448,7 @@ class Round14Spec extends SparkTestBase {
 
   test("time travel + CDC over the facade: /snapshots lists history, /changes streams the API's own diff, misuse is a loud 400 (r14)") {
     val root = freshRoot()
-    val g = new Graft(spark, root, manifest = true)
+    val g = new Graft(spark, root)
     def w(rows: (String, Double, String)*) =
       g.write(rows.toSeq.toDF("time", "value", "name"))
     w(("2024-01-09T10:00:00Z", 1.0, "a"), ("2024-01-09T11:00:00Z", 2.0, "b"))
@@ -484,7 +483,7 @@ class Round14Spec extends SparkTestBase {
       assert(got.map(_._5) == Set("added", "changed"))
 
       // misuse is loud, not a 500: missing body, reversed range, unknown
-      // snapshot, and a plain-mode store (no snapshots to travel)
+      // snapshot
       assert(post(port, "/changes", """{}""")._1 == 400)
       assert(post(port, "/changes", s"""{"from":$to,"to":$from}""")._1 == 400)
       assert(post(port, "/changes", s"""{"from":999999,"to":$to}""")._1 == 400)
@@ -500,15 +499,15 @@ class Round14Spec extends SparkTestBase {
       assert(post(port, "/vacuum", """{"keep_snapshots": 0}""")._1 == 400)
     } finally srv.stop()
 
-    val plain = new Graft(spark, root + "/plain")
-    plain.write(Seq(("2024-01-09T10:00:00Z", 1.0, "a"))
-      .toDF("time", "value", "name"))
-    val srv2 = new graft.http.GraftHttpServer(plain, spark)
+    // a never-written space has no history to travel or reclaim: /changes
+    // is a 400 (no such snapshot), /vacuum a 200 no-op
+    val srv2 = new graft.http.GraftHttpServer(g, spark)
     val port2 = srv2.start()
     try {
-      assert(post(port2, "/changes", """{"from":1,"to":2}""")._1 == 400)
-      assert(post(port2, "/vacuum", """{}""")._1 == 400,
-        "vacuum is manifest-mode: a plain store answers 400, like /changes")
+      assert(post(port2, "/changes/nowhere", """{"from":1,"to":2}""")._1 == 400)
+      val (cv, bv) = post(port2, "/vacuum/nowhere", """{}""")
+      assert(cv == 200, bv)
+      assert(mapper.readTree(bv).get("reclaimed_files").asInt() == 0, bv)
     } finally srv2.stop()
   }
 
@@ -520,7 +519,7 @@ class Round14Spec extends SparkTestBase {
     Files.write(cfgPath,
       """{"port": 0, "search_index": true}""".getBytes("UTF-8"))
     val (g, srv, cfg) = graft.http.ServerMain.boot(spark, cfgPath.toString, root)
-    assert(cfg.searchIndex && cfg.manifestSnapshots)
+    assert(cfg.searchIndex)
     val port = srv.start()
     try {
       def w(rows: (String, Double, String)*) =
@@ -535,8 +534,17 @@ class Round14Spec extends SparkTestBase {
       w(("2024-01-09T10:00:00Z", 1.0, "alpha"),
         ("2024-01-09T11:00:00Z", 2.0, "beta"))
       // before the first sweep there IS no index: /search falls back to
-      // the direct scan (never a cold-start outage)
-      assert(hits("alpha").map(_._1) == Seq("alpha"))
+      // the direct scan (never a cold-start outage), and the server log
+      // names the cause once for the request
+      val errBuf = new java.io.ByteArrayOutputStream()
+      val savedErr = System.err
+      System.setErr(new java.io.PrintStream(errBuf, true, "UTF-8"))
+      try assert(hits("alpha").map(_._1) == Seq("alpha"))
+      finally System.setErr(savedErr)
+      val logged = errBuf.toString("UTF-8").linesIterator
+        .filter(_.contains("/search default: index probe failed")).toSeq
+      assert(logged.size == 1 && logged.head.contains("no committed index"),
+        s"the fallback must log its cause once: $logged")
 
       // sweep builds the index; /search now serves FROM it —
       // rank- and score-identical to the store scan

@@ -91,8 +91,7 @@ class Round15Spec extends SparkTestBase {
 
     // (a) auto on an unknown scheme: the loud capability check, naming
     // the config key — never a silent race
-    val g0 = new Graft(spark, s"mocks3:${freshRoot("graft-mocks3a")}",
-      manifest = true)
+    val g0 = new Graft(spark, s"mocks3:${freshRoot("graft-mocks3a")}")
     val ex = intercept[IllegalStateException] {
       g0.write(df("2024-01-09T10:00:00Z", 1.0))
     }
@@ -105,9 +104,9 @@ class Round15Spec extends SparkTestBase {
     // an object store can serve) and the loser CLOBBERS the winner —
     // the documented single-writer trade, proven to actually lose data
     val rootB = s"mocks3:${freshRoot("graft-mocks3b")}"
-    val a = new Graft(spark, rootB, manifest = true,
+    val a = new Graft(spark, rootB,
       commitPrimitive = Graft.PrimUnsafeRename)
-    val b = new Graft(spark, rootB, manifest = true,
+    val b = new Graft(spark, rootB,
       commitPrimitive = Graft.PrimUnsafeRename)
     a.write(df("2024-01-09T10:00:00Z", 1.0))
     val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -128,9 +127,9 @@ class Round15Spec extends SparkTestBase {
     // (c) create-exclusive: the same deterministic race resolves cleanly —
     // the loser's create throws, it re-applies, BOTH mutations land
     val rootC = s"mocks3:${freshRoot("graft-mocks3c")}"
-    val c1 = new Graft(spark, rootC, manifest = true,
+    val c1 = new Graft(spark, rootC,
       commitPrimitive = Graft.PrimCreateExclusive)
-    val c2 = new Graft(spark, rootC, manifest = true,
+    val c2 = new Graft(spark, rootC,
       commitPrimitive = Graft.PrimCreateExclusive)
     c1.write(df("2024-01-09T10:00:00Z", 1.0))
     val fired2 = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -147,7 +146,7 @@ class Round15Spec extends SparkTestBase {
     assert(c1.snapshots().size == 3)
 
     // (d) an unknown primitive name is a loud config error
-    val g4 = new Graft(spark, freshRoot("graft-prim"), manifest = true,
+    val g4 = new Graft(spark, freshRoot("graft-prim"),
       commitPrimitive = "bogus")
     intercept[IllegalArgumentException] {
       g4.write(df("2024-01-09T10:00:00Z", 1.0))
@@ -161,7 +160,7 @@ class Round15Spec extends SparkTestBase {
   test("CDC index fold: rank/score-identical across the fold, ledger collapses to one partition, dead postings physically dropped, crash-mid-fold invisible (r15 #1)") {
     val root = freshRoot("graft-fold")
     val dir = s"$root/index"
-    val g = new Graft(spark, s"$root/store", manifest = true)
+    val g = new Graft(spark, s"$root/store")
     def w(rows: (String, Double, String, String)*) =
       g.write(rows.toSeq.toDF("time", "value", "name", "host"))
 
@@ -247,7 +246,7 @@ class Round15Spec extends SparkTestBase {
   test("sync racing the fold: BOTH interleavings land every committed batch in the active generation (review r15)") {
     val root = freshRoot("graft-foldrace")
     val dir = s"$root/index"
-    val g = new Graft(spark, s"$root/store", manifest = true)
+    val g = new Graft(spark, s"$root/store")
     def w(rows: (String, Double, String)*) =
       g.write(rows.toSeq.toDF("time", "value", "name"))
     w(("2024-01-09T10:00:00Z", 1.0, "alpha"),
@@ -295,7 +294,7 @@ class Round15Spec extends SparkTestBase {
   test("CDC index: a store whose points were ALL retention-dropped builds an empty committed index, and recovers when points return (ADVICE r14)") {
     val root = freshRoot("graft-empty")
     val dir = s"$root/index"
-    val g = new Graft(spark, s"$root/store", manifest = true)
+    val g = new Graft(spark, s"$root/store")
     g.write(Seq(("2024-01-09T10:00:00Z", 1.0, "cpu"))
       .toDF("time", "value", "name"))
     g.remove(keepDays = 2, todayDay = 1705658400000L / graft.core.Det.MsInDay)
@@ -322,7 +321,7 @@ class Round15Spec extends SparkTestBase {
   test("doc identity is injective: null-tag vs empty-string-tag series are TWO docs on every surface, separator bytes cannot collide ids (ADVICE r14)") {
     val root = freshRoot("graft-docid")
     val dir = s"$root/index"
-    val g = new Graft(spark, s"$root/store", manifest = true)
+    val g = new Graft(spark, s"$root/store")
     val rows = Seq(
       ("2024-01-09T10:00:00Z", 1.0, "cpu", Option.empty[String]),
       ("2024-01-09T11:00:00Z", 2.0, "cpu", Some("")),
@@ -426,7 +425,7 @@ class Round15Spec extends SparkTestBase {
   test("CdcStream: a user incremental aggregate maintained through append/retention/compaction/crash/wipe equals its from-scratch recompute (r15 #5)") {
     val root = freshRoot("graft-cdcstream")
     val storeRoot = s"$root/store"
-    var g = new Graft(spark, storeRoot, manifest = true)
+    var g = new Graft(spark, storeRoot)
     val stateDir = s"$root/consumer"
     val deltasDir = s"$stateDir/deltas"
     val schema = new StructType().add("name", StringType)
@@ -518,7 +517,7 @@ class Round15Spec extends SparkTestBase {
       new java.io.File(s"$storeRoot/default"))
     org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(s"$storeRoot/.manifest/default"))
-    g = new Graft(spark, storeRoot, manifest = true)
+    g = new Graft(spark, storeRoot)
     w(("2024-03-09T10:00:00Z", 1.0, "fresh"))
     val rBefore = resets.get
     advance()
@@ -569,7 +568,7 @@ class Round15Spec extends SparkTestBase {
     // the target is wired through to the rewrite: a fragmented bucket
     // compacted under a tiny byte target splits into multiple files
     val root = s"$dir/store"
-    val g = new Graft(spark, root, manifest = true)
+    val g = new Graft(spark, root)
     (0 until 4).foreach { i =>
       g.write(Seq.tabulate(500)(j =>
         (s"2024-01-09T10:${(i * 500 + j) % 60}:${j % 60}Z",
@@ -590,7 +589,7 @@ class Round15Spec extends SparkTestBase {
   test("prefix search: trailing-* expands under the ONE shared rule (live vocabulary, capped 50), rank/score-identical direct vs index, dead dictionary terms never shift the cap (r15 #8)") {
     val root = freshRoot("graft-prefix")
     val dir = s"$root/index"
-    val g = new Graft(spark, s"$root/store", manifest = true)
+    val g = new Graft(spark, s"$root/store")
     def w(rows: (String, Double, String, String)*) =
       g.write(rows.toSeq.toDF("time", "value", "name", "host"))
 

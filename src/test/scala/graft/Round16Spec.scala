@@ -51,7 +51,7 @@ class Round16Spec extends SparkTestBase {
     // its index: build + sync + fold all commit their markers on the
     // object-store scheme, and search parity holds across the fold
     val root = s"mocks3:${freshRoot("graft-r16b")}"
-    val g = new Graft(spark, root, manifest = true,
+    val g = new Graft(spark, root,
       commitPrimitive = Graft.PrimCreateExclusive)
     def w(rows: (String, Double, String, String)*) =
       g.write(rows.toSeq.toDF("time", "value", "name", "host"))
@@ -114,7 +114,7 @@ class Round16Spec extends SparkTestBase {
   test("an empty-bodied fold marker with no directory resolves to the generation BELOW (pre-crash docs stay searchable) and the next fold claims a fresh number (ADVICE r15 high)") {
     val root = freshRoot("graft-r16c")
     val dir = s"$root/index"
-    val g = new Graft(spark, root, manifest = true)
+    val g = new Graft(spark, root)
     def w(rows: (String, Double, String, String)*) =
       g.write(rows.toSeq.toDF("time", "value", "name", "host"))
     w(("2024-01-09T10:00:00Z", 1.0, "cpu", "web-01"),
@@ -254,7 +254,7 @@ class Round16Spec extends SparkTestBase {
 
   test("two sweeps sharing a CdcStream stateDir race benignly: concurrent foreachDiff advances land idempotently and the state equals a from-scratch recompute (r15 #7)") {
     val root = freshRoot("graft-r16e")
-    val g = new Graft(spark, root, manifest = true)
+    val g = new Graft(spark, root)
     def w(rows: (String, Double, String)*) =
       g.write(rows.toSeq.toDF("time", "value", "name"))
     val stateDir = s"$root/consumer"

@@ -20,9 +20,7 @@ import graft.tsdb.Graft
   * staging (silent duplication/loss), fixed by nonce'd staging +
   * stale-swap validation inside the commit closure. The r17 serving-read
   * rebuild is pinned too: the fused /read nesting applies last-write-wins
-  * identically to the merged flat read under real overwrites, and the
-  * plain-mode schema cache surfaces new/foreign columns instead of
-  * silently dropping them.
+  * identically to the merged flat read under real overwrites.
   */
 class Round17Spec extends SparkTestBase {
   import spark.implicits._
@@ -170,7 +168,7 @@ class Round17Spec extends SparkTestBase {
 
   test("repairLandings re-lands a crashed-winner batch from the grace generation: the committed-but-invisible batch becomes searchable without a rebuild (ADVICE r16 medium)") {
     val root = freshRoot("graft-r17b")
-    val g = new Graft(spark, root, manifest = true)
+    val g = new Graft(spark, root)
     val dir = s"$root/index"
     def w(rows: (String, Double, String)*) =
       g.write(rows.toSeq.toDF("time", "value", "name"))
@@ -242,7 +240,7 @@ class Round17Spec extends SparkTestBase {
 
   test("vacuumIndex reclaims crash staging and out-of-grace generations between folds, keeps active + grace, and never touches live higher-seq staging (VERDICT r16 #5)") {
     val root = freshRoot("graft-r17c")
-    val g = new Graft(spark, root, manifest = true)
+    val g = new Graft(spark, root)
     val dir = s"$root/index"
     def w(rows: (String, Double, String)*) =
       g.write(rows.toSeq.toDF("time", "value", "name"))
@@ -331,35 +329,6 @@ class Round17Spec extends SparkTestBase {
       s"fused nesting and merged flat read disagree:\n  $flat\n  $fromNested")
   }
 
-  test("plain-mode schema cache: new tag columns surface immediately after the write that adds them, and out-of-band files force re-inference (never a silently dropped column)") {
-    val root = freshRoot("graft-r17sc")
-    val g = new Graft(spark, root)
-    g.write(Seq(("2024-01-01T00:00:01Z", 1.0, "a"))
-      .toDF("time", "value", "name"))
-    assert(g.read("""{"match_all":{}}""").columns.toSet ==
-      Set("name", "time_ms", "value"))
-    // a second write introduces a NEW tag column: the prime-on-write path
-    // must merge it into the cached schema — a stale cache here would
-    // silently drop the column from every read until invalidation
-    g.write(Seq(("2024-01-01T00:00:02Z", 2.0, "b", "web"))
-      .toDF("time", "value", "name", "dc"))
-    val df = g.read("""{"match_all":{}}""")
-    assert(df.columns.toSet == Set("name", "dc", "time_ms", "value"),
-      s"new tag lost by the schema cache: ${df.columns.toSeq}")
-    assert(df.where(col("dc") === "web").count() == 1)
-    // out-of-band mutation (a file this Graft instance did not write):
-    // the file-list signature misses and the read re-infers, surfacing
-    // the foreign column
-    val stranger = Seq((1704067203000L, 3.0, "c", 7L, 99L))
-      .toDF("time_ms", "value", "name", "zone", "__wseq")
-    stranger.write.mode("append")
-      .parquet(s"$root/default/bucket_day=19723")
-    val df2 = g.read("""{"match_all":{}}""")
-    assert(df2.columns.toSet == Set("name", "dc", "zone", "time_ms", "value"),
-      s"out-of-band column lost: ${df2.columns.toSeq}")
-    assert(df2.count() == 3)
-  }
-
   // --------------------------------------------------------------------
   // VERDICT r16 #4: the commit claim vs a second PROCESS
   // --------------------------------------------------------------------
@@ -406,7 +375,7 @@ class Round17Spec extends SparkTestBase {
       s"writer failed:\nA:\n${logTail(logA)}\nB:\n${logTail(logB)}")
 
     // zero lost commits: every batch from BOTH writers is readable
-    val g = new Graft(spark, root, manifest = true)
+    val g = new Graft(spark, root)
     val counts = g.read("""{"match_all":{}}""")
       .groupBy("name").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap

@@ -20,9 +20,9 @@ import graft.tsdb.Graft
   *    winner whose claim was taken over anyway (frozen past the lease)
   *    fails the owner-token fence instead of flipping done over the
   *    repairer's landing (ADVICE r17 medium).
-  *  - an all-rejected write primes nothing into the plain-mode read
-  *    schema cache — the phantom batch's novel tag column must never
-  *    surface as an all-null column no live file carries (ADVICE r17 low).
+  *  - an all-rejected write commits nothing — the phantom batch's novel
+  *    tag column must never surface as an all-null column no live file
+  *    carries (ADVICE r17 low).
   */
 class Round18Spec extends SparkTestBase {
   import spark.implicits._
@@ -84,9 +84,8 @@ class Round18Spec extends SparkTestBase {
     assert(g.read("""{"match_all":{}}""").columns.toSet ==
       Set("name", "time_ms", "value"))
     // the batch is rejected WHOLESALE (bad timestamp) and carries a novel
-    // tag column 'dc': merging its schema into the warm read cache would
-    // expose an all-null dc no live file carries, flapping between cached
-    // and inferred reads
+    // tag column 'dc': committing its schema would expose an all-null dc
+    // no live file carries
     val rejected = g.write(Seq(("not-a-time", 2.0, "b", "web"))
       .toDF("time", "value", "name", "dc"))
     assert(rejected.count() == 1, "the bad point must get a per-point error")

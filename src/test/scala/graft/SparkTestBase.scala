@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (getOrCreate -> one JVM-wide session). */
@@ -17,4 +18,20 @@ trait SparkTestBase extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .appName("graft-test")
     .getOrCreate()
+
+  /** A pre-manifest store on disk, written with plain Spark: `points`
+    * (`time` ISO string, `value`, tag columns) land as tags + `time_ms` +
+    * `value` + a `__wseq` stamp under `<root>/<space>/bucket_day=<d>/`,
+    * with no snapshot — the layout older releases (and `IngestStream`
+    * sinks) leave behind, which a store adopts on first touch. */
+  def writeLegacyStore(root: String, points: DataFrame,
+                       space: String = "default",
+                       granularityDays: Int = graft.tsdb.Tsdb.GranularityDays): Unit = {
+    val ms = unix_millis(to_timestamp(col("time")))
+    val tags = points.columns.filterNot(c => c == "time" || c == "value")
+    points.select(tags.map(col) ++ Seq(ms.as("time_ms"),
+        col("value").cast("double").as("value"), lit(1L).as("__wseq"),
+        graft.tsdb.Tsdb.bucketOf(ms, granularityDays).as("bucket_day")): _*)
+      .write.mode("append").partitionBy("bucket_day").parquet(s"$root/$space")
+  }
 }
