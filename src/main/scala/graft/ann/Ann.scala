@@ -3,7 +3,8 @@ package graft.ann
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Det, Tables}
+import graft.core.{Artifact, Det, Tables}
+import graft.core.Artifact.Layout
 import graft.functions.VectorFunctions
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
@@ -14,54 +15,23 @@ import graft.functions.VectorFunctions
   */
 object Ann {
 
-  /** Session-scoped memo ([[graft.core.Memo]]) for DataFrames reused across
-    * ANN entry points: trained codebooks (localCheckpointed, self-contained)
-    * and the cached quantized-subvector frames they are built from. Training
-    * is deterministic (seeded init, exact-decimal means), so reuse changes
+  /** An in-session ANN artifact ([[graft.core.Artifact]]). Training is
+    * deterministic (seeded init, exact-decimal means), so reuse changes
     * nothing about results — it models the production shape where the
-    * codebook is trained ONCE offline and only assignment/search run per
-    * query.
+    * index is built ONCE and only assignment/search run per query.
     */
-  private def memoDf(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    graft.core.Memo.df(s, "ann." + key)(build)
+  private def artifact(s: SparkSession, key: String, layout: Layout = Layout.AsBuilt)(
+      build: => DataFrame): DataFrame =
+    Artifact.build(s, "ann." + key, layout)(build)
 
-  /** Bump when the training pipeline's output shape or values change —
-    * persisted codebooks from an older format must not be loaded.
+  /** A train-once ANN artifact over dataset `d` with the PERSISTED tier: a
+    * fresh session or a post-`clearCache()` bench run pays one small
+    * parquet read, not a corpus-scanning Lloyd's retrain, exactly as a
+    * production deployment loads its stored codebook and inverted file.
     */
-  private val CodebookFormatVersion = "v1"
-
-  private def codebookDir: String =
-    sys.env.getOrElse("GRAFT_CODEBOOK_DIR",
-      s"${sys.props("java.io.tmpdir")}/graft-codebooks-$CodebookFormatVersion")
-
-  /** Codebook memo with a PERSISTED tier — the full train-once-offline
-    * story. On memo miss a codebook previously written by ANY session
-    * (found under [[codebookDir]], keyed by the memo key) is loaded from
-    * parquet instead of retraining Lloyd's; a first-ever miss trains once
-    * and writes the artifact. Training is deterministic and parquet stores
-    * the doubles bit-exactly (SourcesSpec proves the roundtrip), so the
-    * load path returns bit-identical neighbors — a fresh session or a
-    * post-`clearCache()` bench run pays one small parquet read, not a
-    * corpus-scanning Lloyd's retrain, exactly as a production deployment
-    * loads its stored codebook.
-    */
-  private def memoCodebook(s: SparkSession, key: String)(train: => DataFrame): DataFrame =
-    memoDf(s, key) {
-      val file = java.security.MessageDigest.getInstance("MD5")
-        .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val path = new org.apache.hadoop.fs.Path(s"$codebookDir/$file.parquet")
-      val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-      // _SUCCESS gates against a half-written artifact from a dead writer
-      if (fs.exists(new org.apache.hadoop.fs.Path(path, "_SUCCESS")))
-        s.read.parquet(path.toString).localCheckpoint(true)
-      else {
-        val trained = train
-        try trained.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(path.toString)
-        catch { case scala.util.control.NonFatal(_) => () } // read-only tmp: keep in-session memo
-        trained
-      }
-    }
+  private def stored(s: SparkSession, d: String, key: String,
+                     layout: Layout = Layout.AsBuilt)(build: => DataFrame): DataFrame =
+    Artifact.build(s, "ann." + key, layout, persistOver = Some(d))(build)
 
   private def withNorm(s: SparkSession, df: DataFrame): DataFrame =
     df.select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
@@ -81,9 +51,7 @@ object Ann {
     * (r18).
     */
   private def normTable(s: SparkSession, d: String): DataFrame =
-    memoDf(s, s"wn|$d")(
-      graft.core.Memo.spread(withNorm(s, Tables.embeddings(s, d)))
-        .localCheckpoint(true))
+    artifact(s, s"wn|$d", Layout.Wide)(withNorm(s, Tables.embeddings(s, d)))
 
   /** Brute-force exact top-k cosine neighbors for the query subset — the
     * correctness baseline every ANN variant is judged against. One broadcast
@@ -210,8 +178,7 @@ object Ann {
     * quantize+norm scan 2-4× per query.
     */
   def quantNormTable(s: SparkSession, d: String): DataFrame =
-    memoDf(s, s"qn|$d")(
-      graft.core.Memo.spread(quantNorm(s, d)).localCheckpoint(true))
+    artifact(s, s"qn|$d", Layout.Wide)(quantNorm(s, d))
 
   /** The session-shared IVF coarse codebook (memoized, deterministic) —
     * exposed so cross-modal consumers ([[graft.multimodal.Multimodal
@@ -220,22 +187,42 @@ object Ann {
     */
   def ivfCodebook(s: SparkSession, d: String, nCentroids: Int = 16,
                   trainIters: Int = 2): DataFrame =
-    memoCodebook(s, s"ivf|$d|$nCentroids|$trainIters")(
+    stored(s, d, s"ivf|$d|$nCentroids|$trainIters")(
       trainIvfCentroids(s, quantNormTable(s, d), nCentroids, trainIters))
+
+  /** The inverted file: every vector's centroid ranking under
+    * [[ivfCodebook]] (see [[rankedAssignment]]). In production the stored
+    * half of the IVF index next to the codebook — a search session loads
+    * it and never re-assigns the corpus — so it rides the persisted tier;
+    * a deterministic replay of the deterministic codebook, so load and
+    * rebuild are bit-identical.
+    */
+  private def ivfRanked(s: SparkSession, d: String, nCentroids: Int,
+                        trainIters: Int, nprobe: Int): DataFrame =
+    stored(s, d, s"ivfranked|$d|$nCentroids|$trainIters|$nprobe")(
+      rankedAssignment(s, d, ivfCodebook(s, d, nCentroids, trainIters), nprobe))
+
+  /** The trained PQ sub-codebooks over [[pqSubs]] (persisted tier). */
+  private def pqCodebook(s: SparkSession, d: String, nCodes: Int, m: Int,
+                         dims: Int, trainIters: Int): DataFrame =
+    stored(s, d, s"pq|$d|$nCodes|$m|$dims|$trainIters")(
+      trainPqCentroids(pqSubs(s, d, m, dims), nCodes, trainIters))
+
+  /** The trained residual PQ sub-codebooks over [[pqResSubs]] (persisted). */
+  private def pqResCodebook(s: SparkSession, d: String, nCodes: Int, m: Int,
+                            dims: Int, nCentroids: Int, trainIters: Int): DataFrame =
+    stored(s, d, s"pqres|$d|$nCodes|$m|$dims|$nCentroids|$trainIters")(
+      trainPqCentroids(pqResSubs(s, d, m, dims, nCentroids, trainIters), nCodes, trainIters))
+
+  /** Random-hyperplane bucket table shared by the LSH searches. */
+  private def lshBucketTable(s: SparkSession, d: String, nPlanes: Int,
+                             nTables: Int): DataFrame =
+    artifact(s, s"lshb|$d|$nPlanes|$nTables", Layout.Wide)(
+      lshBuckets(s, d, nPlanes, nTables))
 
   def ivfTopK(s: SparkSession, d: String, k: Int = 5, nQueries: Int = 20,
               nCentroids: Int = 16, nprobe: Int = 1, trainIters: Int = 2): DataFrame = {
-    val cents = memoCodebook(s, s"ivf|$d|$nCentroids|$trainIters")(
-      trainIvfCentroids(s, quantNormTable(s, d),
-        nCentroids, trainIters))
-    // the ranked assignment is the INVERTED FILE itself — in production the
-    // stored half of the IVF index next to the codebook (a search session
-    // loads it; it never re-assigns the corpus), so it rides the same
-    // persisted-memo tier. Derivation is deterministic replay of the
-    // deterministic codebook, so load vs rebuild are bit-identical.
-    val ranked = memoCodebook(s, s"ivfranked|$d|$nCentroids|$trainIters|$nprobe")(
-      rankedAssignment(s, d, cents, nprobe).localCheckpoint(true))
-    ivfTopKFromRanked(s, ranked, k, nQueries)
+    ivfTopKFromRanked(s, ivfRanked(s, d, nCentroids, trainIters, nprobe), k, nQueries)
   }
 
   /** [[ivfTopK]] against an EXPLICIT codebook table — the load path of the
@@ -391,7 +378,7 @@ object Ann {
     * report, the cost model AND [[applyRebalance]] all ride, so the three
     * can never disagree on what "rebalanced" means.
     */
-  /** The memoized/persisted rank-1 assignment with its stored centroid
+  /** The persisted rank-1 assignment with its stored centroid
     * cosine — the inverted file plus per-posting distance, shared by
     * [[ivfOccupancy]], [[ivfRebalance]], [[ivfRebalanceCost]] and
     * [[applyRebalance]] (r19): a deterministic replay of the deterministic
@@ -400,7 +387,7 @@ object Ann {
   private def rank1Assigned(s: SparkSession, d: String, nCentroids: Int,
                             trainIters: Int): DataFrame = {
     val cents = ivfCodebook(s, d, nCentroids, trainIters)
-    memoCodebook(s, s"ivfassigned|$d|$nCentroids|$trainIters") {
+    stored(s, d, s"ivfassigned|$d|$nCentroids|$trainIters") {
       val e = quantNormTable(s, d)
       val wA = Window.partitionBy(col("vec_id")).orderBy(col("c_cos").desc, col("c_id"))
       e.join(broadcast(cents), lit(true))
@@ -409,7 +396,6 @@ object Ann {
         .withColumn("arn", row_number().over(wA))
         .where(col("arn") === 1)
         .select(col("vec_id"), col("v"), col("c_id").as("cell"), col("c_cos"))
-        .localCheckpoint(true)
     }
   }
 
@@ -420,7 +406,7 @@ object Ann {
     // r19 (VERDICT r18 #1, guide §5/§6): the three corpus-scale frames of
     // the rebalance pipeline are INDEX artifacts, not per-call work —
     // [[applyRebalance]] literally persists the last two as the new index
-    // generation — so they ride the same persisted-memo tier as `ivfranked`.
+    // generation — so they ride the same persisted tier as `ivfranked`.
     // Each is a deterministic replay of the deterministic codebook, so
     // memo-build vs parquet-reload are bit-identical; the per-call work left
     // in the timed region is the occupancy/cost aggregation each query
@@ -433,7 +419,7 @@ object Ann {
     val assigned = rank1Assigned(s, d, nCentroids, trainIters)
     // (2) the re-balanced codebook — a trained codebook like any other
     // (split means use the training step's own exact-decimal arithmetic)
-    val newCents = memoCodebook(s,
+    val newCents = stored(s, d,
       s"ivfrebcents|$d|$nCentroids|$trainIters|$hotOver|$coldUnder") {
       // occupancy + integer-exact hot/cold classification (uniform = 1/nCells)
       val scal = assigned.agg(count(lit(1)).as("n_total"))
@@ -466,11 +452,11 @@ object Ann {
           sqrt(VectorFunctions.dot(s, col("cv"), col("cv"))).as("cn"))
       val keptCents = cents.join(
         cls.where(col("klass") === "kept").select(col("cell").as("c_id")), "c_id")
-      keptCents.unionByName(splitCents).localCheckpoint(true)
+      keptCents.unionByName(splitCents)
     }
     // (3) the re-homed inverted file under the re-balanced codebook — the
     // other half of the index generation applyRebalance writes
-    val reassigned = memoCodebook(s,
+    val reassigned = stored(s, d,
       s"ivfrebassign|$d|$nCentroids|$trainIters|$hotOver|$coldUnder") {
       val e = quantNormTable(s, d)
       val wB = Window.partitionBy(col("vec_id")).orderBy(col("c_cos2").desc, col("c_id"))
@@ -480,7 +466,6 @@ object Ann {
         .withColumn("arn", row_number().over(wB))
         .where(col("arn") === 1)
         .select(col("vec_id"), col("c_id").as("cell"))
-        .localCheckpoint(true)
     }
     (assigned.select(col("vec_id"), col("cell")), reassigned, newCents)
   }
@@ -517,7 +502,7 @@ object Ann {
     val go = force || sumSq(reassigned) < sumSq(before)
     if (!go) None
     else {
-      val tag = s"${CodebookFormatVersion}_${nCentroids}_${trainIters}_" +
+      val tag = s"${Artifact.FormatVersion}_${nCentroids}_${trainIters}_" +
         s"${hotOver}_$coldUnder"
       val cbPath = s"$root/codebooks/ivf_rebalanced_$tag.parquet"
       val invPath = s"$root/inverted/ivf_rebalanced_${tag}_assignments.parquet"
@@ -538,11 +523,8 @@ object Ann {
   def saveCodebooks(s: SparkSession, d: String, root: String,
                     nCentroids: Int = 16, trainIters: Int = 2,
                     nCodes: Int = 16, m: Int = 4, dims: Int = 64): (String, String) = {
-    val ivf = memoCodebook(s, s"ivf|$d|$nCentroids|$trainIters")(
-      trainIvfCentroids(s, quantNormTable(s, d),
-        nCentroids, trainIters))
-    val pq = memoCodebook(s, s"pq|$d|$nCodes|$m|$dims|$trainIters")(
-      trainPqCentroids(pqSubs(s, d, m, dims), nCodes, trainIters))
+    val ivf = ivfCodebook(s, d, nCentroids, trainIters)
+    val pq = pqCodebook(s, d, nCodes, m, dims, trainIters)
     val ivfPath = s"$root/codebooks/ivf_${nCentroids}_$trainIters.parquet"
     val pqPath = s"$root/codebooks/pq_${nCodes}_${m}_${dims}_$trainIters.parquet"
     ivf.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(ivfPath)
@@ -563,8 +545,7 @@ object Ann {
     */
   def lshTopK(s: SparkSession, d: String, k: Int = 5, nQueries: Int = 20,
               nPlanes: Int = 4, nTables: Int = 8): DataFrame = {
-    val b = memoDf(s, s"lshb|$d|$nPlanes|$nTables")(
-      graft.core.Memo.spread(lshBuckets(s, d, nPlanes, nTables)).localCheckpoint(true))
+    val b = lshBucketTable(s, d, nPlanes, nTables)
     val q = b.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("tbl").as("q_tbl"), col("bucket").as("q_bucket"))
     val vecs = b.select(col("vec_id"), col("v"), col("nrm")).distinct()
@@ -597,8 +578,7 @@ object Ann {
   def semdedup(s: SparkSession, d: String, tau: Double = 0.4, maxId: Int = 1000,
                nCentroids: Int = 16, trainIters: Int = 2): DataFrame = {
     val e = quantNormTable(s, d)
-    val cents = memoCodebook(s, s"ivf|$d|$nCentroids|$trainIters")(
-      trainIvfCentroids(s, e, nCentroids, trainIters))
+    val cents = ivfCodebook(s, d, nCentroids, trainIters)
     val wA = Window.partitionBy(col("vec_id")).orderBy(col("c_cos").desc, col("c_id"))
     val assigned = e.where(col("vec_id") < maxId)
       .join(broadcast(cents), lit(true))
@@ -634,8 +614,7 @@ object Ann {
   def embKnnDist(s: SparkSession, d: String, k: Int = 5, maxId: Int = 1000,
                  nCentroids: Int = 16, trainIters: Int = 2): DataFrame = {
     val e = quantNormTable(s, d)
-    val cents = memoCodebook(s, s"ivf|$d|$nCentroids|$trainIters")(
-      trainIvfCentroids(s, e, nCentroids, trainIters))
+    val cents = ivfCodebook(s, d, nCentroids, trainIters)
     val wA = Window.partitionBy(col("vec_id")).orderBy(col("c_cos").desc, col("c_id"))
     val assigned = e.where(col("vec_id") < maxId)
       .join(broadcast(cents), lit(true))
@@ -713,36 +692,28 @@ object Ann {
     */
   private def pqSubs(s: SparkSession, d: String, m: Int, dims: Int): DataFrame = {
     val sw = dims / m
-    memoDf(s, s"pqsubs|$d|$m|$dims") {
-      // localCheckpoint, not cache() (r18): the stored sub-vector table —
-      // same artifact tier as quantNormTable, and immune to clearCache()
-      graft.core.Memo.spread(
-        quantNorm(s, d).select(col("vec_id"), col("v"))
-          .select(col("vec_id"), explode(sequence(lit(0), lit(m - 1))).as("sp"), col("v"))
-          .select(col("vec_id"), col("sp"), slice(col("v"), col("sp") * sw + 1, lit(sw)).as("sv")))
-        .localCheckpoint(true)
-    }
+    artifact(s, s"pqsubs|$d|$m|$dims", Layout.Wide)(
+      quantNorm(s, d).select(col("vec_id"), col("v"))
+        .select(col("vec_id"), explode(sequence(lit(0), lit(m - 1))).as("sp"), col("v"))
+        .select(col("vec_id"), col("sp"), slice(col("v"), col("sp") * sw + 1, lit(sw)).as("sv")))
   }
 
   private def pqCodesLut(s: SparkSession, d: String, nQueries: Int, nCodes: Int,
                          m: Int, dims: Int, trainIters: Int): (DataFrame, DataFrame) = {
     val subs = pqSubs(s, d, m, dims)
-    val cents = memoCodebook(s, s"pq|$d|$nCodes|$m|$dims|$trainIters")(
-      trainPqCentroids(subs, nCodes, trainIters))
+    val cents = pqCodebook(s, d, nCodes, m, dims, trainIters)
     val sqL2 = aggregate(zip_with(col("sv"), col("cv"), (a, b) => (a - b) * (a - b)),
       lit(0.0), (acc, x) => acc + x)
     val wAssign = Window.partitionBy(col("vec_id"), col("sp")).orderBy(col("d2"), col("c_id"))
     // the code table IS the stored PQ index (the inverted-file precedent:
     // a search session loads it, it never re-assigns the corpus) — memoized
     // and persisted like the codebook it derives from (r18)
-    val codes = memoCodebook(s, s"pqcodes|$d|$nCodes|$m|$dims|$trainIters")(
-      graft.core.Memo.spread(
-        subs.join(broadcast(cents), col("sp") === col("csp"))
-          .select(col("vec_id"), col("sp"), col("c_id"), round(sqL2, 6).as("d2"))
-          .select(col("vec_id"), col("sp"), col("c_id"), row_number().over(wAssign).as("rn"))
-          .where(col("rn") === 1)
-          .select(col("vec_id"), col("sp"), col("c_id").as("code")))
-        .localCheckpoint(true))
+    val codes = stored(s, d, s"pqcodes|$d|$nCodes|$m|$dims|$trainIters", Layout.Wide)(
+      subs.join(broadcast(cents), col("sp") === col("csp"))
+        .select(col("vec_id"), col("sp"), col("c_id"), round(sqL2, 6).as("d2"))
+        .select(col("vec_id"), col("sp"), col("c_id"), row_number().over(wAssign).as("rn"))
+        .where(col("rn") === 1)
+        .select(col("vec_id"), col("sp"), col("c_id").as("code")))
     val lut = subs.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("sp").as("lsp"), col("sv").as("qsv"))
       .join(broadcast(cents), col("lsp") === col("csp"))
@@ -765,8 +736,7 @@ object Ann {
   def pqReconError(s: SparkSession, d: String, nCodes: Int = 16, m: Int = 4,
                    dims: Int = 64, trainIters: Int = 2): DataFrame = {
     val subs = pqSubs(s, d, m, dims)
-    val cents = memoCodebook(s, s"pq|$d|$nCodes|$m|$dims|$trainIters")(
-      trainPqCentroids(subs, nCodes, trainIters))
+    val cents = pqCodebook(s, d, nCodes, m, dims, trainIters)
     val sqL2 = aggregate(zip_with(col("sv"), col("cv"), (a, b) => (a - b) * (a - b)),
       lit(0.0), (acc, x) => acc + x)
     val wAssign = Window.partitionBy(col("vec_id"), col("sp")).orderBy(col("d2"), col("c_id"))
@@ -810,13 +780,8 @@ object Ann {
   def ivfPqTopK(s: SparkSession, d: String, k: Int = 5, nQueries: Int = 20,
                 nCentroids: Int = 16, nprobe: Int = 2, nCodes: Int = 16, m: Int = 4,
                 dims: Int = 64, trainIters: Int = 2): DataFrame = {
-    val e = quantNormTable(s, d)
-    val cents = memoCodebook(s, s"ivf|$d|$nCentroids|$trainIters")(
-      trainIvfCentroids(s, e, nCentroids, trainIters))
-    // the memoized inverted file every other IVF consumer probes (r18:
-    // this path re-derived the corpus assignment window per call)
-    val ranked = memoCodebook(s, s"ivfranked|$d|$nCentroids|$trainIters|$nprobe")(
-      rankedAssignment(s, d, cents, nprobe).localCheckpoint(true))
+    // the stored inverted file every other IVF consumer probes
+    val ranked = ivfRanked(s, d, nCentroids, trainIters, nprobe)
     val assigned = ranked.where(col("arn") === 1)
       .select(col("vec_id"), col("c_id").as("cell"))
     val qcells = ranked.where(col("vec_id") < nQueries)
@@ -935,8 +900,7 @@ object Ann {
     */
   def lshRangeSearch(s: SparkSession, d: String, threshold: Double = 0.2,
                      nQueries: Int = 20, nPlanes: Int = 4, nTables: Int = 8): DataFrame = {
-    val b = memoDf(s, s"lshb|$d|$nPlanes|$nTables")(
-      graft.core.Memo.spread(lshBuckets(s, d, nPlanes, nTables)).localCheckpoint(true))
+    val b = lshBucketTable(s, d, nPlanes, nTables)
     val q = b.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("tbl").as("q_tbl"), col("bucket").as("q_bucket"))
     val vecs = b.select(col("vec_id"), col("v"), col("nrm")).distinct()
@@ -1158,7 +1122,7 @@ object Ann {
     * dequantized components, memoized like every trained index artifact.
     */
   private def sq8Components(s: SparkSession, d: String): DataFrame =
-    memoDf(s, s"sq8|$d") {
+    artifact(s, s"sq8|$d") {
       val comp = Tables.embeddings(s, d)
         .select(col("vec_id"),
           posexplode(transform(col("embedding"), x => Det.rnd(x.cast("double"), 6))))
@@ -1176,7 +1140,6 @@ object Ann {
         .select(col("vec_id"), col("i"), col("x"),
           Det.rnd(col("mn") + col("q8").cast("double") * col("den") / lit(255.0), 6)
             .as("xq"))
-        .localCheckpoint(true)
     }
 
   /** SQ8-dequantized vectors re-assembled per vec_id — the scan-side frame
@@ -1188,19 +1151,12 @@ object Ann {
     * accumulated double error ~1e-15 sits far inside the Det.rnd nudge).
     */
   private def sq8Vectors(s: SparkSession, d: String): DataFrame =
-    memoDf(s, s"sq8v|$d") {
-      // r19 (VERDICT r18 #4): rows×fanout-aware width instead of full
-      // executor width — the probe consumers do ~nQueries dots per row, so
-      // a bench-SF table stops scheduling 32 near-empty tasks per stage
-      // while the same sizing saturates any cluster at real row counts
-      graft.core.Memo.spreadAuto(
-        sq8Components(s, d)
-          .groupBy(col("vec_id"))
-          .agg(transform(sort_array(collect_list(struct(col("i"), col("xq")))),
-            t => t.getField("xq")).as("xqv")),
-        fanout = 32L)
-        .localCheckpoint(true)
-    }
+    // sized by work: the probe consumers do ~nQueries dots per row
+    artifact(s, s"sq8v|$d", Layout.ByWork(fanout = 32L))(
+      sq8Components(s, d)
+        .groupBy(col("vec_id"))
+        .agg(transform(sort_array(collect_list(struct(col("i"), col("xq")))),
+          t => t.getField("xq")).as("xqv")))
 
   /** Exhaustive top-k over the SQ8-dequantized corpus — the brute-force
     * scan PQ's ADC replaces, run at a quarter of the float32 memory
@@ -1233,12 +1189,7 @@ object Ann {
     */
   def ivfSq8TopK(s: SparkSession, d: String, k: Int = 5, nQueries: Int = 20,
                  nCentroids: Int = 16, nprobe: Int = 1, trainIters: Int = 2): DataFrame = {
-    val cents = memoCodebook(s, s"ivf|$d|$nCentroids|$trainIters")(
-      trainIvfCentroids(s, quantNormTable(s, d),
-        nCentroids, trainIters))
-    val ranked = memoCodebook(s, s"ivfranked|$d|$nCentroids|$trainIters|$nprobe")(
-      rankedAssignment(s, d, cents, nprobe).localCheckpoint(true))
-    ivfSq8TopKFromRanked(s, d, ranked, k, nQueries)
+    ivfSq8TopKFromRanked(s, d, ivfRanked(s, d, nCentroids, trainIters, nprobe), k, nQueries)
   }
 
   /** [[ivfSq8TopK]] against an EXPLICIT codebook (e.g. one applied by
@@ -1330,10 +1281,8 @@ object Ann {
   def ivfFilteredTopK(s: SparkSession, d: String, k: Int = 5, nQueries: Int = 20,
                       nCentroids: Int = 16, nprobe: Int = 2, maxLabel: Int = 2,
                       trainIters: Int = 2): DataFrame = {
-    val cents = ivfCodebook(s, d, nCentroids, trainIters)
-    val ranked = memoCodebook(s, s"ivfranked|$d|$nCentroids|$trainIters|$nprobe")(
-      rankedAssignment(s, d, cents, nprobe).localCheckpoint(true))
-    ivfFilteredTopKFromRanked(s, d, ranked, k, nQueries, maxLabel)
+    ivfFilteredTopKFromRanked(s, d, ivfRanked(s, d, nCentroids, trainIters, nprobe),
+      k, nQueries, maxLabel)
   }
 
   /** [[ivfFilteredTopK]] against an EXPLICIT codebook (e.g. one applied by
@@ -1374,11 +1323,9 @@ object Ann {
   private def pqResSubs(s: SparkSession, d: String, m: Int, dims: Int,
                         nCentroids: Int, trainIters: Int): DataFrame = {
     val sw = dims / m
-    memoDf(s, s"pqressubs|$d|$m|$dims|$nCentroids|$trainIters") {
+    artifact(s, s"pqressubs|$d|$m|$dims|$nCentroids|$trainIters", Layout.Wide) {
       val cents = ivfCodebook(s, d, nCentroids, trainIters)
-      val ranked = memoCodebook(s, s"ivfranked|$d|$nCentroids|$trainIters|1")(
-        rankedAssignment(s, d, cents, 1).localCheckpoint(true))
-      ranked.where(col("arn") === 1)
+      ivfRanked(s, d, nCentroids, trainIters, 1).where(col("arn") === 1)
         .join(broadcast(cents.select(col("c_id").as("rc_id"), col("cv"))),
           col("c_id") === col("rc_id"))
         .select(col("vec_id"),
@@ -1386,10 +1333,6 @@ object Ann {
         .select(col("vec_id"), explode(sequence(lit(0), lit(m - 1))).as("sp"), col("rv"))
         .select(col("vec_id"), col("sp"),
           slice(col("rv"), col("sp") * sw + 1, lit(sw)).as("sv"))
-        // localCheckpoint, not cache() (r18): scanned per training
-        // iteration + code assignment, and immune to clearCache()
-        .transform(graft.core.Memo.spread)
-        .localCheckpoint(true)
     }
   }
 
@@ -1422,14 +1365,11 @@ object Ann {
                             m: Int, dims: Int, nCentroids: Int,
                             trainIters: Int): (DataFrame, DataFrame) = {
     val rsubs = pqResSubs(s, d, m, dims, nCentroids, trainIters)
-    val rcents = memoCodebook(s, s"pqres|$d|$nCodes|$m|$dims|$nCentroids|$trainIters")(
-      trainPqCentroids(rsubs, nCodes, trainIters))
+    val rcents = pqResCodebook(s, d, nCodes, m, dims, nCentroids, trainIters)
     // the residual code table is the stored index half, like pqcodes (r18)
-    val codes = memoCodebook(s,
-      s"pqrescodes|$d|$nCodes|$m|$dims|$nCentroids|$trainIters")(
-      graft.core.Memo.spread(pqResAssign(rsubs, rcents)
-        .select(col("vec_id"), col("sp"), col("code")))
-        .localCheckpoint(true))
+    val codes = stored(s, d,
+      s"pqrescodes|$d|$nCodes|$m|$dims|$nCentroids|$trainIters", Layout.Wide)(
+      pqResAssign(rsubs, rcents).select(col("vec_id"), col("sp"), col("code")))
     val lut = pqSubs(s, d, m, dims).where(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("sp").as("lsp"), col("sv").as("qsv"))
       .join(broadcast(rcents), col("lsp") === col("csp"))
@@ -1447,8 +1387,7 @@ object Ann {
                                   m: Int, dims: Int, trainIters: Int): DataFrame = {
     val e = quantNormTable(s, d)
     val cents = ivfCodebook(s, d, nCentroids, trainIters)
-    val ranked = memoCodebook(s, s"ivfranked|$d|$nCentroids|$trainIters|$nprobe")(
-      rankedAssignment(s, d, cents, nprobe).localCheckpoint(true))
+    val ranked = ivfRanked(s, d, nCentroids, trainIters, nprobe)
     val assigned = ranked.where(col("arn") === 1)
       .select(col("vec_id"), col("c_id").as("cell"))
     val qcells = ranked.where(col("vec_id") < nQueries)
@@ -1571,8 +1510,7 @@ object Ann {
                       dims: Int = 64, nCentroids: Int = 16,
                       trainIters: Int = 2): DataFrame = {
     val rsubs = pqResSubs(s, d, m, dims, nCentroids, trainIters)
-    val rcents = memoCodebook(s, s"pqres|$d|$nCodes|$m|$dims|$nCentroids|$trainIters")(
-      trainPqCentroids(rsubs, nCodes, trainIters))
+    val rcents = pqResCodebook(s, d, nCodes, m, dims, nCentroids, trainIters)
     val asg = pqResAssign(rsubs, rcents)
       .select(col("vec_id"), col("sp"), col("d2"))
     val norms = pqSubs(s, d, m, dims).select(col("vec_id"), col("sp"),

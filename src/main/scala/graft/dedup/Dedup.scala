@@ -2,7 +2,8 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Det, Memo, Tables}
+import graft.core.{Artifact, Det, Tables}
+import graft.core.Artifact.Layout
 import graft.text.TextOps
 
 /** Deduplication operators for training-data pipelines over `documents` /
@@ -72,7 +73,7 @@ object Dedup {
   }
 
   /** doc_id -> exploded distinct shingle rows, memoized per (session, sfDir)
-    * through [[graft.core.Memo]] and materialized ONCE — ngram/containment/
+    * through [[graft.core.Artifact]] and materialized ONCE — ngram/containment/
     * novelty/minhash-verified all start here, and at 100 TB the shingle
     * table is a materialized pipeline artifact every consumer probes, not a
     * per-query recomputation. Tokens are materialized before the shingle
@@ -80,15 +81,13 @@ object Dedup {
     * per element access (see TextOps.shinglesOf).
     */
   private def shingleRows(s: SparkSession, d: String): DataFrame =
-    Memo.df(s, s"dedup.shingles|$d") {
-      // r19: hash-partitioned on `shingle` at the same width/4 the r18
-      // sizing settled on — the inverted-index self-joins (ngramJaccard /
-      // containment / scurve truth), groupBy(shingle) first-seen owners
-      // (ngramNovelty) and df-cap aggregation all reuse the checkpointed
-      // layout instead of exchanging the million-row table per consumer
-      Memo.checkpointKeepingLayout(
-        Memo.spreadBy(shingleRowsOf(Tables.documents(s, d)), 4, col("shingle")))
-    }
+    // hash-partitioned on `shingle` at width/4: the inverted-index
+    // self-joins (ngramJaccard / containment / scurve truth),
+    // groupBy(shingle) first-seen owners (ngramNovelty) and df-cap
+    // aggregation all reuse the checkpointed layout instead of exchanging
+    // the million-row table per consumer
+    Artifact.build(s, s"dedup.shingles|$d", Layout.Hashed(4, "shingle"))(
+      shingleRowsOf(Tables.documents(s, d)))
 
   /** Memoized per-doc distinct-shingle counts over [[shingleRows]] — the
     * doc-stats column every Jaccard/containment denominator reads; derived
@@ -96,11 +95,8 @@ object Dedup {
     * Unspread: per-doc rows with join-probe consumers (the S2a criterion).
     */
   private def shingleSizes(s: SparkSession, d: String): DataFrame =
-    Memo.df(s, s"dedup.shinglesizes|$d") {
-      Memo.checkpointKeepingLayout(
-        shingleRows(s, d).groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_shingles")))
-    }
+    Artifact.build(s, s"dedup.shinglesizes|$d", Layout.KeepHash)(
+      shingleRows(s, d).groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles")))
 
   /** Same, over any (doc_id, text) DataFrame — the corpus-agnostic core. */
   def shingleRowsOf(docs: DataFrame): DataFrame =
@@ -287,9 +283,8 @@ object Dedup {
     // only on the corpus and the cap), so it is memoized too: repeat queries
     // pay the pair join, not the df count + filter + re-materialization.
     containmentPairsCappedOn(
-      Memo.df(s, s"dedup.contain.kept|$d|$maxDf") {
-        Memo.spread(dfCapped(shingleRows(s, d), maxDf)).localCheckpoint(true)
-      }, tau, maxDf, materialize = false, preCapped = true)
+      Artifact.build(s, s"dedup.contain.kept|$d|$maxDf", Layout.Wide)(
+        dfCapped(shingleRows(s, d), maxDf)), tau, maxDf, materialize = false, preCapped = true)
 
   /** Same, over any (doc_id, shingle) row set — reused by the
     * clone-inflation scale experiment so it measures the exact production
@@ -301,10 +296,10 @@ object Dedup {
                                preCapped: Boolean = false): DataFrame = {
     // operator-local materializations: localCheckpoint, not cache() — no
     // CacheManager entry outlives the query (ADVICE r5)
-    val sh = if (materialize) Memo.spread(sh0).localCheckpoint(true) else sh0
+    val sh = if (materialize) Artifact.materialize(sh0, Layout.Wide) else sh0
     val kept =
       if (preCapped) sh // already the memoized, materialized df-capped set
-      else Memo.spread(dfCapped(sh, maxDf)).localCheckpoint(true)
+      else Artifact.materialize(dfCapped(sh, maxDf), Layout.Wide)
     val sizes = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles"))
     // SHUFFLE_HASH: the checkpointed kept frame carries no stats, so Spark
     // would default to a sort-merge join — sorting a many-million-row
@@ -387,9 +382,7 @@ object Dedup {
     * restores r5's cross-query reuse without r5's CacheManager leak.
     */
   private def bandRows(s: SparkSession, d: String): DataFrame =
-    Memo.df(s, s"dedup.bands|$d") {
-      bandRowsOf(shingleRows(s, d)).localCheckpoint(true)
-    }
+    Artifact.build(s, s"dedup.bands|$d")(bandRowsOf(shingleRows(s, d)))
 
   /** MinHash + LSH banding: band key = md5 of the band's concatenated
     * signature rows; candidate pairs are documents sharing any band bucket.
@@ -399,9 +392,7 @@ object Dedup {
     * dedup, fuzzy join and five graph operators in one session.
     */
   def minhashLsh(s: SparkSession, d: String): DataFrame =
-    Det.ordered(Memo.df(s, s"dedup.pairs|$d") {
-      bandPairs(bandRows(s, d)).localCheckpoint(true)
-    })
+    Det.ordered(Artifact.build(s, s"dedup.pairs|$d")(bandPairs(bandRows(s, d))))
 
   /** MinHash-LSH candidate pairs over any shingle-row set — see
     * [[minhashLsh]]; exposed so scale experiments and other corpora reuse
@@ -445,9 +436,7 @@ object Dedup {
     * exactly what a 100 TB deployment stores.
     */
   private def simhashSigTable(s: SparkSession, d: String): DataFrame =
-    Memo.df(s, s"dedup.simhash|$d") {
-      Memo.spread(simhashSignatures(s, d)).localCheckpoint(true)
-    }
+    Artifact.build(s, s"dedup.simhash|$d", Layout.Wide)(simhashSignatures(s, d))
 
   /** 64-bit SimHash signatures packed into two 32-bit halves — exactly what a
     * 100 TB signature table would store (one xor + popcount per pair test).
@@ -744,7 +733,7 @@ object Dedup {
   def incrementalDedupOn(sh0: DataFrame, splitId: Long): DataFrame = {
     // localCheckpoint: shared by the band pipeline and the new-doc roster
     // without leaving a CacheManager entry behind (ADVICE r5)
-    val sh = Memo.spread(sh0).localCheckpoint(true)
+    val sh = Artifact.materialize(sh0, Layout.Wide)
     incrementalCore(bandRowsOf(sh).localCheckpoint(true),
       sh.select(col("doc_id")).distinct(), splitId)
   }
@@ -925,17 +914,8 @@ object Dedup {
     // table statistics, not a scan (ADVICE r10).
     val n = math.max(oldH.count(), 1L)
     val bits = math.max(64L, n * bitsPerKey)
-    // BloomFilterAggregate silently CLAMPS its n/bits arguments to the
-    // session's runtime-filter caps (maxNumItems 4M / maxNumBits 8 MB by
-    // default) — sized for the optimizer's auto-injected filters, not an
-    // explicit index build. Left clamped, a large history would silently
-    // degrade to a near-100% FP rate (no false negatives, but the
-    // prefilter benefit evaporates). An explicit build states its size on
-    // purpose: raise the caps to fit (ADVICE r10).
-    def raiseCap(key: String, needed: Long): Unit =
-      if (s.conf.get(key).toLong < needed) s.conf.set(key, needed.toString)
-    raiseCap("spark.sql.optimizer.runtime.bloomFilter.maxNumItems", n)
-    raiseCap("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", bits)
+    // graft_bloom_agg builds at exactly this size: Spark's own aggregate
+    // clamps to the session's runtime-filter caps (ADVICE r10)
     val id = BloomViewSeq.incrementAndGet()
     val (ov, fv) = (s"graft_bloom_old_$id", s"graft_bloom_new_$id")
     oldH.createOrReplaceTempView(ov)
@@ -1080,8 +1060,7 @@ object Dedup {
       // self-joined; localCheckpoint (not cache) so nothing outlives the
       // query. Spread: the broadcast-nested-loop stream side otherwise runs
       // the whole |corpus|x|corpus| dot fan-out in the leaf's one task (r18)
-      .transform(Memo.spread)
-      .localCheckpoint(true)
+      .transform(Artifact.materialize(_, Layout.Wide))
     val out = e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"),
         // try_divide: zero-norm vectors yield null (never near-dup), not an
@@ -1100,9 +1079,8 @@ object Dedup {
     * `string_split_regex(lower(text), '\s+')` exactly.
     */
   private def posGramRows(s: SparkSession, d: String, k: Int): DataFrame =
-    Memo.df(s, s"dedup.posgrams|$d|$k") {
-      Memo.spread(posGramRowsOf(Tables.documents(s, d), k)).localCheckpoint(true)
-    }
+    Artifact.build(s, s"dedup.posgrams|$d|$k", Layout.Wide)(
+      posGramRowsOf(Tables.documents(s, d), k))
 
   /** Same, over any (doc_id, text) DataFrame — the corpus-agnostic core. */
   def posGramRowsOf(docs: DataFrame, k: Int): DataFrame =
@@ -1133,9 +1111,8 @@ object Dedup {
     Det.ordered(substringSpanFrame(s, d, k))
 
   private def substringSpanFrame(s: SparkSession, d: String, k: Int): DataFrame =
-    Memo.df(s, s"dedup.substrspans|$d|$k") {
-      Memo.spread(substringSpansOf(posGramRows(s, d, k), k)).localCheckpoint(true)
-    }
+    Artifact.build(s, s"dedup.substrspans|$d|$k", Layout.Wide)(
+      substringSpansOf(posGramRows(s, d, k), k))
 
   /** Span-merge core over a positional gram table — see [[substringSpans]].
     * Windows starting within k of the previous duplicated start overlap or

@@ -4,9 +4,13 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{BloomFilterAggregate, TypedImperativeAggregate}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Native dot product over two double arrays.
   *
@@ -65,6 +69,42 @@ case class DotProduct(left: Expression, right: Expression)
   * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
   * and call as `expr("graft_dot(a, b)")`.
   */
+/** Spark's `BloomFilterAggregate` sized exactly as asked. Spark clamps the
+  * item count and bit size to the session's runtime-filter caps (sized for
+  * optimizer-injected filters), which would silently degrade an explicit
+  * index build over a large history to a near-100% false-positive rate;
+  * raising the caps would mean writing the shared session's conf. Same
+  * filter, same updates and the same serialized form otherwise, so
+  * `BloomFilterMightContain` probes it unchanged.
+  */
+case class GraftBloomAgg(child: Expression, numItems: Long, numBits: Long,
+                         mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+  extends TypedImperativeAggregate[BloomFilter] with UnaryLike[Expression] {
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"graft_bloom_agg expects a bigint hash, got ${child.dataType.simpleString}")
+  override def nullable: Boolean = true
+  override def dataType: DataType = BinaryType
+  override def prettyName: String = "graft_bloom_agg"
+  override def createAggregationBuffer(): BloomFilter = BloomFilter.create(numItems, numBits)
+  override def update(buffer: BloomFilter, input: InternalRow): BloomFilter = {
+    val v = child.eval(input)
+    if (v != null) buffer.putLong(v.asInstanceOf[Long])
+    buffer
+  }
+  override def merge(buffer: BloomFilter, other: BloomFilter): BloomFilter =
+    buffer.mergeInPlace(other)
+  // no bit set = no non-null input: null, like Spark's aggregate
+  override def eval(buffer: BloomFilter): Any =
+    if (buffer.cardinality() == 0) null else serialize(buffer)
+  override def serialize(buffer: BloomFilter): Array[Byte] = BloomFilterAggregate.serialize(buffer)
+  override def deserialize(bytes: Array[Byte]): BloomFilter = BloomFilterAggregate.deserialize(bytes)
+  override def withNewMutableAggBufferOffset(o: Int): GraftBloomAgg = copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): GraftBloomAgg = copy(inputAggBufferOffset = o)
+  override protected def withNewChildInternal(c: Expression): GraftBloomAgg = copy(child = c)
+}
+
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((
@@ -95,18 +135,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         if (children.length > 7)
           children(7).eval(null).asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString
         else "")))
-    // Spark's runtime-filter bloom expressions (BloomFilterAggregate /
-    // BloomFilterMightContain) are codegen'd and deterministic (seedless
-    // XxHash64 probes) but not exposed in the public FunctionRegistry —
-    // surface them under graft names for the bloom-prefilter dedup path.
+    // Spark's runtime-filter bloom expressions are codegen'd and
+    // deterministic (seedless XxHash64 probes) but not exposed in the
+    // public FunctionRegistry — surface them under graft names for the
+    // bloom-prefilter dedup path (the aggregate without the size clamp).
     ext.injectFunction((
       new FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "graft_bloom_agg"),
+      new ExpressionInfo(classOf[GraftBloomAgg].getName, "graft_bloom_agg"),
       (children: Seq[Expression]) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          children.head, children(1), children(2))))
+        GraftBloomAgg(children.head, children(1).eval().asInstanceOf[Number].longValue,
+          children(2).eval().asInstanceOf[Number].longValue)))
     ext.injectFunction((
       new FunctionIdentifier("graft_bloom_contains"),
       new ExpressionInfo(

@@ -2,7 +2,8 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Det, Tables}
+import graft.core.{Artifact, Det, Tables}
+import graft.core.Artifact.Layout
 
 /** Typed metadata a decoder extracts from one media payload. */
 case class MediaMeta(doc_id: Long, byte_len: Long, fingerprint: String,
@@ -247,9 +248,7 @@ object Multimodal {
   /** Memoized pHash signature table — the stored index both pair searches
     * probe (the simhashSigTable pattern). */
   private def phashSigTable(s: SparkSession, d: String): DataFrame =
-    graft.core.Memo.df(s, s"mm.phash|$d") {
-      graft.core.Memo.spread(phashSignatures(s, d)).localCheckpoint(true)
-    }
+    Artifact.build(s, s"mm.phash|$d", Layout.Wide)(phashSignatures(s, d))
 
   /** Exhaustive media near-dup pairs (hamming <= maxHamming over the pHash)
     * — the oracle baseline for [[phashDedup]], never the 100 TB path.
@@ -310,13 +309,10 @@ object Multimodal {
     * output of the encode pass, and the memo models exactly that. */
   private def hexEmb64Table(s: SparkSession, d: String): DataFrame = {
     import graft.functions.VectorFunctions
-    graft.core.Memo.df(s, s"mm.hex64|$d") {
+    Artifact.build(s, s"mm.hex64|$d", Layout.Wide)(
       hexEmbedding64(s, d)
         .select(col("doc_id"), col("v"),
-          sqrt(VectorFunctions.dot(s, col("v"), col("v"))).as("nrm"))
-        .transform(graft.core.Memo.spread)
-        .localCheckpoint(true)
-    }
+          sqrt(VectorFunctions.dot(s, col("v"), col("v"))).as("nrm")))
   }
 
   /** Cross-modal retrieval, exact: TEXT-embedding queries (the embeddings

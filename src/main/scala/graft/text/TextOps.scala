@@ -3,7 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Det, Tables}
+import graft.core.{Artifact, Det, Tables}
+import graft.core.Artifact.Layout
 
 /** Text-analysis operators for training-data pipelines over `documents`.
   * All pure column expressions (whole-stage codegen, no UDFs) so they run at
@@ -463,14 +464,10 @@ object TextOps {
     * per-doc coverage aggregates reuse the layout.
     */
   private[graft] def shingle8Rows(s: SparkSession, d: String, k: Int = 8): DataFrame =
-    graft.core.Memo.df(s, s"text.sh8|$d|$k") {
-      graft.core.Memo.checkpointKeepingLayout(
-        graft.core.Memo.spreadBy(
-          Tables.documents(s, d)
-            .select(col("doc_id"), tokens(col("text")).as("toks"))
-            .select(col("doc_id"), explode(shinglesOf(col("toks"), k)).as("sh")),
-          4, col("doc_id")))
-    }
+    Artifact.build(s, s"text.sh8|$d|$k", Layout.Hashed(4, "doc_id"))(
+      Tables.documents(s, d)
+        .select(col("doc_id"), tokens(col("text")).as("toks"))
+        .select(col("doc_id"), explode(shinglesOf(col("toks"), k)).as("sh")))
 
   def decontaminate(s: SparkSession, d: String, benchmarkMaxId: Long = 10L): DataFrame = {
     val sh = shingle8Rows(s, d)
@@ -598,36 +595,31 @@ object TextOps {
     * whether built per call or loaded from the memo (r19).
     */
   private def lmProbsTable(s: SparkSession, d: String): DataFrame =
-    graft.core.Memo.df(s, s"text.lmprobs|$d") {
+    Artifact.build(s, s"text.lmprobs|$d", Layout.KeepHash) {
       val cb2 = bigramTable(s, d)
         .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
       val cb1 = cb2.groupBy(col("w1")).agg(sum(col("c2")).as("c1"))
-      graft.core.Memo.checkpointKeepingLayout(
-        cb2.join(cb1, "w1")
-          .select(col("w1"), col("w2"),
-            Det.rnd(col("c2") * lit(1.0) / col("c1"), 8).cast("decimal(12,8)").as("p")))
+      cb2.join(cb1, "w1")
+        .select(col("w1"), col("w2"),
+          Det.rnd(col("c2") * lit(1.0) / col("c1"), 8).cast("decimal(12,8)").as("p"))
     }
 
   /** Memoized (doc_id, w1, w2) bigram rows — the corpus LM's training
     * stream; [[lmScore]] probes it per call (and [[ccnetBuckets]] through
     * lmScore) and [[lmProbsTable]] trains from it once. */
   private def bigramTable(s: SparkSession, d: String): DataFrame =
-    graft.core.Memo.df(s, s"text.bigrams|$d") {
-      // r19: hash-partitioned on w1 — the pair-count training aggregate
-      // ({w1} ⊆ {w1,w2}), the context-count aggregate and lmScore's probe
-      // join against the (w1-partitioned) probability table all reuse the
-      // layout; only the per-doc aggregate still exchanges (guide §2.4)
-      graft.core.Memo.spreadBy(
-        Tables.documents(s, d)
-          .select(col("doc_id"), tokens(col("text")).as("toks"))
-          .where(size(col("toks")) >= 2)
-          .select(col("doc_id"),
-            explode(expr("transform(sequence(1, size(toks)-1), " +
-              "i -> struct(element_at(toks, i) AS w1, element_at(toks, i+1) AS w2))")).as("bg"))
-          .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2")),
-        4, col("w1"))
-        .transform(graft.core.Memo.checkpointKeepingLayout)
-    }
+    // hash-partitioned on w1: the pair-count training aggregate
+    // ({w1} ⊆ {w1,w2}), the context-count aggregate and lmScore's probe
+    // join against the (w1-partitioned) probability table all reuse the
+    // layout; only the per-doc aggregate still exchanges
+    Artifact.build(s, s"text.bigrams|$d", Layout.Hashed(4, "w1"))(
+      Tables.documents(s, d)
+        .select(col("doc_id"), tokens(col("text")).as("toks"))
+        .where(size(col("toks")) >= 2)
+        .select(col("doc_id"),
+          explode(expr("transform(sequence(1, size(toks)-1), " +
+            "i -> struct(element_at(toks, i) AS w1, element_at(toks, i+1) AS w2))")).as("bg"))
+        .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2")))
 
   /** Heavy-hitter tokens via the Misra–Gries sketch
     * ([[graft.functions.HeavyHitters]]): bounded-memory approximate top
@@ -737,11 +729,9 @@ object TextOps {
     * pipeline.
     */
   def winnowingFingerprints(s: SparkSession, d: String, k: Int = 8, w: Int = 6): DataFrame =
-    graft.core.Memo.df(s, s"text.winnowing|$d|$k|$w") {
+    Artifact.build(s, s"text.winnowing|$d|$k|$w")(
       winnowingFingerprintsOf(
-        Tables.documents(s, d).select(col("doc_id"), col("text")), k, w)
-        .localCheckpoint(true)
-    }
+        Tables.documents(s, d).select(col("doc_id"), col("text")), k, w))
 
   /** [[winnowingFingerprints]] over any (doc_id, text) set — exposed so
     * scale experiments reuse the exact production selection.
@@ -799,8 +789,8 @@ object TextOps {
   private def bpeArtifacts(s: SparkSession, d: String, nMerges: Int,
                            chars: Boolean): (DataFrame, DataFrame) = {
     lazy val trained = bpeTrainRounds(s, d, nMerges, chars)
-    val table = graft.core.Memo.df(s, s"text.bpe.table|$d|$nMerges|$chars")(trained._1)
-    val corpus = graft.core.Memo.df(s, s"text.bpe.corpus|$d|$nMerges|$chars")(trained._2)
+    val table = Artifact.build(s, s"text.bpe.table|$d|$nMerges|$chars")(trained._1)
+    val corpus = Artifact.build(s, s"text.bpe.corpus|$d|$nMerges|$chars")(trained._2)
     (table, corpus)
   }
 
@@ -884,22 +874,18 @@ object TextOps {
     * so neither consumer re-scans documents (r19, VERDICT r18 #3).
     */
   private def dsirBuckets(s: SparkSession, d: String): DataFrame =
-    graft.core.Memo.df(s, s"text.dsir|$d") {
-      // hash-partitioned on doc_id: both consumers' per-doc aggregates
-      // reuse the layout (doc_id ⊆ their grouping keys) — no exchange in
-      // either timed path; the 256-row estimator aggregate re-keys by
-      // bucket but over width/4 map tasks (guide §2.4)
-      graft.core.Memo.spreadBy(
-        Tables.documents(s, d)
-          .select(col("doc_id"), col("lang"), col("source"),
-            explode(tokens(col("text"))).as("tok"))
-          .select(col("doc_id"), col("lang"), col("source"),
-            conv(substring(md5(col("tok")), 1, 2), 16, 10).cast("int").as("b"))
-          .groupBy(col("doc_id"), col("lang"), col("source"), col("b"))
-          .agg(count(lit(1)).as("n")),
-        4, col("doc_id"))
-        .transform(graft.core.Memo.checkpointKeepingLayout)
-    }
+    // hash-partitioned on doc_id: both consumers' per-doc aggregates
+    // reuse the layout (doc_id ⊆ their grouping keys) — no exchange in
+    // either timed path; the 256-row estimator aggregate re-keys by
+    // bucket but over width/4 map tasks
+    Artifact.build(s, s"text.dsir|$d", Layout.Hashed(4, "doc_id"))(
+      Tables.documents(s, d)
+        .select(col("doc_id"), col("lang"), col("source"),
+          explode(tokens(col("text"))).as("tok"))
+        .select(col("doc_id"), col("lang"), col("source"),
+          conv(substring(md5(col("tok")), 1, 2), 16, 10).cast("int").as("b"))
+        .groupBy(col("doc_id"), col("lang"), col("source"), col("b"))
+        .agg(count(lit(1)).as("n")))
 
   /** The 256-row trained log-ratio table over [[dsirBuckets]] — DSIR's
     * importance estimator itself. Tiny; derived per call (two aggregates
@@ -1137,10 +1123,9 @@ object TextOps {
     // survivor set is itself an index artifact — memoized per
     // (corpus, k, w, maxDf), so repeat queries pay only the pair join
     winnowingPairsOn(
-      graft.core.Memo.df(s, s"text.winnowing.kept|$d|$k|$w|$maxDf") {
-        keptFingerprints(winnowingFingerprints(s, d, k, w), maxDf)
-          .localCheckpoint(true)
-      }, minShared, maxDf, preCapped = true)
+      Artifact.build(s, s"text.winnowing.kept|$d|$k|$w|$maxDf")(
+        keptFingerprints(winnowingFingerprints(s, d, k, w), maxDf)),
+      minShared, maxDf, preCapped = true)
 
   /** [[winnowingPairs]] over a precomputed fingerprint set. */
   def winnowingPairsOn(fp0: DataFrame, minShared: Int = 5, maxDf: Int = 20,
@@ -1290,18 +1275,14 @@ object TextOps {
     * stay scan-based for arbitrary inputs (streaming, series search).
     */
   private def tfTable(s: SparkSession, d: String): DataFrame =
-    graft.core.Memo.df(s, s"text.tf|$d") {
-      // r19: hash-partitioned on doc_id — the wide per-doc scoring
-      // aggregate (bm25TopK), the doc-length artifact build and the
-      // dl-probe joins all reuse the checkpointed layout (guide §2.4)
-      graft.core.Memo.spreadBy(
-        Tables.documents(s, d)
-          .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
-          .where(col("tok") =!= "")
-          .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf")),
-        1, col("doc_id"))
-        .transform(graft.core.Memo.checkpointKeepingLayout)
-    }
+    // hash-partitioned on doc_id: the wide per-doc scoring aggregate
+    // (bm25TopK), the doc-length artifact build and the dl-probe joins all
+    // reuse the checkpointed layout
+    Artifact.build(s, s"text.tf|$d", Layout.Hashed(1, "doc_id"))(
+      Tables.documents(s, d)
+        .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
+        .where(col("tok") =!= "")
+        .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf")))
 
   /** Memoized per-document length table dl = Σtf over [[tfTable]] — the
     * stored doc-length array every BM25 index keeps next to its postings
@@ -1310,10 +1291,8 @@ object TextOps {
     * per-doc rows with join-probe consumers — the S2a criterion.
     */
   private def dlTable(s: SparkSession, d: String): DataFrame =
-    graft.core.Memo.df(s, s"text.dl|$d") {
-      graft.core.Memo.checkpointKeepingLayout(
-        tfTable(s, d).groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")))
-    }
+    Artifact.build(s, s"text.dl|$d", Layout.KeepHash)(
+      tfTable(s, d).groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")))
 
   /** Score a (distinct) term set from the postings table — the from-index
     * twin of [[bm25TopKOn]]'s from-scan aggregation: dl = Σtf and per-term
@@ -1546,7 +1525,7 @@ object TextOps {
     * docs), and the oracle's replay all read these same 8-decimal values.
     */
   private def lrTable(s: SparkSession, d: String): DataFrame =
-    graft.core.Memo.df(s, s"text.lrtab|$d") {
+    Artifact.build(s, s"text.lrtab|$d") {
       // materialized (r18): lazy before — every lrFeaturesOf consumer
       // re-derived the full bigram count + LLR pipeline per run
       val big = lrBigrams(Tables.documents(s, d), Seq("doc_id", "lang"))
@@ -1561,7 +1540,6 @@ object TextOps {
             ((col("c_en") + 1) * (col("n_rest") + col("v"))).cast("double") /
             ((col("c_rest") + 1) * (col("n_en") + col("v")))), 8)
             .cast("decimal(12,8)").as("lr"))
-        .localCheckpoint(true)
     }
 
   /** Features of ARBITRARY (doc_id, text[, lang]) docs under corpus `d`'s
@@ -1602,11 +1580,8 @@ object TextOps {
     // conditional-sum + bigram-LLR pipeline from the corpus — the feature
     // table is the trained classifier's stored design matrix, the same
     // artifact tier as the shingle/band tables
-    graft.core.Memo.df(s, s"text.lrfeat|$d") {
-      graft.core.Memo.spread(
-        lrFeaturesOf(s, d, Tables.documents(s, d), withLabel = true))
-        .localCheckpoint(true)
-    }
+    Artifact.build(s, s"text.lrfeat|$d", Layout.Wide)(
+      lrFeaturesOf(s, d, Tables.documents(s, d), withLabel = true))
 
   /** Score ARBITRARY (doc_id, text) docs under the classifier trained on
     * corpus `d`: (doc_id, p, keep) — the streaming gate's scorer
@@ -1628,17 +1603,8 @@ object TextOps {
     * (`rnd8(w - lr*(Σrnd8((p-y)·x))/n)`) so the oracle's unrolled CTEs run
     * the numerically identical expression.
     */
-  private val lrWeightMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Array[Double]]]()
-  private def lrWeights(s: SparkSession, d: String): Seq[Array[Double]] = {
-    // keyed by applicationId like Memo.df, dead-application entries evicted
-    // on access (ADVICE r13): a second SparkSession in the same JVM seeing
-    // regenerated data at the same path must retrain, not apply stale
-    // weights while lrFeatures rebuilds fresh
-    val prefix = s.sparkContext.applicationId + "|"
-    val it = lrWeightMemo.keySet().iterator()
-    while (it.hasNext) if (!it.next().startsWith(prefix)) it.remove()
-    lrWeightMemo.computeIfAbsent(prefix + d, _ => {
+  private def lrWeights(s: SparkSession, d: String): Seq[Array[Double]] =
+    Artifact.value(s, s"text.lrweights|$d") {
       val feats = lrFeatures(s, d)
       var w = Array.fill(LrNFeats + 1)(0.0)
       val rounds = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
@@ -1658,8 +1624,7 @@ object TextOps {
         rounds += w
       }
       rounds.toSeq
-    })
-  }
+    }
 
   /** p = sigmoid(w·x) as a Column under the given weight literals. */
   private def lrSigmoid(w: Array[Double]): Column = {

@@ -97,6 +97,19 @@ class Round10Spec extends SparkTestBase {
     assert(fps <= 7, s"$fps false positives out of 70 novel probes")
   }
 
+  test("graft_bloom_agg builds past the runtime-filter caps without writing session conf") {
+    val capKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
+    val before = spark.conf.get(capKey)
+    // 2^27 bits is twice Spark's default 8 MB cap, which its own aggregate
+    // would silently clamp to
+    val bits = 1L << 27
+    val bytes = spark.range(1000)
+      .selectExpr(s"graft_bloom_agg(xxhash64(id), 5000000L, ${bits}L)")
+      .head().getAs[Array[Byte]](0)
+    assert(bytes.length >= bits / 8)
+    assert(spark.conf.get(capKey) == before)
+  }
+
   test("streaming dedup index: cross-batch + in-batch dups flagged, replay-safe") {
     import java.nio.file.{Files, Paths}
     val s = spark; import s.implicits._

@@ -134,16 +134,17 @@ class Round19Spec extends SparkTestBase {
     assert(got == reference)
   }
 
-  test("spreadAuto clamps a huge rows x fanout to executor width instead of wrapping to 2 partitions") {
+  test("ByWork sizing clamps a huge rows x fanout to executor width, not 2 partitions") {
+    import graft.core.Artifact
     val width = spark.sparkContext.defaultParallelism
     assert(width > 2, "the clamp is only observable above the 2-partition floor")
     // 4 rows x 2^40 fanout / 1 cell per task = 2^42 cells: an Int cast
     // wraps that to 0 and the floor collapses the artifact to 2 partitions
     val df = spark.range(4).toDF("id")
-    assert(graft.core.Memo.spreadAuto(df, fanout = 1L << 40, cellsPerTask = 1)
+    assert(Artifact.materialize(df, Artifact.Layout.ByWork(fanout = 1L << 40, cellsPerTask = 1))
       .rdd.getNumPartitions == width)
     // the multiply itself saturates: Long.MaxValue fanout never overflows
-    assert(graft.core.Memo.spreadAuto(df, fanout = Long.MaxValue, cellsPerTask = 1)
+    assert(Artifact.materialize(df, Artifact.Layout.ByWork(fanout = Long.MaxValue, cellsPerTask = 1))
       .rdd.getNumPartitions == width)
   }
 }
