@@ -52,8 +52,6 @@ object ServerMain {
           Graft.Config(Graft.DefaultPort, Map.empty)
       }
     val store = new Graft(spark, root,
-      granularityDays = cfg.spaceGranularity.getOrElse("default",
-        _root_.graft.tsdb.Tsdb.GranularityDays),
       spaceGranularity = cfg.spaceGranularity,
       spaceKeepDays = cfg.spaceKeepDays,
       commitPrimitive = cfg.commitPrimitive)

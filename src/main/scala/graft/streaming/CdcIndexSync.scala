@@ -318,55 +318,21 @@ object CdcIndexSync {
     else sync(g, indexDir, space)
   }
 
-  /** Tokenize docs `(doc_id, text)` and land postings + doclen for them,
-    * and the count ledger rows, all under `ingest_batch = snap` with
-    * dynamic partition overwrite (replay rewrites, never duplicates).
-    * Zero-row inputs skip the write entirely — a rowless dynamic
-    * overwrite would still create a schemaless parquet dir (the ADVICE
-    * r14 wedge); absence reads as empty via the declared schemas. */
+  /** Land postings + doclen + termdict for docs `(doc_id, text)`
+    * ([[IndexStream.landPostings]], the one postings writer), and the
+    * count ledger rows, all under `ingest_batch = snap` with dynamic
+    * partition overwrite (replay rewrites, never duplicates). Zero-row
+    * inputs skip the write entirely — a rowless dynamic overwrite would
+    * still create a schemaless parquet dir (the ADVICE r14 wedge);
+    * absence reads as empty via the declared schemas. */
   private def landBatch(indexDir: String, genDir: String, snap: Long,
                         newDocs: DataFrame, deltas: DataFrame): Unit = {
-    val tok = newDocs
-      .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
-      .where(col("tok") =!= "")
-      .localCheckpoint(true) // one tokenize feeds postings AND lengths
-    if (!tok.isEmpty) {
-      tok.groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
-        // the ONE term-hash rule (IndexStream owns it next to its driver
-        // twin bucketIdOf): an inline copy could drift and make search read
-        // the wrong partitions, silently losing postings
-        .withColumn("bucket", IndexStream.bucketCol(col("tok")))
-        .withColumn("ingest_batch", lit(snap))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket", "ingest_batch")
-        .parquet(famDir(indexDir, genDir, "postings"))
-      tok.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-        .withColumn("ingest_batch", lit(snap))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch")
-        .parquet(famDir(indexDir, genDir, "doclen"))
-      // the term-dictionary sidecar (r15, VERDICT r14 #8): the batch's
-      // DISTINCT terms with their hash bucket — tiny next to postings
-      // (vocabulary, not doc×term), and what lets a prefix probe open
-      // only the buckets that hold matching terms instead of all NBuckets
-      tok.select(col("tok")).distinct()
-        .withColumn("bucket", IndexStream.bucketCol(col("tok")))
-        .withColumn("ingest_batch", lit(snap))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch")
-        .parquet(famDir(indexDir, genDir, "termdict"))
-    }
+    IndexStream.landPostings(newDocs, snap, famDir(indexDir, genDir, _))
     val del = deltas.select(col("doc_id"), col("delta").cast("long"))
       .localCheckpoint(true)
     if (!del.isEmpty)
-      del.withColumn("ingest_batch", lit(snap))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch")
-        .parquet(famDir(indexDir, genDir, "counts"))
+      IndexStream.overwriteBatch(del, snap,
+        famDir(indexDir, genDir, "counts"), "ingest_batch")
   }
 
   /** Full (re)build at the store's current committed snapshot: the
@@ -1106,15 +1072,6 @@ object CdcIndexSync {
         }
       }
     }
-
-  /** Drop (and unpersist) the serving view — rebuilds/specs that rewrite
-    * the index out-of-band call this alongside [[dropStateCaches]]. */
-  def dropServeCache(indexDir: String): Unit = {
-    val v = serveCache.remove(indexDir)
-    if (v != null) v.dl.unpersist(false)
-    val r = serveRetiring.remove(indexDir)
-    if (r != null) r.unpersist(false)
-  }
 
   def search(s: SparkSession, indexDir: String, query0: Seq[String],
              k: Int = 20, at: Option[IdxState] = None): DataFrame = {

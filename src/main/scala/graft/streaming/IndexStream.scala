@@ -53,36 +53,50 @@ object IndexStream {
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val tok = batch
-          .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
-          .where(col("tok") =!= "")
-          .localCheckpoint(true) // one tokenize feeds postings AND lengths
-        tok.groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
-          .withColumn("bucket", bucketCol(col("tok")))
-          .withColumn("ingest_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("bucket", "ingest_batch")
-          .parquet(s"$indexDir/postings")
-        tok.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-          .withColumn("ingest_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ingest_batch")
-          .parquet(s"$indexDir/doclen")
-        // the term-dictionary sidecar (r15): the batch's distinct terms
-        // with their bucket — what lets a prefix probe open only the
-        // buckets holding matching terms (see [[search]])
-        tok.select(col("tok")).distinct()
-          .withColumn("bucket", bucketCol(col("tok")))
-          .withColumn("ingest_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ingest_batch")
-          .parquet(s"$indexDir/termdict")
-        ()
+        landPostings(batch, batchId, fam => s"$indexDir/$fam")
       }
       .start()
+
+  /** Write `df` under `ingest_batch = batch` with dynamic partition
+    * overwrite: a replayed batch rewrites exactly its own partitions. */
+  private[streaming] def overwriteBatch(df: DataFrame, batch: Long, dir: String,
+                                        partitionBy: String*): Unit =
+    df.withColumn("ingest_batch", lit(batch))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionBy: _*)
+      .parquet(dir)
+
+  /** The ONE postings writer ([[start]] and `CdcIndexSync`'s batch
+    * landing): tokenize `docs` `(doc_id, text)` with [[TextOps.tokens]]
+    * and land, under `ingest_batch = batch`, the postings `(tok, doc_id,
+    * tf)` by `(bucket, ingest_batch)`, the document lengths and the term
+    * dictionary, each in the directory `dirOf(<family>)`. A batch with no
+    * tokens writes nothing: a rowless dynamic overwrite would still create
+    * a parquet dir without a schema (the ADVICE r14 wedge).
+    */
+  private[streaming] def landPostings(docs: DataFrame, batch: Long,
+                                      dirOf: String => String): Unit = {
+    val tok = docs
+      .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
+      .where(col("tok") =!= "")
+      .localCheckpoint(true) // one tokenize feeds postings AND lengths
+    if (!tok.isEmpty) {
+      overwriteBatch(
+        tok.groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
+          .withColumn("bucket", bucketCol(col("tok"))),
+        batch, dirOf("postings"), "bucket", "ingest_batch")
+      overwriteBatch(tok.groupBy(col("doc_id")).agg(count(lit(1)).as("dl")),
+        batch, dirOf("doclen"), "ingest_batch")
+      // the term-dictionary sidecar (r15): the batch's DISTINCT terms with
+      // their hash bucket — tiny next to postings (vocabulary, not
+      // doc×term), and what lets a prefix probe open only the buckets
+      // holding matching terms (see [[search]])
+      overwriteBatch(
+        tok.select(col("tok")).distinct().withColumn("bucket", bucketCol(col("tok"))),
+        batch, dirOf("termdict"), "ingest_batch")
+    }
+  }
 
   /** BM25 top-k over the streamed index: the postings read restricts to
     * the query terms' hash buckets (partition pruning) with the `tok IN`

@@ -4,18 +4,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
-import graft.core.Det
-import graft.tsdb.Tsdb
+import graft.tsdb.Graft
 
 /** Structured Streaming ingestion — the live equivalent of the reference's
-  * `/write` path (lib/orestes-inserter.js): validate points, derive the
-  * series key and time bucket, land them partitioned by bucket.
+  * `/write` path (lib/orestes-inserter.js), where every point reaches
+  * storage through one inserter.
   *
-  * Scale design: file/Kafka source → stateless validation → `foreachBatch`
-  * append to bucket-partitioned parquet. Each micro-batch is idempotent per
-  * path + checkpoint (exactly-once to a deterministic sink); the bucket
-  * partition key means downstream time-range queries prune directories, the
-  * same way Orestes prunes per-week Cassandra tables.
+  * Scale design: file/Kafka source → `foreachBatch` → [[Graft.write]]. The
+  * store's own writer is the sink, so every micro-batch gets the store's
+  * validation, its `__wseq` last-write-wins stamp, the space's own bucket
+  * granularity and a manifest commit — streamed points are live the
+  * moment the batch commits, and `vacuum` never sees them as orphans.
+  *
+  * Exactly-once: a micro-batch replayed after a crash (its checkpoint
+  * commit missing) lands again under a NEWER stamp, and the last-write-wins
+  * merge shows each (series, time) once. Like a retried Cassandra upsert,
+  * the replay also supersedes any write to the same series and time made
+  * between the original landing and the replay.
   */
 object IngestStream {
 
@@ -28,94 +33,55 @@ object IngestStream {
     StructField("user_id", LongType),
     StructField("event_type", StringType)))
 
-  /** Validation per the reference (lib/orestes-utils.js:158-182): parseable
-    * time, numeric non-NaN value, at least one tag. Invalid rows get an
-    * `error` reason instead of being dropped (the reference reports
-    * per-point errors to the writer).
+  /** Validation per the reference (lib/orestes-utils.js:158-182): the
+    * store's own rule ([[Graft.validated]], the one [[Graft.write]]
+    * applies) — parseable time (ISO or epoch millis), numeric non-NaN
+    * value, at least one tag. Invalid rows get an `error` reason instead
+    * of being dropped (the reference reports per-point errors to the
+    * writer).
     */
-  def validate(raw: DataFrame): DataFrame = {
-    // try_to_timestamp: ANSI mode would otherwise fail the micro-batch on
-    // one malformed point instead of reporting it
-    val t = try_to_timestamp(col("time"))
-    raw.select(
-      Det.tsMs(t).as("time_ms"),
-      col("value"),
-      col("user_id"), col("event_type"),
-      when(col("time").isNull || t.isNull, "invalid timestamp")
-        .when(col("value").isNull || isnan(col("value")), "invalid value")
-        .when(col("user_id").isNull && col("event_type").isNull, "metrics must have at least one tag")
-        .as("error"))
-  }
+  def validate(raw: DataFrame): DataFrame =
+    Graft.validated(raw, Seq("user_id", "event_type")).select(
+      col("__time_ms").as("time_ms"), col("value"),
+      col("user_id"), col("event_type"), col("__error").as("error"))
 
-  /** Valid points with their storage bucket — ready to land. The
-    * granularity MUST match the space's configured
-    * `table_granularity_days`, or retention would age buckets on the wrong
-    * boundary (a 7-day bucket judged by 1-day aging loses up to 6 days of
-    * live data).
+  /** File-source ingestion: JSON points dir → `g.write` into `space`.
+    * Checkpointed; restart-safe. Rejected points are dropped (the
+    * dead-letter flavors are [[startFromSource]]/[[startFromBroker]]).
     */
-  def bucketed(validated: DataFrame, granularityDays: Int = Tsdb.GranularityDays): DataFrame =
-    validated.where(col("error").isNull)
-      .select(col("user_id"), col("event_type"), col("time_ms"), col("value"),
-        Tsdb.bucketOf(col("time_ms"), granularityDays).as("bucket_day"))
-
-  /** File-source ingestion: JSON points dir → validated, bucket-partitioned
-    * parquet. Checkpointed; restart-safe.
-    */
-  def start(spark: SparkSession, srcDir: String, sinkDir: String, checkpointDir: String,
-            granularityDays: Int = Tsdb.GranularityDays): StreamingQuery = {
-    val raw = spark.readStream.schema(pointSchema).json(srcDir)
-    bucketed(validate(raw), granularityDays).writeStream
+  def start(spark: SparkSession, srcDir: String, g: Graft, space: String,
+            checkpointDir: String): StreamingQuery =
+    spark.readStream.schema(pointSchema).json(srcDir).writeStream
       .option("checkpointLocation", checkpointDir)
-      .partitionBy("bucket_day")
-      .format("parquet")
       .outputMode("append")
-      .start(sinkDir)
-  }
+      .foreachBatch { (batch: DataFrame, _: Long) => g.write(batch, space); () }
+      .start()
 
   /** Source-agnostic ingestion for live (non-file) sources — a Kafka
     * value-parsed stream or a MemoryStream, anything producing the wire
-    * schema. Two differences from the file flavor, both from the reference's
-    * live write path (lib/orestes-inserter.js:139-206):
-    *
-    *  - the per-point ERROR CHANNEL is persisted: rejected points land in
-    *    `errDir` with their error reason (the reference returns per-point
-    *    errors to the writer; a live pipeline keeps a dead-letter dir);
-    *  - exactly-once via idempotent REPLAY: every micro-batch writes under
-    *    its own `ingest_batch=<id>` partition with dynamic partition
-    *    overwrite, so a batch replayed after a crash REWRITES its own
-    *    directories instead of appending duplicates.
+    * schema. Differs from the file flavor by the reference's live write
+    * path (lib/orestes-inserter.js:139-206): the per-point ERROR CHANNEL
+    * is persisted — rejected points land in `errDir` with their error
+    * reason (the reference returns per-point errors to the writer; a live
+    * pipeline keeps a dead-letter dir), one `ingest_batch=<id>` partition
+    * per micro-batch with dynamic partition overwrite, so a replayed batch
+    * rewrites its own dead letters instead of duplicating them.
     */
-  def startFromSource(raw: DataFrame, sinkDir: String, errDir: String,
-                      checkpointDir: String,
-                      granularityDays: Int = Tsdb.GranularityDays): StreamingQuery =
-    sinkValidated(validate(raw), sinkDir, errDir, checkpointDir, granularityDays)
-
-  /** The landing half of [[startFromSource]]/[[startFromBroker]]: per-batch
-    * dynamic-overwrite partitions for the good points AND the dead-letter
-    * channel, so a replayed batch rewrites itself instead of duplicating.
-    */
-  private def sinkValidated(validated: DataFrame, sinkDir: String, errDir: String,
-                            checkpointDir: String,
-                            granularityDays: Int): StreamingQuery =
-    validated.writeStream
+  def startFromSource(raw: DataFrame, g: Graft, space: String, errDir: String,
+                      checkpointDir: String): StreamingQuery =
+    raw.writeStream
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val b = batch.persist()
-        try {
-          bucketed(b, granularityDays)
-            .withColumn("ingest_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch", "bucket_day")
-            .parquet(sinkDir)
-          b.where(col("error").isNotNull)
+        try
+          g.write(b, space)
             .withColumn("ingest_batch", lit(batchId))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("ingest_batch")
             .parquet(errDir)
-        } finally b.unpersist()
+        finally b.unpersist()
         ()
       }
       .start()
@@ -153,19 +119,17 @@ object IngestStream {
     * rebalance replays the same (topic, partition, offset) — so the stream
     * first drops duplicate source coordinates within the watermark horizon
     * (state bounded by the horizon, the [[dedupped]] discipline), then
-    * decodes, validates and lands through the same idempotent
-    * per-batch-overwrite sink. Redelivery inside a batch, across batches,
-    * and across a checkpoint restart all land exactly once.
+    * decodes and lands through the same `g.write` + dead-letter sink.
+    * Redelivery inside a batch, across batches, and across a checkpoint
+    * restart all land exactly once.
     */
-  def startFromBroker(broker: DataFrame, sinkDir: String, errDir: String,
+  def startFromBroker(broker: DataFrame, g: Graft, space: String, errDir: String,
                       checkpointDir: String,
-                      granularityDays: Int = Tsdb.GranularityDays,
                       watermark: String = "2 hours"): StreamingQuery = {
     val once = broker
       .withWatermark("timestamp", watermark)
       .dropDuplicatesWithinWatermark("topic", "partition", "offset")
-    sinkValidated(validate(fromBroker(once)), sinkDir, errDir, checkpointDir,
-      granularityDays)
+    startFromSource(fromBroker(once), g, space, errDir, checkpointDir)
   }
 
   /** Stream-stream interval join: each left point matched to right points of
@@ -208,9 +172,9 @@ object IngestStream {
     * each micro-batch writes its per-(series, hour) PARTIAL aggregates
     * (count / exact-DECIMAL sum / max) under its own `ingest_batch`
     * partition with dynamic overwrite, so a replayed batch rewrites itself
-    * (idempotent, like [[startFromSource]]). Nothing ever re-scans history:
-    * the serving view [[rollupView]] just re-aggregates partials, which
-    * compose losslessly.
+    * (idempotent, like [[startFromSource]]'s dead letters). Nothing ever
+    * re-scans history: the serving view [[rollupView]] just re-aggregates
+    * partials, which compose losslessly.
     */
   def startRollup(raw: DataFrame, rollupDir: String,
                   checkpointDir: String): StreamingQuery =

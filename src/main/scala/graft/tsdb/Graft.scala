@@ -25,7 +25,6 @@ import graft.core.Det
   * and at least one tag column; series identity = the tag columns.
   */
 class Graft(spark: SparkSession, root: String,
-            granularityDays: Int = Tsdb.GranularityDays,
             spaceGranularity: Map[String, Int] = Map.empty,
             spaceKeepDays: Map[String, Int] = Map.empty,
             maxQueuedPoints: Int = 1000000,
@@ -47,13 +46,15 @@ class Graft(spark: SparkSession, root: String,
   private def isDir(fs: FileSystem, p: HPath): Boolean =
     fs.exists(p) && fs.getFileStatus(p).isDirectory
 
-  /** Bucket granularity for a space — per-space config with a default, like
-    * the reference's `spaces.<name>.table_granularity_days`
+  /** Bucket granularity for a space — per-space config, falling back to
+    * the `default` space's and then to [[Tsdb.GranularityDays]], like the
+    * reference's `spaces.<name>.table_granularity_days`
     * (conf/orestes-config.json; test/multiple-spaces.spec.js runs default=1
     * and other=7 side by side).
     */
   private def granularityOf(space: String): Int =
-    spaceGranularity.getOrElse(space, granularityDays)
+    spaceGranularity.getOrElse(space,
+      spaceGranularity.getOrElse("default", Tsdb.GranularityDays))
 
   /** `/write`: validate and land points, bucket-partitioned. Returns the
     * rejected rows with their error, like the reference's per-point errors
@@ -80,25 +81,7 @@ class Graft(spark: SparkSession, root: String,
     require(tagCols.nonEmpty, "metrics must have at least one tag")
     val stamp =
       if (points.columns.contains(WseqCol)) col(WseqCol) else lit(writeSeq)
-    // time may be an ISO string or numeric epoch millis (reference
-    // normalize_timestamp, lib/orestes-utils.js:81-88). try_* variants:
-    // under ANSI (Spark 4 default) plain casts would throw on one malformed
-    // point and fail the whole batch — the contract is per-point errors.
-    val t = points.schema("time").dataType match {
-      case _: org.apache.spark.sql.types.NumericType =>
-        // try_cast: NaN/Infinity/out-of-range still get per-point errors
-        timestamp_millis(expr("try_cast(time AS LONG)"))
-      case _ =>
-        coalesce(
-          try_to_timestamp(col("time").cast("string")),
-          timestamp_millis(expr("try_cast(cast(time AS STRING) AS LONG)")))
-    }
-    val validated = points.withColumn("__time_ms", Det.tsMs(t))
-      .withColumn("__error",
-        when(col("time").isNull || col("__time_ms").isNull, "invalid timestamp")
-          .when(col("value").isNull || isnan(col("value")), "invalid value")
-          .when(tagCols.map(col(_).isNotNull: Column).reduce(_ || _) === lit(false),
-            "metrics must have at least one tag"))
+    val validated = Graft.validated(points, tagCols)
     val good = validated.where(col("__error").isNull)
       .select(tagCols.map(col) ++ Seq(
         col("__time_ms").as("time_ms"), col("value").cast("double").as("value"),
@@ -187,9 +170,9 @@ class Graft(spark: SparkSession, root: String,
   // with a keep-snapshots grace (Iceberg's expire-snapshots contract: a
   // reader older than the grace is the operator's trade to make). Bonus
   // surface: [[snapshots]]/[[readAt]] time travel, free once commits are
-  // files. Bucket directories already on disk without a snapshot (older
-  // stores, `IngestStream` sinks pointed at a store root) are adopted once
-  // by [[bootstrapManifest]].
+  // files. Bucket directories already on disk without a snapshot (stores
+  // from releases that predate manifests) are adopted once by
+  // [[bootstrapManifest]].
   //
   // The analog in the reference stack is Cassandra itself: an SSTable
   // compaction swaps the live-sstable set while in-flight reads keep their
@@ -199,17 +182,18 @@ class Graft(spark: SparkSession, root: String,
   // such reference counting, so the snapshot layer supplies it.
   //
   // Commit protocol, per space (r14 — the manifest-LIST tier): the
-  // snapshot file `m<seq>` no longer inlines the file list; it is a small
-  // manifest list — the live data schema plus one `#seg` line per bucket
-  // day pointing at an IMMUTABLE segment file holding that bucket's entry
-  // lines. A commit writes new segments only for the buckets it TOUCHED
-  // and reuses every other bucket's segment by reference, so commit cost
-  // is proportional to the files changed, not the files live (Iceberg's
-  // snapshot → manifest-list → manifests indirection; the r13 layout's
-  // one named scale ceiling — every commit rewriting the full list — is
-  // gone). Reads prune `#seg` references by day BEFORE fetching anything,
-  // so read planning fetches the snapshot plus only the in-range buckets'
-  // segments: still zero listings, still zero footer reads.
+  // snapshot file `m<seq>` is a small manifest list — the live data
+  // schema plus one `#seg` line per bucket day pointing at an IMMUTABLE
+  // segment file holding that bucket's entry lines. A commit writes new
+  // segments only for the buckets it TOUCHED and reuses every other
+  // bucket's segment by reference, so commit cost is proportional to the
+  // files changed, not the files live (Iceberg's snapshot → manifest-list
+  // → manifests indirection; the r13 layout's one named scale ceiling —
+  // every commit rewriting the full list — is gone, and snapshots in that
+  // older format are refused, see [[readSnapState]]). Reads prune `#seg`
+  // references by day BEFORE fetching anything, so read planning fetches
+  // the snapshot plus only the in-range buckets' segments: still zero
+  // listings, still zero footer reads.
   //
   // The commit POINT is an atomic claim of the `m<seq+1>` name, wrapped
   // in an optimistic re-apply loop (r14): a writer that loses the claim —
@@ -322,11 +306,10 @@ class Graft(spark: SparkSession, root: String,
   }
 
   /** Adopt a pre-manifest store: a root whose bucket directories hold data
-    * files but no snapshot (written by an older release, or by an
-    * `IngestStream` sink pointed at the store root) must SEE that data —
-    * and must never let [[vacuum]] treat it as orphaned (review r13:
-    * without adoption, one write + one vacuum physically deleted the
-    * store's entire prior history). On the first touch of a space with
+    * files but no snapshot (written by a release that predates manifests)
+    * must SEE that data — and must never let [[vacuum]] treat it as
+    * orphaned (review r13: without adoption, one write + one vacuum
+    * physically deleted the store's entire prior history). On the first touch of a space with
     * data files but no snapshot, commit snapshot 1 = everything on disk,
     * schema from one footer pass — the only time the store ever infers.
     * The adoption is ONE-WAY and ONE-TIME: files that land in the bucket
@@ -368,9 +351,7 @@ class Graft(spark: SparkSession, root: String,
     * DATA schema (tags + time_ms + value [+ __wseq], no partition column)
     * as `DataType.json`. Sizes + schema are what make reads METADATA-FREE:
     * the scan relation is built from this object alone — no listing, no
-    * stat calls, no footer reads (see [[tableManifest]]). Format v2 writes
-    * both; a v1 manifest (bare path lines, r13-early) reads with size -1
-    * and no schema, and the read path falls back to footer inference.
+    * stat calls, no footer reads (see [[tableRaw]]).
     */
   private[tsdb] case class Manifest(files: Seq[(String, Long)],
                                     schemaJson: Option[String],
@@ -380,9 +361,8 @@ class Graft(spark: SparkSession, root: String,
     def paths: Seq[String] = files.map(_._1)
   }
 
-  /** One parsed entry line: (path, size), optional zone map, optional
-    * tag dictionary — the line grammar shared by inline (legacy v1-v4)
-    * snapshot bodies and v5 segment files.
+  /** One parsed segment-file entry line: (path, size), optional zone
+    * map, optional tag dictionary.
     */
   private type Entry =
     ((String, Long), Option[(String, (Long, Long))],
@@ -397,7 +377,7 @@ class Graft(spark: SparkSession, root: String,
     case Array(p, sz, mn, mx) =>
       ((p, sz.toLong), Some(p -> (mn.toLong, mx.toLong)), None)
     case Array(p, sz) => ((p, sz.toLong), None, None)
-    case _ => ((l, -1L), None, None) // v1 line: path only
+    case _ => throw new IllegalStateException(s"malformed manifest entry line: $l")
   }
 
   private def manifestOfLines(schema: Option[String],
@@ -413,11 +393,9 @@ class Graft(spark: SparkSession, root: String,
     */
   private case class SegRef(day: Long, name: String, nFiles: Int, bytes: Long)
 
-  /** A snapshot as stored: seq, schema header, segment references (v5) and
-    * inline entry lines (legacy v1-v4 — a snapshot holds one or the other).
-    */
+  /** A snapshot as stored: seq, schema header, segment references. */
   private case class SnapState(seq: Long, schemaJson: Option[String],
-                               segs: Seq[SegRef], inline: Seq[String])
+                               segs: Seq[SegRef])
 
   private def openLines(fs: FileSystem, p: HPath, what: String): List[String] = {
     // lock-free readers can race a vacuum expiring this snapshot: surface
@@ -435,8 +413,20 @@ class Graft(spark: SparkSession, root: String,
     finally in.close()
   }
 
+  /** The ONE parser of snapshot bodies, so every reader and mutator
+    * (vacuum included) fails here, before it acts, on a body it cannot
+    * read. Entry lines in the snapshot itself are the inline format of
+    * releases before r14 (v1-v4), which this store no longer reads.
+    */
   private def readSnapState(fs: FileSystem, mdir: HPath, seq: Long): SnapState = {
-    val lines = openLines(fs, new HPath(mdir, s"m$seq"), s"snapshot $seq")
+    val file = new HPath(mdir, s"m$seq")
+    val lines = openLines(fs, file, s"snapshot $seq")
+    if (lines.exists(!_.startsWith("#")))
+      throw new IllegalStateException(
+        s"snapshot $file uses the inline manifest format of releases " +
+          "before r14, which is no longer read. Migrate the store with any " +
+          "release from r14 to 7c37b01: run one append to the space, then " +
+          "vacuum(keepSnapshots = 1)")
     val schema = lines.find(_.startsWith("#v2 ")).map(_.stripPrefix("#v2 "))
       .filter(_.nonEmpty)
     val segs = lines.filter(_.startsWith("#seg\t")).map { l =>
@@ -445,7 +435,9 @@ class Graft(spark: SparkSession, root: String,
         case _ => throw new IllegalStateException(s"malformed #seg line: $l")
       }
     }
-    SnapState(seq, schema, segs, lines.filterNot(_.startsWith("#")))
+    if (segs.nonEmpty && schema.isEmpty)
+      throw new IllegalStateException(s"snapshot $file has segments but no schema")
+    SnapState(seq, schema, segs)
   }
 
   private def readSegmentLines(fs: FileSystem, mdir: HPath,
@@ -455,8 +447,7 @@ class Graft(spark: SparkSession, root: String,
   private def readManifest(fs: FileSystem, mdir: HPath, seq: Long): Manifest = {
     val st = readSnapState(fs, mdir, seq)
     manifestOfLines(st.schemaJson,
-      st.inline ++ st.segs.sortBy(_.day)
-        .flatMap(s => readSegmentLines(fs, mdir, s.name)))
+      st.segs.sortBy(_.day).flatMap(s => readSegmentLines(fs, mdir, s.name)))
   }
 
   private def encodeDict(d: Map[String, Seq[String]]): String = {
@@ -481,10 +472,10 @@ class Graft(spark: SparkSession, root: String,
     b.result()
   }
 
-  /** The manifest of snapshot `seq`, or of the newest commit when None. */
-  private def snapshotManifest(space: String, seq: Option[Long]): Manifest = {
+  /** The manifest of the newest commit. */
+  private def liveManifest(space: String): Manifest = {
     val (fs, mdir) = fsOf(manifestPath(space))
-    seq.orElse(snapshots(space).lastOption) match {
+    snapshots(space).lastOption match {
       case Some(s) => readManifest(fs, mdir, s)
       case None => Manifest(Nil, None)
     }
@@ -577,7 +568,7 @@ class Graft(spark: SparkSession, root: String,
     while (true) {
       val cur = snapshots(space).lastOption
       val st = cur.map(readSnapState(fs, mdir, _))
-        .getOrElse(SnapState(0L, None, Nil, Nil))
+        .getOrElse(SnapState(0L, None, Nil))
       commitRaceHook()
       val (schema, plans) = attempt(st)
       val next = st.seq + 1
@@ -634,7 +625,7 @@ class Graft(spark: SparkSession, root: String,
       val (fs, mdir) = fsOf(manifestPath(space))
       val segLines = st.segs.map(s => s -> readSegmentLines(fs, mdir, s.name))
       val curM = manifestOfLines(st.schemaJson,
-        st.inline ++ segLines.sortBy(_._1.day).flatMap(_._2))
+        segLines.sortBy(_._1.day).flatMap(_._2))
       val curBodies = segLines.map { case (s, lines) =>
         s.day -> (s, lines.sorted.mkString("\n")) }.toMap
       val m = update(curM)
@@ -654,9 +645,7 @@ class Graft(spark: SparkSession, root: String,
     * without ever fetching it. This is what makes commit cost
     * proportional to the files CHANGED: a steady-state ingest into
     * today's bucket commits in O(today's files), however many millions of
-    * files (and bucket segments) the store holds. A legacy inline
-    * snapshot falls back to the full serialization once, upgrading the
-    * store to segments on its first append.
+    * files (and bucket segments) the store holds.
     */
   private def commitAppend(space: String, fresh: Seq[(String, Long)],
                            jobSchema: org.apache.spark.sql.types.StructType,
@@ -669,26 +658,17 @@ class Graft(spark: SparkSession, root: String,
       val freshLines = freshByDay.map { case (day, fl) =>
         day -> fl.map { case (p, sz) => entryLine(p, sz, freshStats, freshDicts) }
       }
-      if (st.inline.nonEmpty) {
-        // legacy inline snapshot: one full materialization + re-serialize
-        val curM = manifestOfLines(st.schemaJson, st.inline)
-        val all = dayLines(Manifest(curM.files ++ fresh,
-          None, curM.stats ++ freshStats, curM.dicts ++ freshDicts))
-        (Some(mergeDataSchema(st.schemaJson, jobSchema)),
-          all.toSeq.map { case (day, lines) => FreshSeg(day, lines) })
-      } else {
-        val plans: Seq[DayPlan] = st.segs.map { s =>
-          freshLines.get(s.day) match {
-            case None => ReuseSeg(s) // untouched bucket: never fetched
-            case Some(add) =>
-              FreshSeg(s.day, readSegmentLines(fs, mdir, s.name) ++ add)
-          }
-        } ++ freshLines.collect {
-          case (day, add) if !st.segs.exists(_.day == day) =>
-            FreshSeg(day, add)
+      val plans: Seq[DayPlan] = st.segs.map { s =>
+        freshLines.get(s.day) match {
+          case None => ReuseSeg(s) // untouched bucket: never fetched
+          case Some(add) =>
+            FreshSeg(s.day, readSegmentLines(fs, mdir, s.name) ++ add)
         }
-        (Some(mergeDataSchema(st.schemaJson, jobSchema)), plans)
+      } ++ freshLines.collect {
+        case (day, add) if !st.segs.exists(_.day == day) =>
+          FreshSeg(day, add)
       }
+      (Some(mergeDataSchema(st.schemaJson, jobSchema)), plans)
     }
 
   /** Per-file [min, max] `time_ms` zone maps for manifest entries — one
@@ -1037,8 +1017,8 @@ class Graft(spark: SparkSession, root: String,
       // last-write-wins merge-on-read: the reference upserts on the
       // Cassandra primary key (see write()); here the max-writeSeq row per
       // (series, time) survives — lwwMerged, shared with both compactors.
-      // Stores without the stamp (pre-r6 layouts, streaming sinks) skip
-      // the merge.
+      // Stores without the stamp (pre-r6 layouts adopted by
+      // bootstrapManifest) skip the merge.
       val merged = lwwMerged(df, (tags :+ "time_ms").map(col))
       PointsTable(merged.withColumn("ts", timestamp_millis(col("time_ms"))),
         "ts", "value", tags)
@@ -1070,8 +1050,7 @@ class Graft(spark: SparkSession, root: String,
     // plans from a few KB of metadata however many million files the
     // store holds. Sizes + the data schema ride in the metadata, so the
     // scan relation is built with ZERO listing/stat/footer calls
-    // (ManifestRelation); a legacy v1 inline snapshot falls back to
-    // footer inference.
+    // (ManifestRelation).
     val (mfs, mdir) = fsOf(manifestPath(space))
     def stateOf(at: Option[Long]): Option[SnapState] =
       at.orElse(snapshots(space).lastOption)
@@ -1080,43 +1059,30 @@ class Graft(spark: SparkSession, root: String,
     val st =
       if (pinned.isDefined) st0
       else st0 match {
-        case Some(s) if s.segs.nonEmpty || s.inline.nonEmpty => st0
+        case Some(s) if s.segs.nonEmpty => st0
         case _ => ensureManifest(space); stateOf(None)
       }
-    val total = st.map(s =>
-      s.segs.map(_.nFiles.toLong).sum + s.inline.size).getOrElse(0L)
+    val total = st.map(_.segs.map(_.nFiles.toLong).sum).getOrElse(0L)
     if (total == 0) return None
     val snap = st.get
     val lo = bucketOfMs(startMs)
     val hi = bucketOfMs(math.max(endMs - 1, startMs))
     val inLines = snap.segs.filter(r => r.day >= lo && r.day <= hi)
       .sortBy(_.day)
-      .flatMap(r => readSegmentLines(mfs, mdir, r.name)) ++
-      snap.inline.filter { l =>
-        val d = dayOfPath(parseEntry(l)._1._1); d >= lo && d <= hi }
+      .flatMap(r => readSegmentLines(mfs, mdir, r.name))
     val m = manifestOfLines(snap.schemaJson, inLines)
-    val raw = snap.schemaJson match {
-      case Some(sj) if m.files.forall(_._2 >= 0) =>
-        if (m.files.isEmpty) {
-          // no file can match: the schema rides in the manifest, so an
-          // empty frame costs O(1) — never a relation over the whole
-          // live list just to keep the schema (review r13)
-          import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
-          val full = DataType.fromJson(sj).asInstanceOf[StructType]
-            .add("bucket_day", IntegerType, nullable = false)
-          spark.createDataFrame(
-            java.util.Collections.emptyList[org.apache.spark.sql.Row](), full)
-        } else ManifestRelation.frame(spark, path, m.files, sj, m.stats,
-          m.dicts)
-      case _ =>
-        // v1 manifest (no schema): fall back to footer inference; an
-        // empty range plans the full list so the frame keeps a schema
-        val planFiles =
-          if (m.files.nonEmpty) m.files
-          else snapshotManifest(space, pinned).files
-        spark.read.option("basePath", path).option("mergeSchema", "true")
-          .parquet(planFiles.map(f => s"$path/${f._1}"): _*)
-    }
+    val sj = snap.schemaJson.get // readSnapState: segments carry a schema
+    val raw =
+      if (m.files.isEmpty) {
+        // no file can match: the schema rides in the manifest, so an
+        // empty frame costs O(1) — never a relation over the whole
+        // live list just to keep the schema (review r13)
+        import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
+        val full = DataType.fromJson(sj).asInstanceOf[StructType]
+          .add("bucket_day", IntegerType, nullable = false)
+        spark.createDataFrame(
+          java.util.Collections.emptyList[org.apache.spark.sql.Row](), full)
+      } else ManifestRelation.frame(spark, path, m.files, sj, m.stats, m.dicts)
     // prune bucket directories by the query's time range — the reason the
     // layout exists (Orestes' valid-days check, lib/orestes-query.js:30-40)
     val pruned = raw.where(col("bucket_day") >= lo && col("bucket_day") <= hi)
@@ -1364,24 +1330,14 @@ class Graft(spark: SparkSession, root: String,
     val (mfs, mdir) = fsOf(manifestPath(space))
     val stF = readSnapState(mfs, mdir, fromSnap)
     val stT = readSnapState(mfs, mdir, toSnap)
-    def daysOf(st: SnapState): Map[Long, Option[String]] =
-      st.segs.map(s => s.day -> Some(s.name)).toMap ++
-        // legacy inline entries: day present with no reusable identity
-        st.inline.map(l => dayOfPath(parseEntry(l)._1._1) -> None).toMap
+    def daysOf(st: SnapState): Map[Long, String] =
+      st.segs.map(s => s.day -> s.name).toMap
     val (df, dt) = (daysOf(stF), daysOf(stT))
     // a day is UNCHANGED iff both snapshots reference the same immutable
-    // segment file; anything else (differing refs, one-sided, inline) is
-    // a candidate and gets diffed row-level. Inline entries carry NO
-    // reusable identity, so an inline day is ALWAYS a candidate — the
-    // tempting `(a, b) => a != b` catch-all would compare two inline days
-    // as Some(None) == Some(None) and silently skip a day that really
-    // changed between two legacy snapshots (code review r14)
-    val changedDays = (df.keySet ++ dt.keySet).filter { d =>
-      (df.get(d), dt.get(d)) match {
-        case (Some(Some(a)), Some(Some(b))) => a != b
-        case _ => true
-      }
-    }.toSeq.sorted
+    // segment file; anything else (differing refs, one-sided) is a
+    // candidate and gets diffed row-level
+    val changedDays = (df.keySet ++ dt.keySet)
+      .filter(d => df.get(d) != dt.get(d)).toSeq.sorted
     val g = granularityOf(space)
     val (startMs, endMs) =
       if (changedDays.isEmpty) (0L, 1L) // nothing differs: cheap empty reads
@@ -1683,7 +1639,7 @@ class Graft(spark: SparkSession, root: String,
     // footer reads run, for the per-bucket accuracy the trigger needs.
     ensureManifest(space) // adopt a pre-manifest store
     val path = spacePath(space)
-    val m = snapshotManifest(space, None)
+    val m = liveManifest(space)
     val anyStamps = m.schemaJson.forall(_.contains("\"" + WseqCol + "\""))
     m.files
       .groupBy(_._1.takeWhile(_ != '/')).toSeq
@@ -1728,7 +1684,7 @@ class Graft(spark: SparkSession, root: String,
       // manifest data loss. [[vacuum]] already reclaims these dirs
       // age-gated (aged(st)), which is the multi-process-safe discipline.
       bootstrapManifest(space) // adopt a pre-manifest store
-      val live = snapshotManifest(space, None)
+      val live = liveManifest(space)
       if (live.files.isEmpty) return Nil
       val gen = nextSeq() // unique output-file prefix for this compaction
       val schemas = Seq.newBuilder[org.apache.spark.sql.types.StructType]
@@ -1853,7 +1809,7 @@ class Graft(spark: SparkSession, root: String,
     // deletion every mutation gets
     mutationLock(space).synchronized {
       bootstrapManifest(space) // adopt a pre-manifest store
-      val files = snapshotManifest(space, None).paths
+      val files = liveManifest(space).paths
       val days = files.map(dayOfPath).distinct
       val dropDays = days.filter(day =>
         math.min(day + granularityOf(space) - 1, todayDay) <= doomed).sorted
@@ -2177,7 +2133,6 @@ object Graft {
   def fromConfig(spark: SparkSession, configPath: String, root: String): Graft = {
     val cfg = loadConfig(spark, configPath)
     new Graft(spark, root,
-      granularityDays = cfg.spaceGranularity.getOrElse("default", Tsdb.GranularityDays),
       spaceGranularity = cfg.spaceGranularity,
       spaceKeepDays = cfg.spaceKeepDays,
       commitPrimitive = cfg.commitPrimitive)
@@ -2193,6 +2148,35 @@ object Graft {
   /** Append staging dirs (r14): `_`-prefixed like [[TmpPrefix]]; a crash
     * leaves one behind, invisible to every reader, swept by vacuum. */
   private[tsdb] val AppendTmpPrefix = "_append_tmp_"
+
+  /** The engine-side point-validation rule, in ONE place ([[write]] and
+    * [[graft.streaming.IngestStream.validate]]): `points` plus `__time_ms`
+    * (epoch millis, null when unparseable) and `__error` (null when the
+    * point is valid), in the reference's precedence and error strings
+    * (lib/orestes-utils.js:158-182). `time` may be an ISO string or
+    * numeric epoch millis, as a number or a string (reference
+    * normalize_timestamp, lib/orestes-utils.js:81-88). try_* variants:
+    * under ANSI (Spark 4 default) plain casts would throw on one
+    * malformed point and fail the whole batch — the contract is
+    * per-point errors.
+    */
+  private[graft] def validated(points: DataFrame, tagCols: Seq[String]): DataFrame = {
+    val t = points.schema("time").dataType match {
+      case _: org.apache.spark.sql.types.NumericType =>
+        // try_cast: NaN/Infinity/out-of-range still get per-point errors
+        timestamp_millis(expr("try_cast(time AS LONG)"))
+      case _ =>
+        coalesce(
+          try_to_timestamp(col("time").cast("string")),
+          timestamp_millis(expr("try_cast(cast(time AS STRING) AS LONG)")))
+    }
+    points.withColumn("__time_ms", Det.tsMs(t))
+      .withColumn("__error",
+        when(col("time").isNull || col("__time_ms").isNull, "invalid timestamp")
+          .when(col("value").isNull || isnan(col("value")), "invalid value")
+          .when(tagCols.map(col(_).isNotNull: Column).reduce(_ || _) === lit(false),
+            "metrics must have at least one tag"))
+  }
 
   // ---- driver-side point validation for the queued write path ------------
   //

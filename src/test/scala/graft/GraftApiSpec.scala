@@ -76,7 +76,7 @@ class GraftApiSpec extends SparkTestBase {
   }
 
   test("per-space granularity: daily buckets partition per day") {
-    val g = new Graft(spark, freshRoot(), granularityDays = 1)
+    val g = new Graft(spark, freshRoot(), spaceGranularity = Map("default" -> 1))
     import spark.implicits._
     g.write(Seq(
       ("2024-01-09T10:00:00Z", 1.0, "s"),
@@ -91,19 +91,26 @@ class GraftApiSpec extends SparkTestBase {
   }
 
   test("streaming ingest lands points the embedded API can query") {
+    import spark.implicits._
     val root = freshRoot()
     val src = freshRoot(); val ckpt = freshRoot()
+    val g = new Graft(spark, root)
+    // the space already has a snapshot when the stream starts
+    g.write(Seq(("2024-01-09T09:00:00Z", 3.5, 8L, "seed"))
+      .toDF("time", "value", "user_id", "event_type"))
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$src/pts.json"),
       Seq(
         """{"time":"2024-01-09T10:00:00Z","value":4.5,"user_id":9,"event_type":"click"}""",
         """{"time":"2024-01-16T10:00:00Z","value":5.5,"user_id":9,"event_type":"view"}""")
         .mkString("\n").getBytes("UTF-8"))
-    val q = graft.streaming.IngestStream.start(spark, src, s"$root/default", ckpt)
+    val q = graft.streaming.IngestStream.start(spark, src, g, "default", ckpt)
     q.processAllAvailable(); q.stop()
-    // the stream's sink layout IS the embedded API's storage layout
-    val g = new Graft(spark, root)
     assert(g.read("""{"term":{"event_type":"click"}}""").count() == 1)
-    assert(g.seriesList("""{"match_all":{}}""").count() == 2)
+    assert(g.seriesList("""{"match_all":{}}""").count() == 3)
+    // streamed points are committed by the store's own writer, so a
+    // zero-grace vacuum down to the newest snapshot reclaims none of them
+    assert(g.vacuum(keepSnapshots = 1, orphanGraceMs = 0L).isEmpty)
+    assert(g.read("""{"match_all":{}}""").count() == 3)
     assert(g.remove(keepDays = 7, todayDay = 19745L) == Seq(19726L))
     assert(g.read("""{"match_all":{}}""").count() == 1)
   }
@@ -352,7 +359,7 @@ class GraftApiSpec extends SparkTestBase {
 
   test("time-ranged reads prune bucket_day directories and never open out-of-range buckets") {
     val root = freshRoot()
-    val g = new Graft(spark, root, granularityDays = 1)
+    val g = new Graft(spark, root, spaceGranularity = Map("default" -> 1))
     import spark.implicits._
     g.write(Seq(
       ("2024-01-09T10:00:00Z", 1.0, "s"),   // bucket_day=19731

@@ -384,26 +384,28 @@ class ManifestSpec extends SparkTestBase {
     assert(full.collect().length == 4)
     assert(scannedFiles(full) == 4)
 
-    // v2-compat: rewrite the newest snapshot as a LEGACY INLINE manifest
-    // (r13-early shape: schema header + bare path\tsize lines, no zone
-    // maps, no segment refs) — reads stay correct, just unpruned
+    // entries without stats never prune: rewrite the newest snapshot's
+    // segment files as stats-less entry lines (path\tsize — the current
+    // format's shape for a file with no zone map or dictionary); reads
+    // stay correct, just unpruned
     val mdirFs = new java.io.File(s"$root/.manifest/default")
     val newest = mdirFs.listFiles().filter(f =>
         f.getName.startsWith("m") && f.getName.tail.forall(_.isDigit))
       .maxBy(_.getName.stripPrefix("m").toLong)
-    val schemaLine = scala.io.Source.fromFile(newest, "UTF-8").getLines()
-      .find(_.startsWith("#v2 ")).get
-    val inline = new java.io.File(s"$root/default").listFiles()
-      .filter(_.getName.startsWith("bucket_day=")).sortBy(_.getName)
-      .flatMap(b => b.listFiles().filter(_.getName.endsWith(".parquet"))
-        .sortBy(_.getName)
-        .map(f => s"${b.getName}/${f.getName}\t${f.length()}"))
-    val v2 = (schemaLine +: inline).mkString("\n")
-    java.nio.file.Files.write(newest.toPath,
-      v2.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // the local ChecksumFileSystem keeps a .crc sibling per manifest; the
-    // out-of-band rewrite above must retire it or the next read fails
-    new java.io.File(mdirFs, s".${newest.getName}.crc").delete()
+    val segs = scala.io.Source.fromFile(newest, "UTF-8").getLines()
+      .filter(_.startsWith("#seg\t")).map(_.split('\t')(2)).toList
+    assert(segs.nonEmpty)
+    segs.foreach { name =>
+      val seg = new java.io.File(mdirFs, name)
+      val bare = scala.io.Source.fromFile(seg, "UTF-8").getLines()
+        .map(_.split('\t').take(2).mkString("\t")).toList
+      assert(bare.forall(_.split('\t').length == 2))
+      java.nio.file.Files.write(seg.toPath,
+        bare.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      // the local ChecksumFileSystem keeps a .crc sibling per segment; the
+      // out-of-band rewrite above must retire it or the next read fails
+      new java.io.File(mdirFs, s".$name.crc").delete()
+    }
     val unpruned = g.read("""{"match_all":{}}""",
       startMs = 1704792600000L, endMs = 1704796200000L)
     assert(unpruned.collect().map(_.getAs[Double]("value")).toSeq == Seq(3.0))
@@ -411,6 +413,55 @@ class ManifestSpec extends SparkTestBase {
     // the bucket-level prune keeps everything — correct, just unpruned
     assert(scannedFiles(unpruned) == 4,
       "a stats-less manifest reads correctly with bucket-level pruning only")
+  }
+
+  test("a snapshot in the pre-r14 inline format is refused by every reader and mutator before it acts") {
+    val root = freshRoot()
+    val g = store(root)
+    g.write(Seq(("2024-01-09T10:00:00Z", 1.0, "s")).toDF("time", "value", "name"))
+    g.write(Seq(("2024-01-19T10:00:00Z", 2.0, "s")).toDF("time", "value", "name"))
+    val seqs = g.snapshots()
+    assert(seqs == Seq(1L, 2L))
+    // forge the newest snapshot in the inline shape (r13, v2-v4): the
+    // schema header followed by the entry lines themselves, no `#seg`
+    val mdir = new java.io.File(s"$root/.manifest/default")
+    val newest = new java.io.File(mdir, "m2")
+    def linesOf(f: java.io.File) =
+      scala.io.Source.fromFile(f, "UTF-8").getLines().filter(_.nonEmpty).toList
+    val body = linesOf(newest)
+    val entries = body.filter(_.startsWith("#seg\t"))
+      .flatMap(l => linesOf(new java.io.File(mdir, l.split('\t')(2))))
+    assert(entries.size == 2)
+    java.nio.file.Files.write(newest.toPath,
+      (body.filter(_.startsWith("#v2 ")) ++ entries).mkString("\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    new java.io.File(mdir, ".m2.crc").delete()
+    def dataFiles(): Set[String] =
+      new java.io.File(root, "default").listFiles()
+        .filter(_.getName.startsWith("bucket_day="))
+        .flatMap(b => b.listFiles().filter(_.getName.endsWith(".parquet"))
+          .map(f => s"${b.getName}/${f.getName}")).toSet
+    val before = dataFiles()
+    assert(before.size == 2)
+
+    val matchAll = """{"match_all":{}}"""
+    val calls: Seq[(String, () => Any)] = Seq(
+      "read" -> (() => g.read(matchAll).collect()),
+      "readAt" -> (() => g.readAt(2L, matchAll).collect()),
+      "changes" -> (() => g.changes(1L, 2L).collect()),
+      "write" -> (() => g.write(
+        Seq(("2024-01-09T11:00:00Z", 3.0, "s")).toDF("time", "value", "name"))),
+      "compact" -> (() => g.compact()),
+      "vacuum" -> (() => g.vacuum(orphanGraceMs = 0L)))
+    calls.foreach { case (name, call) =>
+      val ex = intercept[IllegalStateException](call())
+      assert(ex.getMessage.contains(newest.getName) &&
+        ex.getMessage.contains("inline") &&
+        ex.getMessage.contains("vacuum(keepSnapshots = 1)"), s"$name: ${ex.getMessage}")
+    }
+    assert(g.snapshots() == seqs, "no new snapshot may be committed")
+    val after = dataFiles()
+    assert(before.subsetOf(after), s"vacuum deleted data files: ${before.diff(after)}")
   }
 
   test("zone maps follow every commit: compaction rewrites them, retention drops them, pinned snapshots keep theirs") {

@@ -226,7 +226,7 @@ class Round12Spec extends SparkTestBase {
     val s = spark; import s.implicits._
     val root = Files.createTempDirectory(Paths.get("target"), "graft-race").toString
     val keep = 5
-    val g = new graft.tsdb.Graft(spark, root, granularityDays = 1,
+    val g = new graft.tsdb.Graft(spark, root, spaceGranularity = Map("default" -> 1),
       spaceKeepDays = Map("default" -> keep))
     val today = 19750L
     val (oldDay, newDay) = (19740L, 19749L) // doomed = 19745: old drops, new survives
@@ -395,7 +395,7 @@ class Round12Spec extends SparkTestBase {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = Files.createTempDirectory(Paths.get("target"), "graft-contrace").toString
     val keep = 5
-    val g = new graft.tsdb.Graft(spark, root, granularityDays = 1,
+    val g = new graft.tsdb.Graft(spark, root, spaceGranularity = Map("default" -> 1),
       spaceKeepDays = Map("default" -> keep))
     try {
       val today = 19750L

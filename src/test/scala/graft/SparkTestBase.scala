@@ -22,8 +22,8 @@ trait SparkTestBase extends AnyFunSuite {
   /** A pre-manifest store on disk, written with plain Spark: `points`
     * (`time` ISO string, `value`, tag columns) land as tags + `time_ms` +
     * `value` + a `__wseq` stamp under `<root>/<space>/bucket_day=<d>/`,
-    * with no snapshot — the layout older releases (and `IngestStream`
-    * sinks) leave behind, which a store adopts on first touch. */
+    * with no snapshot — the layout releases that predate manifests leave
+    * behind, which a store adopts on first touch. */
   def writeLegacyStore(root: String, points: DataFrame,
                        space: String = "default",
                        granularityDays: Int = graft.tsdb.Tsdb.GranularityDays): Unit = {

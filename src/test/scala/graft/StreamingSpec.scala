@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.streaming.IngestStream
+import graft.tsdb.Graft
 
 class StreamingSpec extends SparkTestBase {
   private def tmp(name: String): String = {
@@ -12,44 +13,60 @@ class StreamingSpec extends SparkTestBase {
     p
   }
 
+  private val MatchAll = """{"match_all":{}}"""
+
+  private def values(g: Graft): Seq[Double] =
+    g.read(MatchAll).select("value").collect().map(_.getDouble(0)).sorted.toSeq
+
   test("memory-source ingest persists per-point errors and replays without duplicates") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val sink = tmp("mem-sink"); val err = tmp("mem-err"); val ckpt = tmp("mem-ckpt")
+    val g = new Graft(spark, tmp("mem-store"))
+    val err = tmp("mem-err"); val ckpt = tmp("mem-ckpt")
     val mem = MemoryStream[(String, Double, Long, String)]
     val raw = mem.toDF().toDF("time", "value", "user_id", "event_type")
 
-    val q = IngestStream.startFromSource(raw, sink, err, ckpt)
+    val q = IngestStream.startFromSource(raw, g, "default", err, ckpt)
     mem.addData(
       ("2024-01-09T10:00:00Z", 1.5, 9L, "click"),
       (null, 2.0, 9L, "view"),                       // invalid timestamp
       ("2024-01-09T11:00:00Z", Double.NaN, 9L, "view")) // invalid value
     q.processAllAvailable(); q.stop()
 
-    val good = spark.read.parquet(sink)
-    assert(good.count() == 1)
-    assert(good.select("value").head.getDouble(0) == 1.5)
+    assert(values(g) == Seq(1.5))
+    assert(g.snapshots().size == 1, "one micro-batch, one commit")
     // the error channel carries the reference's per-point reasons
     val errs = spark.read.parquet(err).select("error").collect().map(_.getString(0)).sorted
     assert(errs.toSeq == Seq("invalid timestamp", "invalid value"))
 
     // restart against the SAME checkpoint: earlier batches must not re-land
-    // (per-batch dynamic-overwrite partitions = idempotent replay), new data
-    // lands exactly once
-    val q2 = IngestStream.startFromSource(raw, sink, err, ckpt)
+    // (no second commit for them), new data lands exactly once
+    val q2 = IngestStream.startFromSource(raw, g, "default", err, ckpt)
     mem.addData(("2024-01-16T10:00:00Z", 3.0, 7L, "view"))
     q2.processAllAvailable(); q2.stop()
-    val all = spark.read.parquet(sink)
-    assert(all.count() == 2, "old batch not duplicated, new point landed once")
-    assert(all.select("value").collect().map(_.getDouble(0)).sorted.toSeq == Seq(1.5, 3.0))
+    assert(values(g) == Seq(1.5, 3.0), "old batch not duplicated, new point landed once")
+    assert(g.snapshots().size == 2, "the restart commits only the new batch")
     // distinct buckets: 2024-01-09 week vs 2024-01-16 week
-    assert(all.select("bucket_day").distinct().count() == 2)
+    assert(g.fragmentation().map(_._1).toSet == Set(19726L, 19733L))
+
+    // crash replay: forge a crash after batch 1 landed but before its
+    // checkpoint commit — the restart lands it AGAIN (a new snapshot, a
+    // newer stamp) and last-write-wins still shows each point once
+    Seq("1", ".1.crc").foreach(f => Files.deleteIfExists(Paths.get(s"$ckpt/commits/$f")))
+    val q3 = IngestStream.startFromSource(raw, g, "default", err, ckpt)
+    q3.processAllAvailable(); q3.stop()
+    assert(g.snapshots().size == 3, "the replayed batch commits again")
+    assert(values(g) == Seq(1.5, 3.0), "a replayed point shows once")
   }
 
   test("kafka-shaped broker ingest: redelivered offsets land once, poison goes to dead-letter") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val sink = tmp("broker-sink"); val err = tmp("broker-err"); val ckpt = tmp("broker-ckpt")
+    val root = tmp("broker-store"); val err = tmp("broker-err"); val ckpt = tmp("broker-ckpt")
+    val g = new Graft(spark, root)
+    // physical rows in the store: the dedup, not the read-time
+    // last-write-wins merge, must collapse a redelivered record
+    def landedRows() = spark.read.parquet(s"$root/default").count()
     // the connector's exact record shape: key/value bytes + source coords
     val mem = MemoryStream[(Array[Byte], Array[Byte], String, Int, Long,
       java.sql.Timestamp, Int)]
@@ -64,7 +81,7 @@ class StreamingSpec extends SparkTestBase {
     def pt(ts: String, v: Double, u: Long, et: String) =
       s"""{"time":"$ts","value":$v,"user_id":$u,"event_type":"$et"}"""
 
-    val q = IngestStream.startFromBroker(broker, sink, err, ckpt)
+    val q = IngestStream.startFromBroker(broker, g, "default", err, ckpt)
     // batch 1: offset 0 REDELIVERED inside the batch (producer retry),
     // offset 2 is unparseable bytes, offset 3 has a null value
     mem.addData(
@@ -74,7 +91,8 @@ class StreamingSpec extends SparkTestBase {
       rec(2, "not json at all"),
       rec(3, """{"time":"2024-01-09T10:00:02Z","value":null,"user_id":9,"event_type":"view"}"""))
     q.processAllAvailable()
-    assert(spark.read.parquet(sink).count() == 2, "in-batch redelivery collapsed")
+    assert(values(g) == Seq(1.0, 2.0))
+    assert(landedRows() == 2, "in-batch redelivery collapsed")
     val errs = spark.read.parquet(err).select("error").collect().map(_.getString(0)).sorted
     assert(errs.toSeq == Seq("invalid timestamp", "invalid value"), errs.toSeq)
 
@@ -83,19 +101,19 @@ class StreamingSpec extends SparkTestBase {
       rec(1, pt("2024-01-09T10:00:01Z", 2.0, 9L, "view")),
       rec(4, pt("2024-01-09T10:00:03Z", 3.0, 7L, "click")))
     q.processAllAvailable(); q.stop()
-    val vals = spark.read.parquet(sink).select("value").collect().map(_.getDouble(0)).sorted
-    assert(vals.toSeq == Seq(1.0, 2.0, 3.0), "cross-batch redelivery collapsed")
+    assert(values(g) == Seq(1.0, 2.0, 3.0))
+    assert(landedRows() == 3, "cross-batch redelivery collapsed")
 
     // restart from the same checkpoint: earlier batches must not re-land;
     // a redelivery of offset 4 after the restart is also dropped (state
     // restored from the checkpoint), and new offsets land exactly once
-    val q2 = IngestStream.startFromBroker(broker, sink, err, ckpt)
+    val q2 = IngestStream.startFromBroker(broker, g, "default", err, ckpt)
     mem.addData(
       rec(4, pt("2024-01-09T10:00:03Z", 3.0, 7L, "click")),
       rec(5, pt("2024-01-09T10:00:04Z", 4.0, 7L, "view")))
     q2.processAllAvailable(); q2.stop()
-    val after = spark.read.parquet(sink).select("value").collect().map(_.getDouble(0)).sorted
-    assert(after.toSeq == Seq(1.0, 2.0, 3.0, 4.0), "replay-idempotent across restart")
+    assert(values(g) == Seq(1.0, 2.0, 3.0, 4.0))
+    assert(landedRows() == 4, "replay-idempotent across restart")
   }
 
   test("streaming dedup drops re-delivered points within the watermark") {
@@ -123,7 +141,8 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("file-source ingest validates and lands bucket-partitioned parquet") {
-    val src = tmp("src"); val sink = tmp("sink"); val ckpt = tmp("ckpt")
+    val src = tmp("src"); val ckpt = tmp("ckpt")
+    val g = new Graft(spark, tmp("store"))
     val lines = Seq(
       """{"time":"2024-01-09T12:00:00Z","value":1.5,"user_id":1,"event_type":"click"}""",
       """{"time":"2024-01-16T00:30:00Z","value":2.5,"user_id":2,"event_type":"view"}""",
@@ -132,24 +151,34 @@ class StreamingSpec extends SparkTestBase {
     Files.write(Paths.get(s"$src/points.json"),
       lines.mkString("\n").getBytes("UTF-8"))
 
-    val q = IngestStream.start(spark, src, sink, ckpt)
+    val q = IngestStream.start(spark, src, g, "default", ckpt)
     q.processAllAvailable()
     q.stop()
 
-    val landed = spark.read.parquet(sink)
-    val rows = landed.collect()
-    assert(rows.length == 2, "only the two valid points land")
+    assert(values(g) == Seq(1.5, 2.5), "only the two valid points land")
     // 2024-01-09 = day 19731 -> bucket 19726; 2024-01-16 = day 19738 -> 19733
-    // (partition column comes back int-inferred, hence the Number cast)
-    val buckets = landed.select("bucket_day").collect()
-      .map(_.getAs[Number](0).longValue()).toSet
+    val buckets = g.fragmentation().map(_._1).toSet
     assert(buckets == Set(19726L, 19733L),
       s"bucket partitioning wrong: $buckets")
     // restart with same checkpoint: no duplicate ingestion (exactly-once)
-    val q2 = IngestStream.start(spark, src, sink, ckpt)
+    val seqs = g.snapshots()
+    val q2 = IngestStream.start(spark, src, g, "default", ckpt)
     q2.processAllAvailable()
     q2.stop()
-    assert(spark.read.parquet(sink).count() == 2)
+    assert(values(g) == Seq(1.5, 2.5))
+    assert(g.snapshots() == seqs, "the restart re-lands nothing")
+  }
+
+  test("validate accepts epoch-millisecond time as a string and as a JSON number, like Graft.write") {
+    import spark.implicits._
+    val pts = spark.read.schema(IngestStream.pointSchema).json(Seq(
+      """{"time":"1704794400000","value":1.0,"user_id":1,"event_type":"a"}""",
+      """{"time":1704794400000,"value":2.0,"user_id":2,"event_type":"a"}""").toDS())
+    val got = IngestStream.validate(pts).select("value", "time_ms", "error")
+      .collect().map(r => (r.getDouble(0), r.getAs[Any](1), r.getAs[Any](2)))
+      .sortBy(_._1).toSeq
+    // 1704794400000 = 2024-01-09T10:00:00Z
+    assert(got == Seq((1.0, 1704794400000L, null), (2.0, 1704794400000L, null)), got)
   }
 
   test("streaming dedup drops replayed points across micro-batches") {
