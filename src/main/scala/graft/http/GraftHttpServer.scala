@@ -70,34 +70,6 @@ class GraftHttpServer(graft: Graft, spark: org.apache.spark.sql.SparkSession,
   private def textOr(node: JsonNode, key: String, dflt: String): String =
     if (node != null && node.has(key)) node.get(key).asText() else dflt
 
-  /** Per-index tag-column cache for the index-served /search hot path.
-    * The index STATE is re-read every request (one cheap `_sync` listing
-    * — it is what makes a just-finished sweep visible immediately, the
-    * "rank-identical after the sweep" contract); the TAGS file only
-    * changes when a rebuild lands a new marker, so it caches keyed by
-    * the full state — the marker NAME (which carries a per-build nonce,
-    * so a wiped-and-recreated space whose rebuilt index lands the SAME
-    * seq still misses the cache and serves the fresh tag names
-    * immediately — VERDICT r14 #3) plus the fold generation. One FS
-    * round trip per request, zero added staleness (a TTL here measurably
-    * served the pre-sweep index to post-sweep requests).
-    */
-  private val searchIdxTags = new java.util.concurrent.ConcurrentHashMap[
-    String, (CdcIndexSync.IdxState, Seq[String])]()
-  private def searchIdxMeta(d: String): (CdcIndexSync.IdxState, Seq[String]) = {
-    val st = CdcIndexSync.state(spark, d).getOrElse(
-      throw new IllegalStateException(s"no committed index at $d"))
-    // ONE entry per dir, replaced whenever the state differs — bounded
-    // memory, and any rebuild (same seq or not) refreshes the tags
-    val hit = searchIdxTags.get(d)
-    if (hit != null && hit._1 == st) (st, hit._2)
-    else {
-      val tags = CdcIndexSync.tags(spark, d)
-      searchIdxTags.put(d, (st, tags))
-      (st, tags)
-    }
-  }
-
   /** Routes that fall outside the reference's table (orestes.js:69-222) are
     * a 404, not a best-effort parse.
     */
@@ -473,9 +445,14 @@ class GraftHttpServer(graft: Graft, spark: org.apache.spark.sql.SparkSession,
           // results by contract), so a perf claim about the index could
           // unknowingly measure the scan (review r15).
           try {
-            val (idxState, tagCols) = searchIdxMeta(d)
-            val out = CdcIndexSync.search(spark, d, terms, k, Some(idxState))
-              .select(tagCols.zipWithIndex.map { case (c, i) =>
+            // the index state is resolved every request (one `_sync`
+            // listing — a just-finished sweep is visible immediately, the
+            // "rank-identical after the sweep" contract); its tag columns
+            // ride in the state, resolved once per listing
+            val st = CdcIndexSync.state(spark, d).getOrElse(
+              throw new IllegalStateException(s"no committed index at $d"))
+            val out = CdcIndexSync.search(spark, d, terms, k, Some(st))
+              .select(st.tags.zipWithIndex.map { case (c, i) =>
                 _root_.graft.tsdb.DocId.decodeField(col("doc_id"), i).as(c)
               } :+ col("score"): _*)
             ex.getResponseHeaders.set("X-Graft-Search-Source", "index")

@@ -65,24 +65,25 @@ object ServerMain {
       continuousIngest = cfg.continuousIngest, searchIndexDir = idxBase), cfg)
   }
 
-  /** One maintenance pass over every space's search index (build on first
-    * touch, CDC sync after, FOLD once the active generation accretes
-    * `foldBatches` sync batches — the ledger/postings lifecycle, r15) —
-    * the ONE copy of the sweep policy, called by the standing daemon and
-    * by specs (review r15: the daemon re-implemented it inline, so the
-    * two copies could drift). `onError` is the per-space isolation: one
-    * space's broken index must not stop another's sync; the default
-    * rethrows so specs fail loudly. */
-  def searchIndexSweep(g: Graft, idxBase: String, foldBatches: Int = 16,
+  /** One maintenance pass over every space's search index (advance —
+    * which builds on first touch and CDC-syncs after — then FOLD once the
+    * active generation accretes [[graft.streaming.CdcIndexSync.FoldBatches]]
+    * sync batches, the ledger/postings lifecycle, r15) — the ONE copy of
+    * the sweep policy, called by the standing daemon and by specs (review
+    * r15: the daemon re-implemented it inline, so the two copies could
+    * drift). `onError` is the per-space isolation: one space's broken
+    * index must not stop another's sync; the default rethrows so specs
+    * fail loudly. */
+  def searchIndexSweep(g: Graft, idxBase: String,
                        onError: (String, Throwable) => Unit =
                          (_, e) => throw e): Unit =
     g.spaces().foreach { sp =>
       try {
         val dir = s"$idxBase/$sp"
-        _root_.graft.streaming.CdcIndexSync.syncOrBuild(g, dir, sp)
+        _root_.graft.streaming.CdcIndexSync.advance(g, dir, sp)
         val s = org.apache.spark.sql.SparkSession.active
-        if (foldBatches > 0 &&
-          _root_.graft.streaming.CdcIndexSync.ledgerBatches(s, dir) >= foldBatches)
+        if (_root_.graft.streaming.CdcIndexSync.ledgerBatches(s, dir) >=
+            _root_.graft.streaming.CdcIndexSync.FoldBatches)
           _root_.graft.streaming.CdcIndexSync.compactIndex(s, dir,
             g.configuredClaim)
         // generation GC + landing repair ride the same sweep (r17,
@@ -172,7 +173,6 @@ object ServerMain {
                 s"day $d $b->$a files" }.mkString(", ")) }
           }
           if (wantIndex) searchIndexSweep(g, s"$root/.search-index",
-            cfgForDaemons.indexFoldBatches,
             (sp, e) => logSweepFailure(s"search-index $sp", e))
           if (wantVacuum) g.spaces().foreach { sp =>
             half(s"vacuum $sp") {

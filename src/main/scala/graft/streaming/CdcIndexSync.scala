@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
@@ -52,19 +52,19 @@ import graft.tsdb.Graft
   * markers are pruned as they are superseded (the listing stays
   * bounded).
   *
-  * Commit point per sync: a `snap_<seq>-<nonce>` marker (via
-  * [[CdcStream]], the generalized consumer discipline this index now
-  * rides) created AFTER the batch's data — readers take the max marker
-  * and filter every read to `ingest_batch <= committed`, so a crashed
-  * half-written sync is invisible; the next sync deletes leftover
-  * partitions above the marker and re-lands the batch bit-identically.
+  * Advancing: the index is a [[CdcStream.foreachDiff]] consumer whose
+  * state dir is the index dir — foreachDiff decides when to rebuild and
+  * when to apply a diff, and commits a `snap_<seq>-<nonce>` marker AFTER
+  * the batch's data. Readers take the max marker and filter every read
+  * to `ingest_batch <= committed`, so a crashed half-written sync is
+  * invisible; the next sync deletes leftover partitions above the marker
+  * and re-lands the batch bit-identically.
   * The nonce keys caches by BUILD, not by seq: a wiped-and-recreated
   * store whose rebuilt index lands the same seq still yields a fresh
   * marker name (VERDICT r14 #3).
   */
 object CdcIndexSync {
-
-  private val MatchAll = """{"match_all":{}}"""
+  import CdcStream.{fsOf, seqOf}
 
   /** Explicit read schemas (ADVICE r14, medium): a zero-row family dir —
     * a build over a store whose points were all retention-dropped — has
@@ -84,81 +84,76 @@ object CdcIndexSync {
     .add("tok", StringType).add("bucket", LongType)
     .add("ingest_batch", LongType)
 
-  private def fsOf(s: SparkSession, p: String): (FileSystem, HPath) = {
-    val hp = new HPath(p)
-    (hp.getFileSystem(s.sparkContext.hadoopConfiguration), hp)
-  }
+  /** The four data families every generation carries. */
+  private val Families = Seq("postings", "doclen", "counts", "termdict")
+
+  /** How many sync batches the active generation accretes before the
+    * standing sweep ([[graft.http.ServerMain.searchIndexSweep]]) folds it
+    * ([[compactIndex]]): every probe scans the whole ledger history, so
+    * unbounded accretion is a probe-cost leak (VERDICT r14 #1). */
+  val FoldBatches = 16
 
   /** One `_sync` listing resolves everything a reader needs: the
     * committed snapshot, the marker NAME that committed it (the cache
     * key — it changes on rebuild even at the same seq), the active fold
-    * generation, and the generation's DATA DIRECTORY name (read from the
-    * fold marker's body — each fold attempt stages into a unique dir, so
-    * a fold that loses the marker race deletes only its OWN staging,
-    * never the winner's committed data; review r15). */
-  case class IdxState(snap: Long, marker: String, gen: Long,
-                      genDir: String)
+    * generation and its DATA DIRECTORY name (read from the fold marker's
+    * body — each fold attempt stages into a unique dir, so a fold that
+    * loses the marker race deletes only its OWN staging, never the
+    * winner's committed data; review r15), the tag columns the doc
+    * identity was built from (sorted — `search`'s doc_id splits back into
+    * values in THIS order) and the format stamp. */
+  case class IdxState(snap: Long, marker: String, gen: Long, genDir: String,
+                      tags: Seq[String], stamp: String)
 
-  def state(s: SparkSession, indexDir: String): Option[IdxState] = {
+  /** A generation: its fold number and data-directory name. */
+  private type Gen = (Long, String)
+
+  /** Resolved states with their grace generation, keyed by the `_sync`
+    * listing they were resolved from (index dir, snap marker name, fold
+    * marker names). Every file the resolution reads is fixed for its key:
+    * fold markers are create-only with the body atomic under the claim
+    * ([[graft.tsdb.Graft.claimAt]]), and the tags and format stamp only
+    * change inside a rebuild, which commits a marker with a fresh nonce.
+    * So the facade's per-request resolution costs one listing, with no
+    * added staleness. Size-capped against marker churn on a long-lived
+    * server. */
+  private val stateCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (IdxState, Gen)]()
+
+  def state(s: SparkSession, indexDir: String): Option[IdxState] =
+    resolve(s, indexDir).map(_._1)
+
+  private def resolve(s: SparkSession,
+                      indexDir: String): Option[(IdxState, Gen)] = {
     val (fs, dir) = fsOf(s, s"$indexDir/_sync")
     if (!fs.exists(dir)) return None
     val names = fs.listStatus(dir).toSeq.map(_.getPath.getName)
     val snaps = names.filter(_.startsWith("snap_"))
     if (snaps.isEmpty) return None
-    val marker = snaps.maxBy(markerSeq)
-    val (gen, genDir) = resolveGen(s, indexDir, marker, names)
-    Some(IdxState(markerSeq(marker), marker, gen, genDir))
+    val marker = snaps.maxBy(seqOf)
+    val folds = names.filter(_.startsWith("fold_"))
+      .map(_.stripPrefix("fold_").toLong).sorted(Ordering[Long].reverse)
+    val key = s"$indexDir#$marker#${folds.mkString(",")}"
+    val hit = stateCache.get(key)
+    if (hit != null) return Some(hit)
+    def read(name: String) = Graft.readSmallFile(fs, new HPath(dir, name))
+    val (active, grace) =
+      resolveGen(folds, n => read(s"fold_$n").map(_.trim).getOrElse(""))
+    val st = IdxState(seqOf(marker), marker, active._1, active._2,
+      read("tags").toSeq.flatMap(_.split('\n')).filter(_.nonEmpty),
+      read("format").map(_.trim).getOrElse(""))
+    if (stateCache.size() > 4096) stateCache.clear()
+    stateCache.put(key, (st, grace))
+    Some((st, grace))
   }
 
-  private def markerSeq(name: String): Long =
-    name.stripPrefix("snap_").takeWhile(_ != '-').toLong
-
-  /** fold_<gen> marker bodies, cached per (indexDir, snap marker, gen) —
-    * markers are create-only with the body atomic under the claim
-    * ([[graft.tsdb.Graft.claimAt]]) and fold numbers are never reused
-    * within a marker window (a rebuild that restarts generations also
-    * commits a fresh snap marker, so its fold_1 keys differently from the
-    * dead history's), which makes a cached non-empty body immutable for
-    * its key. Stops the facade's per-request state() resolution
-    * re-opening the marker file (ADVICE r15 low). Size-capped against
-    * marker churn on a long-lived server. */
-  private val foldBodyCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def foldBody(s: SparkSession, indexDir: String, marker: String,
-                       gen: Long): String = {
-    val key = s"$indexDir#$marker#$gen"
-    val hit = foldBodyCache.get(key)
-    if (hit != null) return hit
-    val (fs, _) = fsOf(s, indexDir)
-    val f = new HPath(s"$indexDir/_sync/fold_$gen")
-    val body =
-      if (!fs.exists(f)) ""
-      else {
-        val in = fs.open(f)
-        try new String(
-          org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim
-        finally in.close()
-      }
-    // empty bodies cache too (ADVICE r16 low): post-r16 a VISIBLE marker's
-    // body is atomic with its claim, so an empty body — a pre-r16 crash
-    // leftover — is as immutable for its (indexDir, marker, gen) key as a
-    // committed one; without this every state() resolution re-opens the
-    // dead marker file on the facade hot path, the exact I/O this cache
-    // removes. Out-of-band `_sync` surgery goes through dropStateCaches.
-    if (foldBodyCache.size() > 4096) foldBodyCache.clear()
-    foldBodyCache.put(key, body)
-    body
-  }
-
-  /** Test seam: drop the marker-keyed hot-path caches — out-of-band
-    * surgery on `_sync` (specs deleting the format stamp or fold markers
-    * under an UNCHANGED snap marker) is a state the lifecycle itself
-    * never produces; clearing here stands in for the process restart
-    * that would accompany it in production. */
+  /** Test seam: drop the listing-keyed state cache and the serving views
+    * — out-of-band surgery on `_sync` (specs deleting the format stamp or
+    * forging fold markers under an UNCHANGED snap marker) is a state the
+    * lifecycle itself never produces; clearing here stands in for the
+    * process restart that would accompany it in production. */
   private[graft] def dropStateCaches(): Unit = {
-    foldBodyCache.clear()
-    formatCache.clear()
+    stateCache.clear()
     // the serving views key by state, so out-of-band surgery that forges
     // a same-looking state must drop them too
     serveCache.values().forEach(v => v.dl.unpersist(false))
@@ -167,29 +162,23 @@ object CdcIndexSync {
     serveRetiring.clear()
   }
 
-  /** Resolve the active generation and its data-directory name from the
-    * `_sync` listing, highest fold first. A marker whose body names its
-    * staged dir is committed; a body-less marker whose legacy fixed
-    * `g<n>` dir exists is a pre-review-r15 fold; anything else —
-    * a visible marker with an empty body and no directory — is an
-    * UNCOMMITTED fold (a crash between the old non-atomic create and its
-    * body write, ADVICE r15 high) and resolves to the generation below,
-    * so readers never resolve a phantom directory and silently serve an
-    * empty index while later syncs land into it. New folds can no longer
-    * produce that state (the marker body is atomic under the claim
-    * primitive); this closes out markers a pre-r16 crash left behind.
-    * Generation 0 is the index root ("" sentinel). */
-  private def resolveGen(s: SparkSession, indexDir: String, marker: String,
-                         markerNames: Seq[String]): (Long, String) = {
-    val folds = markerNames.filter(_.startsWith("fold_"))
-      .map(_.stripPrefix("fold_").toLong).sorted(Ordering[Long].reverse)
-    val (fs, _) = fsOf(s, indexDir)
-    folds.foreach { n =>
-      val body = foldBody(s, indexDir, marker, n)
-      if (body.nonEmpty) return (n, body)
-      if (fs.exists(new HPath(s"$indexDir/g$n"))) return (n, s"g$n")
-    }
-    (0L, "")
+  /** The active and grace generations from the fold markers (`folds`,
+    * highest first): a marker whose body names its staged dir is
+    * committed; a marker with an EMPTY body is an uncommitted fold (a
+    * crash between the old non-atomic create and its body write, ADVICE
+    * r15 high) and resolves nothing, so readers never resolve a phantom
+    * directory and silently serve an empty index while later syncs land
+    * into it. New folds cannot produce that state (the body is atomic
+    * under the claim primitive); the rule is crash safety for
+    * create-exclusive claims. The grace generation is the highest
+    * committed fold below the active one — one fold's in-flight-reader
+    * window. Generation 0 is the index root ("" sentinel). */
+  private def resolveGen(folds: Seq[Long],
+                         body: Long => String): (Gen, Gen) = {
+    val committed = folds.iterator.map(n => (n, body(n)))
+      .filter(_._2.nonEmpty) ++ Iterator((0L, ""))
+    val active = committed.next()
+    (active, committed.nextOption().getOrElse((0L, "")))
   }
 
   /** The snapshot seq the index is committed at: the highest `_sync`
@@ -198,8 +187,8 @@ object CdcIndexSync {
     state(s, indexDir).map(_.snap)
 
   /** A family's data dir under a generation's directory: generation 0
-    * (genDir = "") lives at the index root (pre-r15 indexes keep working
-    * unmodified); folds land in their staged `g<n>-<nonce>/` dir. */
+    * (genDir = "") lives at the index root; folds land in their staged
+    * `g<n>-<nonce>/` dir. */
   private def famDir(indexDir: String, genDir: String, fam: String): String =
     if (genDir.isEmpty) s"$indexDir/$fam" else s"$indexDir/$genDir/$fam"
 
@@ -216,74 +205,13 @@ object CdcIndexSync {
     CdcStream.readState(s, famDir(indexDir, genDir, fam), schema)
   }
 
-  private def tagsFile(indexDir: String) = s"$indexDir/_sync/tags"
-
-  /** Index format stamp: "2" = the index carries the `termdict` sidecar
-    * for every batch (r15, VERDICT r14 #8). A pre-r15 index has no stamp;
-    * [[sync]] upgrades it with one rebuild, and until then [[search]]
-    * serves prefix terms from an UNPRUNED postings scan (correct, just
-    * not bucket-pruned) — never from the incomplete dictionary, which
-    * would silently drop matches. */
-  private val Format = "2"
-  private def formatFile(indexDir: String) = s"$indexDir/_sync/format"
-
-  private def writeFormat(s: SparkSession, indexDir: String): Unit = {
-    val (fs, _) = fsOf(s, indexDir)
-    val out = fs.create(new HPath(formatFile(indexDir)), true)
-    out.write(Format.getBytes("UTF-8"))
-    out.close()
-  }
-
-  private def formatOf(s: SparkSession, indexDir: String): Option[String] = {
-    val (fs, _) = fsOf(s, indexDir)
-    val f = new HPath(formatFile(indexDir))
-    if (!fs.exists(f)) None
-    else {
-      val in = fs.open(f)
-      try Some(new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim)
-      finally in.close()
-    }
-  }
-
-  /** [[formatOf]] cached by the committed snap MARKER name (ADVICE r15
-    * low: prefix probes re-read `_sync/format` per query on the facade
-    * hot path). The format stamp only changes inside [[build]], which
-    * also commits a fresh marker — so a new marker keys a fresh read and
-    * a cached entry can never serve a stale stamp to a reader holding the
-    * marker it was cached under. Size-capped against marker-name churn on
-    * a long-lived server (one entry per sync otherwise). */
-  private val formatCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def formatAt(s: SparkSession, indexDir: String,
-                       marker: String): String = {
-    if (formatCache.size() > 4096) formatCache.clear()
-    formatCache.computeIfAbsent(s"$indexDir#$marker",
-      _ => formatOf(s, indexDir).getOrElse(""))
-  }
-
-  private def writeTags(s: SparkSession, indexDir: String,
-                        tagCols: Seq[String]): Unit = {
-    val (fs, _) = fsOf(s, indexDir)
-    val out = fs.create(new HPath(tagsFile(indexDir)), true)
-    out.write(tagCols.mkString("\n").getBytes("UTF-8"))
-    out.close()
-  }
-
-  /** The tag-column names (sorted) the index's doc identity was built
-    * from — `search`'s doc_id splits back into values in THIS order. */
-  def tags(s: SparkSession, indexDir: String): Seq[String] =
-    readTags(s, indexDir)
-
-  private def readTags(s: SparkSession, indexDir: String): Seq[String] = {
-    val (fs, _) = fsOf(s, indexDir)
-    val in = fs.open(new HPath(tagsFile(indexDir)))
-    val body = new String(
-      org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-    in.close()
-    body.split('\n').toSeq.filter(_.nonEmpty)
-  }
+  /** Index format stamp, the one format this release writes and serves:
+    * every batch carries the `termdict` sidecar (r15, VERDICT r14 #8) and
+    * every committed fold marker names its staged dir in its body. An
+    * index with any other stamp (or none — it predates the stamp) is
+    * refused by [[search]] and rebuilt by the next [[sync]]; the index is
+    * derived state, so a rebuild loses nothing. */
+  private val Format = "3"
 
   /** The tag columns of a points/changes frame, sorted — the ONE column
     * order both doc_id and text use, matching Tsdb.searchSeries. */
@@ -309,15 +237,6 @@ object CdcIndexSync {
   private[graft] var foldCommitHook: () => Unit = () => ()
   private[graft] var syncCommitHook: () => Unit = () => ()
 
-  /** The daemon entry point: [[build]] on first touch, [[sync]] after —
-    * one call a standing maintenance sweep can make unconditionally. */
-  def syncOrBuild(g: Graft, indexDir: String,
-                  space: String = "default"): Long = {
-    val s = org.apache.spark.sql.SparkSession.active
-    if (state(s, indexDir).isEmpty) build(g, indexDir, space)
-    else sync(g, indexDir, space)
-  }
-
   /** Land postings + doclen + termdict for docs `(doc_id, text)`
     * ([[IndexStream.landPostings]], the one postings writer), and the
     * count ledger rows, all under `ingest_batch = snap` with dynamic
@@ -336,25 +255,91 @@ object CdcIndexSync {
   }
 
   /** Full (re)build at the store's current committed snapshot: the
-    * offline path — one scan of the store, postings/doclen for every
-    * live series, the ledger folded to one exact point count per series.
-    * Wipes any prior index state first (a rebuild supersedes the whole
-    * history, including dead series' postings and ledger rows). A store
-    * whose points were ALL retention-dropped builds an EMPTY index —
-    * committed, searchable (zero hits), and advanceable by later syncs
-    * (ADVICE r14: this used to wedge on schema inference).
-    * Returns the snapshot the index now reflects.
+    * index is dropped, and the advance that follows takes
+    * [[CdcStream.foreachDiff]]'s never-advanced case — one scan of the
+    * store, postings/doclen for every live series, the ledger folded to
+    * one exact point count per series. A store whose points were ALL
+    * retention-dropped builds an EMPTY index — committed, searchable
+    * (zero hits), and advanceable by later syncs (ADVICE r14: this used
+    * to wedge on schema inference). Returns the snapshot the index now
+    * reflects.
     */
   def build(g: Graft, indexDir: String, space: String = "default"): Long = {
-    val snaps = g.snapshots(space)
-    if (snaps.isEmpty) throw new IllegalStateException(
-      s"no committed snapshots in space '$space' — the index needs a " +
-        "store with at least one write")
-    val snap = snaps.max
-    val pts = g.readAt(snap, MatchAll, space)
-    val s = pts.sparkSession
+    drop(SparkSession.active, indexDir)
+    advance(g, indexDir, space)
+  }
+
+  /** Advance a built index from its committed snapshot to the store's
+    * current one ([[advance]]); an index that was never built is refused
+    * — building one is [[build]]'s (or the maintenance sweep's) call.
+    * Returns the snapshot the index now reflects (a no-op when already
+    * current).
+    */
+  def sync(g: Graft, indexDir: String, space: String = "default"): Long = {
+    if (state(SparkSession.active, indexDir).isEmpty)
+      throw new IllegalStateException(
+        s"no committed index at $indexDir — run build first")
+    advance(g, indexDir, space)
+  }
+
+  /** The index's one lifecycle step, a [[CdcStream.foreachDiff]]
+    * consumer with `indexDir` as its state dir. foreachDiff decides the
+    * five advance cases: never advanced, history restarted (a
+    * wiped-and-recreated space, by store identity) and diff base vacuumed
+    * all rebuild from the full state at `to`; behind applies the change
+    * feed; current does nothing. Two rebuild reasons lie outside it, each
+    * decided once: a non-current format stamp, checked BEFORE the call so
+    * an idle store still rebuilds, and changed tag columns, which the
+    * diff callback detects (a new tag column shifts the doc identity of
+    * every existing doc, so incremental maintenance is unsound). Either
+    * drops the index, so foreachDiff then takes the never-advanced case.
+    * The maintenance sweep calls this directly, so it builds on first
+    * touch. Returns the snapshot the index now reflects.
+    */
+  private[graft] def advance(g: Graft, indexDir: String,
+                             space: String): Long = {
+    val s = SparkSession.active
+    if (state(s, indexDir).exists(_.stamp != Format)) drop(s, indexDir)
+    try consume(g, indexDir, space)
+    catch { case TagsChanged =>
+      drop(s, indexDir)
+      consume(g, indexDir, space)
+    }
+  }
+
+  /** Thrown by the diff callback when the change feed's tag columns differ
+    * from the index's: nothing was landed, so foreachDiff commits nothing
+    * and [[advance]] rebuilds. */
+  private object TagsChanged extends RuntimeException(
+    "tag columns changed") with scala.util.control.NoStackTrace
+
+  private def drop(s: SparkSession, indexDir: String): Unit = {
     val (fs, dir) = fsOf(s, indexDir)
-    if (fs.exists(dir)) fs.delete(dir, true)
+    fs.delete(dir, true)
+  }
+
+  /** What a diff landed: the generation it landed in, and the batch, kept
+    * for the post-commit re-land into a generation a fold moved to. */
+  private case class Landed(genDir: String, newDocs: DataFrame,
+                            deltas: DataFrame)
+
+  private def consume(g: Graft, indexDir: String, space: String): Long = {
+    val s = SparkSession.active
+    var landed: Option[Landed] = None
+    val to = CdcStream.foreachDiff(g, space, indexDir)(
+      (pts, snap) => rebuild(s, indexDir, pts, snap))(
+      (ch, snap) => landed = applyDiff(s, indexDir, ch, snap))
+    landed.foreach(relandIntoActive(s, g, indexDir, to, _))
+    to
+  }
+
+  /** foreachDiff's reset callback: wipe every generation and marker, then
+    * land the full state at `snap` as generation 0 with its tag columns
+    * and format stamp. foreachDiff records the store identity and commits
+    * the progress marker after this returns. */
+  private def rebuild(s: SparkSession, indexDir: String, pts: DataFrame,
+                      snap: Long): Unit = {
+    drop(s, indexDir)
     val tagCols = tagColsOf(pts, Set("time_ms", "value"))
     val withId = pts.withColumn("doc_id", docIdCol(tagCols))
     val deltas = withId.groupBy(col("doc_id"))
@@ -362,11 +347,10 @@ object CdcIndexSync {
     val docs = withId
       .select(col("doc_id"), textCol(tagCols).as("text")).distinct()
     landBatch(indexDir, "", snap, docs, deltas)
-    writeTags(s, indexDir, tagCols)
-    writeFormat(s, indexDir)
-    CdcStream.recordIdentity(s, indexDir, g.storeIdentity(space))
-    CdcStream.commit(s, indexDir, snap, g.configuredClaim)
-    snap
+    val (fs, _) = fsOf(s, indexDir)
+    Graft.writeSmallFile(fs, new HPath(s"$indexDir/_sync/tags"),
+      tagCols.mkString("\n"))
+    Graft.writeSmallFile(fs, new HPath(s"$indexDir/_sync/format"), Format)
   }
 
   /** Delete data partitions above the committed marker — a crashed
@@ -385,59 +369,26 @@ object CdcIndexSync {
           else if (n.startsWith("bucket=")) sweep(st.getPath)
         }
       }
-    Seq("postings", "doclen", "counts", "termdict")
-      .foreach(f => sweep(new HPath(famDir(indexDir, genDir, f))))
+    Families.foreach(f => sweep(new HPath(famDir(indexDir, genDir, f))))
   }
 
-  /** Advance the index from its committed snapshot to the store's
-    * current one, reading only the change feed. New series land postings
-    * + doclen; every touched series lands a point-count delta; a series
-    * whose count reaches zero stops matching (and resurrects for free if
-    * points return — unless a fold dropped it while dead, in which case
-    * it re-indexes as a new doc). If the store's tag schema evolved (a
-    * new tag column appeared), the per-column doc identity of every
-    * existing doc shifts, so the index falls back to [[build]] —
-    * incremental maintenance is only sound while doc identity is stable.
-    * Returns the snapshot the index now reflects (a no-op when already
-    * current).
+  /** foreachDiff's diff callback, reading only the change feed. New
+    * series land postings + doclen; every touched series lands a
+    * point-count delta; a series whose count reaches zero stops matching
+    * (and resurrects for free if points return — unless a fold dropped
+    * it while dead, in which case it re-indexes as a new doc). A diff
+    * whose tag columns differ from the index's throws [[TagsChanged]]
+    * before landing anything. Returns what was landed, or None for a
+    * pure physical rewrite (a data-free advance).
     */
-  def sync(g: Graft, indexDir: String, space: String = "default"): Long = {
-    val s = org.apache.spark.sql.SparkSession.active
-    val st = state(s, indexDir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed index at $indexDir — run build first"))
-    val from = st.snap
-    val snaps = g.snapshots(space)
-    if (snaps.isEmpty) throw new IllegalStateException(
-      s"space '$space' has no committed snapshots but the index claims " +
-        s"snapshot $from — the index was built against a different store")
-    val to = snaps.max
-    // identity FIRST, before the already-current fast path: a wiped-and-
-    // recreated space can coincidentally land the very seq the index is
-    // committed at — `to == from` would then read as "current" while
-    // every indexed doc belongs to a dead history (r15, the root fix
-    // under VERDICT r14 #3; a pre-r15 index with no recorded identity
-    // rebuilds once and is then bound)
-    if (!CdcStream.recordedIdentity(s, indexDir)
-          .contains(g.storeIdentity(space)))
-      return build(g, indexDir, space)
-    // format upgrade (one-time): a pre-termdict index rebuilds on its
-    // first sweep so prefix probes get the pruned path; until then they
-    // run unpruned (see [[search]]) — checked before the fast path so an
-    // idle store still upgrades
-    if (!formatOf(s, indexDir).contains(Format))
-      return build(g, indexDir, space)
-    if (to == from) return from
-    // two more no-diff-exists states, both resolved by the full rebuild
-    // (a consumer whose checkpoint was truncated rereads from scratch):
-    // vacuum expired the index's base snapshot, or the store's history
-    // restarted below it
-    if (to < from || !snaps.contains(from)) return build(g, indexDir, space)
-    cleanupAbove(s, indexDir, st.genDir, from)
-    val ch = g.changes(from, to, space)
+  private def applyDiff(s: SparkSession, indexDir: String, ch: DataFrame,
+                        to: Long): Option[Landed] = {
+    val st = state(s, indexDir).getOrElse(throw new IllegalStateException(
+      s"index at $indexDir vanished while advancing to snapshot $to"))
+    cleanupAbove(s, indexDir, st.genDir, st.snap)
     val tagCols = tagColsOf(ch,
       Set("time_ms", "old_value", "new_value", "change"))
-    if (tagCols != readTags(s, indexDir)) return build(g, indexDir, space)
+    if (tagCols != st.tags) throw TagsChanged
     val touched = ch.where(col("change") =!= "changed")
       .withColumn("doc_id", docIdCol(tagCols))
       .withColumn("text", textCol(tagCols))
@@ -447,44 +398,45 @@ object CdcIndexSync {
         first(col("text")).as("text"))
       .where(col("delta") =!= 0L)
       .localCheckpoint(true) // feeds the ledger write AND new-doc probe
-    if (deltas.isEmpty) { // pure physical rewrite: nothing to land
-      CdcStream.commit(s, indexDir, to, g.configuredClaim)
-      return to
-    }
+    if (deltas.isEmpty) return None // pure physical rewrite: nothing to land
     // a doc the index has EVER seen keeps its postings (dead or alive —
     // resurrection is a ledger flip); only never-seen docs index anew
     val known = readFam(s, indexDir, st.genDir, "counts")
-      .where(col("ingest_batch") <= from).select("doc_id").distinct()
+      .where(col("ingest_batch") <= st.snap).select("doc_id").distinct()
     val newDocs = deltas.where(col("delta") > 0)
       .join(known, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("text"))
       .localCheckpoint(true) // pinned: a re-land below must not re-read
                              // a generation a concurrent fold reclaimed
-    landBatch(indexDir, st.genDir, to, newDocs, deltas.select("doc_id", "delta"))
+    val batch = Landed(st.genDir, newDocs, deltas.select("doc_id", "delta"))
+    landBatch(indexDir, st.genDir, to, batch.newDocs, batch.deltas)
     syncCommitHook()
-    CdcStream.commit(s, indexDir, to, g.configuredClaim)
-    // close the fold race (review r15): a fold that committed between
-    // our entry and our marker moved the active families to a NEW
-    // generation the landBatch above never touched — without this the
-    // batch would be marked indexed but invisible, and never replayed
-    // (the next sync starts above it). Re-land into the active
-    // generation until stable, each landing serialized against the
-    // fold's own late-copy of the same batch by the per-(generation,
-    // batch) land claim (ADVICE r15 medium: two concurrent dynamic
-    // partition overwrites of the same partitions can interleave
-    // delete/commit into a union of part-files — duplicated postings).
-    // The fold's post-commit check covers the mirror-image interleaving,
-    // so every committed batch reaches the active generation whichever
-    // marker lands second.
-    var landedDir = st.genDir
+    Some(batch)
+  }
+
+  /** Close the fold race (review r15), after the diff's marker commits: a
+    * fold that committed between the diff's start and its marker moved
+    * the active families to a NEW generation the landing never touched —
+    * without this the batch would be marked indexed but invisible, and
+    * never replayed (the next sync starts above it). Re-land into the
+    * active generation until stable, each landing serialized against the
+    * fold's own late-copy of the same batch by the per-(generation,
+    * batch) land claim (ADVICE r15 medium: two concurrent dynamic
+    * partition overwrites of the same partitions can interleave
+    * delete/commit into a union of part-files — duplicated postings).
+    * The fold's post-commit check covers the mirror-image interleaving,
+    * so every committed batch reaches the active generation whichever
+    * marker lands second. */
+  private def relandIntoActive(s: SparkSession, g: Graft, indexDir: String,
+                               to: Long, batch: Landed): Unit = {
+    var landedDir = batch.genDir
     var active = state(s, indexDir).map(_.genDir).getOrElse(landedDir)
     var guard = 0
     while (active != landedDir && guard < 8) {
       val resolved = Graft.resolveClaim(fsOf(s, indexDir)._1,
         g.configuredClaim, s"index land marker at $indexDir")
       ensureLanded(s, indexDir, active, to, resolved) {
-        landBatch(indexDir, active, to, newDocs,
-          deltas.select("doc_id", "delta"))
+        landBatch(indexDir, active, to, batch.newDocs, batch.deltas)
       }
       landedDir = active
       active = state(s, indexDir).map(_.genDir).getOrElse(active)
@@ -497,7 +449,6 @@ object CdcIndexSync {
         "re-run the maintenance sweep once the folding stops " +
         "(ADVICE r15: giving up silently here would leave the batch " +
         "committed-but-invisible, the exact state this loop prevents)")
-    to
   }
 
   /** How many sync batches the active generation has accreted — the
@@ -601,12 +552,8 @@ object CdcIndexSync {
           }
         } finally hbStop.set(true)
         val heldBy =
-          try {
-            val in = fs.open(claim)
-            try new String(
-              org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-            finally in.close()
-          } catch { case _: java.io.IOException => "" }
+          try Graft.readSmallFile(fs, claim).getOrElse("")
+          catch { case _: java.io.IOException => "" }
         if (heldBy != owner) throw new IllegalStateException(
           s"batch $batch's land claim in generation '$genDir' at $indexDir " +
             "was taken over while this copier was writing (lease fenced: " +
@@ -614,8 +561,7 @@ object CdcIndexSync {
             "the landing now and will flip done after its re-copy; this " +
             "copier's result is NOT committed. If this recurs, raise " +
             "staleMs or lower landHeartbeatMs")
-        val out = fs.create(done, true)
-        out.close()
+        Graft.writeSmallFile(fs, done, "")
         return
       }
       // lost the claim: wait for the winner's done, but watch the CLAIM
@@ -699,62 +645,57 @@ object CdcIndexSync {
 
   /** Fold-aware generation GC (r17, VERDICT r16 #5): reclaim DEAD
     * generation directories without folding — the daemon treatment
-    * physical segment reclaim already gets. [[compactIndex]] sweeps old
-    * generations as a side effect of each fold, but between folds (or on
-    * an index that never accretes enough to fold again) crash-staging
-    * garbage and out-of-grace generations sit on disk forever. The rule
-    * mirrors the fold's reclaim exactly: keep the ACTIVE generation and
-    * the GRACE generation (the one below active — one fold's in-flight-
-    * reader window); delete every other `g*` dir whose sequence is <=
-    * the active generation (crash garbage from lost fold races and
-    * out-of-grace history) — never a same-or-higher-seq dir, which may
-    * be a concurrent fold's live staging. When the grace generation is
-    * itself a staged dir, the gen-0 root families are out of grace and
-    * reclaimed too. Incomplete landings in the active generation are
-    * repaired FIRST ([[repairLandings]]) — their re-land source is the
-    * grace generation this sweep keeps, so repair-then-vacuum is safe in
-    * one pass. Superseded progress markers are pruned like the fold
-    * does. Returns the reclaimed directory names. */
+    * physical segment reclaim already gets. Between folds (or on an index
+    * that never accretes enough to fold again) crash-staging garbage and
+    * out-of-grace generations would otherwise sit on disk forever.
+    * Incomplete landings in the active generation are repaired FIRST
+    * ([[repairLandings]]) — their re-land source is the grace generation
+    * [[reclaim]] keeps, so repair-then-vacuum is safe in one pass.
+    * Returns the reclaimed directory names. */
   def vacuumIndex(s: SparkSession, indexDir: String,
                   staleClaimMs: Long = 600000L): Seq[String] = {
-    val st = state(s, indexDir).getOrElse(return Nil)
+    val (st, grace) = resolve(s, indexDir).getOrElse(return Nil)
     if (st.gen == 0) return Nil // only live staging can exist above gen 0
     repairLandings(s, indexDir, staleClaimMs)
+    reclaim(s, indexDir, st.snap, (st.gen, st.genDir), grace)
+  }
+
+  /** The one reclaim rule, run by [[vacuumIndex]] and by [[compactIndex]]
+    * after it wins its marker: keep the `active` generation and the
+    * `grace` generation (one fold's in-flight-reader window); delete
+    * every other `g*` dir whose sequence is <= the active generation
+    * (crash garbage from lost fold races and out-of-grace history) —
+    * never a higher-seq dir, which may be a concurrent fold's live
+    * staging. When the grace generation is itself a staged dir, the
+    * gen-0 root families are out of grace and reclaimed too. Progress
+    * markers below `snap` and fold markers below the grace generation
+    * resolve nothing and are pruned — without this the hot-path `_sync`
+    * listing grows one file per sync forever (review r15). Returns the
+    * reclaimed directory names. */
+  private def reclaim(s: SparkSession, indexDir: String, snap: Long,
+                      active: Gen, grace: Gen): Seq[String] = {
     val (fs, root) = fsOf(s, indexDir)
-    val (mfs, mdir) = fsOf(s, s"$indexDir/_sync")
-    // the grace generation: the highest committed fold BELOW the active
-    // one (its dir from the marker body / legacy fixed dir), or gen 0
-    val names = mfs.listStatus(mdir).toSeq.map(_.getPath.getName)
-    val below = names.filter(_.startsWith("fold_"))
-      .map(_.stripPrefix("fold_").toLong).filter(_ < st.gen)
-      .sorted(Ordering[Long].reverse)
-    val grace = below.iterator.map { n =>
-      val body = foldBody(s, indexDir, st.marker, n)
-      if (body.nonEmpty) Some(n -> body)
-      else if (fs.exists(new HPath(s"$indexDir/g$n"))) Some(n -> s"g$n")
-      else None
-    }.collectFirst { case Some(g) => g }.getOrElse(0L -> "")
-    val keep = Set(st.genDir, grace._2)
+    val keep = Set(active._2, grace._2)
     val reclaimed = scala.collection.mutable.ArrayBuffer.empty[String]
     if (fs.exists(root)) fs.listStatus(root).foreach { f =>
       val n = f.getPath.getName
       val seq = if (f.isDirectory && n.startsWith("g"))
         n.drop(1).takeWhile(_.isDigit) else ""
-      if (seq.nonEmpty && seq.toLong <= st.gen && !keep(n)) {
+      if (seq.nonEmpty && seq.toLong <= active._1 && !keep(n)) {
         fs.delete(f.getPath, true)
         reclaimed += n
       }
     }
     if (grace._2.nonEmpty) // gen 0's root families are out of grace
-      Seq("postings", "doclen", "counts", "termdict").foreach { fam =>
-        val p = new HPath(s"$indexDir/$fam")
+      Families.foreach { fam =>
+        val p = new HPath(root, fam)
         if (fs.exists(p)) { fs.delete(p, true); reclaimed += fam }
       }
-    mfs.listStatus(mdir).foreach { m =>
+    fs.listStatus(new HPath(root, "_sync")).foreach { m =>
       val n = m.getPath.getName
-      if ((n.startsWith("snap_") && markerSeq(n) < st.snap) ||
+      if ((n.startsWith("snap_") && seqOf(n) < snap) ||
         (n.startsWith("fold_") && n.stripPrefix("fold_").toLong < grace._1))
-        mfs.delete(m.getPath, false)
+        fs.delete(m.getPath, false)
     }
     reclaimed.toSeq
   }
@@ -775,7 +716,7 @@ object CdcIndexSync {
       .sortBy(n => n.drop(1).takeWhile(_.isDigit).toLong)(
         Ordering[Long].reverse) :+ "" // gen-0 root families last
     gens.filterNot(_ == exclude).find(g =>
-      Seq("postings", "doclen", "counts", "termdict").exists { fam =>
+      Families.exists { fam =>
         val p = new HPath(s"${famDir(indexDir, g, fam)}/ingest_batch=$batch")
         fs.exists(p)
       })
@@ -787,7 +728,7 @@ object CdcIndexSync {
     * (family, batch). */
   private def copyBatch(s: SparkSession, indexDir: String, srcGen: String,
                         dstGen: String, batch: Long): Unit =
-    Seq("postings", "doclen", "counts", "termdict").foreach { fam =>
+    Families.foreach { fam =>
       val late = readFam(s, indexDir, srcGen, fam)
         .where(col("ingest_batch") === batch)
       if (!late.isEmpty) {
@@ -814,13 +755,13 @@ object CdcIndexSync {
     * unmarked directory reclaimed once the generation passes it; readers
     * never see a half fold. The previous generation is kept for ONE fold
     * as an in-flight-reader grace window; older generations and
-    * below-committed progress markers are reclaimed here.
+    * below-committed progress markers are reclaimed here ([[reclaim]]).
     *
     * Sync racing the fold (review r15): a sync can commit its marker
     * while the fold is rewriting — the folded families, filtered to the
     * fold's base snapshot, would silently miss that batch. Both sides
     * close it: after winning the marker, the fold RE-LANDS any batches
-    * committed above its base from the grace generation; and [[sync]]
+    * committed above its base from the grace generation; and a sync
     * re-resolves the active generation after its own commit and re-lands
     * into it if a fold moved the families. Whichever side's marker lands
     * second sees the other's (one `_sync` listing resolves both), so
@@ -922,8 +863,7 @@ object CdcIndexSync {
     // listing and re-lands on its own side.
     val nowCommitted = state(s, indexDir).map(_.snap).getOrElse(committed)
     if (nowCommitted > committed) {
-      val fams = Seq("postings", "doclen", "counts", "termdict")
-      val lateBatches = fams.map(fam =>
+      val lateBatches = Families.map(fam =>
         readFam(s, indexDir, st.genDir, fam)
           .where(col("ingest_batch") > committed &&
             col("ingest_batch") <= nowCommitted)
@@ -936,70 +876,25 @@ object CdcIndexSync {
         }
       }
     }
-    // reclaim: keep the new generation and the grace copy (st.genDir or
-    // the root families for gen 0); delete every other g* dir whose seq
-    // is <= the OLD generation (crash garbage and out-of-grace folds) —
-    // never same-or-higher-seq dirs, which may be a concurrent fold's
-    // live staging
-    val keep = Set(stageDir, st.genDir)
-    val (_, root) = fsOf(s, indexDir)
-    if (fs.exists(root)) fs.listStatus(root).foreach { f =>
-      val n = f.getPath.getName
-      val seq = if (f.isDirectory && n.startsWith("g"))
-        n.drop(1).takeWhile(_.isDigit) else ""
-      if (seq.nonEmpty && seq.toLong <= st.gen && !keep(n))
-        fs.delete(f.getPath, true)
-    }
-    if (st.gen >= 1) // the root (gen 0) families are out of grace now
-      Seq("postings", "doclen", "counts", "termdict").foreach(f =>
-        fs.delete(new HPath(s"$indexDir/$f"), true))
-    // prune progress markers: readers only ever use the max snap marker,
-    // and fold markers older than the grace generation resolve nothing —
-    // without this the hot-path `_sync` listing grows one file per sync
-    // forever (review r15)
-    fs.listStatus(mdir).foreach { m =>
-      val n = m.getPath.getName
-      if ((n.startsWith("snap_") && markerSeq(n) < committed) ||
-        (n.startsWith("fold_") &&
-          n.stripPrefix("fold_").toLong < st.gen))
-        fs.delete(m.getPath, false)
-    }
+    // the sweep runs the same rule right after every fold; running it
+    // here keeps a fold called on its own from leaving garbage behind
+    reclaim(s, indexDir, committed, (next, stageDir), (st.gen, st.genDir))
     next
   }
 
   /** Candidate buckets for a set of prefixes, from the `termdict`
-    * sidecar: Some(buckets holding ≥1 matching dictionary term) on a
-    * format-2 index — the prefix analog of the exact-term hash pruning
-    * (r15, VERDICT r14 #8) — or None when the index predates the
-    * dictionary (the probe then scans all buckets, correct but
-    * unpruned, until the next sweep's rebuild upgrades it).
+    * sidecar: the buckets holding ≥1 matching dictionary term — the
+    * prefix analog of the exact-term hash pruning (r15, VERDICT r14 #8).
     * Driver-sized: ≤ [[IndexStream.NBuckets]] entries. */
   private[graft] def prefixCandidateBuckets(
       s: SparkSession, indexDir: String, st: IdxState,
-      prefixes: Seq[String]): Option[Seq[Long]] =
-    if (formatAt(s, indexDir, st.marker) != Format) None
-    else Some(readFam(s, indexDir, st.genDir, "termdict")
+      prefixes: Seq[String]): Seq[Long] =
+    readFam(s, indexDir, st.genDir, "termdict")
       .where(col("ingest_batch") <= st.snap)
       .where(prefixes.map(p => col("tok").startsWith(p)).reduce(_ || _))
       .select(col("bucket")).distinct()
-      .collect().map(_.getLong(0)).toSeq)
+      .collect().map(_.getLong(0)).toSeq
 
-  /** BM25 top-k over the synced index: postings restricted to the query
-    * terms' hash buckets, docs restricted to series whose ledger sum is
-    * positive at the committed snapshot, scored by the shared rule
-    * ([[IndexStream.searchOn]]). Matches [[graft.tsdb.Tsdb.searchSeries]]
-    * row for row; `doc_id` is the [[graft.tsdb.DocId]]-encoded tag
-    * string.
-    *
-    * Prefix terms (trailing `*`) expand under the ONE shared rule
-    * ([[TextOps.expandPrefix]] — live vocabulary, lexicographic, capped
-    * at 50): the dictionary names the candidate buckets, the expansion
-    * VALIDATES candidates against alive postings (dictionary terms can
-    * be dead-only between folds — an unvalidated cap could cut a
-    * different 50 than the direct scan's live vocabulary and break the
-    * rank-identity contract), and the expanded terms probe like exact
-    * ones.
-    */
   /** The state's LIVE per-doc length view: counts-summed liveness (docs
     * whose point count is positive at the committed snap) joined onto
     * doclen — the corpus side every search scores against. */
@@ -1073,13 +968,38 @@ object CdcIndexSync {
       }
     }
 
+  /** BM25 top-k over the synced index: postings restricted to the query
+    * terms' hash buckets, docs restricted to series whose ledger sum is
+    * positive at the committed snapshot, scored by the shared rule
+    * ([[IndexStream.searchOn]]). Matches [[graft.tsdb.Tsdb.searchSeries]]
+    * row for row; `doc_id` is the [[graft.tsdb.DocId]]-encoded tag
+    * string.
+    *
+    * Prefix terms (trailing `*`) expand under the ONE shared rule
+    * ([[TextOps.expandPrefix]] — live vocabulary, lexicographic, capped
+    * at 50): the dictionary names the candidate buckets, the expansion
+    * VALIDATES candidates against alive postings (dictionary terms can
+    * be dead-only between folds — an unvalidated cap could cut a
+    * different 50 than the direct scan's live vocabulary and break the
+    * rank-identity contract), and the expanded terms probe like exact
+    * ones.
+    *
+    * Only a current-format index is served: any other stamp throws,
+    * naming the rebuild the next sweep performs (the facade then answers
+    * from the store scan and logs the cause).
+    */
   def search(s: SparkSession, indexDir: String, query0: Seq[String],
              k: Int = 20, at: Option[IdxState] = None): DataFrame = {
     // at: a caller that already resolved the state (the facade's
-    // per-request cache) passes it to skip this listing on the hot path
+    // per-request resolution) passes it to skip this listing
     val st = at.orElse(state(s, indexDir)).getOrElse(
       throw new IllegalStateException(
         s"no committed index at $indexDir — run build first"))
+    if (st.stamp != Format) throw new IllegalStateException(
+      s"index at $indexDir has format stamp '${st.stamp}', but this " +
+        s"release serves only format $Format — the next maintenance sweep " +
+        "(CdcIndexSync.sync) rebuilds it; until then /search answers from " +
+        "the store scan")
     val committed = st.snap
     // the refresh cache serves the corpus side when it matches THIS
     // state; any other state (cold start, mid-sweep) builds it inline
@@ -1093,9 +1013,8 @@ object CdcIndexSync {
         val postBase = readFam(s, indexDir, st.genDir, "postings")
           .where(col("ingest_batch") <= committed)
         val pruned = prefixCandidateBuckets(s, indexDir, st, prefixes) match {
-          case Some(Nil) => postBase.limit(0) // dictionary says: no match
-          case Some(bs) => postBase.where(col("bucket").isin(bs: _*))
-          case None => postBase // pre-dictionary index: unpruned fallback
+          case Nil => postBase.limit(0) // dictionary says: no match
+          case bs => postBase.where(col("bucket").isin(bs: _*))
         }
         val vocab = pruned.join(aliveIds, "doc_id").select(col("tok"))
         (exact ++ TextOps.expandPrefixes(vocab, prefixes)).distinct

@@ -6,10 +6,10 @@ import org.apache.spark.sql.functions._
 import graft.tsdb.Graft
 
 /** The standing CDC consumer contract, generalized (r15, VERDICT r14 #5):
-  * [[CdcIndexSync]] is one hard-wired consumer of [[Graft.changes]]; this
-  * object is the advance-commit-replay discipline it proved out, offered
-  * to USER pipelines so an incremental aggregate gets the same
-  * exactly-once story without copying the marker code.
+  * the advance-commit-replay discipline over [[Graft.changes]], written
+  * once. The series search index ([[CdcIndexSync]]) is one [[foreachDiff]]
+  * consumer; USER pipelines are others, so an incremental aggregate gets
+  * the same exactly-once story without copying the marker code.
   *
   * The discipline (the reference has no storage-level history at all —
   * this is the part of graft's storage layer that goes past it, in the
@@ -52,12 +52,14 @@ object CdcStream {
     */
   case class Progress(snap: Long, marker: String)
 
-  private def fsOf(s: SparkSession, p: String): (FileSystem, HPath) = {
+  private[streaming] def fsOf(s: SparkSession,
+                              p: String): (FileSystem, HPath) = {
     val hp = new HPath(p)
     (hp.getFileSystem(s.sparkContext.hadoopConfiguration), hp)
   }
 
-  private def seqOf(name: String): Long =
+  /** The snapshot seq a `snap_<seq>-<nonce>` marker name records. */
+  private[streaming] def seqOf(name: String): Long =
     name.stripPrefix("snap_").takeWhile(_ != '-').toLong
 
   /** The consumer's committed progress: the highest `snap_*` marker under
@@ -114,25 +116,15 @@ object CdcStream {
     * only sound move is a reset (snapshot seqs restart at 1 and can
     * coincide with the marker's — the seq alone cannot detect this). */
   def recordedIdentity(s: SparkSession, stateDir: String): Option[String] = {
-    val (fs, _) = fsOf(s, stateDir)
-    val f = new HPath(s"$stateDir/_sync/store")
-    if (!fs.exists(f)) None
-    else {
-      val in = fs.open(f)
-      try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8).trim)
-      finally in.close()
-    }
+    val (fs, f) = fsOf(s, s"$stateDir/_sync/store")
+    Graft.readSmallFile(fs, f).map(_.trim)
   }
 
   /** Record the store identity (overwrite: a reset REBINDS the consumer
     * to the new history). */
   def recordIdentity(s: SparkSession, stateDir: String, id: String): Unit = {
-    val (fs, _) = fsOf(s, stateDir)
-    fs.mkdirs(new HPath(s"$stateDir/_sync"))
-    val out = fs.create(new HPath(s"$stateDir/_sync/store"), true)
-    try out.write(id.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    val (fs, f) = fsOf(s, s"$stateDir/_sync/store")
+    Graft.writeSmallFile(fs, f, id)
   }
 
   /** The canonical idempotent landing: partition the batch's effects by

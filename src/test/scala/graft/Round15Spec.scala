@@ -553,7 +553,6 @@ class Round15Spec extends SparkTestBase {
          "commit_primitive": "unsafe-rename"}""".getBytes("UTF-8"))
     val cfg = Graft.loadConfig(spark, cfgPath.toString)
     assert(cfg.compactionTargetMb == 4)
-    assert(cfg.indexFoldBatches == 3)
     assert(cfg.commitPrimitive == Graft.PrimUnsafeRename)
     // defaults: deep vacuum keep (ADVICE r14 — external /changes
     // consumers keep their diff base across realistic polling gaps)
@@ -562,8 +561,7 @@ class Round15Spec extends SparkTestBase {
     val dcfg = Graft.loadConfig(spark, defPath.toString)
     assert(dcfg.vacuumKeepSnapshots == Graft.DefaultVacuumKeep &&
       Graft.DefaultVacuumKeep >= 24)
-    assert(dcfg.compactionTargetMb == 128 && dcfg.indexFoldBatches == 16 &&
-      dcfg.commitPrimitive == "auto")
+    assert(dcfg.compactionTargetMb == 128 && dcfg.commitPrimitive == "auto")
 
     // the target is wired through to the rewrite: a fragmented bucket
     // compacted under a tiny byte target splits into multiple files
@@ -630,14 +628,14 @@ class Round15Spec extends SparkTestBase {
     // must scan (the measured buckets-opened drop)
     val st = CdcIndexSync.state(spark, dir).get
     val narrow = CdcIndexSync.prefixCandidateBuckets(
-      spark, dir, st, Seq("q1")).get
+      spark, dir, st, Seq("q1"))
     assert(narrow.nonEmpty && narrow.size <= 10,
       s"10 matching terms can name at most 10 buckets: $narrow")
     assert(CdcIndexSync.prefixCandidateBuckets(
-      spark, dir, st, Seq("zz")).get.isEmpty,
+      spark, dir, st, Seq("zz")).isEmpty,
       "a no-match prefix must name ZERO candidate buckets")
     assert(CdcIndexSync.prefixCandidateBuckets(
-      spark, dir, st, Seq("q000")).get.nonEmpty,
+      spark, dir, st, Seq("q000")).nonEmpty,
       "pre-fold, the dead term still occupies the dictionary (the case " +
         "liveness validation exists for)")
 
@@ -647,23 +645,20 @@ class Round15Spec extends SparkTestBase {
     assert(gen >= 1L)
     val stF = CdcIndexSync.state(spark, dir).get
     assert(CdcIndexSync.prefixCandidateBuckets(
-      spark, dir, stF, Seq("q000")).get.isEmpty,
+      spark, dir, stF, Seq("q000")).isEmpty,
       "the folded dictionary must not carry dead-only terms")
     assertParity(g, dir, queries)
 
-    // pre-dictionary index (format stamp removed): the probe falls back
-    // to the unpruned scan — same answers, no silent misses — and the
-    // next sweep's sync rebuilds with the dictionary. Deleting the stamp
-    // under an UNCHANGED snap marker is out-of-band surgery the lifecycle
-    // never performs (build rewrites stamp + commits a fresh marker), so
-    // drop the marker-keyed hot-path caches as a process restart would
-    // (r16, ADVICE r15 low)
+    // pre-dictionary index (format stamp removed): the index is refused,
+    // never served from a dictionary that may be incomplete, and the next
+    // sweep's sync rebuilds with the dictionary. Deleting the stamp under
+    // an UNCHANGED snap marker is out-of-band surgery the lifecycle never
+    // performs (build rewrites stamp + commits a fresh marker), so drop
+    // the listing-keyed state cache as a process restart would
     new java.io.File(s"$dir/_sync/format").delete()
     CdcIndexSync.dropStateCaches()
-    assert(CdcIndexSync.prefixCandidateBuckets(
-      spark, dir, CdcIndexSync.state(spark, dir).get, Seq("q1")).isEmpty,
-      "no format stamp -> no dictionary claim -> None (unpruned fallback)")
-    assertParity(g, dir, queries)
+    val refused = intercept[IllegalStateException](indexed(dir, Seq("q1*")))
+    assert(refused.getMessage.contains("rebuild"), refused.getMessage)
     CdcIndexSync.sync(g, dir) // format upgrade: one rebuild
     assert(CdcIndexSync.prefixCandidateBuckets(
       spark, dir, CdcIndexSync.state(spark, dir).get, Seq("q1")).nonEmpty)
