@@ -1,6 +1,9 @@
 package graft.http
 
+import java.util.concurrent.{Executors, TimeUnit}
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
+import graft.streaming.CdcIndexSync
 import graft.tsdb.Graft
 
 /** Boot the facade the way the reference boots (`node orestes.js` reads
@@ -15,28 +18,30 @@ import graft.tsdb.Graft
   *  - storeRoot defaults to ./graft-data (any Hadoop-FS URI works —
   *    file:/hdfs:/s3a:).
   *
-  * A per-space `keep_days` in the config turns on the retention daemon:
-  * the sweep the reference runs per `/delete` request
-  * (orestes-remover.js:16-39) runs here on a timer, hourly, so configured
-  * retention is a standing policy rather than a client obligation.
-  *
   * The store is a manifest/snapshot store — the only storage layout
   * (bootstrapManifest adopts bucket directories an older release left on
   * disk on first touch, so booting over an old root is migration-free).
-  * Since r14 a standing COMPACTION daemon also rides the boot: it sweeps
-  * every `compaction_sweep_minutes` (default 60; <= 0 disables), and any
-  * space whose fragmentation report shows a bucket past
-  * `compaction_max_files` (default 8) or still carrying write-sequence
-  * stamps is compacted — the maintenance the reference delegates to
-  * Cassandra's SSTable compaction, as a policy instead of an operator
-  * chore. Each sweep then vacuums every space down to
-  * `vacuum_keep_snapshots` (default 48 —
-  * [[graft.tsdb.Graft.DefaultVacuumKeep]], deep enough that an external
-  * daily CDC poller keeps its diff base, ADVICE r14; <= 0 disables the
-  * vacuum half): compaction and retention are metadata-only commits, so
-  * the daemon owns physical reclaim too — bounded disk is a boot default,
-  * not an operator chore; the orphan grace window keeps the sweep safe
-  * against other processes' in-flight commits.
+  *
+  * Maintenance is ONE standing pass, [[sweep]], on one
+  * `graft-maintenance` thread: first 1 minute after boot, then every
+  * `compaction_sweep_minutes` (every 60 minutes when that is <= 0). It
+  * runs, in dependency order and each under its own config key:
+  *  1. retention for every space with a `keep_days` — the sweep the
+  *     reference runs per `/delete` request (orestes-remover.js:16-39),
+  *     here a standing policy rather than a client obligation;
+  *  2. compaction (`compaction_sweep_minutes` > 0) of any space whose
+  *     fragmentation report shows a bucket past `compaction_max_files` or
+  *     still carrying write-sequence stamps — the maintenance the
+  *     reference delegates to Cassandra's SSTable compaction;
+  *  3. the search index (`search_index`): advance, fold, index GC and the
+  *     serving view ([[graft.streaming.CdcIndexSync.maintain]]);
+  *  4. vacuum (`vacuum_keep_snapshots` > 0, default 48 —
+  *     [[graft.tsdb.Graft.DefaultVacuumKeep]], deep enough that an
+  *     external daily CDC poller keeps its diff base): retention and
+  *     compaction are metadata-only commits, so the sweep owns physical
+  *     reclaim too; it runs LAST so the index's diff base still exists
+  *     when the index step needs it, and the orphan grace window keeps it
+  *     safe against other processes' in-flight commits.
   */
 object ServerMain {
   /** Wire config -> store -> server (the testable core of the boot).
@@ -65,43 +70,54 @@ object ServerMain {
       continuousIngest = cfg.continuousIngest, searchIndexDir = idxBase), cfg)
   }
 
-  /** One maintenance pass over every space's search index (advance —
-    * which builds on first touch and CDC-syncs after — then FOLD once the
-    * active generation accretes [[graft.streaming.CdcIndexSync.FoldBatches]]
-    * sync batches, the ledger/postings lifecycle, r15) — the ONE copy of
-    * the sweep policy, called by the standing daemon and by specs (review
-    * r15: the daemon re-implemented it inline, so the two copies could
-    * drift). `onError` is the per-space isolation: one space's broken
-    * index must not stop another's sync; the default rethrows so specs
-    * fail loudly. */
+  /** One maintenance pass over every space's configured policy, in
+    * dependency order: retention (spaces with `keep_days`), compaction
+    * (`compaction_sweep_minutes` > 0), the search index under `idxBase`
+    * (`search_index`), vacuum (`vacuum_keep_snapshots` > 0). Retention and
+    * compaction commit snapshots, the index advances to the newest one,
+    * and vacuum runs last so the index's diff base still exists when it
+    * advances. Each step, and each space within a step, is isolated: a
+    * failure goes to `onError` as "<step> <space>" and the pass goes on.
+    * The standing daemon's one body; specs drive it directly. */
+  def sweep(g: Graft, cfg: Graft.Config, idxBase: String,
+            onError: (String, Throwable) => Unit = logSweepFailure): Unit = {
+    def each(step: String, spaces: Iterable[String])(body: String => Unit): Unit =
+      spaces.foreach { sp =>
+        try body(sp)
+        catch { case NonFatal(e) => onError(s"$step $sp", e) }
+      }
+    each("retention", g.configuredKeepDays.keys) { sp =>
+      val days = g.remove(g.configuredKeepDays(sp), sp)
+      if (days.nonEmpty)
+        println(s"[graft] retention dropped buckets $days from $sp")
+    }
+    if (cfg.compactionSweepMinutes > 0) each("compaction", g.spaces()) { sp =>
+      val swaps = g.compactIfFragmented(sp, cfg.compactionMaxFiles,
+        cfg.compactionTargetMb * 1024L * 1024)
+      if (swaps.nonEmpty)
+        println(s"[graft] compacted $sp: " + swaps.map { case (d, b, a) =>
+          s"day $d $b->$a files" }.mkString(", "))
+    }
+    if (cfg.searchIndex)
+      searchIndexSweep(g, idxBase, (sp, e) => onError(s"search-index $sp", e))
+    if (cfg.vacuumKeepSnapshots > 0) each("vacuum", g.spaces()) { sp =>
+      val freed = g.vacuum(sp, cfg.vacuumKeepSnapshots)
+      if (freed.nonEmpty)
+        println(s"[graft] vacuum reclaimed ${freed.size} files from $sp")
+    }
+  }
+
+  /** The search-index step of [[sweep]]: one
+    * [[graft.streaming.CdcIndexSync.maintain]] pass per space (advance,
+    * fold, index GC, serving view). `onError` is the per-space isolation:
+    * one space's broken index must not stop another's; the default
+    * rethrows so specs fail loudly. */
   def searchIndexSweep(g: Graft, idxBase: String,
                        onError: (String, Throwable) => Unit =
                          (_, e) => throw e): Unit =
     g.spaces().foreach { sp =>
-      try {
-        val dir = s"$idxBase/$sp"
-        _root_.graft.streaming.CdcIndexSync.advance(g, dir, sp)
-        val s = org.apache.spark.sql.SparkSession.active
-        if (_root_.graft.streaming.CdcIndexSync.ledgerBatches(s, dir) >=
-            _root_.graft.streaming.CdcIndexSync.FoldBatches)
-          _root_.graft.streaming.CdcIndexSync.compactIndex(s, dir,
-            g.configuredClaim)
-        // generation GC + landing repair ride the same sweep (r17,
-        // VERDICT r16 #5 + ADVICE r16 medium): dead staging and
-        // out-of-grace generations are reclaimed between folds, and any
-        // stale land claim (a copier that died between claim and done)
-        // is taken over and its batch re-landed from the grace
-        // generation — without this a crashed late-copy stays
-        // committed-but-invisible until a rebuild
-        _root_.graft.streaming.CdcIndexSync.vacuumIndex(s, dir)
-        // ES-refresh parity (r18): materialize the searchable view for
-        // the just-synced state so /search requests only probe postings
-        // against the resident corpus side — never pay the alive-merge
-        // or corpus-stats scans per request
-        _root_.graft.streaming.CdcIndexSync.refreshServeCache(s, dir)
-      } catch {
-        case scala.util.control.NonFatal(e) => onError(sp, e)
-      }
+      try CdcIndexSync.maintain(g, s"$idxBase/$sp", sp)
+      catch { case NonFatal(e) => onError(sp, e) }
     }
 
   def main(args: Array[String]): Unit = {
@@ -126,67 +142,21 @@ object ServerMain {
       .appName("graft-server")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val (g, srv, cfgForDaemons) = boot(spark, configPath, root)
+    val (g, srv, cfg) = boot(spark, configPath, root)
     val port = srv.start()
     println(s"graft serving on 127.0.0.1:$port, store at $root")
-    // configured retention becomes a standing hourly sweep
-    val sweeper =
-      if (gKeepDays(g).nonEmpty) {
-        val ex = java.util.concurrent.Executors.newSingleThreadScheduledExecutor(
-          r => { val t = new Thread(r, "graft-retention"); t.setDaemon(true); t })
-        ex.scheduleAtFixedRate(() =>
-          try {
-            val dropped = g.retentionSweep()
-            dropped.filter(_._2.nonEmpty).foreach { case (sp, days) =>
-              println(s"[graft] retention dropped buckets $days from $sp") }
-          } catch { case e: Throwable => logSweepFailure("retention", e) },
-          1, 60, java.util.concurrent.TimeUnit.MINUTES)
-        Some(ex)
-      } else None
-    // the maintenance daemon (r14): compaction, search-index sync, and
-    // vacuum share one standing sweep. Each half is independently gated
-    // by ITS OWN config (review r14: nesting them under the compaction
-    // gate made `search_index: true, compaction_sweep_minutes: 0` a
-    // silently-stale index and disabled reclaim), each half's failure is
-    // isolated (one space's broken index must not stop another space's
-    // vacuum), and the halves run in dependency order: compaction commits
-    // snapshots, index sync diffs up to the newest one, vacuum runs LAST
-    // so the sync's diff-base snapshot still exists when sync needs it.
-    val wantCompact = cfgForDaemons.compactionSweepMinutes > 0
-    val wantIndex = cfgForDaemons.searchIndex
-    val wantVacuum = cfgForDaemons.vacuumKeepSnapshots > 0
-    val compactor =
-      if (wantCompact || wantIndex || wantVacuum) {
-        val mins = if (wantCompact) cfgForDaemons.compactionSweepMinutes.toLong
-                   else 60L
-        val ex = java.util.concurrent.Executors.newSingleThreadScheduledExecutor(
-          r => { val t = new Thread(r, "graft-maintenance"); t.setDaemon(true); t })
-        def half(what: String)(body: => Unit): Unit =
-          try body
-          catch { case e: Throwable => logSweepFailure(what, e) }
-        ex.scheduleAtFixedRate(() => {
-          if (wantCompact) half("compaction") {
-            val done = g.compactionSweep(cfgForDaemons.compactionMaxFiles,
-              cfgForDaemons.compactionTargetMb * 1024L * 1024)
-            done.foreach { case (sp, swaps) =>
-              println(s"[graft] compacted $sp: " + swaps.map { case (d, b, a) =>
-                s"day $d $b->$a files" }.mkString(", ")) }
-          }
-          if (wantIndex) searchIndexSweep(g, s"$root/.search-index",
-            (sp, e) => logSweepFailure(s"search-index $sp", e))
-          if (wantVacuum) g.spaces().foreach { sp =>
-            half(s"vacuum $sp") {
-              val freed = g.vacuum(sp, cfgForDaemons.vacuumKeepSnapshots)
-              if (freed.nonEmpty)
-                println(s"[graft] vacuum reclaimed ${freed.size} files from $sp")
-            }
-          }
-        }, mins, mins, java.util.concurrent.TimeUnit.MINUTES)
-        Some(ex)
-      } else None
+    val mins =
+      if (cfg.compactionSweepMinutes > 0) cfg.compactionSweepMinutes.toLong
+      else 60L
+    val maintenance = Executors.newSingleThreadScheduledExecutor(
+      r => { val t = new Thread(r, "graft-maintenance"); t.setDaemon(true); t })
+    // a throw escaping the task would cancel every later pass
+    maintenance.scheduleAtFixedRate(() =>
+      try sweep(g, cfg, s"$root/.search-index")
+      catch { case e: Throwable => logSweepFailure("maintenance", e) },
+      1, mins, TimeUnit.MINUTES)
     sys.addShutdownHook {
-      sweeper.foreach(_.shutdownNow())
-      compactor.foreach(_.shutdownNow())
+      maintenance.shutdownNow()
       srv.stop() // flushes queued writes
       g.stopContinuous() // loss-free: uncommitted spool files replay on boot
       spark.stop()
@@ -194,9 +164,7 @@ object ServerMain {
     Thread.currentThread().join() // serve until killed
   }
 
-  private def gKeepDays(g: Graft): Map[String, Int] = g.configuredKeepDays
-
-  /** A failed sweep half is logged with its exception class and stack
+  /** A failed sweep step is logged with its exception class and stack
     * trace — a bare message (often null for NPEs and wrapped Spark errors)
     * cannot tell an operator what broke. */
   private def logSweepFailure(what: String, e: Throwable): Unit = {

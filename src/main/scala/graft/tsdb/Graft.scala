@@ -271,37 +271,25 @@ class Graft(spark: SparkSession, root: String,
   }
 
   /** A nonce identifying THIS incarnation of the space's history (r15):
-    * created once (create-exclusive; racers converge by re-read) beside
-    * the snapshots, destroyed with them when the space is wiped. CDC
-    * consumers record it so a wiped-and-RECREATED space — whose new
-    * history can coincidentally reach the same snapshot seq the consumer
-    * is committed at — reads as a RESET, not as "already current" or a
-    * structurally-valid-but-semantically-wrong diff (the bound r14 drew
-    * around the same-seq rebuild edge, closed at the root). Snapshot
+    * created once (through the store's snapshot claim; racers converge by
+    * re-read) beside the snapshots, destroyed with them when the space is
+    * wiped. CDC consumers record it so a wiped-and-RECREATED space — whose
+    * new history can coincidentally reach the same snapshot seq the
+    * consumer is committed at — reads as a RESET, not as "already current"
+    * or a structurally-valid-but-semantically-wrong diff (the bound r14
+    * drew around the same-seq rebuild edge, closed at the root). Snapshot
     * seqs alone can never carry this: they restart at 1 by design.
     */
   def storeIdentity(space: String = "default"): String = {
     val (fs, mdir) = fsOf(manifestPath(space))
     val f = new HPath(mdir, "identity")
-    def readIt(): String = {
-      val in = fs.open(f)
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      finally in.close()
-    }
-    if (fs.exists(f)) readIt()
-    else {
+    Graft.readSmallFile(fs, f).map(_.trim).getOrElse {
       fs.mkdirs(mdir)
       val id = java.util.UUID.randomUUID().toString
-      try {
-        val out = fs.create(f, false)
-        try out.write(id.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        id
-      } catch { // another process won the create: its identity is THE one
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => readIt()
-        case _: java.nio.file.FileAlreadyExistsException => readIt()
-      }
+      if (claimFile(fs, f, id)) id
+      else Graft.readSmallFile(fs, f).map(_.trim).getOrElse(
+        throw new IllegalStateException(
+          s"store identity $f vanished right after another writer claimed it"))
     }
   }
 
@@ -1849,13 +1837,19 @@ class Graft(spark: SparkSession, root: String,
   def compactionSweep(maxFilesPerBucket: Int = 8,
                       targetBytes: Long = 128L * 1024 * 1024)
       : Map[String, Seq[(Long, Int, Int)]] =
-    spaces().flatMap { sp =>
-      val frag = fragmentation(sp)
-      if (frag.exists(b => b._2 > maxFilesPerBucket || b._4)) {
-        val done = compact(sp, targetBytes)
-        if (done.nonEmpty) Some(sp -> done) else None
-      } else None
-    }.toMap
+    spaces().map(sp =>
+      sp -> compactIfFragmented(sp, maxFilesPerBucket, targetBytes))
+      .filter(_._2.nonEmpty).toMap
+
+  /** One space's share of [[compactionSweep]]: [[compact]] it when its
+    * [[fragmentation]] report shows a bucket past `maxFilesPerBucket` or
+    * still carrying write-sequence stamps; Nil when left untouched. */
+  def compactIfFragmented(space: String, maxFilesPerBucket: Int = 8,
+                          targetBytes: Long = 128L * 1024 * 1024)
+      : Seq[(Long, Int, Int)] =
+    if (fragmentation(space).exists(b => b._2 > maxFilesPerBucket || b._4))
+      compact(space, targetBytes)
+    else Nil
 
   /** Config-driven retention: apply every `keep_days` configured per space
     * (Graft.Config / `spaces.<name>.keep_days`) through [[remove]] — the
@@ -1868,9 +1862,9 @@ class Graft(spark: SparkSession, root: String,
       : Map[String, Seq[Long]] =
     spaceKeepDays.map { case (sp, kd) => sp -> remove(kd, sp, todayDay) }
 
-  /** The per-space keep_days policy this store was configured with — lets
-    * an operator surface (ServerMain's retention daemon) decide whether a
-    * standing sweep is wanted at all. */
+  /** The per-space keep_days policy this store was configured with — the
+    * spaces the maintenance sweep's retention step visits
+    * ([[graft.http.ServerMain.sweep]]). */
   def configuredKeepDays: Map[String, Int] = spaceKeepDays
 }
 
