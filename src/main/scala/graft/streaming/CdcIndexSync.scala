@@ -335,10 +335,10 @@ object CdcIndexSync {
     fs.delete(dir, true)
   }
 
-  /** What a diff landed: the generation it landed in, and the batch, kept
-    * for the post-commit re-land into a generation a fold moved to. */
-  private case class Landed(genDir: String, newDocs: DataFrame,
-                            deltas: DataFrame)
+  /** What a diff landed: the generation it landed in, and the batch's
+    * ledger rows with each touched doc's text, kept for the post-commit
+    * re-land into a generation a fold moved to. */
+  private case class Landed(genDir: String, deltas: DataFrame)
 
   private def consume(g: Graft, indexDir: String, space: String): Long = {
     val s = SparkSession.active
@@ -414,7 +414,8 @@ object CdcIndexSync {
         .as("delta"),
         first(col("text")).as("text"))
       .where(col("delta") =!= 0L)
-      .localCheckpoint(true) // feeds the ledger write AND new-doc probe
+      .localCheckpoint(true) // feeds the ledger write, the new-doc probe
+                             // and any re-land into a folded generation
     if (deltas.isEmpty) return None // pure physical rewrite: nothing to land
     // a doc the index has EVER seen keeps its postings (dead or alive —
     // resurrection is a ledger flip); only never-seen docs index anew
@@ -423,12 +424,9 @@ object CdcIndexSync {
     val newDocs = deltas.where(col("delta") > 0)
       .join(known, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("text"))
-      .localCheckpoint(true) // pinned: a re-land below must not re-read
-                             // a generation a concurrent fold reclaimed
-    val batch = Landed(st.genDir, newDocs, deltas.select("doc_id", "delta"))
-    landBatch(indexDir, st.genDir, to, batch.newDocs, batch.deltas)
+    landBatch(indexDir, st.genDir, to, newDocs, deltas)
     syncCommitHook()
-    Some(batch)
+    Some(Landed(st.genDir, deltas))
   }
 
   /** Close the fold race (review r15), after the diff's marker commits: a
@@ -443,20 +441,28 @@ object CdcIndexSync {
     * delete/commit into a union of part-files — duplicated postings).
     * The fold's post-commit check covers the mirror-image interleaving,
     * so every committed batch reaches the active generation whichever
-    * marker lands second. */
+    * marker lands second. The batch's new docs were chosen against the
+    * generation it first landed in; the fold may have dropped a doc that
+    * was dead at its base and that this batch resurrects, so the re-land
+    * indexes every positive-delta doc the active generation holds no
+    * doclen for ([[unindexedIn]]). */
   private def relandIntoActive(s: SparkSession, g: Graft, indexDir: String,
                                to: Long, batch: Landed): Unit = {
     var landedDir = batch.genDir
-    var active = state(s, indexDir).map(_.genDir).getOrElse(landedDir)
+    var st = state(s, indexDir)
+    var active = st.map(_.genDir).getOrElse(landedDir)
     var guard = 0
     while (active != landedDir && guard < 8) {
       val resolved = Graft.resolveClaim(fsOf(s, indexDir)._1,
         g.configuredClaim, s"index land marker at $indexDir")
+      val docs = unindexedIn(s, indexDir, active, to,
+        st.fold(to)(_.snap), batch.deltas).select(col("doc_id"), col("text"))
       ensureLanded(s, indexDir, active, to, resolved) {
-        landBatch(indexDir, active, to, batch.newDocs, batch.deltas)
+        landBatch(indexDir, active, to, docs, batch.deltas)
       }
       landedDir = active
-      active = state(s, indexDir).map(_.genDir).getOrElse(active)
+      st = state(s, indexDir)
+      active = st.map(_.genDir).getOrElse(active)
       guard += 1
     }
     if (active != landedDir) throw new IllegalStateException(
@@ -660,7 +666,7 @@ object CdcIndexSync {
             "partitions (reclaimed past the grace window) — the index " +
             "must be rebuilt (CdcIndexSync.build)"))
       ensureLanded(s, indexDir, st.genDir, batch, resolved) {
-        copyBatch(s, indexDir, src, st.genDir, batch)
+        copyBatch(s, indexDir, src, st.genDir, batch, st.snap)
       }
       (st.genDir, batch)
     }
@@ -747,25 +753,56 @@ object CdcIndexSync {
       })
   }
 
-  /** Copy one committed batch's partitions from `srcGen` into `dstGen`
-    * family by family — the landing body shared by the fold's late-copy
-    * and [[repairLandings]]. Dynamic partition overwrite: idempotent per
-    * (family, batch). */
+  /** The rows of `deltas` (one batch's ledger rows) with a positive delta
+    * for a doc that generation `genDir` holds no doclen for at any
+    * committed batch other than `batch`: the docs that batch must land postings,
+    * doclen and termdict for in that generation. A landing into the
+    * generation its new docs were chosen against needs no such check; a
+    * landing into another one does, because a fold drops docs dead at its
+    * base, and a batch that resurrects one (a ledger `+1` where the doc
+    * was known) would otherwise leave it live with no doclen. This keeps
+    * the invariant that every doc with a positive ledger sum in a
+    * generation has postings and doclen there. */
+  private def unindexedIn(s: SparkSession, indexDir: String, genDir: String,
+                          batch: Long, committed: Long,
+                          deltas: DataFrame): DataFrame = {
+    val indexed = readFam(s, indexDir, genDir, "doclen")
+      .where(col("ingest_batch") <= committed &&
+        col("ingest_batch") =!= batch)
+      .select("doc_id")
+    deltas.where(col("delta") > 0).join(indexed, Seq("doc_id"), "left_anti")
+  }
+
+  /** Land one committed batch from `srcGen` into `dstGen`, the landing
+    * body shared by the fold's late-copy and [[repairLandings]]: the
+    * ledger rows as they are, and postings, doclen and termdict for the
+    * batch's [[unindexedIn]] docs, taken from `srcGen` at or below the
+    * batch (a resurrected doc's rows sit in an older batch there).
+    * `committed` bounds the destination's doclen check. Dynamic partition
+    * overwrite: idempotent per (family, batch). */
   private def copyBatch(s: SparkSession, indexDir: String, srcGen: String,
-                        dstGen: String, batch: Long): Unit =
-    Families.foreach { fam =>
-      val late = readFam(s, indexDir, srcGen, fam)
-        .where(col("ingest_batch") === batch)
-      if (!late.isEmpty) {
-        val parts =
-          if (fam == "postings") Seq("bucket", "ingest_batch")
-          else Seq("ingest_batch")
-        late.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(parts: _*)
-          .parquet(famDir(indexDir, dstGen, fam))
-      }
+                        dstGen: String, batch: Long, committed: Long): Unit = {
+    def src(fam: String) = readFam(s, indexDir, srcGen, fam)
+    val deltas = src("counts").where(col("ingest_batch") === batch)
+      .select(col("doc_id"), col("delta"))
+      .localCheckpoint(true) // feeds the doc check AND the ledger write
+    val docs = unindexedIn(s, indexDir, dstGen, batch, committed, deltas)
+      .select("doc_id")
+    def rowsOf(fam: String) = src(fam).where(col("ingest_batch") <= batch)
+      .join(docs, "doc_id").drop("ingest_batch")
+    val posts = rowsOf("postings").localCheckpoint(true)
+    val dst = famDir(indexDir, dstGen, _: String)
+    if (!posts.isEmpty) {
+      IndexStream.overwriteBatch(posts, batch, dst("postings"),
+        "bucket", "ingest_batch")
+      IndexStream.overwriteBatch(posts.select("tok", "bucket").distinct(),
+        batch, dst("termdict"), "ingest_batch")
+      IndexStream.overwriteBatch(rowsOf("doclen"), batch, dst("doclen"),
+        "ingest_batch")
     }
+    if (!deltas.isEmpty)
+      IndexStream.overwriteBatch(deltas, batch, dst("counts"), "ingest_batch")
+  }
 
   /** The fold (r15, VERDICT r14 #1 — the maintenance path the r14
     * scaladoc promised): collapse the ledger to ONE exact count per LIVE
@@ -897,7 +934,7 @@ object CdcIndexSync {
         .collect().map(_.getLong(0)).sorted // driver-sized: one per sync
       lateBatches.foreach { b =>
         ensureLanded(s, indexDir, stageDir, b, resolvedClaim) {
-          copyBatch(s, indexDir, st.genDir, stageDir, b)
+          copyBatch(s, indexDir, st.genDir, stageDir, b, nowCommitted)
         }
       }
     }
@@ -907,18 +944,25 @@ object CdcIndexSync {
     next
   }
 
-  /** Candidate buckets for a set of prefixes, from the `termdict`
-    * sidecar: the buckets holding ≥1 matching dictionary term — the
+  /** Candidate buckets for a set of prefixes, from a `termdict` frame at
+    * state `st`: the buckets holding ≥1 matching dictionary term — the
     * prefix analog of the exact-term hash pruning (r15, VERDICT r14 #8).
     * Driver-sized: ≤ [[IndexStream.NBuckets]] entries. */
   private[graft] def prefixCandidateBuckets(
-      s: SparkSession, indexDir: String, st: IdxState,
-      prefixes: Seq[String]): Seq[Long] =
-    readFam(s, indexDir, st.genDir, "termdict")
+      termdict: DataFrame, st: IdxState, prefixes: Seq[String]): Seq[Long] =
+    termdict
       .where(col("ingest_batch") <= st.snap)
       .where(prefixes.map(p => col("tok").startsWith(p)).reduce(_ || _))
       .select(col("bucket")).distinct()
       .collect().map(_.getLong(0)).toSeq
+
+  /** [[prefixCandidateBuckets]] over a fresh read of the state's
+    * `termdict`. */
+  private[graft] def prefixCandidateBuckets(
+      s: SparkSession, indexDir: String, st: IdxState,
+      prefixes: Seq[String]): Seq[Long] =
+    prefixCandidateBuckets(readFam(s, indexDir, st.genDir, "termdict"), st,
+      prefixes)
 
   /** The state's LIVE per-doc length view: counts-summed liveness (docs
     * whose point count is positive at the committed snap) joined onto
@@ -954,8 +998,26 @@ object CdcIndexSync {
   // Unpersist on replace is non-blocking — an in-flight search holding
   // the old plan recomputes evicted blocks from lineage, and the facade
   // falls back to the direct scan if the old generation's files are gone.
+
+  /** The searchable view of one exact index state, built once by
+    * [[refreshServeCache]]: the persisted live doclen view `dl` with its
+    * corpus stats, and the state's `postings` and `termdict` frames, each
+    * read once, so their file listings are resolved at refresh and a
+    * search against this state plans with no directory listing.
+    *
+    * A held listing is never stale for its state. Once a generation's
+    * marker lands, its partitions at `ingest_batch <= st.snap` do not
+    * change (the sweep refreshes only after its own landings and
+    * late-copies finish). Partitions above `snap` can still appear (a
+    * later sync) or be deleted (a sync's cleanup of a crashed landing);
+    * every probe's `ingest_batch <= st.snap` partition filter prunes them
+    * before any file is opened, so it must stay on every probe. A
+    * generation reclaimed under a search makes the probe throw, as it
+    * does for the persisted `dl`, and the facade serves the scan when
+    * that happens while planning. */
   private case class ServeView(st: IdxState, dl: DataFrame,
-                               nDocs: Long, totalTokens: Long)
+                               nDocs: Long, totalTokens: Long,
+                               postings: DataFrame, termdict: DataFrame)
   private val serveCache =
     new java.util.concurrent.ConcurrentHashMap[String, ServeView]()
   /** The PREVIOUS state's view, kept persisted for one more refresh
@@ -969,9 +1031,11 @@ object CdcIndexSync {
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   /** Materialize (or reuse) the searchable view for the CURRENT committed
-    * state. Called by the maintenance sweep after sync/fold/vacuum —
-    * searches never pay the materialization. No-op when the cached state
-    * is already current or the index has no committed state yet. */
+    * state: persist the live doclen view, collect its corpus stats and
+    * resolve the `postings` and `termdict` file listings. Called by the
+    * maintenance sweep after sync/fold/vacuum — searches never pay the
+    * materialization or the listings. No-op when the cached state is
+    * already current or the index has no committed state yet. */
   def refreshServeCache(s: SparkSession, indexDir: String): Unit =
     serveCache.synchronized {
       state(s, indexDir).foreach { st =>
@@ -981,7 +1045,9 @@ object CdcIndexSync {
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           val r = dl.agg(count(lit(1)), sum(col("dl"))).head() // materializes
           serveCache.put(indexDir,
-            ServeView(st, dl, r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1)))
+            ServeView(st, dl, r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1),
+              readFam(s, indexDir, st.genDir, "postings"),
+              readFam(s, indexDir, st.genDir, "termdict")))
           // retire, don't unpersist: the old view stays resident for one
           // more cycle so in-flight searches drain off it; the view from
           // TWO refreshes ago is past its drain window and releases now
@@ -1009,6 +1075,11 @@ object CdcIndexSync {
     * rank-identity contract), and the expanded terms probe like exact
     * ones.
     *
+    * A state the serving view holds ([[ServeView]]) is probed through the
+    * view's frames, so a warm search lists no index directory; any other
+    * state (cold start, or the window between an advance and the next
+    * refresh) reads the families afresh.
+    *
     * Only a current-format index is served: any other stamp throws,
     * naming the rebuild the next sweep performs (the facade then answers
     * from the store scan and logs the cause).
@@ -1026,31 +1097,33 @@ object CdcIndexSync {
         "(CdcIndexSync.sync) rebuilds it; until then /search answers from " +
         "the store scan")
     val committed = st.snap
-    // the refresh cache serves the corpus side when it matches THIS
-    // state; any other state (cold start, mid-sweep) builds it inline
+    // the refresh cache serves the corpus side and the family listings
+    // when it matches THIS state; any other state builds them inline
     val view = Option(serveCache.get(indexDir)).filter(_.st == st)
     val dl = view.map(_.dl).getOrElse(liveDoclen(s, indexDir, st))
-    val aliveIds = dl.select(col("doc_id"))
+    val postings = view.map(_.postings)
+      .getOrElse(readFam(s, indexDir, st.genDir, "postings"))
+      .where(col("ingest_batch") <= committed)
     val (exact, prefixes) = TextOps.splitSearchTerms(query0.distinct)
     val query =
       if (prefixes.isEmpty) exact
       else {
-        val postBase = readFam(s, indexDir, st.genDir, "postings")
-          .where(col("ingest_batch") <= committed)
-        val pruned = prefixCandidateBuckets(s, indexDir, st, prefixes) match {
-          case Nil => postBase.limit(0) // dictionary says: no match
-          case bs => postBase.where(col("bucket").isin(bs: _*))
+        val termdict = view.map(_.termdict)
+          .getOrElse(readFam(s, indexDir, st.genDir, "termdict"))
+        val pruned = prefixCandidateBuckets(termdict, st, prefixes) match {
+          case Nil => postings.limit(0) // dictionary says: no match
+          case bs => postings.where(col("bucket").isin(bs: _*))
         }
-        val vocab = pruned.join(aliveIds, "doc_id").select(col("tok"))
+        val vocab = pruned.join(dl.select(col("doc_id")), "doc_id")
+          .select(col("tok"))
         (exact ++ TextOps.expandPrefixes(vocab, prefixes)).distinct
       }
     if (query.isEmpty) // every prefix expanded to nothing: zero matches
       return dl.select(col("doc_id"), col("dl"),
         lit(0.0).as("score")).limit(0)
     val buckets = query.map(IndexStream.bucketIdOf).distinct
-    val post = readFam(s, indexDir, st.genDir, "postings")
-      .where(col("ingest_batch") <= committed &&
-        col("bucket").isin(buckets: _*) && col("tok").isin(query: _*))
+    val post = postings
+      .where(col("bucket").isin(buckets: _*) && col("tok").isin(query: _*))
     // searchOn's dl join restricts scoring (and df counts) to live docs —
     // no separate alive join on the probe side
     IndexStream.searchOn(post, dl, query, k,
