@@ -869,8 +869,10 @@ class Graft(spark: SparkSession, root: String,
 
   private val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
   private val queueLock = new Object
-  private val queuedLines =
-    scala.collection.mutable.Map.empty[String, scala.collection.mutable.ArrayBuffer[String]]
+  // each accepted point's normalized epoch-ms rides with its JSON line, so
+  // a flush can hand the writer its lines in time order (see flushLocked)
+  private val queuedLines = scala.collection.mutable.Map.empty[String,
+    scala.collection.mutable.ArrayBuffer[(Long, String)]]
   private val seqGen = new java.util.concurrent.atomic.AtomicLong(0L)
   // ONE strictly-monotonic generator stamps queued batches AND direct
   // write() defaults (anchored to wall-clock so stamps stay comparable
@@ -894,7 +896,7 @@ class Graft(spark: SparkSession, root: String,
     val (errors, g) = normalizeBatch(points)
     if (g.nonEmpty) queueLock.synchronized {
       queuedLines.getOrElseUpdate(space,
-        scala.collection.mutable.ArrayBuffer.empty[String]) ++= g
+        scala.collection.mutable.ArrayBuffer.empty) ++= g
       if (queuedLines.valuesIterator.map(_.size).sum >= maxQueuedPoints)
         flushLocked(null)
     }
@@ -903,17 +905,18 @@ class Graft(spark: SparkSession, root: String,
 
   /** Driver-side validation + normalization shared by the queued and
     * continuous write paths: per-point errors (as JSON objects, the
-    * reference's shape) and the accepted points as normalized JSONL —
-    * `time` rewritten to epoch millis, one monotonic `__wseq` stamp for the
-    * batch — ready for either the in-memory queue or a spool file.
+    * reference's shape) and the accepted points as (epoch-ms, normalized
+    * JSON line) pairs — `time` rewritten to those millis, one monotonic
+    * `__wseq` stamp for the batch — ready for either the in-memory queue or
+    * a spool file.
     */
   private def normalizeBatch(points: Seq[com.fasterxml.jackson.databind.JsonNode])
-      : (Seq[String], Seq[String]) = {
+      : (Seq[String], Seq[(Long, String)]) = {
     import com.fasterxml.jackson.databind.node.ObjectNode
     val seq = nextSeq()
     val zone = java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
     val errors = Seq.newBuilder[String]
-    val good = Seq.newBuilder[String]
+    val good = Seq.newBuilder[(Long, String)]
     points.foreach { p =>
       validatePoint(p, zone) match {
         case Left(err) =>
@@ -928,7 +931,7 @@ class Graft(spark: SparkSession, root: String,
             .asInstanceOf[ObjectNode]
           on.put("time", ms)
           on.put(WseqCol, seq)
-          good += on.toString
+          good += ((ms, on.toString))
       }
     }
     (errors.result(), good.result())
@@ -936,7 +939,14 @@ class Graft(spark: SparkSession, root: String,
 
   /** Land queued points (all spaces when `space` is null) in one flush per
     * space: three Spark jobs (JSON schema inference, the write, the stats
-    * scan). Safe to call when nothing is queued (no-op, no job). */
+    * scan). The lines reach the writer in time order, so each write task
+    * holds a contiguous bucket range and a flush writes at most
+    * `buckets + tasks - 1` files (arrival order put every bucket in every
+    * task: `buckets × tasks`). The order is invisible to last-write-wins:
+    * every line carries its batch's `__wseq`, and the merge keeps the max
+    * stamp per (series, time), value desc within one batch, whatever order
+    * the rows land in. Safe to call when nothing is queued (no-op, no
+    * job). */
   def flushQueued(space: String = null): Unit =
     queueLock.synchronized { flushLocked(space) }
 
@@ -944,7 +954,11 @@ class Graft(spark: SparkSession, root: String,
     val spaces = if (space == null) queuedLines.keys.toSeq else Seq(space)
     spaces.foreach { sp =>
       queuedLines.remove(sp).filter(_.nonEmpty).foreach { lines =>
-        val ds = spark.createDataset(lines.toSeq)(
+        // sorted on the epoch-ms: bucket_day is monotone in time and the
+        // local scan slices its rows into contiguous equal ranges, so each
+        // write task opens one file per bucket of ITS range only — no
+        // shuffle, no extra job
+        val ds = spark.createDataset(lines.sortBy(_._1).map(_._2).toSeq)(
           org.apache.spark.sql.Encoders.STRING)
         // rows are valid by construction (time already numeric ms, value and
         // tags validated at queue time), so the returned error frame is
@@ -1117,7 +1131,7 @@ class Graft(spark: SparkSession, root: String,
       val n = nextSeq()
       val tmp = new HPath(dir, s".tmp-$n")
       val out = fs.create(tmp, true)
-      try out.write((good.mkString("\n") + "\n")
+      try out.write((good.map(_._2).mkString("\n") + "\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
       if (!fs.rename(tmp, new HPath(dir, s"batch-$n.jsonl")))
