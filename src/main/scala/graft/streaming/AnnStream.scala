@@ -59,13 +59,8 @@ object AnnStream {
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
-        assignBatch(s, batch, codebook)
-          .withColumn("ingest_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("cell", "ingest_batch")
-          .parquet(indexDir)
-        ()
+        CdcStream.land(assignBatch(s, batch, codebook), indexDir, batchId,
+          "cell")
       }
       .start()
 

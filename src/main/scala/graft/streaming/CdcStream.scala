@@ -127,25 +127,32 @@ object CdcStream {
     Graft.writeSmallFile(fs, f, id)
   }
 
-  /** The canonical idempotent landing: partition the batch's effects by
-    * the snapshot they advance to, under dynamic partition overwrite —
-    * a replayed batch rewrites its own partition bit-identically instead
-    * of appending a duplicate. Read the consumer state back with
-    * [[readState]] (or any `ingest_batch`-agnostic aggregate).
+  /** The idempotent landing — every `ingest_batch`-keyed write in graft
+    * goes through here: the stream operators' state and outputs, the
+    * search index's families and its fold. Partition the batch's effects
+    * by `partitionBy` (leading columns, e.g. `"bucket"`) and then by the
+    * snapshot or micro-batch they advance to, under dynamic partition
+    * overwrite — a replayed batch rewrites its own partitions
+    * bit-identically instead of appending a duplicate. Read the state
+    * back with [[readState]] (or any `ingest_batch`-agnostic aggregate).
+    * A row-less `df` still writes (an empty dir with no partitions);
+    * callers that must not create one skip the call.
     *
     * Landings into one dir are serialized in-process: two concurrent
     * dynamic overwrites of the SAME partition can both delete it and then
     * both rename their staging copy in, and the second rename nests
     * `ingest_batch=n/ingest_batch=n` — a layout every later read rejects.
+    * Landings from different processes are not serialized.
     */
-  def land(df: DataFrame, dir: String, snap: Long): Unit = {
+  def land(df: DataFrame, dir: String, snap: Long,
+           partitionBy: String*): Unit = {
     val (fs, p) = fsOf(df.sparkSession, dir)
     landLocks.computeIfAbsent(fs.makeQualified(p).toString, _ => new Object)
       .synchronized {
         df.withColumn("ingest_batch", lit(snap))
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ingest_batch")
+          .partitionBy(partitionBy :+ "ingest_batch": _*)
           .parquet(dir)
       }
   }
@@ -153,9 +160,11 @@ object CdcStream {
   private val landLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Read a [[land]]-maintained state dir as one frame (empty, with the
-    * given schema, when nothing has landed yet — a zero-row consumer
-    * state is a normal state, not a schema-inference error). */
+  /** Read a [[land]]-maintained state dir as one frame under its declared
+    * `schema` — never schema inference, so `ingest_batch` reads back as
+    * the declared type. An absent dir, or one with no partitions (a
+    * row-less landing), reads as the declared empty frame: a zero-row
+    * consumer state is a normal state, not a schema-inference error. */
   def readState(s: SparkSession, dir: String,
                 schema: org.apache.spark.sql.types.StructType): DataFrame = {
     val (fs, p) = fsOf(s, dir)

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.text.TextOps
 
 /** Streaming maintenance of the exact-dedup content-hash index — the
@@ -41,7 +41,7 @@ object DedupStream {
         val hashed = batch
           .select(col("doc_id"), md5(TextOps.norm(col("text"))).as("h"))
           .localCheckpoint(true)
-        val idx = existingIndex(s, indexDir)
+        val idx = CdcStream.readState(s, indexDir, IndexSchema)
           .where(col("ingest_batch") =!= batchId) // replay: pre-crash state
           .select(col("h"))
         // first occurrence INSIDE the batch wins; anything matching the
@@ -54,32 +54,15 @@ object DedupStream {
             (coalesce(col("seen"), lit(0L)) === 1L || col("pos") > 1)
               .cast("bigint").as("is_dup"))
           .localCheckpoint(true)
-        flagged.select(col("doc_id"), col("is_dup"))
-          .withColumn("ingest_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ingest_batch")
-          .parquet(decisionsDir)
-        flagged.where(col("is_dup") === 0L).select(col("h"))
-          .withColumn("ingest_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ingest_batch")
-          .parquet(indexDir)
-        ()
+        CdcStream.land(flagged.select(col("doc_id"), col("is_dup")),
+          decisionsDir, batchId)
+        CdcStream.land(flagged.where(col("is_dup") === 0L).select(col("h")),
+          indexDir, batchId)
       }
       .start()
 
-  /** The index as written so far (with its ingest_batch partition column),
-    * or an empty frame before the first batch lands.
-    */
-  private def existingIndex(s: SparkSession, indexDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val hasData = fs.exists(p) &&
-      fs.listStatus(p).exists(_.getPath.getName.startsWith("ingest_batch="))
-    if (hasData) s.read.parquet(indexDir)
-    else s.createDataFrame(s.sparkContext.emptyRDD[Row],
-      StructType(Seq(StructField("h", StringType), StructField("ingest_batch", StringType))))
-  }
+  /** The content-hash index's declared schema: `ingest_batch` is the
+    * `lit(batchId)` long [[CdcStream.land]] writes. */
+  private val IndexSchema = StructType(Seq(StructField("h", StringType),
+    StructField("ingest_batch", LongType)))
 }

@@ -57,16 +57,6 @@ object IndexStream {
       }
       .start()
 
-  /** Write `df` under `ingest_batch = batch` with dynamic partition
-    * overwrite: a replayed batch rewrites exactly its own partitions. */
-  private[streaming] def overwriteBatch(df: DataFrame, batch: Long, dir: String,
-                                        partitionBy: String*): Unit =
-    df.withColumn("ingest_batch", lit(batch))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionBy: _*)
-      .parquet(dir)
-
   /** The ONE postings writer ([[start]] and `CdcIndexSync`'s batch
     * landing): tokenize `docs` `(doc_id, text)` with [[TextOps.tokens]]
     * and land, under `ingest_batch = batch`, the postings `(tok, doc_id,
@@ -82,19 +72,19 @@ object IndexStream {
       .where(col("tok") =!= "")
       .localCheckpoint(true) // one tokenize feeds postings AND lengths
     if (!tok.isEmpty) {
-      overwriteBatch(
+      CdcStream.land(
         tok.groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
           .withColumn("bucket", bucketCol(col("tok"))),
-        batch, dirOf("postings"), "bucket", "ingest_batch")
-      overwriteBatch(tok.groupBy(col("doc_id")).agg(count(lit(1)).as("dl")),
-        batch, dirOf("doclen"), "ingest_batch")
+        dirOf("postings"), batch, "bucket")
+      CdcStream.land(tok.groupBy(col("doc_id")).agg(count(lit(1)).as("dl")),
+        dirOf("doclen"), batch)
       // the term-dictionary sidecar (r15): the batch's DISTINCT terms with
       // their hash bucket — tiny next to postings (vocabulary, not
       // doc×term), and what lets a prefix probe open only the buckets
       // holding matching terms (see [[search]])
-      overwriteBatch(
+      CdcStream.land(
         tok.select(col("tok")).distinct().withColumn("bucket", bucketCol(col("tok"))),
-        batch, dirOf("termdict"), "ingest_batch")
+        dirOf("termdict"), batch)
     }
   }
 

@@ -74,15 +74,8 @@ object IngestStream {
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val b = batch.persist()
-        try
-          g.write(b, space)
-            .withColumn("ingest_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(errDir)
+        try CdcStream.land(g.write(b, space), errDir, batchId)
         finally b.unpersist()
-        ()
       }
       .start()
 
@@ -182,18 +175,12 @@ object IngestStream {
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.where(col("error").isNull)
+        CdcStream.land(batch.where(col("error").isNull)
           .groupBy(col("user_id"), col("event_type"),
             (floor(col("time_ms") / lit(3600000L)) * 3600000L).cast("bigint").as("hour_ms"))
           .agg(count(lit(1)).as("hn"),
             sum(col("value").cast("decimal(18,4)")).as("hsum"),
-            max(col("value")).as("hmax"))
-          .withColumn("ingest_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ingest_batch")
-          .parquet(rollupDir)
-        ()
+            max(col("value")).as("hmax")), rollupDir, batchId)
       }
       .start()
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
@@ -68,7 +68,7 @@ object NearDupStream {
         // the a<b rule applies to (history, arrival) pairs in BOTH
         // directions — flag the arrival on a smaller-id hit, emit a
         // correction for an indexed larger-id doc on a smaller-id arrival
-        val hist = existingIndex(s, indexDir)
+        val hist = CdcStream.readState(s, indexDir, IndexSchema)
           .where(col("ingest_batch") =!= batchId) // replay: pre-crash state
           .select(col("doc_id").as("hist_id"), col("band"), col("band_key"))
         val coll = bands.join(hist, Seq("band", "band_key"))
@@ -96,23 +96,11 @@ object NearDupStream {
             (coalesce(col("hist_dup"), lit(0L)) === 1L ||
               coalesce(col("batch_dup"), lit(0L)) === 1L).cast("bigint").as("is_dup"))
           .localCheckpoint(true)
-        flagged
-          .unionByName(corrections)
-          .withColumn("ingest_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ingest_batch")
-          .parquet(decisionsDir)
+        CdcStream.land(flagged.unionByName(corrections), decisionsDir, batchId)
         // index EVERY doc's bands (see scaladoc: LSH collision is not
         // transitive, so kept-only indexing would make decisions depend
         // on micro-batch boundaries)
-        bands
-          .withColumn("ingest_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ingest_batch")
-          .parquet(indexDir)
-        ()
+        CdcStream.land(bands, indexDir, batchId)
       }
       .start()
 
@@ -125,24 +113,9 @@ object NearDupStream {
     s.read.parquet(decisionsDir)
       .groupBy(col("doc_id")).agg(max(col("is_dup")).as("is_dup"))
 
-  /** The band index as written so far (with its ingest_batch partition
-    * column), or an empty frame before the first batch lands. The empty
-    * branch declares ingest_batch as LongType to match `lit(batchId)` and
-    * what partition inference reads back once data exists (ADVICE r11).
-    */
+  /** The band index's declared schema: `ingest_batch` is the
+    * `lit(batchId)` long [[CdcStream.land]] writes (ADVICE r11). */
   private val IndexSchema =
     StructType(Seq(StructField("doc_id", LongType), StructField("band", IntegerType),
       StructField("band_key", StringType), StructField("ingest_batch", LongType)))
-
-  private def existingIndex(s: SparkSession, indexDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val hasData = fs.exists(p) &&
-      fs.listStatus(p).exists(_.getPath.getName.startsWith("ingest_batch="))
-    // explicit schema on BOTH branches: partition inference would type
-    // ingest_batch as an integer once data exists, diverging from the empty
-    // frame's declaration (ADVICE r11)
-    if (hasData) s.read.schema(IndexSchema).parquet(indexDir)
-    else s.createDataFrame(s.sparkContext.emptyRDD[Row], IndexSchema)
-  }
 }

@@ -48,13 +48,7 @@ object QualityStream {
           if (b.columns.contains("source"))
             scored.join(b.select(col("doc_id"), col("source")), "doc_id")
           else scored.withColumn("source", lit("unknown"))
-        withSrc
-          .withColumn("ingest_batch", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ingest_batch")
-          .parquet(s"$outDir/decisions")
-        ()
+        CdcStream.land(withSrc, s"$outDir/decisions", batchId)
       }
       .start()
 

@@ -1123,10 +1123,7 @@ class Graft(spark: SparkSession, root: String,
       // queued path's ~6 ms; the spool's durability contract is the
       // atomic rename, and Spark's text source reads fine without the
       // sibling). HDFS/S3 are not ChecksumFileSystems — unaffected.
-      val fs = fs0 match {
-        case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-        case other => other
-      }
+      val fs = Graft.rawFs(fs0)
       fs.mkdirs(dir)
       val n = nextSeq()
       val tmp = new HPath(dir, s".tmp-$n")
