@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
@@ -62,6 +62,12 @@ import graft.tsdb.Graft
   * The nonce keys caches by BUILD, not by seq: a wiped-and-recreated
   * store whose rebuilt index lands the same seq still yields a fresh
   * marker name (VERDICT r14 #3).
+  *
+  * One maintainer at a time: build, sync, the fold and the generation GC
+  * each hold the index's maintenance lease (`_lease/lease_<n>`, a
+  * heartbeat-refreshed owner token), in this process or any other, and
+  * check it before every commit. A maintainer whose lease was taken over
+  * commits nothing. Readers take no lease.
   */
 object CdcIndexSync {
   import CdcStream.{fsOf, seqOf}
@@ -230,10 +236,10 @@ object CdcIndexSync {
       tagCols.map(c => coalesce(col(c).cast("string"), lit(""))): _*)
 
   /** Test seams (default no-op): run inside the fold's commit window
-    * (staged families written, fold marker not yet landed) and inside
-    * sync's commit window (batch landed, progress marker not yet) — the
-    * two interleavings of the sync-racing-fold hazard (review r15), made
-    * deterministic for the spec. */
+    * (staged families written, fold marker not yet claimed) and inside
+    * sync's commit window (batch landed, progress marker not yet), while
+    * the maintenance lease is held and before its fence check — the
+    * specs start a competing maintainer, or take the lease over, here. */
   private[graft] var foldCommitHook: () => Unit = () => ()
   private[graft] var syncCommitHook: () => Unit = () => ()
 
@@ -260,26 +266,30 @@ object CdcIndexSync {
     * one exact point count per series. A store whose points were ALL
     * retention-dropped builds an EMPTY index — committed, searchable
     * (zero hits), and advanceable by later syncs (ADVICE r14: this used
-    * to wedge on schema inference). Returns the snapshot the index now
-    * reflects.
+    * to wedge on schema inference). Runs under the index's maintenance
+    * lease. Returns the snapshot the index now reflects.
     */
-  def build(g: Graft, indexDir: String, space: String = "default"): Long = {
-    drop(SparkSession.active, indexDir)
-    advance(g, indexDir, space)
-  }
+  def build(g: Graft, indexDir: String, space: String = "default"): Long =
+    withLease(SparkSession.active, indexDir, g.configuredClaim,
+      "index progress marker") { lease =>
+      drop(SparkSession.active, indexDir)
+      advance(g, indexDir, space, lease)
+    }
 
   /** Advance a built index from its committed snapshot to the store's
-    * current one ([[advance]]); an index that was never built is refused
-    * — building one is [[build]]'s (or the maintenance sweep's) call.
-    * Returns the snapshot the index now reflects (a no-op when already
-    * current).
+    * current one ([[advance]]) under the index's maintenance lease; an
+    * index that was never built is refused — building one is [[build]]'s
+    * (or the maintenance sweep's) call. Returns the snapshot the index
+    * now reflects (a no-op when already current).
     */
-  def sync(g: Graft, indexDir: String, space: String = "default"): Long = {
-    if (state(SparkSession.active, indexDir).isEmpty)
-      throw new IllegalStateException(
-        s"no committed index at $indexDir — run build first")
-    advance(g, indexDir, space)
-  }
+  def sync(g: Graft, indexDir: String, space: String = "default"): Long =
+    withLease(SparkSession.active, indexDir, g.configuredClaim,
+      "index progress marker") { lease =>
+      if (state(SparkSession.active, indexDir).isEmpty)
+        throw new IllegalStateException(
+          s"no committed index at $indexDir — run build first")
+      advance(g, indexDir, space, lease)
+    }
 
   /** The index's one lifecycle step, a [[CdcStream.foreachDiff]]
     * consumer with `indexDir` as its state dir. foreachDiff decides the
@@ -292,34 +302,43 @@ object CdcIndexSync {
     * diff callback detects (a new tag column shifts the doc identity of
     * every existing doc, so incremental maintenance is unsound). Either
     * drops the index, so foreachDiff then takes the never-advanced case.
-    * The maintenance sweep calls this directly, so it builds on first
-    * touch. Returns the snapshot the index now reflects.
+    * Both callbacks check `lease` last, so a maintainer whose lease was
+    * taken over commits no progress marker. Returns the snapshot the
+    * index now reflects.
     */
-  private[graft] def advance(g: Graft, indexDir: String,
-                             space: String): Long = {
+  private def advance(g: Graft, indexDir: String, space: String,
+                      lease: Lease): Long = {
     val s = SparkSession.active
     if (state(s, indexDir).exists(_.stamp != Format)) drop(s, indexDir)
-    try consume(g, indexDir, space)
+    def consume(): Long = CdcStream.foreachDiff(g, space, indexDir)(
+      (pts, snap) => { rebuild(s, indexDir, pts, snap); lease.fence() })(
+      (ch, snap) => { applyDiff(s, indexDir, ch, snap); lease.fence() })
+    try consume()
     catch { case TagsChanged =>
       drop(s, indexDir)
-      consume(g, indexDir, space)
+      consume()
     }
   }
 
   /** One maintenance pass over one space's index, the index step of the
     * serving process's sweep ([[graft.http.ServerMain.searchIndexSweep]]):
-    * [[advance]] (builds on first touch), then [[compactIndex]] once the
-    * active generation has accreted [[FoldBatches]] sync batches, then
-    * [[vacuumIndex]] (landing repair + generation GC between folds), then
-    * [[refreshServeCache]] so `/search` requests never pay the alive-merge
-    * or corpus-stats scans. Every marker it claims rides the store's
+    * under ONE maintenance lease, [[advance]] (builds on first touch),
+    * then the fold ([[compactIndex]]) once the active generation has
+    * accreted [[FoldBatches]] sync batches, then the generation GC
+    * ([[vacuumIndex]]); the lease is released before
+    * [[refreshServeCache]], so `/search` requests never pay the
+    * alive-merge or corpus-stats scans and a reader never waits on a
+    * maintainer. Every marker it claims, and the lease, ride the store's
     * configured primitive. */
   def maintain(g: Graft, indexDir: String, space: String): Unit = {
     val s = SparkSession.active
-    advance(g, indexDir, space)
-    if (ledgerBatches(s, indexDir) >= FoldBatches)
-      compactIndex(s, indexDir, g.configuredClaim)
-    vacuumIndex(s, indexDir, claimPrimitive = g.configuredClaim)
+    withLease(s, indexDir, g.configuredClaim, "index progress marker") {
+      lease =>
+        advance(g, indexDir, space, lease)
+        if (ledgerBatches(s, indexDir) >= FoldBatches)
+          fold(s, indexDir, g.configuredClaim, lease)
+        vacuum(s, indexDir)
+    }
     refreshServeCache(s, indexDir)
   }
 
@@ -329,24 +348,13 @@ object CdcIndexSync {
   private object TagsChanged extends RuntimeException(
     "tag columns changed") with scala.util.control.NoStackTrace
 
+  /** Delete everything the index holds except its maintenance lease,
+    * which the dropping maintainer is holding. */
   private def drop(s: SparkSession, indexDir: String): Unit = {
     val (fs, dir) = fsOf(s, indexDir)
-    fs.delete(dir, true)
-  }
-
-  /** What a diff landed: the generation it landed in, and the batch's
-    * ledger rows with each touched doc's text, kept for the post-commit
-    * re-land into a generation a fold moved to. */
-  private case class Landed(genDir: String, deltas: DataFrame)
-
-  private def consume(g: Graft, indexDir: String, space: String): Long = {
-    val s = SparkSession.active
-    var landed: Option[Landed] = None
-    val to = CdcStream.foreachDiff(g, space, indexDir)(
-      (pts, snap) => rebuild(s, indexDir, pts, snap))(
-      (ch, snap) => landed = applyDiff(s, indexDir, ch, snap))
-    landed.foreach(relandIntoActive(s, g, indexDir, to, _))
-    to
+    if (fs.exists(dir)) fs.listStatus(dir).foreach { st =>
+      if (st.getPath.getName != LeaseDir) fs.delete(st.getPath, true)
+    }
   }
 
   /** foreachDiff's reset callback: wipe every generation and marker, then
@@ -369,9 +377,9 @@ object CdcIndexSync {
     Graft.writeSmallFile(fs, new HPath(s"$indexDir/_sync/format"), Format)
   }
 
-  /** Delete data partitions above the committed marker — a crashed
-    * sync's leftovers, which would otherwise become visible the moment
-    * a LATER marker lands. */
+  /** Delete data partitions above the committed marker — a crashed or
+    * fenced-out maintainer's leftovers, which would otherwise become
+    * visible the moment a LATER marker lands. */
   private def cleanupAbove(s: SparkSession, indexDir: String, genDir: String,
                            committed: Long): Unit = {
     val (fs, _) = fsOf(s, indexDir)
@@ -394,11 +402,12 @@ object CdcIndexSync {
     * (and resurrects for free if points return — unless a fold dropped
     * it while dead, in which case it re-indexes as a new doc). A diff
     * whose tag columns differ from the index's throws [[TagsChanged]]
-    * before landing anything. Returns what was landed, or None for a
-    * pure physical rewrite (a data-free advance).
+    * before landing anything. The batch lands in the active generation,
+    * which cannot change while the caller holds the lease. A pure
+    * physical rewrite (no net delta) lands nothing.
     */
   private def applyDiff(s: SparkSession, indexDir: String, ch: DataFrame,
-                        to: Long): Option[Landed] = {
+                        to: Long): Unit = {
     val st = state(s, indexDir).getOrElse(throw new IllegalStateException(
       s"index at $indexDir vanished while advancing to snapshot $to"))
     cleanupAbove(s, indexDir, st.genDir, st.snap)
@@ -413,9 +422,9 @@ object CdcIndexSync {
         .as("delta"),
         first(col("text")).as("text"))
       .where(col("delta") =!= 0L)
-      .localCheckpoint(true) // feeds the ledger write, the new-doc probe
-                             // and any re-land into a folded generation
-    if (deltas.isEmpty) return None // pure physical rewrite: nothing to land
+      .localCheckpoint(true) // feeds the emptiness check, the new-doc
+                             // probe and the ledger write
+    if (deltas.isEmpty) return // pure physical rewrite: nothing to land
     // a doc the index has EVER seen keeps its postings (dead or alive —
     // resurrection is a ledger flip); only never-seen docs index anew
     val known = readFam(s, indexDir, st.genDir, "counts")
@@ -425,52 +434,6 @@ object CdcIndexSync {
       .select(col("doc_id"), col("text"))
     landBatch(indexDir, st.genDir, to, newDocs, deltas)
     syncCommitHook()
-    Some(Landed(st.genDir, deltas))
-  }
-
-  /** Close the fold race (review r15), after the diff's marker commits: a
-    * fold that committed between the diff's start and its marker moved
-    * the active families to a NEW generation the landing never touched —
-    * without this the batch would be marked indexed but invisible, and
-    * never replayed (the next sync starts above it). Re-land into the
-    * active generation until stable, each landing serialized against the
-    * fold's own late-copy of the same batch by the per-(generation,
-    * batch) land claim (ADVICE r15 medium: two concurrent dynamic
-    * partition overwrites of the same partitions can interleave
-    * delete/commit into a union of part-files — duplicated postings).
-    * The fold's post-commit check covers the mirror-image interleaving,
-    * so every committed batch reaches the active generation whichever
-    * marker lands second. The batch's new docs were chosen against the
-    * generation it first landed in; the fold may have dropped a doc that
-    * was dead at its base and that this batch resurrects, so the re-land
-    * indexes every positive-delta doc the active generation holds no
-    * doclen for ([[unindexedIn]]). */
-  private def relandIntoActive(s: SparkSession, g: Graft, indexDir: String,
-                               to: Long, batch: Landed): Unit = {
-    var landedDir = batch.genDir
-    var st = state(s, indexDir)
-    var active = st.map(_.genDir).getOrElse(landedDir)
-    var guard = 0
-    while (active != landedDir && guard < 8) {
-      val resolved = Graft.resolveClaim(fsOf(s, indexDir)._1,
-        g.configuredClaim, s"index land marker at $indexDir")
-      val docs = unindexedIn(s, indexDir, active, to,
-        st.fold(to)(_.snap), batch.deltas).select(col("doc_id"), col("text"))
-      ensureLanded(s, indexDir, active, to, resolved) {
-        landBatch(indexDir, active, to, docs, batch.deltas)
-      }
-      landedDir = active
-      st = state(s, indexDir)
-      active = st.map(_.genDir).getOrElse(active)
-      guard += 1
-    }
-    if (active != landedDir) throw new IllegalStateException(
-      s"sync batch $to is committed but could not reach the active " +
-        s"generation after $guard fold flips (landed in '$landedDir', " +
-        s"active is '$active') — pathological fold churn at $indexDir; " +
-        "re-run the maintenance sweep once the folding stops " +
-        "(ADVICE r15: giving up silently here would leave the batch " +
-        "committed-but-invisible, the exact state this loop prevents)")
   }
 
   /** How many sync batches the active generation has accreted — the
@@ -487,221 +450,174 @@ object CdcIndexSync {
           f.isDirectory && f.getPath.getName.startsWith("ingest_batch="))
     }
 
-  /** How long a land-claim LOSER waits for the winner's done marker
-    * before failing loudly (test seam — specs shrink it). Generous next
-    * to a sub-second batch copy: a timeout means the winner crashed
-    * inside the landing window. */
-  private[graft] var landWaitMs: Long = 120000L
+  // ---- the maintenance lease ---------------------------------------------
+  //
+  // Advance (build/sync), fold and generation GC of one index never
+  // overlap, whether the competing maintainer runs in this process or
+  // another: each runs holding the index's one lease, a numbered file
+  // `lease_<n>` under `<indexDir>/_lease` whose body is the holder's owner
+  // token. So a sync lands into the generation it resolved, and a fold's
+  // committed snapshot cannot move under it. The lease lives outside
+  // `_sync` (the readers' per-request listing) and survives `drop`.
+  // Readers take no lease.
 
-  /** Test seam (default no-op): runs on the land-claim WINNER between its
-    * claim and its write — the window a concurrent loser observes. */
-  private[graft] var landClaimHook: () => Unit = () => ()
+  private val LeaseDir = "_lease"
 
-  /** Heartbeat interval for a land-claim WINNER: while its copy runs, a
-    * daemon thread refreshes the claim's mtime so [[repairLandings]]'
-    * staleness check is a real LEASE, not a guess about copy duration — a
-    * live-but-slow copier (a copy job exceeding staleMs on a loaded
-    * cluster) keeps its claim fresh and is never taken over (r17 ADVICE).
-    * Test seam; must be well under repairLandings' staleMs. */
-  private[graft] var landHeartbeatMs: Long = 15000L
+  /** Lease timing — test seams, not config. The holder refreshes its
+    * lease file's mtime every [[leaseHeartbeatMs]]; a lease unrefreshed
+    * for [[leaseStaleMs]] (four missed beats) belongs to a dead or frozen
+    * holder and is taken over — soon enough that a crash-restarted
+    * server's first sweep, a minute after boot, takes it. A contender
+    * waits up to [[leaseWaitMs]] for a live holder, then fails. */
+  private[graft] var leaseHeartbeatMs: Long = 15000L
+  private[graft] var leaseStaleMs: Long = 60000L
+  private[graft] var leaseWaitMs: Long = 120000L
 
-  /** Ensure batch `batch` is landed in staged generation `genDir` exactly
-    * once (ADVICE r15 medium): the fold's post-commit late-copy and
-    * sync's re-land loop can both try to copy the SAME batch into the
-    * SAME new generation concurrently, and two dynamic partition
-    * overwrites of one partition have no cross-job atomicity — the
-    * interleaved delete/commit can leave a UNION of both jobs' part-files
-    * (duplicated postings rows, inflated tf and ledger sums). A
-    * create-only per-(generation, batch) claim under `<genDir>/_land`
-    * picks ONE copier; it writes the families, then flips a `done`
-    * marker. The loser waits for `done` (the copies are bit-identical,
-    * so waiting is correctness-neutral) and fails LOUDLY on timeout — a
-    * crashed winner must surface as an error, not as a silently
-    * incomplete generation. Once `done` exists, later calls are free.
-    */
-  private[graft] def ensureLanded(s: SparkSession, indexDir: String,
-                                  genDir: String, batch: Long,
-                                  resolvedClaim: String)
-                                 (write: => Unit): Unit = {
-    require(genDir.nonEmpty, "land claims only guard staged generations")
-    val (fs, _) = fsOf(s, indexDir)
-    val landDir = new HPath(s"$indexDir/$genDir/_land")
-    val done = new HPath(landDir, s"b$batch.done")
-    val claim = new HPath(landDir, s"b$batch.claim")
-    if (fs.exists(done)) return
-    fs.mkdirs(landDir)
-    // claim-or-wait loop (ADVICE r16 medium): wait-only losers could time
-    // out against a claim nobody holds — a winner whose write FAILED
-    // releases its claim (below), and the loser must then retry the claim
-    // itself instead of giving up on a batch this process can land
-    val deadline = System.nanoTime() + landWaitMs * 1000000L
-    while (true) {
-      // the claim body is an owner token (fencing, r17 ADVICE): the winner
-      // re-reads it before flipping `done` — if repairLandings took over a
-      // claim this copier let go stale (only possible when it failed to
-      // heartbeat for staleMs, i.e. was frozen long past the lease), the
-      // body no longer matches and the fenced-out copier fails LOUDLY
-      // instead of committing over the repairer's landing
-      val owner = s"${ProcessHandle.current().pid()}-" +
-        java.util.UUID.randomUUID().toString
-      if (Graft.claimAt(fs, claim, owner, resolvedClaim)) {
-        landClaimHook()
-        // heartbeat: keep the claim's mtime fresh while the copy runs, so
-        // repairLandings' staleMs is a real lease for LIVE copiers
-        val hbStop = new java.util.concurrent.atomic.AtomicBoolean(false)
-        val hb = new Thread(() => {
-          while (!hbStop.get()) {
-            try fs.setTimes(claim, System.currentTimeMillis(), -1L)
-            catch { case _: java.io.IOException => () }
-            val next = System.nanoTime() + landHeartbeatMs * 1000000L
-            while (!hbStop.get() && System.nanoTime() < next)
-              Thread.sleep(10L)
-          }
-        }, s"graft-land-heartbeat-b$batch")
-        hb.setDaemon(true)
-        hb.start()
-        try {
-          try write
-          catch { case t: Throwable =>
-            // release the claim before rethrowing (ADVICE r16 low): the
-            // landing is an idempotent dynamic-partition overwrite, so a
-            // live retry (or a concurrent loser) can re-claim and redo it —
-            // a left-behind claim would force every later attempt to wait
-            // out landWaitMs against a dead claim and then fail
-            try fs.delete(claim, false)
-            catch { case _: java.io.IOException => () }
-            throw t
-          }
-        } finally hbStop.set(true)
-        val heldBy =
-          try Graft.readSmallFile(fs, claim).getOrElse("")
-          catch { case _: java.io.IOException => "" }
-        if (heldBy != owner) throw new IllegalStateException(
-          s"batch $batch's land claim in generation '$genDir' at $indexDir " +
-            "was taken over while this copier was writing (lease fenced: " +
-            "no heartbeat for repairLandings' staleMs) — the repairer owns " +
-            "the landing now and will flip done after its re-copy; this " +
-            "copier's result is NOT committed. If this recurs, raise " +
-            "staleMs or lower landHeartbeatMs")
-        Graft.writeSmallFile(fs, done, "")
-        return
-      }
-      // lost the claim: wait for the winner's done, but watch the CLAIM
-      // too — if it vanishes (failed winner released it) retry claiming
-      var claimHeld = true
-      while (claimHeld && !fs.exists(done)) {
-        if (System.nanoTime() > deadline) throw new IllegalStateException(
-          s"batch $batch's land claim in generation '$genDir' is held by " +
-            s"another writer that never finished (waited ${landWaitMs}ms) " +
-            s"— a copier crashed mid-landing at $indexDir. The batch is " +
-            "committed but not yet visible in this generation: run " +
-            "CdcIndexSync.repairLandings (the maintenance sweep's vacuum " +
-            "does) to take over stale claims and re-land it from a " +
-            "surviving generation")
-        Thread.sleep(25L)
-        if (!fs.exists(claim)) claimHeld = false
-      }
-      if (fs.exists(done)) return
-      // claim vanished without a done marker: loop and contest it
+  /** The lease dirs the calling thread holds: a nested acquire would wait
+    * on itself, so it is refused at once. */
+  private val heldHere =
+    ThreadLocal.withInitial[Set[String]](() => Set.empty[String])
+
+  /** A held lease, `lease_<n>` carrying `token`, its mtime kept fresh by a
+    * daemon heartbeat until [[release]]. */
+  private final class Lease(fs: FileSystem, dir: HPath, n: Long,
+                            token: String) {
+    private val file = new HPath(dir, s"lease_$n")
+    private val stop = new java.util.concurrent.CountDownLatch(1)
+    private val beat = new Thread(() =>
+      while (!stop.await(leaseHeartbeatMs,
+          java.util.concurrent.TimeUnit.MILLISECONDS))
+        try fs.setTimes(file, System.currentTimeMillis(), -1L)
+        catch { case _: java.io.IOException => () },
+      s"graft-index-lease-$n")
+    beat.setDaemon(true)
+    beat.start()
+
+    private def mine: Boolean =
+      try Graft.readSmallFile(fs, file).contains(token)
+      catch { case _: java.io.IOException => false }
+
+    /** The check before every commit point: this holder's file still
+      * carries its token and no higher-numbered lease exists — otherwise
+      * another maintainer took the lease over (this one missed its beats
+      * for [[leaseStaleMs]]) and this one must commit nothing. */
+    def fence(): Unit =
+      if (!mine || leaseFiles(fs, dir).exists(_._1 > n))
+        throw new IllegalStateException(
+          s"the maintenance lease lease_$n at $dir was taken over while " +
+            s"this maintainer held it (no heartbeat for ${leaseStaleMs}ms) " +
+            "— nothing is committed; the new holder maintains the index")
+
+    def release(): Unit = {
+      stop.countDown()
+      beat.join()
+      if (mine) fs.delete(file, false)
     }
   }
 
-  /** Repair incomplete landings (ADVICE r16 medium — the crashed-WINNER
-    * hole): a copier that died between claiming `b<batch>.claim` and
-    * flipping `done` leaves the batch committed-but-invisible in its
-    * generation, and since the next sync starts above the committed
-    * marker, nothing ever re-lands it. This sweep closes the hole from
-    * the landing ledger itself — a claim without a done marker IS the
-    * record of the incomplete copy. For each such claim older than
-    * `staleMs` (a real lease since r18: live copiers heartbeat the
-    * claim's mtime every [[landHeartbeatMs]], so a stale claim means the
-    * copier stopped heartbeating for staleMs — dead, or frozen past the
-    * lease, in which case the owner-token fence makes it abort instead
-    * of flipping done; specs pass 0), the claim is deleted and the batch
-    * re-landed under a fresh [[ensureLanded]] from the newest surviving
-    * generation that still has its `ingest_batch=` partitions — sync
-    * lands every batch into the generation it first resolved before
-    * re-landing forward, so the grace generation (kept one fold) has the
-    * partitions whichever side crashed. Throws if no surviving
-    * generation carries the batch (out-of-grace loss: rebuild the index).
-    * Returns the (genDir, batch) pairs repaired. Idempotent; safe to run
-    * while syncs are live (the re-land rides the same per-(generation,
-    * batch) claim they do). The re-land claims under `claimPrimitive`
-    * (the store's configured one, as for [[compactIndex]]), resolved only
-    * when a stale claim exists — so an index on an object store whose
-    * landings all completed never consults the primitive. */
-  def repairLandings(s: SparkSession, indexDir: String,
-                     staleMs: Long = 600000L,
-                     claimPrimitive: String = Graft.PrimAuto)
-      : Seq[(String, Long)] = {
-    val st = state(s, indexDir).getOrElse(return Nil)
-    if (st.genDir.isEmpty) return Nil // gen 0: no staged landings exist
-    val (fs, _) = fsOf(s, indexDir)
-    val landDir = new HPath(s"$indexDir/${st.genDir}/_land")
-    if (!fs.exists(landDir)) return Nil
-    val names = fs.listStatus(landDir).toSeq
-    val doneSet = names.map(_.getPath.getName)
-      .filter(_.endsWith(".done")).toSet
-    val now = System.currentTimeMillis()
-    val stale = names.filter { f =>
-      val n = f.getPath.getName
-      n.startsWith("b") && n.endsWith(".claim") &&
-        !doneSet(n.stripSuffix(".claim") + ".done") &&
-        now - f.getModificationTime >= staleMs
+  /** The `lease_<n>` files under `dir`, as (n, status). */
+  private def leaseFiles(fs: FileSystem, dir: HPath): Seq[(Long, FileStatus)] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.flatMap { st =>
+      val name = st.getPath.getName
+      if (!name.startsWith("lease_")) None
+      else name.stripPrefix("lease_").toLongOption.map(_ -> st)
     }
-    if (stale.isEmpty) return Nil
-    val resolved = Graft.resolveClaim(fs, claimPrimitive,
-      s"landing repair at $indexDir")
-    stale.map { f =>
-      val batch = f.getPath.getName.stripSuffix(".claim").drop(1).toLong
-      // take over the dead lease, then re-land under a fresh claim —
-      // a copier that is actually alive re-claims idempotently (the
-      // overwrite is per-partition and bit-identical)
-      fs.delete(f.getPath, false)
-      val src = generationWithBatch(s, indexDir, st.genDir, batch)
-        .getOrElse(throw new IllegalStateException(
-          s"batch $batch of generation '${st.genDir}' at $indexDir has an " +
-            "incomplete landing and NO surviving generation carries its " +
-            "partitions (reclaimed past the grace window) — the index " +
-            "must be rebuilt (CdcIndexSync.build)"))
-      ensureLanded(s, indexDir, st.genDir, batch, resolved) {
-        copyBatch(s, indexDir, src, st.genDir, batch, st.snap)
-      }
-      (st.genDir, batch)
+
+  /** Run `body` holding the index's maintenance lease, released on exit
+    * whether or not `body` throws. The lease is claimed through
+    * `primitive` resolved for the index's filesystem; `what` names the
+    * marker the operation commits, so an unknown scheme is refused naming
+    * it. */
+  private def withLease[T](s: SparkSession, indexDir: String,
+                           primitive: String, what: String)
+                          (body: Lease => T): T = {
+    val (fs, root) = fsOf(s, indexDir)
+    val dir = new HPath(root, LeaseDir)
+    val key = fs.makeQualified(dir).toString
+    if (heldHere.get()(key)) throw new IllegalStateException(
+      s"this thread already holds the maintenance lease at $indexDir — a " +
+        "nested build/sync/compactIndex/vacuumIndex would wait on itself")
+    val lease = acquire(fs, dir,
+      Graft.resolveClaim(fs, primitive, s"$what at $indexDir"))
+    heldHere.set(heldHere.get() + key)
+    try body(lease)
+    finally {
+      heldHere.set(heldHere.get() - key)
+      lease.release()
     }
   }
 
-  /** Fold-aware generation GC (r17, VERDICT r16 #5): reclaim DEAD
-    * generation directories without folding — the daemon treatment
-    * physical segment reclaim already gets. Between folds (or on an index
-    * that never accretes enough to fold again) crash-staging garbage and
-    * out-of-grace generations would otherwise sit on disk forever.
-    * Incomplete landings in the active generation are repaired FIRST
-    * ([[repairLandings]]) — their re-land source is the grace generation
-    * [[reclaim]] keeps, so repair-then-vacuum is safe in one pass;
-    * `claimPrimitive` is the repair's land claim ([[repairLandings]]).
-    * Returns the reclaimed directory names. */
+  /** Claim the lease. With no lease, or a stale highest one, claim the
+    * next number through the exclusive claim — two contenders that saw
+    * the same stale lease race for one name, so exactly one holds it —
+    * and delete the leases below it. A fresh lease is waited out for
+    * [[leaseWaitMs]], then refused naming its holder's token. */
+  private def acquire(fs: FileSystem, dir: HPath, resolved: String): Lease = {
+    val token = s"${ProcessHandle.current().pid()}-" +
+      java.util.UUID.randomUUID().toString
+    val deadline = System.nanoTime() + leaseWaitMs * 1000000L
+    fs.mkdirs(dir)
+    @scala.annotation.tailrec
+    def attempt(): Lease = {
+      val leases = leaseFiles(fs, dir)
+      val top = leases.maxByOption(_._1)
+      val fresh = top.exists(t =>
+        System.currentTimeMillis() - t._2.getModificationTime < leaseStaleMs)
+      if (!fresh) {
+        val n = top.fold(0L)(_._1) + 1
+        if (Graft.claimAt(fs, new HPath(dir, s"lease_$n"), token, resolved)) {
+          leases.foreach(l => fs.delete(l._2.getPath, false))
+          new Lease(fs, dir, n, token)
+        } else attempt() // another contender took n: look again
+      } else if (System.nanoTime() > deadline) {
+        val holder = top.flatMap(t => Graft.readSmallFile(fs, t._2.getPath))
+        throw new IllegalStateException(
+          s"the index maintenance lease at $dir is held by " +
+            s"'${holder.getOrElse("?")}' (waited ${leaseWaitMs}ms): another " +
+            "build, sync, fold or index GC is running on this index — retry " +
+            s"when it finishes; a holder silent for ${leaseStaleMs}ms is " +
+            "taken over")
+      } else {
+        Thread.sleep(50L)
+        attempt()
+      }
+    }
+    attempt()
+  }
+
+  /** Index generation GC (r17, VERDICT r16 #5), under the maintenance
+    * lease: reclaim DEAD generation directories without folding — the
+    * daemon treatment physical segment reclaim already gets. Between
+    * folds (or on an index that never accretes enough to fold again)
+    * crash staging and out-of-grace generations would otherwise sit on
+    * disk forever. The lease is claimed through `claimPrimitive` (the
+    * store's configured one, as for [[compactIndex]]). Returns the
+    * reclaimed directory names. */
   def vacuumIndex(s: SparkSession, indexDir: String,
-                  staleClaimMs: Long = 600000L,
-                  claimPrimitive: String = Graft.PrimAuto): Seq[String] = {
+                  claimPrimitive: String = Graft.PrimAuto): Seq[String] =
+    withLease(s, indexDir, claimPrimitive, "index maintenance lease")(
+      _ => vacuum(s, indexDir))
+
+  /** [[vacuumIndex]]'s body: [[reclaim]] at the resolved state. */
+  private def vacuum(s: SparkSession, indexDir: String): Seq[String] = {
     val (st, grace) = resolve(s, indexDir).getOrElse(return Nil)
     if (st.gen == 0) return Nil // only live staging can exist above gen 0
-    repairLandings(s, indexDir, staleClaimMs, claimPrimitive)
     reclaim(s, indexDir, st.snap, (st.gen, st.genDir), grace)
   }
 
-  /** The one reclaim rule, run by [[vacuumIndex]] and by [[compactIndex]]
-    * after it wins its marker: keep the `active` generation and the
-    * `grace` generation (one fold's in-flight-reader window); delete
-    * every other `g*` dir whose sequence is <= the active generation
-    * (crash garbage from lost fold races and out-of-grace history) —
-    * never a higher-seq dir, which may be a concurrent fold's live
-    * staging. When the grace generation is itself a staged dir, the
-    * gen-0 root families are out of grace and reclaimed too. Progress
-    * markers below `snap` and fold markers below the grace generation
-    * resolve nothing and are pruned — without this the hot-path `_sync`
-    * listing grows one file per sync forever (review r15). Returns the
-    * reclaimed directory names. */
+  /** The one reclaim rule, run by [[vacuumIndex]] and by the fold after
+    * it wins its marker: keep the `active` generation and the `grace`
+    * generation (one fold's in-flight-reader window); delete every other
+    * `g*` dir whose sequence is <= the active generation (crash garbage
+    * from lost fold claims and out-of-grace history) — never a higher-seq
+    * dir, which may be the staging of a fold whose lease was taken over
+    * and that has not reached its fence yet. When the grace generation is
+    * itself a staged dir, the gen-0 root families are out of grace and
+    * reclaimed too. Progress markers below `snap` and fold markers below
+    * the grace generation resolve nothing and are pruned — without this
+    * the hot-path `_sync` listing grows one file per sync forever (review
+    * r15). Returns the reclaimed directory names. */
   private def reclaim(s: SparkSession, indexDir: String, snap: Long,
                       active: Gen, grace: Gen): Seq[String] = {
     val (fs, root) = fsOf(s, indexDir)
@@ -730,100 +646,27 @@ object CdcIndexSync {
     reclaimed.toSeq
   }
 
-  /** The newest generation dir (any `g*` dir or the gen-0 root families,
-    * EXCLUDING `exclude`) that has `ingest_batch=<batch>` partitions for
-    * at least one family — the repair source for an incomplete landing.
-    * Maintenance-path listing; never on a query path. */
-  private def generationWithBatch(s: SparkSession, indexDir: String,
-                                  exclude: String,
-                                  batch: Long): Option[String] = {
-    val (fs, root) = fsOf(s, indexDir)
-    if (!fs.exists(root)) return None
-    val gens = fs.listStatus(root).toSeq
-      .filter(f => f.isDirectory && f.getPath.getName.startsWith("g") &&
-        f.getPath.getName.drop(1).headOption.exists(_.isDigit))
-      .map(_.getPath.getName)
-      .sortBy(n => n.drop(1).takeWhile(_.isDigit).toLong)(
-        Ordering[Long].reverse) :+ "" // gen-0 root families last
-    gens.filterNot(_ == exclude).find(g =>
-      Families.exists { fam =>
-        val p = new HPath(s"${famDir(indexDir, g, fam)}/ingest_batch=$batch")
-        fs.exists(p)
-      })
-  }
-
-  /** The rows of `deltas` (one batch's ledger rows) with a positive delta
-    * for a doc that generation `genDir` holds no doclen for at any
-    * committed batch other than `batch`: the docs that batch must land postings,
-    * doclen and termdict for in that generation. A landing into the
-    * generation its new docs were chosen against needs no such check; a
-    * landing into another one does, because a fold drops docs dead at its
-    * base, and a batch that resurrects one (a ledger `+1` where the doc
-    * was known) would otherwise leave it live with no doclen. This keeps
-    * the invariant that every doc with a positive ledger sum in a
-    * generation has postings and doclen there. */
-  private def unindexedIn(s: SparkSession, indexDir: String, genDir: String,
-                          batch: Long, committed: Long,
-                          deltas: DataFrame): DataFrame = {
-    val indexed = readFam(s, indexDir, genDir, "doclen")
-      .where(col("ingest_batch") <= committed &&
-        col("ingest_batch") =!= batch)
-      .select("doc_id")
-    deltas.where(col("delta") > 0).join(indexed, Seq("doc_id"), "left_anti")
-  }
-
-  /** Land one committed batch from `srcGen` into `dstGen`, the landing
-    * body shared by the fold's late-copy and [[repairLandings]]: the
-    * ledger rows as they are, and postings, doclen and termdict for the
-    * batch's [[unindexedIn]] docs, taken from `srcGen` at or below the
-    * batch (a resurrected doc's rows sit in an older batch there).
-    * `committed` bounds the destination's doclen check. Dynamic partition
-    * overwrite: idempotent per (family, batch). */
-  private def copyBatch(s: SparkSession, indexDir: String, srcGen: String,
-                        dstGen: String, batch: Long, committed: Long): Unit = {
-    def src(fam: String) = readFam(s, indexDir, srcGen, fam)
-    val deltas = src("counts").where(col("ingest_batch") === batch)
-      .select(col("doc_id"), col("delta"))
-      .localCheckpoint(true) // feeds the doc check AND the ledger write
-    val docs = unindexedIn(s, indexDir, dstGen, batch, committed, deltas)
-      .select("doc_id")
-    def rowsOf(fam: String) = src(fam).where(col("ingest_batch") <= batch)
-      .join(docs, "doc_id").drop("ingest_batch")
-    val posts = rowsOf("postings").localCheckpoint(true)
-    val dst = famDir(indexDir, dstGen, _: String)
-    if (!posts.isEmpty) {
-      CdcStream.land(posts, dst("postings"), batch, "bucket")
-      CdcStream.land(posts.select("tok", "bucket").distinct(),
-        dst("termdict"), batch)
-      CdcStream.land(rowsOf("doclen"), dst("doclen"), batch)
-    }
-    if (!deltas.isEmpty) CdcStream.land(deltas, dst("counts"), batch)
-  }
-
   /** The fold (r15, VERDICT r14 #1 — the maintenance path the r14
-    * scaladoc promised): collapse the ledger to ONE exact count per LIVE
-    * series, physically drop dead series' postings/doclen, and rewrite
-    * each family as a single base partition at the committed snapshot.
-    * Each fold attempt stages into its OWN `g<n>-<nonce>/` directory and
-    * becomes visible only when the create-only `fold_<n>` marker — whose
-    * BODY names the staged dir — lands; a racing fold that loses the
-    * marker create deletes only its own staging, never the winner's
-    * committed data (review r15: a shared staging path let the loser's
-    * cleanup delete the winner's generation). A crash mid-fold leaves an
-    * unmarked directory reclaimed once the generation passes it; readers
-    * never see a half fold. The previous generation is kept for ONE fold
-    * as an in-flight-reader grace window; older generations and
-    * below-committed progress markers are reclaimed here ([[reclaim]]).
+    * scaladoc promised), under the maintenance lease: collapse the ledger
+    * to ONE exact count per LIVE series, physically drop dead series'
+    * postings/doclen, and rewrite each family as a single base partition
+    * at the committed snapshot. Each fold attempt stages into its OWN
+    * `g<n>-<nonce>/` directory and becomes visible only when the
+    * create-only `fold_<n>` marker — whose BODY names the staged dir —
+    * lands; an attempt that loses the marker claim (to a writer that
+    * holds no lease) deletes only its own staging, never the winner's
+    * committed data (review r15). A crash mid-fold leaves an unmarked
+    * directory reclaimed once the generation passes it; readers never see
+    * a half fold. The previous generation is kept for ONE fold as an
+    * in-flight-reader grace window; older generations and below-committed
+    * progress markers are reclaimed here ([[reclaim]]).
     *
-    * Sync racing the fold (review r15): a sync can commit its marker
-    * while the fold is rewriting — the folded families, filtered to the
-    * fold's base snapshot, would silently miss that batch. Both sides
-    * close it: after winning the marker, the fold RE-LANDS any batches
-    * committed above its base from the grace generation; and a sync
-    * re-resolves the active generation after its own commit and re-lands
-    * into it if a fold moved the families. Whichever side's marker lands
-    * second sees the other's (one `_sync` listing resolves both), so
-    * every committed batch reaches the active generation.
+    * A sync and a fold never overlap: both hold the lease, so a sync
+    * started during the fold waits for it and then lands in the folded
+    * generation, and a fold started during a sync folds the sync's batch
+    * in. The committed snapshot the fold filters to cannot move under it;
+    * the fence check before the marker claim is all that stands between
+    * a fold whose lease was taken over and a commit.
     *
     * Search is rank- and score-identical across the fold (spec-proven):
     * the fold changes the ledger's representation (many deltas → one
@@ -833,7 +676,12 @@ object CdcIndexSync {
     * nothing to fold (≤ 1 batch accreted) or the claim was lost.
     */
   def compactIndex(s: SparkSession, indexDir: String,
-                   claimPrimitive: String = Graft.PrimAuto): Long = {
+                   claimPrimitive: String = Graft.PrimAuto): Long =
+    withLease(s, indexDir, claimPrimitive, "index fold marker")(
+      fold(s, indexDir, claimPrimitive, _))
+
+  private def fold(s: SparkSession, indexDir: String, claimPrimitive: String,
+                   lease: Lease): Long = {
     val st = state(s, indexDir).getOrElse(
       throw new IllegalStateException(
         s"no committed index at $indexDir — run build first"))
@@ -890,37 +738,14 @@ object CdcIndexSync {
     // r15 high), its body the staged dir name, body atomic with the
     // claim — a crash can never leave a visible-but-empty marker whose
     // readers resolve a phantom generation. A lost claim means another
-    // folder won and OUR staging (only) is garbage.
+    // writer won and OUR staging (only) is garbage.
     mfs.mkdirs(mdir)
     foldCommitHook()
+    lease.fence()
     if (!Graft.claimAt(mfs, new HPath(mdir, s"fold_$next"), stageDir,
         resolvedClaim)) {
       fs.delete(new HPath(s"$indexDir/$stageDir"), true)
       return st.gen
-    }
-    // close the sync race: any batch whose marker landed DURING the fold
-    // is missing from the staged families (they were filtered to <= the
-    // fold's base) — copy its partitions from the grace generation now,
-    // batch by batch under the per-(generation, batch) land claim
-    // (ADVICE r15 medium: sync's re-land loop can be copying the same
-    // batch into this generation RIGHT NOW, and two concurrent dynamic
-    // partition overwrites can interleave into a union of part-files).
-    // A sync committing after this read sees fold_<next> in the same
-    // listing and re-lands on its own side.
-    val nowCommitted = state(s, indexDir).map(_.snap).getOrElse(committed)
-    if (nowCommitted > committed) {
-      val lateBatches = Families.map(fam =>
-        readFam(s, indexDir, st.genDir, fam)
-          .where(col("ingest_batch") > committed &&
-            col("ingest_batch") <= nowCommitted)
-          .select(col("ingest_batch")))
-        .reduce(_ union _).distinct()
-        .collect().map(_.getLong(0)).sorted // driver-sized: one per sync
-      lateBatches.foreach { b =>
-        ensureLanded(s, indexDir, stageDir, b, resolvedClaim) {
-          copyBatch(s, indexDir, st.genDir, stageDir, b, nowCommitted)
-        }
-      }
     }
     // the sweep runs the same rule right after every fold; running it
     // here keeps a fold called on its own from leaving garbage behind
@@ -991,8 +816,8 @@ object CdcIndexSync {
     *
     * A held listing is never stale for its state. Once a generation's
     * marker lands, its partitions at `ingest_batch <= st.snap` do not
-    * change (the sweep refreshes only after its own landings and
-    * late-copies finish). Partitions above `snap` can still appear (a
+    * change (the sweep refreshes only after its maintenance lease is
+    * released). Partitions above `snap` can still appear (a
     * later sync) or be deleted (a sync's cleanup of a crashed landing);
     * every probe's `ingest_batch <= st.snap` partition filter prunes them
     * before any file is opened, so it must stay on every probe. A

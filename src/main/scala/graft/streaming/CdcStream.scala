@@ -186,6 +186,11 @@ object CdcStream {
     * The marker commits only after the callback returns; a crash (or a
     * callback that throws) replays the same batch next call. Returns the
     * snapshot the consumer is now committed at.
+    *
+    * Concurrent advancers of one `stateDir` must be serialized by the
+    * caller: two advances that start from the same marker while a write
+    * lands between them diff to different `to`s, both land, and the
+    * state counts the overlap twice ([[CdcIndexSync]] holds a lease).
     */
   def foreachDiff(g: Graft, space: String = "default", stateDir: String)
                  (onReset: (DataFrame, Long) => Unit)

@@ -190,11 +190,20 @@ object IngestStream {
     * [[graft.tsdb.Tsdb.rollupCascade]]'s).
     */
   def rollupView(s: SparkSession, rollupDir: String): DataFrame =
-    s.read.parquet(rollupDir)
+    CdcStream.readState(s, rollupDir, RollupSchema)
       .groupBy(col("user_id"), col("event_type"), col("hour_ms"))
       .agg(sum(col("hn")).as("n"),
         sum(col("hsum")).cast("double").as("sum_value"),
         max(col("hmax")).as("max_value"))
+
+  /** The partials [[startRollup]] lands for [[pointSchema]] points: count,
+    * exact-DECIMAL sum (`sum` widens decimal(18,4) by 10 digits) and max
+    * per (series, hour), and the micro-batch id. */
+  private val RollupSchema = StructType(Seq(
+    StructField("user_id", LongType), StructField("event_type", StringType),
+    StructField("hour_ms", LongType), StructField("hn", LongType),
+    StructField("hsum", DecimalType(28, 4)), StructField("hmax", DoubleType),
+    StructField("ingest_batch", LongType)))
 
   /** Live per-series counts over event-time windows with a watermark — the
     * streaming equivalent of `/read` + count aggregation. Late data beyond

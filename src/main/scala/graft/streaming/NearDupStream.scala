@@ -110,7 +110,7 @@ object NearDupStream {
     * raw rows under `decisionsDir` are one per (batch-decision|correction).
     */
   def decisionsOf(s: SparkSession, decisionsDir: String): DataFrame =
-    s.read.parquet(decisionsDir)
+    CdcStream.readState(s, decisionsDir, DecisionSchema)
       .groupBy(col("doc_id")).agg(max(col("is_dup")).as("is_dup"))
 
   /** The band index's declared schema: `ingest_batch` is the
@@ -118,4 +118,10 @@ object NearDupStream {
   private val IndexSchema =
     StructType(Seq(StructField("doc_id", LongType), StructField("band", IntegerType),
       StructField("band_key", StringType), StructField("ingest_batch", LongType)))
+
+  /** The decision log's declared schema: the index's doc ids, the bigint
+    * flag, and the batch id. */
+  private val DecisionSchema =
+    StructType(Seq(StructField("doc_id", LongType), StructField("is_dup", LongType),
+      StructField("ingest_batch", LongType)))
 }

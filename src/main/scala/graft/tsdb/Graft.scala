@@ -105,7 +105,7 @@ class Graft(spark: SparkSession, root: String,
       // by vacuum. An all-rejected batch writes no files — no commit.
       bootstrapManifest(space) // adopt a pre-manifest store
       val (fs, dir) = fsOf(spacePath(space))
-      val tmpDir = new HPath(dir, s"$AppendTmpPrefix${nonce()}")
+      val tmpDir = new HPath(dir, s"$AppendTmpPrefix${Graft.nonce()}")
       sorted.write.mode(SaveMode.Overwrite)
         .partitionBy("bucket_day").parquet(tmpDir.toString)
       val moved = Seq.newBuilder[(String, Long)]
@@ -118,7 +118,7 @@ class Graft(spark: SparkSession, root: String,
           fs.listStatus(bst.getPath)
             .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
             .foreach { f =>
-              val dst = new HPath(dstDir, s"a${nonce()}-${f.getPath.getName}")
+              val dst = new HPath(dstDir, s"a${Graft.nonce()}-${f.getPath.getName}")
               if (!fs.rename(f.getPath, dst))
                 throw new java.io.IOException(
                   s"append: rename ${f.getPath} -> $dst failed")
@@ -490,9 +490,6 @@ class Graft(spark: SparkSession, root: String,
       case _ => s"$p\t$sz"
     }
 
-  private def writeSmallFile(fs: FileSystem, p: HPath, body: String): Unit =
-    Graft.writeSmallFile(fs, p, body)
-
   /** The configured (UNresolved) claim primitive — the CDC consumers
     * ([[graft.streaming.CdcStream]], [[graft.streaming.CdcIndexSync]])
     * carry this store's setting to THEIR marker directories and resolve
@@ -568,9 +565,9 @@ class Graft(spark: SparkSession, root: String,
           // segment names are unique per attempt (seq + nonce), so
           // concurrent committers never collide on them — only the
           // snapshot name is contended
-          val name = s"g$next-$day-${nonce()}"
+          val name = s"g$next-$day-${Graft.nonce()}"
           val sp = new HPath(mdir, name)
-          writeSmallFile(fs, sp, lines.sorted.mkString("\n"))
+          Graft.writeSmallFile(fs, sp, lines.sorted.mkString("\n"))
           written += sp
           Some(SegRef(day, name, lines.size,
             lines.map(l => parseEntry(l)._1._2).sum))
@@ -591,8 +588,6 @@ class Graft(spark: SparkSession, root: String,
     }
     -1L // unreachable
   }
-
-  private def nonce(): String = Graft.nonce()
 
   /** Serialize a manifest's entries into per-day segment bodies. */
   private def dayLines(m: Manifest): Map[Long, Seq[String]] =
@@ -1678,7 +1673,7 @@ class Graft(spark: SparkSession, root: String,
             // made two processes compacting the same bucket share one
             // staging dir — SaveMode.Overwrite then deletes the other's
             // output mid-rewrite. Unique per attempt, like appends.
-            val tmp = new HPath(dir, s"$TmpPrefix$day-${nonce()}")
+            val tmp = new HPath(dir, s"$TmpPrefix$day-${Graft.nonce()}")
             merged.repartitionByRange(nOut, key: _*)
               .sortWithinPartitions(key: _*)
               .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
@@ -2166,12 +2161,12 @@ object Graft {
   // Mirrors write()'s engine-side rules (same precedence, same error
   // strings): unparseable/missing time -> "invalid timestamp"; missing/NaN
   // value -> "invalid value"; no non-null field besides time/value ->
-  // "metrics must have at least one tag". The time grammar mirrors what the
-  // Spark path accepts — `coalesce(try_to_timestamp(s), timestamp_millis(
-  // try_cast(s AS LONG)))` — i.e. Spark's permissive ISO-ish cast first
-  // (year[-m[-d[ T h[:m[:s[.frac]]][zone]]]]), then a bare epoch-millis
-  // integer. The queued path also STORES the millis it computes here (the
-  // flush job receives numeric time), so accept/store can never disagree.
+  // "metrics must have at least one tag". The time parse is the Spark
+  // path's own — `coalesce(try_to_timestamp(s), timestamp_millis(
+  // try_cast(s AS LONG)))` ([[parseTimeString]]) — so both paths accept
+  // the same grammar. The queued path also STORES the millis it computes
+  // here (the flush job receives numeric time), so accept/store can never
+  // disagree.
 
   private[graft] def validatePoint(p: com.fasterxml.jackson.databind.JsonNode,
                                   zone: java.time.ZoneId): Either[String, Long] = {
@@ -2230,38 +2225,18 @@ object Graft {
     } else if (t.isTextual) parseTimeString(t.asText(), zone)
     else None
 
-  // year[-m[-d[{T| }h[:m[:s[.fraction]]][zone]]]] — the shapes Spark's
-  // string->timestamp cast takes; zone only rides with a time-of-day part
-  private val TsRe =
-    ("""([+-]?\d{4,6})(?:-(\d{1,2})(?:-(\d{1,2})""" +
-     """(?:[ T](\d{1,2})(?::(\d{1,2})(?::(\d{1,2})(?:\.(\d{0,9}))?)?)?""" +
-     """\s*(Z|z|[+-]\d{1,2}(?::?\d{2})?|[A-Za-z][A-Za-z0-9/_+\-:]*)?)?)?)?""").r
-
+  /** Driver-side `coalesce(try_to_timestamp(s), timestamp_millis(try_cast(
+    * s AS LONG)))`: Spark's own string-to-timestamp parser (the one
+    * try_to_timestamp and the string cast call, so the queued and direct
+    * write paths accept the same grammar by construction), floored to
+    * millis as `unix_millis` does, then a bare epoch-millis integer. */
   private[graft] def parseTimeString(s0: String, sessionZone: java.time.ZoneId): Option[Long] = {
     val s = s0.trim
-    val iso = s match {
-      case TsRe(y, mo, d, h, mi, se, frac, zn) =>
-        scala.util.Try {
-          val zone =
-            if (zn == null) sessionZone
-            else if (zn == "Z" || zn == "z") java.time.ZoneOffset.UTC
-            else if (zn.head == '+' || zn.head == '-')
-              java.time.ZoneOffset.of(
-                // normalize "+8" -> "+08" (Spark accepts the 1-digit form)
-                if (zn.length == 2) s"${zn.head}0${zn.tail}" else zn)
-            else java.time.ZoneId.of(zn)
-          val nanos =
-            if (frac == null || frac.isEmpty) 0
-            else (frac + "0" * (9 - frac.length)).toInt
-          def iOr(v: String, dflt: Int) = if (v == null) dflt else v.toInt
-          java.time.LocalDateTime.of(y.toInt, iOr(mo, 1), iOr(d, 1),
-              iOr(h, 0), iOr(mi, 0), iOr(se, 0), nanos)
-            .atZone(zone).toInstant.toEpochMilli
-        }.toOption
-      case _ => None
-    }
-    iso.orElse( // the try_cast(s AS LONG) fallback: bare epoch millis
-      if (s.matches("[+-]?\\d+")) scala.util.Try(s.toLong).toOption else None)
+    org.apache.spark.sql.catalyst.util.DateTimeUtils
+      .stringToTimestamp(org.apache.spark.unsafe.types.UTF8String.fromString(s),
+        sessionZone)
+      .map(Math.floorDiv(_, 1000L))
+      .orElse(if (s.matches("[+-]?\\d+")) s.toLongOption else None)
   }
 
   /** Per-batch write-sequence stamp backing last-write-wins overwrites

@@ -7,10 +7,12 @@ import graft.tsdb.{DocId, Graft}
 /** A fold drops postings and doclen for docs dead at its base. A sync
   * that races the fold and resurrects such a doc must still leave it
   * indexed in the folded generation: every doc with a positive ledger sum
-  * in a generation has postings and doclen there. Both interleavings —
-  * the sync inside the fold's commit window (the fold's late-copy lands
-  * the batch) and the fold inside the sync's (the sync's re-land does) —
-  * must serve what the scan and a rebuilt index serve. */
+  * in a generation has postings and doclen there. The two never overlap
+  * (both hold the index's maintenance lease), and both orders — a sync
+  * started inside the fold's commit window (it waits, then indexes the
+  * doc anew in the folded generation) and a fold started inside the
+  * sync's (it waits, then folds the live doc in) — must serve what the
+  * scan and a rebuilt index serve. */
 class FoldResurrectSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -76,25 +78,38 @@ class FoldResurrectSpec extends SparkTestBase {
 
   test("a sync inside the fold's commit window that resurrects a doc the fold dropped leaves it indexed in the folded generation: /search beta and alpha's score equal the scan and a rebuild") {
     val (g, dir, root) = deadBeta("graft-resurrect-fold")
+    val before = CdcIndexSync.committedSnap(spark, dir)
+    var sync: Competitor = null
     CdcIndexSync.foldCommitHook = () => {
       CdcIndexSync.foldCommitHook = () => () // once
       rewriteBeta(g)
-      CdcIndexSync.sync(g, dir) // lands a ledger +1: beta is known here
+      sync = Competitor(CdcIndexSync.sync(g, dir))
+      Thread.sleep(300)
+      assert(CdcIndexSync.committedSnap(spark, dir) == before && sync.running,
+        "the sync must wait while the fold holds the lease")
     }
     try assert(CdcIndexSync.compactIndex(spark, dir) == 1L)
     finally CdcIndexSync.foldCommitHook = () => ()
+    sync.join()
     assertServed(g, dir, root)
   }
 
   test("a fold inside a resurrecting sync's commit window: the sync's re-land indexes the doc the fold dropped, so /search beta and alpha's score equal the scan and a rebuild") {
     val (g, dir, root) = deadBeta("graft-resurrect-sync")
     rewriteBeta(g)
+    val before = CdcIndexSync.committedSnap(spark, dir)
+    var fold: Competitor = null
     CdcIndexSync.syncCommitHook = () => {
       CdcIndexSync.syncCommitHook = () => () // once
-      assert(CdcIndexSync.compactIndex(spark, dir) == 1L)
+      fold = Competitor(assert(CdcIndexSync.compactIndex(spark, dir) == 1L))
+      Thread.sleep(300)
+      assert(CdcIndexSync.committedSnap(spark, dir) == before &&
+        CdcIndexSync.state(spark, dir).get.gen == 0L && fold.running,
+        "the fold must wait while the sync holds the lease")
     }
     try CdcIndexSync.sync(g, dir)
     finally CdcIndexSync.syncCommitHook = () => ()
+    fold.join()
     assertServed(g, dir, root)
   }
 }

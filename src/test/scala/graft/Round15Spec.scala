@@ -255,34 +255,48 @@ class Round15Spec extends SparkTestBase {
     w(("2024-01-09T12:00:00Z", 3.0, "gamma"))
     CdcIndexSync.sync(g, dir) // 2 accreted batches -> foldable
 
-    // interleaving 1: a sync commits INSIDE the fold's commit window
-    // (families staged, marker not yet) — the staged families, filtered
-    // to the fold's base, miss the batch; the fold's post-marker check
-    // must re-land it, or it is marked indexed but unsearchable forever
+    // interleaving 1: a sync starts INSIDE the fold's commit window
+    // (families staged, marker not yet). The fold holds the index's
+    // lease, so the sync waits, then lands in the folded generation —
+    // it never commits under the fold, whose families miss its batch
+    val before = CdcIndexSync.committedSnap(spark, dir)
+    var sync1: Competitor = null
     CdcIndexSync.foldCommitHook = () => {
       CdcIndexSync.foldCommitHook = () => () // once
       w(("2024-01-09T13:00:00Z", 4.0, "delta-svc"))
-      CdcIndexSync.sync(g, dir)
+      sync1 = Competitor(CdcIndexSync.sync(g, dir))
+      Thread.sleep(300)
+      assert(CdcIndexSync.committedSnap(spark, dir) == before && sync1.running,
+        "the sync must wait while the fold holds the lease")
     }
     try assert(CdcIndexSync.compactIndex(spark, dir) == 1L)
     finally CdcIndexSync.foldCommitHook = () => ()
+    sync1.join()
+    assert(CdcIndexSync.state(spark, dir).get.gen == 1L)
     assert(indexed(dir, Seq("delta-svc")).nonEmpty,
       "a batch committed during the fold must be searchable in the folded generation")
     assertParity(g, dir, Seq(Seq("alpha"), Seq("gamma"), Seq("delta-svc")))
 
-    // interleaving 2: a fold commits INSIDE sync's commit window (batch
-    // landed in the old generation, marker not yet) — sync re-resolves
-    // the active generation after its commit and re-lands into it
+    // interleaving 2: a fold starts INSIDE sync's commit window (batch
+    // landed, marker not yet) — it waits for the sync's commit, then
+    // folds the batch in
     w(("2024-01-09T14:00:00Z", 5.0, "epsilon"))
+    val landed = CdcIndexSync.committedSnap(spark, dir)
+    var fold2: Competitor = null
     CdcIndexSync.syncCommitHook = () => {
       CdcIndexSync.syncCommitHook = () => () // once
-      CdcIndexSync.compactIndex(spark, dir)
+      fold2 = Competitor(CdcIndexSync.compactIndex(spark, dir))
+      Thread.sleep(300)
+      assert(CdcIndexSync.state(spark, dir).get.gen == 1L &&
+        CdcIndexSync.committedSnap(spark, dir) == landed && fold2.running,
+        "the fold must wait while the sync holds the lease")
     }
     try CdcIndexSync.sync(g, dir)
     finally CdcIndexSync.syncCommitHook = () => ()
+    fold2.join()
     assert(CdcIndexSync.state(spark, dir).get.gen == 2L)
     assert(indexed(dir, Seq("epsilon")).nonEmpty,
-      "a batch landing while a fold commits must be re-landed into the new generation")
+      "a batch landing while a fold waits must be folded into the new generation")
     assertParity(g, dir, Seq(Seq("alpha"), Seq("beta"), Seq("gamma"),
       Seq("delta-svc"), Seq("epsilon")))
   }

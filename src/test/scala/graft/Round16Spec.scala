@@ -9,10 +9,9 @@ import graft.tsdb.Graft
   * toolkit (VERDICT r15 #3 — an index on an unknown object store refuses
   * loudly instead of silently racing), the fold marker is crash-atomic
   * and a pre-fix empty marker resolves to the committed generation below
-  * (ADVICE r15 high), concurrent late-landings of one batch serialize
-  * under the per-(generation, batch) land claim (ADVICE r15 medium), and
-  * two CdcStream consumers sharing a stateDir race benignly (VERDICT r15
-  * #7).
+  * (ADVICE r15 high), and two CdcStream consumers sharing a stateDir
+  * race benignly (VERDICT r15 #7). One index's maintainers serialize
+  * behind its lease: IndexLeaseSpec.
   */
 class Round16Spec extends SparkTestBase {
   import spark.implicits._
@@ -157,95 +156,6 @@ class Round16Spec extends SparkTestBase {
     assert(Seq(Seq("cpu"), Seq("gpu"), Seq("net"), Seq("disk"))
       .map(q => indexed(dir, q)) == afterDisk,
       "parity must hold across the recovery fold")
-  }
-
-  // --------------------------------------------------------------------
-  // ADVICE r15 medium: the per-(generation, batch) land claim
-  // --------------------------------------------------------------------
-
-  test("concurrent late-landings of one batch serialize: one copier wins, the loser waits for done (never a second overwrite), a crashed winner fails the loser LOUDLY (ADVICE r15 medium)") {
-    val root = freshRoot("graft-r16d")
-    val dir = s"$root/index"
-    val fs = fsAt(root)
-    fs.mkdirs(new HPath(s"$dir/g1-stage"))
-    val resolved = Graft.resolveClaim(fs, Graft.PrimAuto, "spec")
-
-    // winner writes once; a second ensure of the same (gen, batch) is a
-    // done-marker no-op
-    var writes = 0
-    CdcIndexSync.ensureLanded(spark, dir, "g1-stage", 7L, resolved) {
-      writes += 1
-    }
-    CdcIndexSync.ensureLanded(spark, dir, "g1-stage", 7L, resolved) {
-      writes += 1
-    }
-    assert(writes == 1, s"the batch must land exactly once: $writes")
-
-    // loser-waits: hold batch 8's claim as a concurrent copier, finish it
-    // from another thread mid-wait — the loser must NOT run its own write
-    assert(Graft.claimAt(fs, new HPath(s"$dir/g1-stage/_land/b8.claim"),
-      "", resolved))
-    val finisher = new Thread(() => {
-      Thread.sleep(300)
-      val out = fs.create(new HPath(s"$dir/g1-stage/_land/b8.done"), true)
-      out.close()
-    })
-    finisher.start()
-    var loserWrote = false
-    CdcIndexSync.ensureLanded(spark, dir, "g1-stage", 8L, resolved) {
-      loserWrote = true
-    }
-    finisher.join()
-    assert(!loserWrote,
-      "the claim loser must wait for the winner's done, never re-copy")
-
-    // truly CONCURRENT double-ensure, made deterministic with the claim
-    // hook: A claims batch 10 and pauses inside its commit window; B
-    // arrives while A holds the claim, loses it, and must WAIT for A's
-    // done instead of running a second overlapping overwrite — the exact
-    // interleaving the partition-union hazard (ADVICE r15 medium) needs
-    val held = new java.util.concurrent.CountDownLatch(1)
-    val release = new java.util.concurrent.CountDownLatch(1)
-    val once = new java.util.concurrent.atomic.AtomicBoolean(false)
-    CdcIndexSync.landClaimHook = () =>
-      if (once.compareAndSet(false, true)) { held.countDown(); release.await() }
-    val wroteA = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val wroteB = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val a = new Thread(() =>
-      try CdcIndexSync.ensureLanded(spark, dir, "g1-stage", 10L, resolved) {
-        wroteA.set(true)
-      } catch { case t: Throwable => errs.add(t) })
-    try {
-      a.start()
-      held.await()
-      val b = new Thread(() =>
-        try CdcIndexSync.ensureLanded(spark, dir, "g1-stage", 10L, resolved) {
-          wroteB.set(true)
-        } catch { case t: Throwable => errs.add(t) })
-      b.start()
-      Thread.sleep(200) // B is in its wait loop while A holds the claim
-      assert(!wroteA.get && !wroteB.get,
-        "nothing may write while the claim is held in the commit window")
-      release.countDown()
-      a.join(); b.join()
-      assert(errs.isEmpty, s"concurrent ensures must both succeed: $errs")
-      assert(wroteA.get && !wroteB.get,
-        "exactly the claim WINNER writes; the loser waits for done")
-    } finally { CdcIndexSync.landClaimHook = () => (); release.countDown() }
-
-    // crashed winner: claim held, done never lands — the loser fails
-    // loudly instead of leaving the generation silently incomplete
-    assert(Graft.claimAt(fs, new HPath(s"$dir/g1-stage/_land/b9.claim"),
-      "", resolved))
-    val oldWait = CdcIndexSync.landWaitMs
-    CdcIndexSync.landWaitMs = 200L
-    try {
-      val ex = intercept[IllegalStateException] {
-        CdcIndexSync.ensureLanded(spark, dir, "g1-stage", 9L, resolved)(())
-      }
-      assert(ex.getMessage.contains("crashed mid-landing"), ex.getMessage)
-    } finally CdcIndexSync.landWaitMs = oldWait
   }
 
   // --------------------------------------------------------------------

@@ -9,10 +9,7 @@ import graft.tsdb.Graft
 
 /** Round-17 directives: the wide↔long BM25 scorer equality is pinned
   * DIRECTLY at the WideQueryMax crossover (VERDICT r16 #2 — previously
-  * only transitive through oracles), a failed land-claim winner releases
-  * its claim so losers re-claim instead of timing out (ADVICE r16 low),
-  * a crashed-winner landing is repairable from the landing ledger itself
-  * (ADVICE r16 medium — repairLandings), dead index generations are
+  * only transitive through oracles), dead index generations are
   * vacuumable between folds (VERDICT r16 #5), and the commit claim is
   * exercised by a second PROCESS (VERDICT r16 #4) — which found and now
   * pins two real multi-process compaction bugs: concurrent compactors
@@ -99,139 +96,6 @@ class Round17Spec extends SparkTestBase {
     val q16 = (0 until 16).map(t => f"t$t%02d")
     assert(scored(docs, q16, prefix = false) == scored(docs, q16, prefix = true),
       "the two entry points drifted at the 16-term boundary")
-  }
-
-  // --------------------------------------------------------------------
-  // ADVICE r16 low: a failed winner releases its land claim
-  // --------------------------------------------------------------------
-
-  test("a land-claim winner whose write FAILS releases the claim: a retry (or concurrent loser) re-claims and lands instead of timing out (ADVICE r16 low)") {
-    val root = freshRoot("graft-r17a")
-    val dir = s"$root/index"
-    val fs = fsAt(root)
-    fs.mkdirs(new HPath(s"$dir/g1-stage"))
-    val resolved = Graft.resolveClaim(fs, Graft.PrimAuto, "spec")
-
-    // first attempt fails mid-write; the claim must NOT survive it
-    val boom = intercept[RuntimeException] {
-      CdcIndexSync.ensureLanded(spark, dir, "g1-stage", 5L, resolved) {
-        throw new RuntimeException("transient write failure")
-      }
-    }
-    assert(boom.getMessage == "transient write failure")
-    assert(!fs.exists(new HPath(s"$dir/g1-stage/_land/b5.claim")),
-      "a failed winner must release its claim for retries")
-    assert(!fs.exists(new HPath(s"$dir/g1-stage/_land/b5.done")),
-      "a failed write must never flip done")
-
-    // the retry claims and lands — no landWaitMs stall, no manual surgery
-    var wrote = false
-    CdcIndexSync.ensureLanded(spark, dir, "g1-stage", 5L, resolved) {
-      wrote = true
-    }
-    assert(wrote && fs.exists(new HPath(s"$dir/g1-stage/_land/b5.done")))
-
-    // concurrent shape: A claims, fails inside the commit window while B
-    // waits — B must observe the released claim, RE-CLAIM, and land,
-    // never time out against a claim nobody holds
-    val held = new java.util.concurrent.CountDownLatch(1)
-    val release = new java.util.concurrent.CountDownLatch(1)
-    val once = new java.util.concurrent.atomic.AtomicBoolean(false)
-    CdcIndexSync.landClaimHook = () =>
-      if (once.compareAndSet(false, true)) { held.countDown(); release.await() }
-    val wroteB = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val a = new Thread(() =>
-      try CdcIndexSync.ensureLanded(spark, dir, "g1-stage", 6L, resolved) {
-        throw new RuntimeException("winner dies after claiming")
-      } catch { case t: Throwable => if (t.getMessage != "winner dies after claiming") errs.add(t) })
-    try {
-      a.start()
-      held.await()
-      val b = new Thread(() =>
-        try CdcIndexSync.ensureLanded(spark, dir, "g1-stage", 6L, resolved) {
-          wroteB.set(true)
-        } catch { case t: Throwable => errs.add(t) })
-      b.start()
-      Thread.sleep(150) // B enters its wait loop while A holds the claim
-      release.countDown()
-      a.join(); b.join()
-      assert(errs.isEmpty, s"unexpected failures: $errs")
-      assert(wroteB.get, "the loser must take over a released claim")
-      assert(fs.exists(new HPath(s"$dir/g1-stage/_land/b6.done")))
-    } finally { CdcIndexSync.landClaimHook = () => (); release.countDown() }
-  }
-
-  // --------------------------------------------------------------------
-  // ADVICE r16 medium: crashed-winner landings are repairable
-  // --------------------------------------------------------------------
-
-  test("repairLandings re-lands a crashed-winner batch from the grace generation: the committed-but-invisible batch becomes searchable without a rebuild (ADVICE r16 medium)") {
-    val root = freshRoot("graft-r17b")
-    val g = new Graft(spark, root)
-    val dir = s"$root/index"
-    def w(rows: (String, Double, String)*) =
-      g.write(rows.toSeq.toDF("time", "value", "name"))
-
-    // gen 0 with one extra batch, then a fold whose commit RACES a sync:
-    // epsilon commits into gen 0 while the fold stages gen 1, so the
-    // fold's post-commit late-copy carries it forward — the one landing
-    // path that leaves a (claim, done) pair in the new generation
-    w(("2024-01-01T00:00:00Z", 1.0, "alpha"), ("2024-01-01T00:00:01Z", 1.0, "beta"))
-    CdcIndexSync.build(g, dir)
-    w(("2024-01-02T00:00:00Z", 1.0, "gamma"))
-    CdcIndexSync.sync(g, dir)
-    var epsBatch = -1L
-    CdcIndexSync.foldCommitHook = () => {
-      w(("2024-01-04T00:00:00Z", 1.0, "epsilon"))
-      CdcIndexSync.sync(g, dir)
-      epsBatch = CdcIndexSync.committedSnap(spark, dir).get
-    }
-    try assert(CdcIndexSync.compactIndex(spark, dir) == 1L)
-    finally CdcIndexSync.foldCommitHook = () => ()
-    val st = CdcIndexSync.state(spark, dir).get
-    assert(st.gen == 1L && epsBatch > 0)
-    val fs = fsAt(root)
-    val landDir = s"$dir/${st.genDir}/_land"
-    assert(fs.exists(new HPath(s"$landDir/b$epsBatch.done")),
-      "precondition: the fold late-copied the racing sync's batch")
-    assert(CdcIndexSync.search(spark, dir, Seq("epsilon"), 5)
-      .collect().length == 1, "precondition: epsilon searchable post-fold")
-
-    // simulate the winner dying between claim and done: rewind the done
-    // marker and remove the copied partitions from the active generation
-    // — the exact on-disk state the crash leaves
-    fs.delete(new HPath(s"$landDir/b$epsBatch.done"), false)
-    Seq("postings", "doclen", "counts", "termdict").foreach { fam =>
-      fs.delete(new HPath(
-        s"$dir/${st.genDir}/$fam/ingest_batch=$epsBatch"), true)
-    }
-    assert(CdcIndexSync.search(spark, dir, Seq("epsilon"), 5)
-      .collect().isEmpty, "precondition: the batch is invisible")
-
-    // a fresh sync starts ABOVE the committed marker — it cannot repair
-    w(("2024-01-05T00:00:00Z", 1.0, "zeta"))
-    CdcIndexSync.sync(g, dir)
-    assert(CdcIndexSync.search(spark, dir, Seq("epsilon"), 5).collect().isEmpty,
-      "syncs start above the marker; only the repair sweep can re-land")
-
-    // the repair: stale claim taken over, batch re-landed from the grace
-    // generation (gen 0 landed it first), epsilon searchable again
-    val repaired = CdcIndexSync.repairLandings(spark, dir, staleMs = 0L)
-    assert(repaired.map(_._2).contains(epsBatch),
-      s"repairLandings must report the re-landed batch, got $repaired")
-    assert(CdcIndexSync.search(spark, dir, Seq("epsilon"), 5)
-      .collect().length == 1, "the repaired batch must be searchable")
-    // idempotent: a second sweep finds nothing stale
-    assert(CdcIndexSync.repairLandings(spark, dir, staleMs = 0L).isEmpty)
-    // and the repaired index still agrees with a from-scratch rebuild
-    val rebuiltDir = s"$root/index2"
-    CdcIndexSync.build(g, rebuiltDir)
-    val a = CdcIndexSync.search(spark, dir, Seq("alpha", "epsilon", "zeta"), 20)
-      .collect().toSeq.map(r => (r.getString(0), r.getAs[Double]("score")))
-    val b = CdcIndexSync.search(spark, rebuiltDir, Seq("alpha", "epsilon", "zeta"), 20)
-      .collect().toSeq.map(r => (r.getString(0), r.getAs[Double]("score")))
-    assert(a == b, s"repaired index drifted from a rebuild:\n  $a\n  $b")
   }
 
   // --------------------------------------------------------------------

@@ -1,10 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import graft.streaming.CdcIndexSync
 import graft.tsdb.Graft
 
 /** Round-18 ADVICE fixes, pinned:
@@ -15,11 +13,6 @@ import graft.tsdb.Graft
   *    POST-merge, or a superseded point that passes the filter while the
   *    winning overwrite fails it resurfaces as the last of its time group
   *    (ADVICE r17 medium).
-  *  - repairLandings' staleness check is a real LEASE: a live land-claim
-  *    winner heartbeats the claim's mtime while its copy runs, and a
-  *    winner whose claim was taken over anyway (frozen past the lease)
-  *    fails the owner-token fence instead of flipping done over the
-  *    repairer's landing (ADVICE r17 medium).
   *  - an all-rejected write commits nothing — the phantom batch's novel
   *    tag column must never surface as an all-null column no live file
   *    carries (ADVICE r17 low).
@@ -30,9 +23,6 @@ class Round18Spec extends SparkTestBase {
   private def freshRoot(tag: String) =
     Files.createTempDirectory(Paths.get("target"), tag)
       .toAbsolutePath.toString
-
-  private def fsAt(p: String) =
-    new HPath(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   // --------------------------------------------------------------------
   // ADVICE r17 medium: readSeries non-tag filters apply post-merge
@@ -98,70 +88,6 @@ class Round18Spec extends SparkTestBase {
       .toDF("time", "value", "name", "dc"))
     assert(g.read("""{"match_all":{}}""").columns.toSet ==
       Set("name", "dc", "time_ms", "value"))
-  }
-
-  // --------------------------------------------------------------------
-  // ADVICE r17 medium: the land claim is a heartbeat lease with fencing
-  // --------------------------------------------------------------------
-
-  test("a live land-claim winner heartbeats: the claim mtime advances during a slow copy, so repairLandings' staleMs is a real lease (ADVICE r17 medium)") {
-    val root = freshRoot("graft-r18hb")
-    val dir = s"$root/index"
-    val fs = fsAt(root)
-    fs.mkdirs(new HPath(s"$dir/g1-stage"))
-    val resolved = Graft.resolveClaim(fs, Graft.PrimAuto, "spec")
-    val claim = new HPath(s"$dir/g1-stage/_land/b1.claim")
-    val entered = new java.util.concurrent.CountDownLatch(1)
-    val release = new java.util.concurrent.CountDownLatch(1)
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val saved = CdcIndexSync.landHeartbeatMs
-    CdcIndexSync.landHeartbeatMs = 25L
-    val t = new Thread(() =>
-      try CdcIndexSync.ensureLanded(spark, dir, "g1-stage", 1L, resolved) {
-        entered.countDown(); release.await()
-      } catch { case e: Throwable => errs.add(e) })
-    try {
-      t.start(); entered.await()
-      val m0 = fs.getFileStatus(claim).getModificationTime
-      Thread.sleep(400L)
-      val m1 = fs.getFileStatus(claim).getModificationTime
-      assert(m1 > m0,
-        s"claim mtime must advance while the copy runs ($m0 -> $m1): " +
-          "without the heartbeat a copy slower than staleMs is taken over " +
-          "mid-write")
-    } finally {
-      release.countDown(); t.join(); CdcIndexSync.landHeartbeatMs = saved
-    }
-    assert(errs.isEmpty, s"unexpected failures: $errs")
-    assert(fs.exists(new HPath(s"$dir/g1-stage/_land/b1.done")))
-  }
-
-  test("a fenced-out winner (claim taken over mid-copy) aborts loudly and never flips done over the repairer's landing (ADVICE r17 medium)") {
-    val root = freshRoot("graft-r18fence")
-    val dir = s"$root/index"
-    val fs = fsAt(root)
-    fs.mkdirs(new HPath(s"$dir/g1-stage"))
-    val resolved = Graft.resolveClaim(fs, Graft.PrimAuto, "spec")
-    val claim = new HPath(s"$dir/g1-stage/_land/b2.claim")
-    val done = new HPath(s"$dir/g1-stage/_land/b2.done")
-    val entered = new java.util.concurrent.CountDownLatch(1)
-    val release = new java.util.concurrent.CountDownLatch(1)
-    val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val t = new Thread(() =>
-      try CdcIndexSync.ensureLanded(spark, dir, "g1-stage", 2L, resolved) {
-        entered.countDown(); release.await()
-      } catch { case e: Throwable => err.set(e) })
-    t.start(); entered.await()
-    // simulate repairLandings' takeover of a presumed-dead copier: delete
-    // the claim and re-claim under the repairer's own owner token
-    fs.delete(claim, false)
-    assert(Graft.claimAt(fs, claim, "repairer-token", resolved))
-    release.countDown(); t.join()
-    assert(err.get() != null && err.get().isInstanceOf[IllegalStateException],
-      s"fenced-out winner must fail loudly, got ${err.get()}")
-    assert(err.get().getMessage.contains("fenced"), err.get().getMessage)
-    assert(!fs.exists(done),
-      "a fenced-out winner must never flip done — the repairer owns it")
   }
 
   // --------------------------------------------------------------------

@@ -35,3 +35,23 @@ trait SparkTestBase extends AnyFunSuite {
       .write.mode("append").partitionBy("bucket_day").parquet(s"$root/$space")
   }
 }
+
+/** A call run on its own thread — the competing index maintainer a spec
+  * starts from inside another maintainer's commit window. */
+final class Competitor private (body: () => Any) {
+  private val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+  private val thread = new Thread(() =>
+    try body() catch { case e: Throwable => err.set(e) })
+  thread.start()
+
+  def running: Boolean = thread.isAlive
+
+  /** Wait for the call to finish; what it threw, if anything. */
+  def failure: Option[Throwable] = { thread.join(); Option(err.get()) }
+
+  /** Wait for the call to finish, rethrowing what it threw. */
+  def join(): Unit = failure.foreach(e => throw e)
+}
+object Competitor {
+  def apply(body: => Any): Competitor = new Competitor(() => body)
+}

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.streaming.IngestStream
+import graft.streaming.{CdcStream, IngestStream, NearDupStream}
 import graft.tsdb.Graft
 
 class StreamingSpec extends SparkTestBase {
@@ -327,5 +327,19 @@ class StreamingSpec extends SparkTestBase {
     // the partial table really is split across two batch partitions
     val batches = spark.read.parquet(roll).select("ingest_batch").distinct().count()
     assert(batches == 2)
+  }
+
+  test("rollupView and decisionsOf read a landed zero-row batch as no rows") {
+    import spark.implicits._
+    // a micro-batch whose points were all invalid lands a rollup batch
+    // with no rows: a dir with no partitions, no footer to infer from
+    val roll = tmp("rollup-empty")
+    CdcStream.land(Seq.empty[(Long, String, Long, Long, Double, Double)]
+      .toDF("user_id", "event_type", "hour_ms", "hn", "hsum", "hmax")
+      .withColumn("hsum", col("hsum").cast("decimal(28,4)")), roll, 0L)
+    assert(IngestStream.rollupView(spark, roll).collect().isEmpty)
+    val dec = tmp("neardup-empty")
+    CdcStream.land(Seq.empty[(Long, Long)].toDF("doc_id", "is_dup"), dec, 0L)
+    assert(NearDupStream.decisionsOf(spark, dec).collect().isEmpty)
   }
 }

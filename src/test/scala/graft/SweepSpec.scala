@@ -133,8 +133,8 @@ class SweepSpec extends SparkTestBase {
       g.write(Seq((t, 1.0, name)).toDF("time", "value", "name"), space)
 
     // space b's index: built, synced once and folded to generation 1,
-    // then a land claim for a batch no generation holds, long stale —
-    // the index GC's repair cannot re-land it and throws
+    // then held by another maintainer whose lease stays fresh — b's index
+    // step waits out the lease wait and throws
     w("a", "2024-01-09T10:00:00Z", "alpha")
     w("b", "2024-01-09T10:00:00Z", "bravo")
     val dirB = s"$idxBase/b"
@@ -143,19 +143,20 @@ class SweepSpec extends SparkTestBase {
     CdcIndexSync.sync(g, dirB, "b")
     assert(CdcIndexSync.compactIndex(spark, dirB) == 1L)
     val fs = fsAt(root)
-    val claim = new HPath(
-      s"$dirB/${CdcIndexSync.state(spark, dirB).get.genDir}/_land/b999.claim")
-    Graft.writeSmallFile(fs, claim, "dead-copier")
-    fs.setTimes(claim, System.currentTimeMillis() - 3600000L, -1L)
+    Graft.writeSmallFile(fs, new HPath(s"$dirB/_lease/lease_1"),
+      "other-maintainer")
     w("a", "2024-01-09T11:00:00Z", "delta")
     w("b", "2024-01-09T12:00:00Z", "echo")
     assert(g.snapshots("a").size == 2 && g.snapshots("b").size == 3)
 
     val errors = scala.collection.mutable.ArrayBuffer.empty[(String, Throwable)]
-    ServerMain.sweep(g, cfg, idxBase, (what, e) => errors += (what -> e))
+    val savedWait = CdcIndexSync.leaseWaitMs
+    CdcIndexSync.leaseWaitMs = 300L
+    try ServerMain.sweep(g, cfg, idxBase, (what, e) => errors += (what -> e))
+    finally CdcIndexSync.leaseWaitMs = savedWait
     assert(errors.map(_._1) == Seq("search-index b"),
       s"exactly b's index step must fail: ${errors.map(e => s"${e._1}: ${e._2}")}")
-    assert(errors.head._2.getMessage.contains("NO surviving generation"),
+    assert(errors.head._2.getMessage.contains("other-maintainer"),
       errors.head._2.getMessage)
     assert(CdcIndexSync.committedSnap(spark, s"$idxBase/a") ==
       Some(g.snapshots("a").last), "a's index step must still run")
@@ -163,7 +164,7 @@ class SweepSpec extends SparkTestBase {
       "vacuum must still run for both spaces")
   }
 
-  test("index GC on an object store: with create-exclusive configured, a sweep over an index whose active generation has a _land dir does not throw, and reclaims a generation outside active + grace") {
+  test("index GC on an object store: with create-exclusive configured, a sweep over an index a sync advanced after its fold does not throw, and reclaims a generation outside active + grace") {
     spark.sparkContext.hadoopConfiguration
       .set("fs.mocks3.impl", classOf[MockS3Fs].getName)
     val root = s"mocks3:${freshRoot("graft-sweep-s3")}"
@@ -177,19 +178,21 @@ class SweepSpec extends SparkTestBase {
     w("2024-01-09T11:00:00Z", "beta")
     ServerMain.searchIndexSweep(g, idxBase) // syncs: two batches, foldable
 
-    // a sync commits inside the fold's commit window, so the fold's
-    // late-copy lands that batch in the new generation under a land claim
+    // a sync started inside the fold's commit window waits for the
+    // fold's lease, then lands its batch in the new generation
+    var sync: Competitor = null
     CdcIndexSync.foldCommitHook = () => {
       CdcIndexSync.foldCommitHook = () => () // once
       w("2024-01-09T12:00:00Z", "gamma")
-      CdcIndexSync.sync(g, dir)
+      sync = Competitor(CdcIndexSync.sync(g, dir))
     }
     try assert(CdcIndexSync.compactIndex(spark, dir, g.configuredClaim) == 1L)
     finally CdcIndexSync.foldCommitHook = () => ()
+    sync.join()
     val st = CdcIndexSync.state(spark, dir).get
     val fs = fsAt(root)
-    assert(fs.exists(new HPath(s"$dir/${st.genDir}/_land")),
-      "precondition: the active generation has a _land dir")
+    assert(st.gen == 1L && st.snap == g.snapshots().max,
+      "precondition: the sync landed after the fold")
 
     // a generation neither active nor grace: a lost fold's staging
     val dead = new HPath(s"$dir/g1-lostfold/postings")
