@@ -98,40 +98,16 @@ class GraftHttpServer(graft: Graft, spark: org.apache.spark.sql.SparkSession,
     else if (node != null && node.has("filter")) node.get("filter").toString
     else """{"match_all":{}}"""
 
-  /** `start`/`end`: epoch millis, or a date string parsed as JS
-    * `new Date()` parses the shapes reference clients send. Zone-less
-    * datetimes read as UTC (the JS form reads as server-local; this server
-    * is pinned to UTC). Unparseable values are a 400, not a silent NaN.
+  /** `start`/`end`: epoch millis, or a time string in the grammar a
+    * point's `time` accepts ([[Graft.parseTimeMs]]), zone-less strings in
+    * the session zone. Unparseable values are a 400, not a silent NaN.
     */
   private[graft] def msOf(node: JsonNode, key: String, dflt: Long): Long =
     if (node == null || !node.has(key)) dflt
-    else {
-      val v = node.get(key)
-      if (v.isNumber) v.asLong()
-      else {
-        val s = v.asText().trim
-        try {
-          if (s.matches("[+-]?\\d+")) s.toLong
-          else if (s.matches("\\d{4}-\\d{2}-\\d{2}"))
-            java.time.LocalDate.parse(s)
-              .atStartOfDay(java.time.ZoneOffset.UTC).toInstant.toEpochMilli
-          else
-            try java.time.Instant.parse(s).toEpochMilli
-            catch {
-              case _: java.time.format.DateTimeParseException =>
-                try java.time.OffsetDateTime.parse(s).toInstant.toEpochMilli
-                catch {
-                  case _: java.time.format.DateTimeParseException =>
-                    java.time.LocalDateTime.parse(s)
-                      .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-                }
-            }
-        } catch {
-          case _: java.time.format.DateTimeParseException =>
-            throw new IllegalArgumentException(s"unparseable $key date: '$s'")
-        }
-      }
-    }
+    else Graft.parseTimeMs(node.get(key),
+        java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone))
+      .getOrElse(throw new IllegalArgumentException(
+        s"unparseable $key date: '${node.get(key).asText().trim}'"))
 
   /** One JSON line per row (Spark's toJSON), assembled into a JSON array.
     * Only for query-sized results (write errors, distinct tag values); big

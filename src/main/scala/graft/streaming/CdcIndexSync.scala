@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
@@ -57,20 +57,20 @@ import graft.tsdb.Graft
   * when to apply a diff, and commits a `snap_<seq>-<nonce>` marker AFTER
   * the batch's data. Readers take the max marker and filter every read
   * to `ingest_batch <= committed`, so a crashed half-written sync is
-  * invisible; the next sync deletes leftover partitions above the marker
-  * and re-lands the batch bit-identically.
+  * invisible; the next advance deletes leftover partitions above the
+  * marker before it lands anything.
   * The nonce keys caches by BUILD, not by seq: a wiped-and-recreated
   * store whose rebuilt index lands the same seq still yields a fresh
   * marker name (VERDICT r14 #3).
   *
   * One maintainer at a time: build, sync, the fold and the generation GC
-  * each hold the index's maintenance lease (`_lease/lease_<n>`, a
-  * heartbeat-refreshed owner token), in this process or any other, and
-  * check it before every commit. A maintainer whose lease was taken over
-  * commits nothing. Readers take no lease.
+  * each hold the index dir's CDC consumer lease ([[CdcStream.withLease]]),
+  * in this process or any other; foreachDiff fences it before the
+  * progress marker and the fold before its `fold_<n>` claim. Readers take
+  * no lease.
   */
 object CdcIndexSync {
-  import CdcStream.{fsOf, seqOf}
+  import CdcStream.{fsOf, seqOf, Lease, LeaseDir, withLease}
 
   /** Explicit read schemas (ADVICE r14, medium): a zero-row family dir —
     * a build over a store whose points were all retention-dropped — has
@@ -302,17 +302,15 @@ object CdcIndexSync {
     * diff callback detects (a new tag column shifts the doc identity of
     * every existing doc, so incremental maintenance is unsound). Either
     * drops the index, so foreachDiff then takes the never-advanced case.
-    * Both callbacks check `lease` last, so a maintainer whose lease was
-    * taken over commits no progress marker. Returns the snapshot the
-    * index now reflects.
+    * It runs under the caller's `lease`, which foreachDiff fences before
+    * each marker commit. Returns the snapshot the index now reflects.
     */
   private def advance(g: Graft, indexDir: String, space: String,
                       lease: Lease): Long = {
     val s = SparkSession.active
     if (state(s, indexDir).exists(_.stamp != Format)) drop(s, indexDir)
-    def consume(): Long = CdcStream.foreachDiff(g, space, indexDir)(
-      (pts, snap) => { rebuild(s, indexDir, pts, snap); lease.fence() })(
-      (ch, snap) => { applyDiff(s, indexDir, ch, snap); lease.fence() })
+    def consume(): Long = CdcStream.advance(g, space, indexDir, lease)(
+      rebuild(s, indexDir, _, _))(applyDiff(s, indexDir, _, _))
     try consume()
     catch { case TagsChanged =>
       drop(s, indexDir)
@@ -377,25 +375,6 @@ object CdcIndexSync {
     Graft.writeSmallFile(fs, new HPath(s"$indexDir/_sync/format"), Format)
   }
 
-  /** Delete data partitions above the committed marker — a crashed or
-    * fenced-out maintainer's leftovers, which would otherwise become
-    * visible the moment a LATER marker lands. */
-  private def cleanupAbove(s: SparkSession, indexDir: String, genDir: String,
-                           committed: Long): Unit = {
-    val (fs, _) = fsOf(s, indexDir)
-    def sweep(p: HPath): Unit = if (fs.exists(p))
-      fs.listStatus(p).foreach { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory) {
-          if (n.startsWith("ingest_batch=") &&
-            n.stripPrefix("ingest_batch=").toLong > committed)
-            fs.delete(st.getPath, true)
-          else if (n.startsWith("bucket=")) sweep(st.getPath)
-        }
-      }
-    Families.foreach(f => sweep(new HPath(famDir(indexDir, genDir, f))))
-  }
-
   /** foreachDiff's diff callback, reading only the change feed. New
     * series land postings + doclen; every touched series lands a
     * point-count delta; a series whose count reaches zero stops matching
@@ -410,7 +389,6 @@ object CdcIndexSync {
                         to: Long): Unit = {
     val st = state(s, indexDir).getOrElse(throw new IllegalStateException(
       s"index at $indexDir vanished while advancing to snapshot $to"))
-    cleanupAbove(s, indexDir, st.genDir, st.snap)
     val tagCols = tagColsOf(ch,
       Set("time_ms", "old_value", "new_value", "change"))
     if (tagCols != st.tags) throw TagsChanged
@@ -449,142 +427,6 @@ object CdcIndexSync {
         else fs.listStatus(p).count(f =>
           f.isDirectory && f.getPath.getName.startsWith("ingest_batch="))
     }
-
-  // ---- the maintenance lease ---------------------------------------------
-  //
-  // Advance (build/sync), fold and generation GC of one index never
-  // overlap, whether the competing maintainer runs in this process or
-  // another: each runs holding the index's one lease, a numbered file
-  // `lease_<n>` under `<indexDir>/_lease` whose body is the holder's owner
-  // token. So a sync lands into the generation it resolved, and a fold's
-  // committed snapshot cannot move under it. The lease lives outside
-  // `_sync` (the readers' per-request listing) and survives `drop`.
-  // Readers take no lease.
-
-  private val LeaseDir = "_lease"
-
-  /** Lease timing — test seams, not config. The holder refreshes its
-    * lease file's mtime every [[leaseHeartbeatMs]]; a lease unrefreshed
-    * for [[leaseStaleMs]] (four missed beats) belongs to a dead or frozen
-    * holder and is taken over — soon enough that a crash-restarted
-    * server's first sweep, a minute after boot, takes it. A contender
-    * waits up to [[leaseWaitMs]] for a live holder, then fails. */
-  private[graft] var leaseHeartbeatMs: Long = 15000L
-  private[graft] var leaseStaleMs: Long = 60000L
-  private[graft] var leaseWaitMs: Long = 120000L
-
-  /** The lease dirs the calling thread holds: a nested acquire would wait
-    * on itself, so it is refused at once. */
-  private val heldHere =
-    ThreadLocal.withInitial[Set[String]](() => Set.empty[String])
-
-  /** A held lease, `lease_<n>` carrying `token`, its mtime kept fresh by a
-    * daemon heartbeat until [[release]]. */
-  private final class Lease(fs: FileSystem, dir: HPath, n: Long,
-                            token: String) {
-    private val file = new HPath(dir, s"lease_$n")
-    private val stop = new java.util.concurrent.CountDownLatch(1)
-    private val beat = new Thread(() =>
-      while (!stop.await(leaseHeartbeatMs,
-          java.util.concurrent.TimeUnit.MILLISECONDS))
-        try fs.setTimes(file, System.currentTimeMillis(), -1L)
-        catch { case _: java.io.IOException => () },
-      s"graft-index-lease-$n")
-    beat.setDaemon(true)
-    beat.start()
-
-    private def mine: Boolean =
-      try Graft.readSmallFile(fs, file).contains(token)
-      catch { case _: java.io.IOException => false }
-
-    /** The check before every commit point: this holder's file still
-      * carries its token and no higher-numbered lease exists — otherwise
-      * another maintainer took the lease over (this one missed its beats
-      * for [[leaseStaleMs]]) and this one must commit nothing. */
-    def fence(): Unit =
-      if (!mine || leaseFiles(fs, dir).exists(_._1 > n))
-        throw new IllegalStateException(
-          s"the maintenance lease lease_$n at $dir was taken over while " +
-            s"this maintainer held it (no heartbeat for ${leaseStaleMs}ms) " +
-            "— nothing is committed; the new holder maintains the index")
-
-    def release(): Unit = {
-      stop.countDown()
-      beat.join()
-      if (mine) fs.delete(file, false)
-    }
-  }
-
-  /** The `lease_<n>` files under `dir`, as (n, status). */
-  private def leaseFiles(fs: FileSystem, dir: HPath): Seq[(Long, FileStatus)] =
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).toSeq.flatMap { st =>
-      val name = st.getPath.getName
-      if (!name.startsWith("lease_")) None
-      else name.stripPrefix("lease_").toLongOption.map(_ -> st)
-    }
-
-  /** Run `body` holding the index's maintenance lease, released on exit
-    * whether or not `body` throws. The lease is claimed through
-    * `primitive` resolved for the index's filesystem; `what` names the
-    * marker the operation commits, so an unknown scheme is refused naming
-    * it. */
-  private def withLease[T](s: SparkSession, indexDir: String,
-                           primitive: String, what: String)
-                          (body: Lease => T): T = {
-    val (fs, root) = fsOf(s, indexDir)
-    val dir = new HPath(root, LeaseDir)
-    val key = fs.makeQualified(dir).toString
-    if (heldHere.get()(key)) throw new IllegalStateException(
-      s"this thread already holds the maintenance lease at $indexDir — a " +
-        "nested build/sync/compactIndex/vacuumIndex would wait on itself")
-    val lease = acquire(fs, dir,
-      Graft.resolveClaim(fs, primitive, s"$what at $indexDir"))
-    heldHere.set(heldHere.get() + key)
-    try body(lease)
-    finally {
-      heldHere.set(heldHere.get() - key)
-      lease.release()
-    }
-  }
-
-  /** Claim the lease. With no lease, or a stale highest one, claim the
-    * next number through the exclusive claim — two contenders that saw
-    * the same stale lease race for one name, so exactly one holds it —
-    * and delete the leases below it. A fresh lease is waited out for
-    * [[leaseWaitMs]], then refused naming its holder's token. */
-  private def acquire(fs: FileSystem, dir: HPath, resolved: String): Lease = {
-    val token = s"${ProcessHandle.current().pid()}-" +
-      java.util.UUID.randomUUID().toString
-    val deadline = System.nanoTime() + leaseWaitMs * 1000000L
-    fs.mkdirs(dir)
-    @scala.annotation.tailrec
-    def attempt(): Lease = {
-      val leases = leaseFiles(fs, dir)
-      val top = leases.maxByOption(_._1)
-      val fresh = top.exists(t =>
-        System.currentTimeMillis() - t._2.getModificationTime < leaseStaleMs)
-      if (!fresh) {
-        val n = top.fold(0L)(_._1) + 1
-        if (Graft.claimAt(fs, new HPath(dir, s"lease_$n"), token, resolved)) {
-          leases.foreach(l => fs.delete(l._2.getPath, false))
-          new Lease(fs, dir, n, token)
-        } else attempt() // another contender took n: look again
-      } else if (System.nanoTime() > deadline) {
-        val holder = top.flatMap(t => Graft.readSmallFile(fs, t._2.getPath))
-        throw new IllegalStateException(
-          s"the index maintenance lease at $dir is held by " +
-            s"'${holder.getOrElse("?")}' (waited ${leaseWaitMs}ms): another " +
-            "build, sync, fold or index GC is running on this index — retry " +
-            s"when it finishes; a holder silent for ${leaseStaleMs}ms is " +
-            "taken over")
-      } else {
-        Thread.sleep(50L)
-        attempt()
-      }
-    }
-    attempt()
-  }
 
   /** Index generation GC (r17, VERDICT r16 #5), under the maintenance
     * lease: reclaim DEAD generation directories without folding — the

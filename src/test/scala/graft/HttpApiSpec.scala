@@ -175,6 +175,39 @@ class HttpApiSpec extends SparkTestBase {
     } finally srv.stop()
   }
 
+  test("/read, /count and /series bounds accept the time strings a point's time does") {
+    val root = Files.createTempDirectory(
+      java.nio.file.Paths.get("target"), "graft-http-times").toString
+    val srv = new GraftHttpServer(new Graft(spark, root), spark)
+    val port = srv.start()
+    try {
+      val (wc, wb) = post(port, "/write",
+        """[{"time":"2024-01-09 09:00:00","value":1.0,"name":"early"},
+            {"time":"2024-01-09 10:00:00","value":2.0,"name":"late"}]""")
+      assert(wc == 200, wb)
+      assert(mapper.readTree(wb).get("errors").size() == 0, wb)
+
+      // the space-separated form a point's time accepts bounds every read
+      val bounds = """"start":"2024-01-09 10:00:00","end":"2024-01-09 10:00:01""""
+      val (rc, rb) = post(port, "/read", s"{$bounds}")
+      assert(rc == 200, rb)
+      val series = mapper.readTree(rb).get("series")
+      assert(series.size() == 1 &&
+        series.get(0).get("tags").get("name").asText() == "late", rb)
+      val (cc, cb) = post(port, "/count", s"{$bounds}")
+      assert(cc == 200, cb)
+      val counts = mapper.readTree(cb).get("series")
+      assert(counts.size() == 1 && counts.get(0).get("count").asLong() == 1L, cb)
+      val (sc, sb) = post(port, "/series", s"{$bounds}")
+      assert(sc == 200, sb)
+      assert(mapper.readTree(sb).get("series").size() == 1, sb)
+
+      // a string the point path refuses is still a 400
+      val (gc, _) = post(port, "/read", """{"start":"not a date"}""")
+      assert(gc == 400)
+    } finally srv.stop()
+  }
+
   test("a held streaming read does not block concurrent requests") {
     val root = Files.createTempDirectory(
       java.nio.file.Paths.get("target"), "graft-http-conc").toString

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.CountDownLatch
 import org.apache.hadoop.fs.{Path => HPath}
 import scala.jdk.CollectionConverters._
-import graft.streaming.CdcIndexSync
+import graft.streaming.{CdcIndexSync, CdcStream}
 import graft.tsdb.Graft
 
 /** One maintainer per search index: build, sync, the fold and the index
@@ -76,16 +76,16 @@ class IndexLeaseSpec extends SparkTestBase {
   /** Run `body` with the lease timing seams set, restoring them after. */
   private def withTiming[T](waitMs: Long = 120000L, staleMs: Long = 60000L,
                             heartbeatMs: Long = 15000L)(body: => T): T = {
-    val saved = (CdcIndexSync.leaseWaitMs, CdcIndexSync.leaseStaleMs,
-      CdcIndexSync.leaseHeartbeatMs)
-    CdcIndexSync.leaseWaitMs = waitMs
-    CdcIndexSync.leaseStaleMs = staleMs
-    CdcIndexSync.leaseHeartbeatMs = heartbeatMs
+    val saved = (CdcStream.leaseWaitMs, CdcStream.leaseStaleMs,
+      CdcStream.leaseHeartbeatMs)
+    CdcStream.leaseWaitMs = waitMs
+    CdcStream.leaseStaleMs = staleMs
+    CdcStream.leaseHeartbeatMs = heartbeatMs
     try body
     finally {
-      CdcIndexSync.leaseWaitMs = saved._1
-      CdcIndexSync.leaseStaleMs = saved._2
-      CdcIndexSync.leaseHeartbeatMs = saved._3
+      CdcStream.leaseWaitMs = saved._1
+      CdcStream.leaseStaleMs = saved._2
+      CdcStream.leaseHeartbeatMs = saved._3
     }
   }
 

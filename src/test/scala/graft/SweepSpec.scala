@@ -5,7 +5,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.{Files, Paths}
 import org.apache.hadoop.fs.{Path => HPath}
 import graft.http.{GraftHttpServer, ServerMain}
-import graft.streaming.CdcIndexSync
+import graft.streaming.{CdcIndexSync, CdcStream}
 import graft.tsdb.Graft
 
 /** The serving process's one maintenance pass, [[ServerMain.sweep]]:
@@ -150,10 +150,10 @@ class SweepSpec extends SparkTestBase {
     assert(g.snapshots("a").size == 2 && g.snapshots("b").size == 3)
 
     val errors = scala.collection.mutable.ArrayBuffer.empty[(String, Throwable)]
-    val savedWait = CdcIndexSync.leaseWaitMs
-    CdcIndexSync.leaseWaitMs = 300L
+    val savedWait = CdcStream.leaseWaitMs
+    CdcStream.leaseWaitMs = 300L
     try ServerMain.sweep(g, cfg, idxBase, (what, e) => errors += (what -> e))
-    finally CdcIndexSync.leaseWaitMs = savedWait
+    finally CdcStream.leaseWaitMs = savedWait
     assert(errors.map(_._1) == Seq("search-index b"),
       s"exactly b's index step must fail: ${errors.map(e => s"${e._1}: ${e._2}")}")
     assert(errors.head._2.getMessage.contains("other-maintainer"),
