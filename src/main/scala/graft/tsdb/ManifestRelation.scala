@@ -24,8 +24,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[GraftManifestFileIndex.listFiles]]) all apply unchanged.
   *
   * v3 manifests additionally carry a per-file `[min, max]` `time_ms` zone
-  * map (collected by one commit-time job — Iceberg's per-file column
-  * stats), which [[GraftManifestFileIndex.listFiles]] evaluates against
+  * map (gathered by the write job's own tasks — Iceberg's per-file
+  * column stats), which [[GraftManifestFileIndex.listFiles]] evaluates against
   * the query's pushed time bounds: a narrow window INSIDE a day bucket
   * skips the bucket's non-overlapping files entirely — driver-side, from
   * manifest metadata alone, before parquet ever sees a footer. Files

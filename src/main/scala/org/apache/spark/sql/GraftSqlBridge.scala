@@ -1,9 +1,14 @@
 package org.apache.spark.sql
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.internal.io.FileCommitProtocol
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection}
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SQLExecution}
+import org.apache.spark.sql.execution.datasources.{BasicWriteJobStatsTracker, FileFormatWriter, WriteJobStatsTracker}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.reuse.ReuseExchangeAndSubquery
+import org.apache.spark.util.SerializableConfiguration
 
 /** Minimal bridge into `private[sql]` surface: building a DataFrame from a
   * custom LogicalPlan has no public API, so — like every Spark extension
@@ -51,5 +56,41 @@ object GraftSqlBridge {
     classic.Dataset.ofRows(session,
       LogicalRDD(ds.logicalPlan.output, rdd, firstLeaf(plan.outputPartitioning),
         plan.outputOrdering, isStreaming = false)(session, stats, constraints))
+  }
+
+  /** `df.write.partitionBy(partitionBy: _*).parquet(path)` into a path
+    * that does not exist yet, as one SQL execution and one Spark job, with
+    * `trackers` running in the write tasks next to Spark's basic tracker
+    * (what `InsertIntoHadoopFsRelationCommand` passes alone). A tracker
+    * sees every file the job writes and every row it writes there, and its
+    * driver side gets the tasks' results once the job has committed. No
+    * listing of `path` and no recache follow the write.
+    */
+  def writeParquet(df: DataFrame, path: String, partitionBy: Seq[String],
+                   trackers: Seq[WriteJobStatsTracker]): Unit = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val session = ds.sparkSession
+    val qe = ds.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("write")) {
+      val plan = qe.executedPlan
+      val hadoopConf = session.sessionState.newHadoopConf()
+      val committer = FileCommitProtocol.instantiate(
+        session.sessionState.conf.fileCommitProtocolClass,
+        java.util.UUID.randomUUID().toString, path)
+      val basic = new BasicWriteJobStatsTracker(
+        new SerializableConfiguration(hadoopConf), BasicWriteJobStatsTracker.metrics)
+      FileFormatWriter.write(session, plan, new ParquetFileFormat, committer,
+        FileFormatWriter.OutputSpec(path, Map.empty, plan.output), hadoopConf,
+        partitionBy.map(n => plan.output.find(_.name == n).get), None,
+        basic +: trackers, Map.empty)
+      ()
+    }
+  }
+
+  /** The session's Hadoop configuration as a function a write task can
+    * call (Spark's serializable wrapper is not public). */
+  def taskHadoopConf(spark: SparkSession): () => Configuration = {
+    val conf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
+    () => conf.value
   }
 }

@@ -8,12 +8,12 @@ import graft.tsdb.Graft
 import graft.tsdb.Graft.FileStats
 
 /** The manifest's per-file stats — `[min, max]` `time_ms` zone maps and
-  * capped tag dictionaries — are gathered by one no-shuffle scan of the
-  * files as written. Every commit path that records stats (append,
-  * compaction, adoption of a pre-manifest store) must record exactly what
-  * a brute-force read of each file alone gives, and a queued flush must
-  * stay at three Spark jobs: JSON schema inference, the write, and the
-  * stats scan.
+  * capped tag dictionaries — are gathered by the write tasks as they write
+  * each file (appends and compaction), or by one no-shuffle scan of the
+  * files as they are (adoption of a pre-manifest store). Every commit path
+  * must record exactly what a brute-force read of each file alone gives,
+  * and a steady-state queued flush is one Spark job, the write; the first
+  * flush into a new space adds JSON schema inference.
   */
 class ManifestStatsSpec extends SparkTestBase {
   import spark.implicits._
@@ -199,11 +199,11 @@ class ManifestStatsSpec extends SparkTestBase {
       Map("host" -> Some(Set("a", "b")), "dc" -> Some(Set("x")))))
   }
 
-  test("a queued flush of 20 x 500-point batches over 26 buckets runs 3 Spark jobs") {
-    val root = freshRoot()
-    val g = new Graft(spark, root)
+  /** Queue 20 x 500-point batches over 26 weekly buckets, numbered from
+    * `from`: integer values and two string tags. */
+  private def queueBulk(g: Graft, from: Int): Unit = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    (0 until 20).foreach { b =>
+    (from until from + 20).foreach { b =>
       val batch = (0 until 500).map { i =>
         val n = b * 500 + i
         mapper.readTree(s"""{"time": ${Jan1 + (n % 26) * Week + n}, """ +
@@ -211,6 +211,10 @@ class ManifestStatsSpec extends SparkTestBase {
       }
       assert(g.writeQueued(batch).isEmpty)
     }
+  }
+
+  /** The Spark jobs one `flushQueued` runs. */
+  private def flushJobs(g: Graft): Int = {
     val group = s"flush-${Graft.nonce()}"
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -225,8 +229,27 @@ class ManifestStatsSpec extends SparkTestBase {
       finally spark.sparkContext.clearJobGroup()
       org.apache.spark.ListenerBusDrain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get == 3,
-      "JSON schema inference, the write and the stats scan — no listing or footer job")
+    jobs.get
+  }
+
+  test("a queued flush of 20 x 500-point batches over 26 buckets runs 1 Spark job") {
+    val root = freshRoot()
+    val g = new Graft(spark, root)
+    queueBulk(g, 0)
+    g.flushQueued() // the space's first flush: its fields are new
+    queueBulk(g, 20)
+    assert(flushJobs(g) == 1,
+      "the write alone — no schema inference, stats scan, listing or footer job")
+    assertParity(root, recorded(root))
+    assert(recorded(root).keys.map(bucketOf).size == 26)
+    assert(g.read("""{"match_all":{}}""").count() == 20000)
+  }
+
+  test("the first queued flush into a new space runs 2 Spark jobs") {
+    val root = freshRoot()
+    val g = new Graft(spark, root)
+    queueBulk(g, 0)
+    assert(flushJobs(g) == 2, "JSON schema inference and the write")
     assert(recorded(root).keys.map(bucketOf).size == 26)
     assert(g.read("""{"match_all":{}}""").count() == 10000)
   }
