@@ -95,43 +95,26 @@ class Graft(spark: SparkSession, root: String,
     val sorted = good
       .sortWithinPartitions(col("bucket_day") +: tagCols.map(col) :+ col("time_ms"): _*)
     mutationLock(space).synchronized {
-      // r14: the append job lands in a PRIVATE `_`-prefixed tmp dir and
-      // its files move into the bucket dirs under unique names. The job
-      // itself reports its exact output list, sizes and per-file stats
-      // (writeGathering), so the append path lists nothing — neither the
-      // store (the r13 before/after listing diff was O(live files) per
-      // append) nor its own staging dir — and runs no stats pass. Crash
-      // states: an orphaned tmp dir, or moved files no snapshot
-      // references — both invisible to readers, both swept by vacuum. An
+      // the append job's tasks write straight into the bucket dirs, and
+      // the job itself reports its exact output list, sizes and per-file
+      // stats (writeGathering), so the append path lists nothing (the r13
+      // before/after listing diff was O(live files) per append), moves
+      // nothing and runs no stats pass. Crash state: written files no
+      // snapshot references — invisible to readers, swept by vacuum. An
       // all-rejected batch writes no files — no commit.
       bootstrapManifest(space) // adopt a pre-manifest store
-      val (fs, dir) = fsOf(spacePath(space))
-      val tmpDir = new HPath(dir, s"$AppendTmpPrefix${Graft.nonce()}")
-      val fresh = writeGathering(sorted, tmpDir, Seq("bucket_day"))
-        .groupBy(_.rel.takeWhile(_ != '/')).toSeq.flatMap { case (bucket, files) =>
-          require(bucket.startsWith("bucket_day="),
-            s"append: unexpected output file ${files.head.rel}")
-          val dstDir = new HPath(dir, bucket)
-          fs.mkdirs(dstDir)
-          files.map { f =>
-            val src = new HPath(tmpDir, f.rel)
-            val dst = new HPath(dstDir, s"a${Graft.nonce()}-${src.getName}")
-            if (!fs.rename(src, dst))
-              throw new java.io.IOException(s"append: rename $src -> $dst failed")
-            (s"$bucket/${dst.getName}", f.size, f.stats)
-          }
-        }
-      fs.delete(tmpDir, true)
+      val fresh = writeGathering(sorted, new HPath(spacePath(space)),
+        Seq("bucket_day"), DirectCommitProtocol.appendPrefix())
       if (fresh.nonEmpty) {
         // the job's data schema (everything but the partition column)
         // merges into the manifest so reads never open a parquet footer
         val jobSchema = org.apache.spark.sql.types.StructType(
           good.schema.fields.filterNot(_.name == "bucket_day"))
         val (freshStats, freshDicts) =
-          statsMaps(mergeStats(fresh.map(f => f._1 -> f._3)), dictCols(jobSchema))
+          statsMaps(mergeStats(fresh.map(f => f.rel -> f.stats)), dictCols(jobSchema))
         // the delta path: commit cost tracks THIS JOB's buckets, not
         // the store's live-file count (r14 — manifest-list indirection)
-        commitAppend(space, fresh.map(f => (f._1, f._2)), jobSchema,
+        commitAppend(space, fresh.map(f => (f.rel, f.size)), jobSchema,
           freshStats, freshDicts)
       }
     }
@@ -206,14 +189,18 @@ class Graft(spark: SparkSession, root: String,
   // snapshot references — both invisible to resolution, both swept by
   // vacuum.
   //
-  // Append jobs write to a private `_append_tmp_*` staging dir and MOVE
-  // their files into the bucket dirs under unique names (r14), so the
-  // commit protocol receives the exact output list and the append path
-  // never lists the store — the write side's analog of the read side's
-  // no-listing contract. On rename-less object stores the same shape is
-  // "write direct under unique keys, commit the key list" (what
-  // Iceberg/Delta writers do); the staging move here is one metadata op
-  // per output file on a rename-capable FS.
+  // Write jobs — appends and compaction — write each file ONCE, straight
+  // into its bucket dir under a unique graft name ([[DirectCommitProtocol]]:
+  // `a<nonce>-part-…` for an append, `c<gen>-part-…` for a compaction), and
+  // the job reports the exact output list, so the commit protocol receives
+  // it without listing the store — the write side's analog of the read
+  // side's no-listing contract — and nothing is staged or renamed. This is
+  // "write direct under unique keys, commit the key list", what
+  // Iceberg/Delta writers and Structured Streaming's file sink do. A file
+  // with a graft name is live only through a snapshot that names it: until
+  // its commit it may be another process's write in flight, so
+  // [[bootstrapManifest]] never adopts one and [[vacuum]] reclaims an
+  // unreferenced one only past the orphan grace.
 
   private def manifestPath(space: String) = s"$root/.manifest/$space"
 
@@ -299,14 +286,18 @@ class Graft(spark: SparkSession, root: String,
     * schema from one footer pass — the only time the store ever infers.
     * The adoption is ONE-WAY and ONE-TIME: files that land in the bucket
     * directories after snapshot 1 are not live until a commit names them
-    * (vacuum reclaims them as orphans). Caller holds the mutation lock;
-    * every mutation calls this, and reads take the lock for exactly this
-    * one-time adoption.
+    * (vacuum reclaims them as orphans). Only files a pre-manifest release
+    * wrote are adopted: a graft-named file ([[DirectCommitProtocol.wrote]])
+    * is live only through a snapshot, so a second process opening a fresh
+    * space never adopts the first one's append in flight. Caller holds the
+    * mutation lock; every mutation calls this, and reads take the lock for
+    * exactly this one-time adoption.
     */
   private def bootstrapManifest(space: String): Unit = {
     if (snapshots(space).nonEmpty) return
     val (fs, dir) = fsOf(spacePath(space))
     val existing = listDataFiles(fs, dir)
+      .filterNot(f => DirectCommitProtocol.wrote(f._1.drop(f._1.indexOf('/') + 1)))
     if (existing.isEmpty) return
     // the one footer pass: its schema plans both the stats scan (zone
     // maps + dictionaries for the whole store, once) and the commit
@@ -663,16 +654,17 @@ class Graft(spark: SparkSession, root: String,
     schema.fields.filter(f => f.dataType == org.apache.spark.sql.types.StringType &&
       f.name != WseqCol).map(_.name).toSeq
 
-  /** Write `df` as parquet into the fresh dir `out` (partitioned by
-    * `partitionBy`) in ONE Spark job whose tasks also gather the stats a
+  /** Write `df` as parquet into `out` (partitioned by `partitionBy`) in ONE
+    * Spark job whose tasks write every file at its final, graft-named path
+    * (`<prefix>-part-…`, [[DirectCommitProtocol]]) and also gather the stats a
     * commit records — per-file `[min, max]` `time_ms` zone maps and the
     * [[dictCols]] dictionaries, at commit time so reads never open a footer
     * (Iceberg and Delta collect per-file column stats at write the same
     * way). At 100 TB these are what turn a narrow-window or tag-filtered
     * read from "open every file the bucket holds" into "open the files
     * that can match". Returns every committed file — its path relative
-    * from `bucket_day=` (its bare name when unpartitioned), size and
-    * stats — so the caller neither lists `out` nor reads a file back. The
+    * from `bucket_day=`, i.e. its manifest path, size and stats — so the
+    * caller neither lists `out` nor reads a file back. The
     * stats are of the rows exactly as the tasks wrote them: a second pass
     * over a re-evaluated non-deterministic frame could record stats that
     * do not cover a file, and a wrong dictionary prunes live rows. Each
@@ -681,14 +673,14 @@ class Graft(spark: SparkSession, root: String,
     * high-cardinality tag never buffers its values while the mutation lock
     * is held.
     */
-  private def writeGathering(df: DataFrame, out: HPath, partitionBy: Seq[String])
-      : Seq[WriteStatsTracker.WrittenFile] = {
+  private def writeGathering(df: DataFrame, out: HPath, partitionBy: Seq[String],
+                             prefix: String): Seq[WriteStatsTracker.WrittenFile] = {
     val data = org.apache.spark.sql.types.StructType(
       df.schema.fields.filterNot(f => partitionBy.contains(f.name)))
     val tracker = new WriteStatsTracker(data.fieldNames.toSeq, dictCols(data),
       org.apache.spark.sql.GraftSqlBridge.taskHadoopConf(spark))
     org.apache.spark.sql.GraftSqlBridge.writeParquet(df, out.toString,
-      partitionBy, Seq(tracker))
+      partitionBy, new DirectCommitProtocol(out.toString, prefix), Seq(tracker))
     tracker.written
   }
 
@@ -794,13 +786,14 @@ class Graft(spark: SparkSession, root: String,
           throw new java.io.IOException(s"vacuum: delete $f failed")
       }
       // drop bucket dirs vacuum emptied (retention's physical half), and
-      // crashed append/compaction staging dirs (no snapshot can reference
-      // either — their files never moved into a committed segment).
-      // Staging dirs only past the grace: a fresh one is another process's
-      // append in flight. A bucket dir THIS sweep's expired-file deletions
-      // emptied goes now (deleting its children refreshed its mtime, so
-      // age-gating it would defer retention's physical half forever);
-      // any other empty bucket dir waits out the grace.
+      // every `_`-prefixed dir past the grace: no snapshot names a file
+      // under one (Spark's readers skip them too), so any such dir is a
+      // crashed job's leftover — an older build's staging dir or a Hadoop
+      // `_temporary` — or, while young, another process's job in flight.
+      // A bucket dir THIS sweep's expired-file deletions emptied goes now
+      // (deleting its children refreshed its mtime, so age-gating it would
+      // defer retention's physical half forever); any other empty bucket
+      // dir waits out the grace.
       val emptiedByExpired = doomed.filter(expiredOwned)
         .map(_.takeWhile(_ != '/')).toSet
       if (isDir(fs, dir))
@@ -809,8 +802,7 @@ class Graft(spark: SparkSession, root: String,
             ((st.getPath.getName.startsWith("bucket_day=") &&
               fs.listStatus(st.getPath).isEmpty &&
               (aged(st) || emptiedByExpired(st.getPath.getName))) ||
-             ((st.getPath.getName.startsWith(AppendTmpPrefix) ||
-               st.getPath.getName.startsWith(TmpPrefix)) && aged(st))))
+             (st.getPath.getName.startsWith("_") && aged(st))))
           .foreach(st => fs.delete(st.getPath, true))
       // crashed-commit tmps (aged only: a fresh .tmp-m* is a commit body
       // another process is about to claim) and expired manifests —
@@ -1676,11 +1668,13 @@ class Graft(spark: SparkSession, root: String,
     * as freshly-written data does. A bucket is left untouched when its file
     * count is at target AND it holds no write-sequence stamps.
     *
-    * The swap is a manifest COMMIT: replaced files stay on disk (pinned
+    * The swap is a manifest COMMIT: the rewrite's tasks write its files
+    * straight into the bucket dir under this compaction's `c<gen>` prefix
+    * ([[DirectCommitProtocol]]), replaced files stay on disk (pinned
     * readers stream from them; [[vacuum]] reclaims), and the crash story is
-    * one state (an orphaned tmp dir or moved-but-uncommitted output files,
-    * both invisible to every snapshot and swept by vacuum). No
-    * delete+rename dance, no recovery scan.
+    * one state (written-but-uncommitted output files, invisible to every
+    * snapshot and swept by vacuum past the orphan grace). No staging dir,
+    * no rename, no recovery scan.
     * Returns (bucket_day, files_before, files_after) per compacted bucket.
     */
   def compact(space: String = "default",
@@ -1690,13 +1684,6 @@ class Graft(spark: SparkSession, root: String,
     val (fs, dir) = fsOf(path)
     if (!isDir(fs, dir)) return Nil
     mutationLock(space).synchronized {
-      // crashed-run staging dirs are NOT swept here (r17, VERDICT r16 #4
-      // — found by the two-JVM race spec): a `_compact_tmp_*` or
-      // `_append_tmp_*` dir in the space may be ANOTHER PROCESS'S LIVE
-      // staging, and deleting it mid-rewrite made that writer's swap
-      // move zero files while still committing its replace set — silent
-      // manifest data loss. [[vacuum]] already reclaims these dirs
-      // age-gated (aged(st)), which is the multi-process-safe discipline.
       bootstrapManifest(space) // adopt a pre-manifest store
       val live = liveManifest(space)
       if (live.files.isEmpty) return Nil
@@ -1720,35 +1707,15 @@ class Graft(spark: SparkSession, root: String,
             val key = tagCols.map(col) :+ col("time_ms")
             val merged = lwwMerged(df, key)
             schemas += merged.schema // rewritten bucket: the stamp retires
-            // nonce'd staging (r17): the fixed `_compact_tmp_<day>` name
-            // made two processes compacting the same bucket share one
-            // staging dir — SaveMode.Overwrite then deletes the other's
-            // output mid-rewrite. Unique per attempt, like appends.
-            val tmp = new HPath(dir, s"$TmpPrefix$day-${Graft.nonce()}")
-            val written = writeGathering(merged.repartitionByRange(nOut, key: _*)
-              .sortWithinPartitions(key: _*), tmp, Nil)
-            // move outputs into the bucket dir under this generation's
+            // the outputs land in the bucket dir under this generation's
             // prefix; the bucket now holds old + new files, and only the
             // manifest decides which are live
-            val moved = written.map { f =>
-              val src = new HPath(tmp, f.rel)
-              val dst = new HPath(new HPath(dir, bname), s"c$gen-${f.rel}")
-              if (!fs.rename(src, dst))
-                throw new java.io.IOException(s"compact: rename $src -> $dst failed")
-              gathered += s"$bname/${dst.getName}" -> f.stats
-              (s"$bname/${dst.getName}", f.size)
-            }
-            fs.delete(tmp, true)
-            // a swap that replaces files but moved NOTHING means the
-            // staging was interfered with (the silent-loss shape the
-            // two-JVM race exposed) — committing it would drop the
-            // bucket from the manifest; fail loudly instead
-            if (moved.isEmpty) throw new java.io.IOException(
-              s"compact: staging for bucket $day produced no output " +
-                s"files while replacing ${bfiles.length} — staging dir " +
-                "interference; nothing was committed")
-            Some((day.toLong, bfiles.length, moved.length,
-              bfiles.map(_._1).toSet, moved))
+            val written = writeGathering(merged.repartitionByRange(nOut, key: _*)
+              .sortWithinPartitions(key: _*), new HPath(dir, bname), Nil,
+              DirectCommitProtocol.compactionPrefix(gen))
+            gathered ++= written.map(f => f.rel -> f.stats)
+            Some((day.toLong, bfiles.length, written.length,
+              bfiles.map(_._1).toSet, written.map(f => (f.rel, f.size))))
           }
         }
       if (swaps.isEmpty) return Nil
@@ -2187,14 +2154,6 @@ object Graft {
 
   /** The reference's default facade port (conf/orestes-config.json). */
   val DefaultPort = 9668
-
-  /** Compaction staging dirs: `_`-prefixed so Spark ignores them; a crash
-    * leaves one behind, invisible to every reader, swept by vacuum. */
-  private[tsdb] val TmpPrefix = "_compact_tmp_"
-
-  /** Append staging dirs (r14): `_`-prefixed like [[TmpPrefix]]; a crash
-    * leaves one behind, invisible to every reader, swept by vacuum. */
-  private[tsdb] val AppendTmpPrefix = "_append_tmp_"
 
   /** The engine-side point-validation rule, in ONE place ([[write]] and
     * [[graft.streaming.IngestStream.validate]]): `points` plus `__time_ms`

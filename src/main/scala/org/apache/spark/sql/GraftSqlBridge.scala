@@ -58,15 +58,18 @@ object GraftSqlBridge {
         plan.outputOrdering, isStreaming = false)(session, stats, constraints))
   }
 
-  /** `df.write.partitionBy(partitionBy: _*).parquet(path)` into a path
-    * that does not exist yet, as one SQL execution and one Spark job, with
-    * `trackers` running in the write tasks next to Spark's basic tracker
-    * (what `InsertIntoHadoopFsRelationCommand` passes alone). A tracker
-    * sees every file the job writes and every row it writes there, and its
-    * driver side gets the tasks' results once the job has committed. No
-    * listing of `path` and no recache follow the write.
+  /** `df.write.partitionBy(partitionBy: _*).parquet(path)` through
+    * `committer`, as one SQL execution and one Spark job, with `trackers`
+    * running in the write tasks next to Spark's basic tracker (what
+    * `InsertIntoHadoopFsRelationCommand` passes alone). The committer names
+    * and places every file; `path` may already hold files, and no save
+    * mode applies. A tracker sees every file the job writes and every row
+    * it writes there, and its driver side gets the tasks' results once the
+    * job has committed. No listing of `path` and no recache follow the
+    * write.
     */
   def writeParquet(df: DataFrame, path: String, partitionBy: Seq[String],
+                   committer: FileCommitProtocol,
                    trackers: Seq[WriteJobStatsTracker]): Unit = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     val session = ds.sparkSession
@@ -74,9 +77,6 @@ object GraftSqlBridge {
     SQLExecution.withNewExecutionId(qe, Some("write")) {
       val plan = qe.executedPlan
       val hadoopConf = session.sessionState.newHadoopConf()
-      val committer = FileCommitProtocol.instantiate(
-        session.sessionState.conf.fileCommitProtocolClass,
-        java.util.UUID.randomUUID().toString, path)
       val basic = new BasicWriteJobStatsTracker(
         new SerializableConfiguration(hadoopConf), BasicWriteJobStatsTracker.metrics)
       FileFormatWriter.write(session, plan, new ParquetFileFormat, committer,
